@@ -259,11 +259,13 @@ def distinct_polygon_tiers(
     strategy: TieredStrategy = DEFAULT_STRATEGY,
     max_duplicates: int = 4,
     buffer: float = 0.0,
-) -> list[int]:
-    """Distinct insertion tiers of a polygon table from a light WKT scan
-    (no cell explosion, no persist) — the analog of the reference's
-    tier-byte collectAsync (TieredSpatialJoin.java:174-191).  Only tier
-    ints reach the driver."""
+) -> DataFrame:
+    """Distinct insertion tiers of a polygon table, as a one-column
+    ``tier int`` DataFrame, from a light WKT scan (no cell explosion, no
+    persist) — the analog of the reference's tier-byte collectAsync
+    (TieredSpatialJoin.java:174-191).  Lazy: the joins broadcast it, so
+    the scan runs inside the join's own job, beside its cell explodes,
+    instead of as a separate driver-side job."""
 
     @F.pandas_udf(ArrayType(IntegerType()))
     def _tiers(wkt: pd.Series) -> pd.Series:
@@ -288,10 +290,7 @@ def distinct_polygon_tiers(
             out[0] = u
         return pd.Series(out)
 
-    rows = (
-        df.select(F.explode(_tiers(F.col(wkt_col))).alias("tier")).distinct().collect()
-    )
-    return sorted(int(r["tier"]) for r in rows)
+    return df.select(F.explode(_tiers(F.col(wkt_col))).alias("tier")).distinct()
 
 
 def point_cell_at_tier_udf(strategy: TieredStrategy, tier: int):
@@ -454,16 +453,18 @@ def explode_polygon_cells(
     return src.mapInPandas(_gen, out_schema)
 
 
-def cell_at_tier(top_cell: str, tier: str, max_bits: int = 31) -> Column:
-    """Re-project a top-tier point cell to a coarser tier — pure Catalyst.
+def cell_at_tier(cell: str, tier: str, from_tier: str | int) -> Column:
+    """Re-project a Hilbert cell from tier ``from_tier`` to the coarser
+    ``tier`` — pure Catalyst.
 
     Hilbert hierarchy makes tier re-projection a bit shift (2 bits/tier in
     2-D), the cheap analog of TieredSpatialJoin.reprojectToTier
     (TieredSpatialJoin.java:471-511) with no geometry re-encode.
-    ``top_cell`` / ``tier`` are column names (SQL expression under the hood
-    because the shift amount is itself a column).
+    ``cell`` / ``tier`` are column names or SQL expressions; ``from_tier``
+    is one too, or an int literal (e.g. ``max_bits`` for top-tier point
+    cells).  Both the point×polygon and the geometry-pair joins key on it.
     """
     return F.expr(
         f"CASE WHEN {tier} = 0 THEN CAST(0 AS BIGINT) "
-        f"ELSE shiftrightunsigned({top_cell}, CAST(2 * ({max_bits} - {tier}) AS INT)) END"
+        f"ELSE shiftrightunsigned({cell}, CAST(2 * ({from_tier} - {tier}) AS INT)) END"
     )

@@ -563,11 +563,10 @@ def cell_rect_intersects_geom(
         if len(p) > 1:
             s, e = _part_edges(p, False)
             todo = np.nonzero(~out)[0]
-            for i in todo:
-                out[i] = _segments_hit_rect(
-                    s[:, 0], s[:, 1], e[:, 0], e[:, 1],
-                    cminx[i], cminy[i], cmaxx[i], cmaxy[i],
-                )
+            out[todo] = _segments_hit_rects(
+                s[:, 0], s[:, 1], e[:, 0], e[:, 1],
+                cminx[todo], cminy[todo], cmaxx[todo], cmaxy[todo],
+            )
     return out
 
 
@@ -673,35 +672,44 @@ def cell_rect_intersects_polygon(
     if len(todo):
         x1, y1 = ring[:, 0], ring[:, 1]
         x2, y2 = np.roll(x1, -1), np.roll(y1, -1)
-        for i in todo:
-            out[i] = _segments_hit_rect(
-                x1, y1, x2, y2, cminx[i], cminy[i], cmaxx[i], cmaxy[i]
-            )
+        out[todo] = _segments_hit_rects(
+            x1, y1, x2, y2, cminx[todo], cminy[todo], cmaxx[todo], cmaxy[todo]
+        )
     return out
 
 
-def _segments_hit_rect(x1, y1, x2, y2, rminx, rminy, rmaxx, rmaxy) -> bool:
-    """Liang-Barsky style clip test: does any segment intersect the rect?"""
+def _segments_hit_rects(x1, y1, x2, y2, rminx, rminy, rmaxx, rmaxy) -> np.ndarray:
+    """Liang-Barsky style clip test: does any of the E segments intersect
+    each of the K rects?  → (K,) bool.  Evaluated as (rects × segments)
+    blocks of at most ~2^20 elements."""
+    x1, y1, x2, y2 = (np.asarray(v, dtype=np.float64)[None, :] for v in (x1, y1, x2, y2))
     dx = x2 - x1
     dy = y2 - y1
-    t0 = np.zeros_like(x1)
-    t1 = np.ones_like(x1)
-    ok = np.ones(x1.shape, dtype=bool)
-    for p, q in (
-        (-dx, x1 - rminx),
-        (dx, rmaxx - x1),
-        (-dy, y1 - rminy),
-        (dy, rmaxy - y1),
-    ):
-        with np.errstate(divide="ignore", invalid="ignore"):
-            r = q / p
-        par_out = (p == 0) & (q < 0)
-        ok &= ~par_out
-        ent = np.where(p < 0, r, -np.inf)
-        ext = np.where(p > 0, r, np.inf)
-        t0 = np.maximum(t0, np.where(np.isfinite(ent), ent, t0))
-        t1 = np.minimum(t1, np.where(np.isfinite(ext), ext, t1))
-    return bool((ok & (t0 <= t1)).any())
+    out = np.zeros(len(rminx), dtype=bool)
+    step = max(1, (1 << 20) // max(x1.shape[1], 1))
+    for k in range(0, len(rminx), step):
+        sl = slice(k, k + step)
+        r0x, r0y = rminx[sl, None], rminy[sl, None]
+        r1x, r1y = rmaxx[sl, None], rmaxy[sl, None]
+        shape = (len(r0x), x1.shape[1])
+        t0 = np.zeros(shape)
+        t1 = np.ones(shape)
+        ok = np.ones(shape, dtype=bool)
+        for p, q in (
+            (-dx, x1 - r0x),
+            (dx, r1x - x1),
+            (-dy, y1 - r0y),
+            (dy, r1y - y1),
+        ):
+            with np.errstate(divide="ignore", invalid="ignore"):
+                r = q / p
+            ok &= ~((p == 0) & (q < 0))
+            ent = np.where(p < 0, r, -np.inf)
+            ext = np.where(p > 0, r, np.inf)
+            t0 = np.maximum(t0, np.where(np.isfinite(ent), ent, t0))
+            t1 = np.minimum(t1, np.where(np.isfinite(ext), ext, t1))
+        out[sl] = (ok & (t0 <= t1)).any(axis=1)
+    return out
 
 
 class LocalPolygonGrid:

@@ -1,4 +1,4 @@
-"""Deduplication operators: exact, MinHash+LSH, SimHash, n-gram Jaccard.
+"""Deduplication operators: exact, MinHash+LSH, SimHash.
 
 Training-data-pipeline operators (driver brief).  Design for 100 TB:
 
@@ -13,7 +13,6 @@ Training-data-pipeline operators (driver brief).  Design for 100 TB:
 - SimHash: 64-bit signature via sign-sum of token hashes; near-dups =
   pairs within Hamming distance d, found by the standard pigeonhole trick
   (split signature into d+1 chunks, equi-join on any equal chunk).
-- n-gram Jaccard: same pipeline with character shingles.
 """
 
 from __future__ import annotations
@@ -185,17 +184,6 @@ def minhash_lsh_dedup(
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
     )
-
-
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    threshold: float,
-    shingle: int = 3,
-    text: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Exact n-gram Jaccard near-dup pairs via MinHash-LSH candidates."""
-    return minhash_lsh_dedup(df, threshold, shingle=shingle, text=text, id_col=id_col)
 
 
 def simhash_udf(shingle: int = 2, seed: int = 7):

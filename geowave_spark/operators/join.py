@@ -545,8 +545,8 @@ def _shuffle_polygon_join(
        (:func:`~geowave_spark.encode.explode_polygon_cells`) — geometry
        stays on executors, carried as WKT through the one shuffle;
     2. tier plan: the distinct build tiers come from a light tier-only scan
-       (:func:`~geowave_spark.encode.distinct_polygon_tiers` — only tier
-       ints reach the driver, the analog of the tier-byte collectAsync);
+       (:func:`~geowave_spark.encode.distinct_polygon_tiers`, the analog
+       of the tier-byte collectAsync), broadcast inside the join's job;
     3. probe side: one top-tier point cell (Arrow UDF), then one row per
        (point, build tier) via a broadcast cross join with the tiny tier
        list — tier re-projection is a Catalyst bit shift
@@ -573,8 +573,6 @@ def _shuffle_polygon_join(
     tiers = distinct_polygon_tiers(
         polygons, wkt, strategy, max_duplicates=max_duplicates, buffer=buffer
     )
-    spark = points.sparkSession
-    tiers_df = spark.createDataFrame([(int(t),) for t in tiers], "tier int")
     probe = (
         points.select(
             F.col(point_id).alias("_pid"),
@@ -582,7 +580,7 @@ def _shuffle_polygon_join(
             F.col(lat).alias("_plat"),
         )
         .withColumn("_top", point_cell_udf(strategy)(F.col("_plon"), F.col("_plat")))
-        .crossJoin(F.broadcast(tiers_df))
+        .crossJoin(F.broadcast(tiers))
         .withColumn("cell", cell_at_tier("_top", "tier", strategy.max_bits))
         .drop("_top")
     )
@@ -747,91 +745,77 @@ def geom_pair_join(
     the coarse cell phase is unchanged because every one of these
     relations implies envelope intersection.
 
-    Plan: both sides cell-explode (build side at its natural tiers with
-    trimIndexIds pruning; probe side re-covered at each distinct build
-    tier), one shuffled hash equi-join on (tier, cell), exact kind-aware
-    pair predicate, dropDuplicates (a pair CAN meet in several cells here
-    because both sides span cell ranges — the reference's reduceByKey
-    dedupe is genuinely needed, TieredSpatialJoin.java:349).
+    Plan (the reference's tier-by-tier join, TieredSpatialJoin.java:76-551):
 
-    Scale: shuffle volume is |left|·dup + |right|·dup·|tiers| rows of
-    (id, WKT); no driver geometry collect; the exact stage factorizes the
-    build WKT per Arrow batch so each distinct geometry parses once per
-    batch.
+    1. both sides explode to their natural insertion cells with
+       trimIndexIds pruning (:func:`~geowave_spark.encode.explode_polygon_cells`,
+       at most ``max_duplicates`` cells per geometry); only the right side
+       is buffered by ``radius`` (TieredSpatialJoin.java:146-166);
+    2. each side's distinct tiers come from a light tier-only scan
+       (:func:`~geowave_spark.encode.distinct_polygon_tiers`) and every
+       cell row is crossed with the OTHER side's tiny tier list (broadcast
+       cross join);
+    3. the join key is (tier_a, tier_b, cell at min(tier_a, tier_b)): the
+       finer side's cell is re-projected to the coarser tier by a Catalyst
+       bit shift (:func:`~geowave_spark.encode.cell_at_tier`, the analog of
+       reprojectToTier, TieredSpatialJoin.java:471-511);
+    4. one shuffled hash equi-join, then dropDuplicates on the id pair
+       (both sides span cell ranges and the shift merges sibling cells, so
+       a pair CAN meet in several cells — the reference's reduceByKey
+       dedupe, TieredSpatialJoin.java:349), then the exact kind-aware pair
+       predicate once per distinct pair.
+
+    ``left_id`` / ``right_id`` must be unique keys of their inputs (the
+    dedupe keeps one geometry pair per id pair).
+
+    Scale: shuffle volume is |left|·dup·|right tiers| + |right|·dup·|left
+    tiers| rows of (id, WKT) — bounded by the inputs, independent of
+    envelope area; nothing is collected to the driver; the exact
+    stage caches each parsed geometry per Arrow batch.
     """
     if predicate is not None and radius is not None:
         raise ValueError(
             "predicate joins take no radius (use radius= for within-distance)"
         )
-    buffer = radius or 0.0
-    build = explode_polygon_cells(
+    probe, build = _pair_keyed_sides(
+        left.select(F.col(left_id).alias("_pid"), F.col(left_wkt).alias("_pwkt")),
         right.select(F.col(right_id).alias("_gid"), F.col(right_wkt).alias("_gwkt")),
-        "_gwkt",
-        keep=["_gid", "_gwkt"],
-        strategy=strategy,
-        max_duplicates=max_duplicates,
-        buffer=buffer,
+        radius or 0.0, strategy, max_duplicates,
     )
-    tiers = distinct_polygon_tiers(
-        right, right_wkt, strategy, max_duplicates=max_duplicates, buffer=buffer
-    )
-    probe_src = left.select(
-        F.col(left_id).alias("_pid"), F.col(left_wkt).alias("_pwkt")
-    )
-    probe = None
-    for t in tiers:
-        # cover the probe envelope with cells at this build tier (unbuffered:
-        # only one side of a within-distance join needs the buffer,
-        # TieredSpatialJoin.java:146-166)
-        part = _explode_wkt_envelope_cells(probe_src, "_pwkt", ["_pid", "_pwkt"], strategy, t)
-        probe = part if probe is None else probe.unionByName(part)
-    if probe is None:
-        return probe_src.select(
-            F.col("_pid").alias(left_id)
-        ).limit(0).crossJoin(right.select(F.col(right_id).alias(right_id)).limit(0))
     return (
-        probe.join(build.hint("shuffle_hash"), ["tier", "cell"])
-        .where(
-            _geom_pair_match_udf(radius, predicate)(
-                F.col("_pwkt"), F.col("_gwkt")
-            )
-        )
+        probe.join(build.hint("shuffle_hash"), ["_ta", "_tb", "cell"])
+        .dropDuplicates(["_pid", "_gid"])
+        .where(_geom_pair_match_udf(radius, predicate)(F.col("_pwkt"), F.col("_gwkt")))
         .select(F.col("_pid").alias(left_id), F.col("_gid").alias(right_id))
-        .dropDuplicates([left_id, right_id])
     )
 
 
-def _explode_wkt_envelope_cells(
-    df: DataFrame, wkt_col: str, keep: list[str], strategy: TieredStrategy, tier: int
-) -> DataFrame:
-    """Explode each WKT row to the cells covering its envelope at one fixed
-    tier (flat mapInPandas, object-free Arrow exchange)."""
-    from pyspark.sql.types import IntegerType, LongType
+def _pair_keyed_sides(
+    left: DataFrame, right: DataFrame, buffer: float, strategy: TieredStrategy, max_duplicates: int
+) -> tuple[DataFrame, DataFrame]:
+    """The keyed sides of :func:`geom_pair_join` from two (id, wkt) frames:
+    one row per own insertion cell per tier of the other side, columns
+    ``id, wkt, _ta, _tb, cell`` with ``cell`` at tier min(_ta, _tb).  Only
+    the right side is buffered."""
 
-    src = df.select(*[F.col(c) for c in keep])
-    out_schema = StructType(
-        [src.schema[c] for c in keep]
-        + [StructField("tier", IntegerType()), StructField("cell", LongType())]
+    def keyed(df, buf, own, other, other_tiers):
+        cells = explode_polygon_cells(
+            df, df.columns[1], keep=df.columns, strategy=strategy,
+            max_duplicates=max_duplicates, buffer=buf,
+        )
+        return (
+            cells.withColumnRenamed("tier", own)
+            .crossJoin(F.broadcast(other_tiers.withColumnRenamed("tier", other)))
+            .withColumn("cell", cell_at_tier("cell", "least(_ta, _tb)", own))
+        )
+
+    def tiers(df, buf):
+        return distinct_polygon_tiers(df, df.columns[1], strategy, max_duplicates, buf)
+
+    return (
+        keyed(left, 0.0, "_ta", "_tb", tiers(right, buffer)),
+        keyed(right, buffer, "_tb", "_ta", tiers(left, 0.0)),
     )
-
-    def _gen(batches):
-        from ..geom import flatten_parts, parse_wkt_multi
-
-        for pdf in batches:
-            wkts = pdf[wkt_col]
-            env = np.empty((len(wkts), 4), dtype=np.float64)
-            for i, w in enumerate(wkts):
-                c = np.vstack(flatten_parts(parse_wkt_multi(w)))
-                env[i] = (c[:, 0].min(), c[:, 1].min(), c[:, 0].max(), c[:, 1].max())
-            row, cell = strategy.envelope_cells_at_tier(
-                env[:, 0], env[:, 1], env[:, 2], env[:, 3], tier
-            )
-            out = pdf.iloc[row].reset_index(drop=True)
-            out["tier"] = np.full(len(row), tier, dtype=np.int32)
-            out["cell"] = cell
-            yield out
-
-    return src.mapInPandas(_gen, out_schema)
 
 
 def _geom_pair_match_udf(radius: float | None, predicate: str | None = None):

@@ -13,13 +13,20 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from geowave_spark.encode import DEFAULT_STRATEGY, distinct_polygon_tiers, polygon_cells_np
 from geowave_spark.geom import (
     GeomBatch,
+    cell_rect_intersects_geom,
     parse_wkt_multi,
     points_geoms_dist2_batch,
     points_intersect_geoms_batch,
 )
-from geowave_spark.operators.join import geom_pair_join, geometry_distance_join
+from geowave_spark.operators.join import (
+    _pair_keyed_sides,
+    geom_pair_join,
+    geometry_distance_join,
+)
+from geowave_spark.sfc import JOIN_MAX_DUPLICATES
 from geowave_spark.sources.fixtures import points_pdf, tracks_pdf
 
 
@@ -110,6 +117,27 @@ class TestLineKernels:
         ) == [True, True, False]
         d2 = points_geoms_dist2_batch(px, py, np.zeros(3, np.int64), gb)
         assert np.allclose(d2, [0.0, 0.0, 16.0])  # (6,1)→edge x=2: 4²
+
+    def test_cell_rect_trim_vs_scalar_clip(self):
+        """The polyline insertion-cell trim test equals a per-rect scalar
+        oracle (a vertex in the closed rect, or a Liang-Barsky segment
+        clip) on half-unit lattice coordinates, where rects touch
+        segments and vertices and some rects are degenerate."""
+        rng = np.random.default_rng(5)
+        for _ in range(200):
+            p = rng.integers(-6, 7, (int(rng.integers(2, 7)), 2)) * 0.5
+            x0, y0 = rng.integers(-8, 8, (2, 40)) * 0.5
+            x1, y1 = x0 + rng.integers(0, 4, 40) * 0.5, y0 + rng.integers(0, 4, 40) * 0.5
+            got = cell_rect_intersects_geom(x0, y0, x1, y1, [p], closed=False)
+            want = [
+                any(x0[k] <= vx <= x1[k] and y0[k] <= vy <= y1[k] for vx, vy in p)
+                or any(
+                    _seg_hits_rect(p[j], p[j + 1], x0[k], y0[k], x1[k], y1[k])
+                    for j in range(len(p) - 1)
+                )
+                for k in range(len(x0))
+            ]
+            assert got.tolist() == want
 
 
 class TestStLineFunctions:
@@ -329,6 +357,35 @@ class TestGeomPairJoin:
         assert got == want
         assert len(want) > 5
 
+    def test_keyed_sides_bounded(self, spark, ra, rb):
+        """Each keyed side ships one row per own trimmed insertion cell per
+        tier of the other side — bounded by |side|·dup·|other tiers|, not by
+        envelope area (re-covering one side's envelope at the other side's
+        finest tier made this fixture's probe side ~15.7M rows)."""
+        da = spark.createDataFrame(ra[["gid", "wkt"]]).withColumnRenamed("gid", "aid")
+        db = spark.createDataFrame(rb[["gid", "wkt"]]).withColumnRenamed("gid", "bid")
+        probe, build = _pair_keyed_sides(da, db, 0.0, DEFAULT_STRATEGY, JOIN_MAX_DUPLICATES)
+        tiers_a = distinct_polygon_tiers(da, "wkt", max_duplicates=JOIN_MAX_DUPLICATES).count()
+        tiers_b = distinct_polygon_tiers(db, "wkt", max_duplicates=JOIN_MAX_DUPLICATES).count()
+        n_probe, n_build = probe.count(), build.count()
+        assert n_probe <= self.NA * JOIN_MAX_DUPLICATES * tiers_b
+        assert n_build <= self.NB * JOIN_MAX_DUPLICATES * tiers_a
+        cells_a = len(polygon_cells_np(list(ra["wkt"]), max_duplicates=JOIN_MAX_DUPLICATES)[0])
+        cells_b = len(polygon_cells_np(list(rb["wkt"]), max_duplicates=JOIN_MAX_DUPLICATES)[0])
+        assert n_probe == cells_a * tiers_b
+        assert n_build == cells_b * tiers_a
+
+    @pytest.mark.parametrize("empty", ["left", "right"])
+    def test_empty_side(self, spark, ra, empty):
+        full = spark.createDataFrame(ra[["gid", "wkt"]])
+        none = spark.createDataFrame([], "gid string, wkt string")
+        da, db = (none, full) if empty == "left" else (full, none)
+        out = geom_pair_join(
+            da.withColumnRenamed("gid", "aid"), db.withColumnRenamed("gid", "bid"), "aid", "bid"
+        )
+        assert out.columns == ["aid", "bid"]
+        assert out.count() == 0
+
 
 def _seg_hits_rect(p, q, x0, y0, x1, y1):
     """Liang-Barsky segment × rect test (scalar, independent oracle)."""
@@ -460,6 +517,42 @@ class TestPredicateJoin:
                     want.add((l.gid, ra["gid"].iloc[j]))
         assert got == want
         assert len(want) > 3
+
+    @staticmethod
+    def _edge_rects():
+        """Two coarse boxes meeting on x = 0 (a cell edge at every tier)
+        and tiny boxes, many tiers finer, that touch that edge from either
+        side, straddle it, sit a hair off it, or touch a coarse corner."""
+        rows = [("big_w", -10.0, -10.0, 0.0, 10.0), ("big_e", 0.0, -10.0, 10.0, 10.0)]
+        s = 0.001
+        for k, y0 in enumerate([-10.0 - s, -10.0 - s / 2, -5.0, 0.0, 10.0 - s, 10.0, 10.0 + s]):
+            for j, x0 in enumerate([-2 * s, -s, -s / 2, 0.0, s]):
+                rows.append((f"t{k}{j}", x0, y0, x0 + s, y0 + s))
+        return pd.DataFrame(
+            [
+                (g, f"POLYGON (({x0!r} {y0!r}, {x1!r} {y0!r}, {x1!r} {y1!r}, "
+                    f"{x0!r} {y1!r}, {x0!r} {y0!r}))", x0, y0, x1, y1)
+                for g, x0, y0, x1, y1 in rows
+            ],
+            columns=["gid", "wkt", "x0", "y0", "x1", "y1"],
+        )
+
+    @pytest.mark.parametrize("predicate", ["touches", None])
+    @pytest.mark.parametrize("coarse_side", ["left", "right"])
+    def test_cross_tier_cell_edge(self, spark, predicate, coarse_side):
+        rects = self._edge_rects()
+        coarse = rects["gid"].str.startswith("big")
+        ra, rb = rects[coarse], rects[~coarse]
+        if coarse_side == "right":
+            ra, rb = rb, ra
+        tiers = {
+            t
+            for side in (ra, rb)
+            for t in polygon_cells_np(list(side["wkt"]), max_duplicates=JOIN_MAX_DUPLICATES)[1]
+        }
+        assert len(tiers) >= 2, "fixture must span tiers"
+        cl, ii, _, _ = self._flags(ra, rb)
+        self._check(spark, ra, rb, predicate, cl & ~ii if predicate == "touches" else cl)
 
     def test_radius_with_predicate_rejected(self, spark, ra, rb):
         da = spark.createDataFrame(ra[["gid", "wkt"]]).withColumnRenamed("gid", "aid")
