@@ -765,12 +765,6 @@ def q_temporal_predicates(spark, sf_dir):
 
 PHASH_N = 1200  # images in the phash near-dup gate (oracle pinned to it)
 
-# class tables persisted by earlier q_phash_neardup calls; unpersisted on
-# the next call so repeated driver invocations never accumulate cached
-# blocks in a long-lived session
-_PHASH_CLASS_CACHE: list = []
-
-
 def q_phash_neardup(spark, sf_dir):
     """Image near-duplicate detection by 64-bit perceptual hash over the
     input-hint images table (driver-brief image axis; the reference has
@@ -782,22 +776,20 @@ def q_phash_neardup(spark, sf_dir):
     d=4 / m=2 → 15 bands on 20-bit keys) over DISTINCT signatures only,
     then join class sizes back.  Value-exact vs the independent
     brute-force popcount oracle (tools/oracle_values.phash_pair_rows)."""
+    from geowave_spark.operators.dedup import replace_cache
     from geowave_spark.operators.imagedup import hamming_pairs
     from geowave_spark.sources.images import images_table
 
     ensure_py_files(spark)
-    while _PHASH_CLASS_CACHE:
-        _PHASH_CLASS_CACHE.pop().unpersist()
-    classes = (
+    # the class table is referenced four times downstream (two band-join
+    # sides, two size join-backs); without persist each reference
+    # regenerates + rehashes every image.  The next call unpersists it.
+    classes = replace_cache(
+        "phash_classes",
         images_table(spark, PHASH_N)
         .groupBy(F.col("phash").alias("_sig"))
-        .agg(F.min("image_id").alias("_id"), F.count(F.lit(1)).alias("cnt"))
-        # the class table is referenced four times downstream (two band-join
-        # sides, two size join-backs); without persist each reference
-        # regenerates + rehashes every image
-        .persist()
+        .agg(F.min("image_id").alias("_id"), F.count(F.lit(1)).alias("cnt")),
     )
-    _PHASH_CLASS_CACHE.append(classes)
     pairs = hamming_pairs(
         classes.select("_id", "_sig"), max_hamming=4, blocks_per_key=2
     )

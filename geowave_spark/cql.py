@@ -32,7 +32,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _WKT_TYPES = (
@@ -185,7 +185,3 @@ def cql_query(spark: SparkSession, table: str, cql: str) -> DataFrame:
 
     register_all(spark)
     return spark.sql(f"SELECT * FROM {table} WHERE {translate_cql(cql)}")
-
-
-def cql_column(cql: str) -> Column:
-    return F.expr(translate_cql(cql))

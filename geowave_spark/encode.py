@@ -43,12 +43,6 @@ from .sfc.hilbert import hilbert_to_xy
 
 DEFAULT_STRATEGY = TieredStrategy()
 
-_INS_SCHEMA = ArrayType(
-    StructType(
-        [StructField("tier", IntegerType()), StructField("cell", LongType())]
-    )
-)
-
 
 def point_cell_udf(strategy: TieredStrategy = DEFAULT_STRATEGY):
     """Pandas UDF: (lon, lat) → top-tier Hilbert cell id (long)."""
@@ -115,93 +109,6 @@ def with_point_cells(
     (TieredSFCIndexStrategy point fast path)."""
     return df.withColumn(cell_col, point_cell_udf(strategy)(F.col(lon), F.col(lat))).withColumn(
         tier_col, F.lit(strategy.max_bits)
-    )
-
-
-def envelope_cells_udf(
-    strategy: TieredStrategy = DEFAULT_STRATEGY,
-    max_duplicates: int = 4,
-):
-    """Pandas UDF: envelope (minx,miny,maxx,maxy) → array<struct<tier,cell>>."""
-
-    @F.pandas_udf(_INS_SCHEMA)
-    def _ins(minx: pd.Series, miny: pd.Series, maxx: pd.Series, maxy: pd.Series) -> pd.Series:
-        row, tier, cell = strategy.envelope_insertion_ids(
-            minx.to_numpy(np.float64),
-            miny.to_numpy(np.float64),
-            maxx.to_numpy(np.float64),
-            maxy.to_numpy(np.float64),
-            max_duplicates=max_duplicates,
-        )
-        n = len(minx)
-        out: list[list[dict]] = [[] for _ in range(n)]
-        for r, t, c in zip(row.tolist(), tier.tolist(), cell.tolist()):
-            out[r].append({"tier": int(t), "cell": int(c)})
-        return pd.Series(out)
-
-    return _ins
-
-
-def with_envelope_cells(
-    df: DataFrame,
-    minx: Column,
-    miny: Column,
-    maxx: Column,
-    maxy: Column,
-    strategy: TieredStrategy = DEFAULT_STRATEGY,
-    max_duplicates: int = 4,
-) -> DataFrame:
-    """Explode each row into its insertion cells: one row per (tier, cell)."""
-    ins = envelope_cells_udf(strategy, max_duplicates)(minx, miny, maxx, maxy)
-    return (
-        df.withColumn("_ins", F.explode(ins))
-        .withColumn("tier", F.col("_ins.tier"))
-        .withColumn("cell", F.col("_ins.cell"))
-        .drop("_ins")
-    )
-
-
-def polygon_cells_udf(
-    strategy: TieredStrategy = DEFAULT_STRATEGY,
-    max_duplicates: int = 4,
-    buffer: float = 0.0,
-    trim: bool = True,
-):
-    """Pandas UDF: WKT polygon → array<struct<tier,cell>> with cell trimming.
-
-    Trimming mirrors RDDUtils.trimIndexIds (RDDUtils.java:158-184): when an
-    entity received more than 3 cells, drop cells whose rectangle does not
-    intersect the (buffered) geometry — fewer join candidates, same result
-    after the exact post-filter.
-    """
-
-    @F.pandas_udf(_INS_SCHEMA)
-    def _ins(wkt: pd.Series) -> pd.Series:
-        row, tier, cell = polygon_cells_np(
-            list(wkt), strategy, max_duplicates, buffer, trim
-        )
-        out: list[list[dict]] = [[] for _ in range(len(wkt))]
-        for r, t, c in zip(row.tolist(), tier.tolist(), cell.tolist()):
-            out[r].append({"tier": int(t), "cell": int(c)})
-        return pd.Series(out)
-
-    return _ins
-
-
-def with_polygon_cells(
-    df: DataFrame,
-    wkt_col: str = "wkt",
-    strategy: TieredStrategy = DEFAULT_STRATEGY,
-    max_duplicates: int = 4,
-    buffer: float = 0.0,
-    trim: bool = True,
-) -> DataFrame:
-    ins = polygon_cells_udf(strategy, max_duplicates, buffer, trim)(F.col(wkt_col))
-    return (
-        df.withColumn("_ins", F.explode(ins))
-        .withColumn("tier", F.col("_ins.tier"))
-        .withColumn("cell", F.col("_ins.cell"))
-        .drop("_ins")
     )
 
 
@@ -326,10 +233,9 @@ def explode_envelope_cells(
     """Flat explode of envelope insertion ids via ``mapInPandas``.
 
     Output = one row per (tier, cell) per input row with columns
-    ``keep + [tier, cell]``.  Unlike :func:`envelope_cells_udf` (which
-    materializes array<struct> as Python dicts and then explodes), every
-    column here stays a numpy array end-to-end — the Arrow exchange carries
-    no Python objects, which is ~an order of magnitude cheaper at the
+    ``keep + [tier, cell]``.  Every column stays a numpy array end-to-end
+    (no array<struct> of Python dicts to explode), so the Arrow exchange
+    carries no Python objects — about an order of magnitude cheaper at the
     millions-of-cells scale the join build side produces.
     """
     src = df.select(

@@ -14,7 +14,7 @@ containment across a geometry's closed rings OR exactly-on-boundary —
 one rule that covers exterior+hole rings and disjoint multipolygon
 shells alike (``points_contained_batch``).  The single-ring fast paths
 (``points_in_polygons_batch``) stay as-is for the simple-ring pipelines.
-A minimal WKT POLYGON/POINT parser round-trips the fixture format.
+A minimal WKT POLYGON/POINT parser reads the fixture format.
 """
 
 from __future__ import annotations
@@ -185,14 +185,6 @@ def geom_is_closed(kind: str) -> bool:
     return kind in _CLOSED_KINDS
 
 
-def polygon_wkt(coords: np.ndarray) -> str:
-    ring = coords
-    if not np.array_equal(ring[0], ring[-1]):
-        ring = np.vstack([ring, ring[:1]])
-    inner = ", ".join(f"{x:.9g} {y:.9g}" for x, y in ring)
-    return f"POLYGON (({inner}))"
-
-
 # --- predicates -----------------------------------------------------------
 
 def points_in_polygon(px: np.ndarray, py: np.ndarray, poly: np.ndarray) -> np.ndarray:
@@ -295,29 +287,6 @@ def points_in_polygons_batch(
         & (pyv <= np.maximum(y1, y2))
     ).any(axis=1)
     return inside | on_edge
-
-
-def points_polygons_dist2_batch(
-    px: np.ndarray, py: np.ndarray, codes: np.ndarray, padded: np.ndarray
-) -> np.ndarray:
-    """Squared distance point→its polygon (0 inside), batched like
-    :func:`points_in_polygons_batch`."""
-    P = padded[codes]
-    x1 = P[:, :, 0]
-    y1 = P[:, :, 1]
-    x2 = np.roll(x1, -1, axis=1)
-    y2 = np.roll(y1, -1, axis=1)
-    dx = x2 - x1
-    dy = y2 - y1
-    seg_len2 = dx * dx + dy * dy
-    safe = np.where(seg_len2 == 0, 1.0, seg_len2)
-    pxv = px[:, None]
-    pyv = py[:, None]
-    t = np.clip(((pxv - x1) * dx + (pyv - y1) * dy) / safe, 0.0, 1.0)
-    cx = x1 + t * dx
-    cy = y1 + t * dy
-    d2 = ((pxv - cx) ** 2 + (pyv - cy) ** 2).min(axis=1)
-    return np.where(points_in_polygons_batch(px, py, codes, padded), 0.0, d2)
 
 
 class GeomBatch:
@@ -631,15 +600,6 @@ def polygon_envelope(poly: np.ndarray) -> tuple[float, float, float, float]:
     )
 
 
-def envelopes_intersect(
-    a: tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray],
-    b: tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray],
-) -> np.ndarray:
-    aminx, aminy, amaxx, amaxy = a
-    bminx, bminy, bmaxx, bmaxy = b
-    return (aminx <= bmaxx) & (bminx <= amaxx) & (aminy <= bmaxy) & (bminy <= amaxy)
-
-
 def cell_rect_intersects_polygon(
     cminx: np.ndarray, cminy: np.ndarray, cmaxx: np.ndarray, cmaxy: np.ndarray, poly: np.ndarray
 ) -> np.ndarray:
@@ -819,28 +779,3 @@ class LocalGeomGrid(LocalPolygonGrid):
 
     def intersects(self, px: np.ndarray, py: np.ndarray, codes: np.ndarray) -> np.ndarray:
         return points_intersect_geoms_batch(px, py, codes, self.gb)
-
-
-def rings_edges_proper_cross(
-    a: np.ndarray, b: np.ndarray, closed_a: bool = True, closed_b: bool = True
-) -> bool:
-    """Any PROPER edge crossing between two parts: segments intersect at a
-    single interior point of both (excludes endpoint contact and collinear
-    overlap).  Distinguishes interiors-overlap from boundary-only touch.
-    ``closed_*=False`` treats the part as an open polyline."""
-    p, p2 = _part_edges(a, closed_a)
-    q, q2 = _part_edges(b, closed_b)
-    if not len(p) or not len(q):
-        return False
-    r = p2 - p
-    s = q2 - q
-    # (E1, E2) pairwise
-    rxs = r[:, None, 0] * s[None, :, 1] - r[:, None, 1] * s[None, :, 0]
-    qp = q[None, :, :] - p[:, None, :]
-    qpxs = qp[:, :, 0] * s[None, :, 1] - qp[:, :, 1] * s[None, :, 0]
-    qpxr = qp[:, :, 0] * r[:, None, 1] - qp[:, :, 1] * r[:, None, 0]
-    with np.errstate(divide="ignore", invalid="ignore"):
-        t = qpxs / rxs
-        u = qpxr / rxs
-    proper = (rxs != 0) & (t > 0) & (t < 1) & (u > 0) & (u < 1)
-    return bool(proper.any())

@@ -117,26 +117,3 @@ def subsample_per_cell(
         .where(F.col("_rn") == 1)
         .drop("_rn")
     )
-
-
-def field_stats(df: DataFrame, col: str) -> DataFrame:
-    """NumericStatsStatistic analog: count/min/max/sum/mean/stddev in one agg."""
-    return df.agg(
-        F.count(col).alias("cnt"),
-        F.min(col).alias("min"),
-        F.max(col).alias("max"),
-        F.sum(col).alias("sum"),
-        F.avg(col).alias("mean"),
-        F.stddev_samp(col).alias("stddev"),
-    )
-
-
-def sketch_stats(df: DataFrame, col: str) -> DataFrame:
-    """HLL + CMS statistics (HyperLogLogStatistic / CountMinSketchStatistic
-    analogs) via Spark's built-in sketches."""
-    return df.agg(
-        F.approx_count_distinct(col).alias("hll_ndv"),
-        F.count_min_sketch(F.col(col).cast("string"), F.lit(0.01), F.lit(0.99), F.lit(42)).alias(
-            "cms"
-        ),
-    )

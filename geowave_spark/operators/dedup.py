@@ -1,25 +1,27 @@
-"""Deduplication operators: exact, MinHash+LSH, SimHash.
+"""Deduplication operators (training-data pipeline; designed for 100 TB).
 
-Training-data-pipeline operators (driver brief).  Design for 100 TB:
-
-- exact: hash-groupBy on md5(text) — one shuffle, partial agg on the hash,
-  never materializes pairwise anything.
-- MinHash+LSH: shingle → k minhashes (vectorized numpy multiply-shift
-  hashing in one Arrow batch) → band signatures → *self-join on band
-  bucket* (equi hash join; candidate pairs only within a bucket) → exact
-  Jaccard verify on candidates.  Bucket join is the only quadratic-risk
-  step and is bounded by bucket size; a salt/cap column guards pathological
-  buckets.
-- SimHash: 64-bit signature via sign-sum of token hashes; near-dups =
-  pairs within Hamming distance d, found by the standard pigeonhole trick
-  (split signature into d+1 chunks, equi-join on any equal chunk).
+- exact: hash-groupBy on md5(text) — one shuffle, never pairwise.
+- :func:`banded_pairs`: the candidate stage of every near-dup operator
+  (MinHash, SimHash, pHash, cosine LSH), after GeoWave's
+  ``TieredSpatialJoin``: explode band keys, equi-join on ``(band, key)``
+  carrying only the id and a compact signature, keep each pair in its
+  first agreeing band (a codegen filter, no ``dropDuplicates``).  Callers
+  verify exactly and join wider payloads back by id.
+- MinHash+LSH: shingle → k minhashes (numpy multiply-shift hashing per
+  Arrow batch) → band hashes → :func:`banded_pairs` → estimated, then
+  exact Jaccard verify.
+- SimHash: 64-bit sign-sum signature; pairs within Hamming distance d by
+  pigeonhole banding (:func:`imagedup.hamming_pairs`).
 """
 
 from __future__ import annotations
 
+import warnings
+from collections.abc import Callable
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, LongType
 
@@ -48,6 +50,82 @@ def exact_dedup(df: DataFrame, text: str = "text", id_col: str = "doc_id") -> Da
     return df.groupBy(F.md5(F.col(text)).alias("_h")).agg(
         F.min(id_col).alias(id_col), F.count(F.lit(1)).alias("dup_count")
     ).drop("_h")
+
+
+# each near-dup wrapper's persisted signature relation from its last call
+_LIVE_CACHE: dict[str, DataFrame] = {}
+
+
+def replace_cache(key: str, df: DataFrame) -> DataFrame:
+    """Persist ``df`` under ``key``.  The previous call's relation is
+    unpersisted unless it is the same plan (Spark then reuses its cache),
+    so repeated calls in a long-lived session hold one cache per key."""
+    old = _LIVE_CACHE.get(key)
+    if old is not None and not old.sameSemantics(df):
+        old.unpersist()
+    _LIVE_CACHE[key] = df.persist()
+    return _LIVE_CACHE[key]
+
+
+def banded_pairs(
+    sig: DataFrame,
+    band_keys: list[Callable[[Column], Column]],
+    max_bucket: int | None = None,
+) -> DataFrame:
+    """Candidate pairs ``(id_a, id_b, _sa, _sb)``, ``id_a < id_b``, of the
+    rows of ``sig`` (columns ``_id``, ``_sig``) sharing a band key, where
+    ``band_keys[j]`` maps ``_sig`` to band j's long key.  Only ``_id`` and
+    ``_sig`` cross the ``(band, key)`` join exchange.
+
+    Each pair is kept only in the FIRST band whose keys agree (Norouzi et
+    al.'s multi-index duplicate elimination) instead of a
+    ``dropDuplicates`` exchange: one ``array_position`` over the per-band
+    key equalities, compact enough to stay in whole-stage codegen.
+
+    Keys of ``(band, key)`` buckets over ``max_bucket`` rows (the only
+    quadratic-risk step) become null, with a warning; a null key neither
+    joins nor counts as a first agreeing band, so such a pair is still
+    found through its next shared band.  The over-cap keys enter the plan
+    as literals (meant for a handful of degenerate buckets).
+    """
+
+    def explode(keys):
+        return sig.select(
+            "_id",
+            "_sig",
+            F.posexplode(F.array(*(bk(F.col("_sig")) for bk in keys))).alias("band", "bkey"),
+        )
+
+    if max_bucket is not None:
+        over = explode(band_keys).groupBy("band", "bkey").count()
+        over = over.where(F.col("count") > max_bucket).collect()
+        if over:
+            warnings.warn(
+                f"banded_pairs: dropped {len(over)} over-limit bucket(s) covering "
+                f"{sum(r['count'] for r in over)} band rows (max_bucket={max_bucket})",
+                stacklevel=3,
+            )
+            capped: dict[int, list[int]] = {}
+            for j, key, _ in over:
+                capped.setdefault(j, []).append(key)
+            band_keys = [
+                (lambda s, bk=bk, ks=capped[j]: F.when(~bk(s).isin(ks), bk(s)))
+                if j in capped
+                else bk
+                for j, bk in enumerate(band_keys)
+            ]
+    rows = explode(band_keys)
+    a, b = (
+        rows.select(F.col("_id").alias(f"id_{s}"), F.col("_sig").alias(f"_s{s}"), "band", "bkey")
+        for s in "ab"
+    )
+    agree = F.array(*(bk(F.col("_sa")) == bk(F.col("_sb")) for bk in band_keys))
+    return (
+        a.join(b, ["band", "bkey"])
+        .where(F.col("id_a") < F.col("id_b"))
+        .where(F.col("band") == F.array_position(agree, True) - 1)
+        .select("id_a", "id_b", "_sa", "_sb")
+    )
 
 
 def minhash_udf(num_hashes: int = 64, shingle: int = 3, seed: int = 42):
@@ -81,71 +159,39 @@ def minhash_lsh_dedup(
 ) -> DataFrame:
     """Near-duplicate pairs (id_a < id_b, jaccard ≥ threshold).
 
-    shingle→minhash→band→bucket-join→exact-Jaccard verify.  Bucket join is
-    an equi join on (band, band_hash); buckets larger than ``max_bucket``
-    (degenerate content — boilerplate/empty docs — whose all-pairs cost is
-    quadratic) are dropped, and the drop is REPORTED: a warning carries
-    the dropped-bucket count and covered row count (silent truncation is
-    not allowed at scale).
+    Only the ``bands`` band hashes cross the band exchange; the minhash
+    signature and the text are joined back by id for the verify.  Buckets
+    over ``max_bucket`` rows (boilerplate/empty docs, quadratic all-pairs
+    cost) are dropped with a warning (see :func:`banded_pairs`).
     """
     rows_per_band = num_hashes // bands
-    sig = df.select(
-        F.col(id_col).alias("_id"),
-        F.col(text).alias("_text"),
-        minhash_udf(num_hashes, shingle)(F.col(text)).alias("_sig"),
-    ).cache()
-
-    bands_df = sig.select(
+    sig = replace_cache(
+        "minhash",
+        df.select(
+            F.col(id_col).alias("_id"),
+            F.col(text).alias("_text"),
+            minhash_udf(num_hashes, shingle)(F.col(text)).alias("_mh"),
+        ),
+    )
+    band_hashes = sig.select(
         "_id",
-        "_sig",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda i: F.xxhash64(F.slice("_sig", i * rows_per_band + 1, rows_per_band)),
-            )
-        ).alias("band", "bucket"),
+        F.transform(
+            F.sequence(F.lit(0), F.lit(bands - 1)),
+            lambda i: F.xxhash64(F.slice("_mh", i * rows_per_band + 1, rows_per_band)),
+        ).alias("_sig"),
     )
-    # bound pathological buckets — and report what was dropped
-    sizes = bands_df.groupBy("band", "bucket").count()
-    over = sizes.where(F.col("count") > max_bucket).cache()
-    stats = over.agg(
-        F.count(F.lit(1)).alias("n"), F.coalesce(F.sum("count"), F.lit(0)).alias("rows")
-    ).first()
-    if stats["n"]:
-        import warnings
-
-        warnings.warn(
-            f"minhash_lsh_dedup: dropped {stats['n']} over-limit bucket(s) "
-            f"covering {stats['rows']} band rows (max_bucket={max_bucket}); "
-            "pairs within them are not examined",
-            stacklevel=2,
-        )
-    bands_df = bands_df.join(
-        F.broadcast(over).select("band", "bucket", F.lit(True).alias("_over")),
-        ["band", "bucket"],
-        "left",
-    ).where(F.col("_over").isNull()).drop("_over")
-
-    a = bands_df.select(F.col("_id").alias("id_a"), F.col("_sig").alias("_sig_a"), "band", "bucket")
-    b = bands_df.select(F.col("_id").alias("id_b"), F.col("_sig").alias("_sig_b"), "band", "bucket")
-    cand = (
-        a.join(b, ["band", "bucket"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "_sig_a", "_sig_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    cand = banded_pairs(
+        band_hashes, [lambda s, j=j: s[j] for j in range(bands)], max_bucket
+    ).select("id_a", "id_b")
+    for s in "ab":
+        names = {"_id": f"id_{s}", "_mh": f"_sig_{s}", "_text": f"_t{s}"}
+        cand = cand.join(sig.withColumnsRenamed(names), f"id_{s}")
     # estimated jaccard from signature agreement, then exact verify
     est = (
         F.size(F.filter(F.zip_with("_sig_a", "_sig_b", lambda x, y: x == y), lambda v: v))
         / F.lit(num_hashes)
     )
-    cand = cand.withColumn("est_jaccard", est).where(F.col("est_jaccard") >= threshold * 0.5)
-
-    texts = df.select(F.col(id_col).alias("_tid"), F.col(text).alias("_t"))
-    cand = (
-        cand.join(texts.withColumnRenamed("_tid", "id_a").withColumnRenamed("_t", "_ta"), "id_a")
-        .join(texts.withColumnRenamed("_tid", "id_b").withColumnRenamed("_t", "_tb"), "id_b")
-    )
+    cand = cand.where(est >= threshold * 0.5)
 
     @F.pandas_udf(DoubleType())
     def _jaccard(ta: pd.Series, tb: pd.Series) -> pd.Series:
@@ -221,17 +267,12 @@ def simhash_pairs(
     id_col: str = "doc_id",
     blocks_per_key: int = 1,
 ) -> DataFrame:
-    """Pairs within Hamming distance ≤ max_hamming of 64-bit SimHash.
-
-    Pigeonhole: split the 64-bit signature into (max_hamming+1) chunks; any
-    pair within distance d agrees on ≥1 chunk → equi-join per chunk, union,
-    exact popcount verify (bit_count is built-in).  ``blocks_per_key``
-    raises the banding to multi-index hashing for web-scale corpora —
-    identical row set, candidates ∝ n²/2^(m·width) (see
-    :func:`imagedup.hamming_pairs`)."""
+    """Pairs within Hamming distance ≤ max_hamming of 64-bit SimHash, by
+    :func:`imagedup.hamming_pairs` (``blocks_per_key`` as there)."""
     from geowave_spark.operators.imagedup import hamming_pairs
 
-    sig = df.select(
-        F.col(id_col).alias("_id"), simhash_udf()(F.col(text)).alias("_sig")
-    ).cache()
+    sig = replace_cache(
+        "simhash",
+        df.select(F.col(id_col).alias("_id"), simhash_udf()(F.col(text)).alias("_sig")),
+    )
     return hamming_pairs(sig, max_hamming, blocks_per_key=blocks_per_key)

@@ -8,11 +8,13 @@ image axis).  Design for 100 TB:
   8×8 low-frequency band minus DC → median threshold → 64-bit pHash.
   One Arrow-batched pandas UDF; decode is per-image by nature but every
   later step runs on the whole batch as stacked numpy.
-- pairing: the same pigeonhole banding as SimHash: any pair within
-  Hamming distance d agrees on at least one of d+1 signature chunks →
-  per-chunk equi-join, union, exact ``bit_count`` verify, all inside
+- pairing: pigeonhole banding (multi-index hashing): any pair within
+  Hamming distance d agrees on at least one band of signature blocks, so
+  the shared :func:`dedup.banded_pairs` kernel joins on ``(band, key)``
+  carrying only (id, 8-byte signature), keeps each pair in its first
+  agreeing band, and an exact ``bit_count`` verifies, all inside
   Catalyst.  No all-pairs stage anywhere; bucket sizes bound the only
-  quadratic-risk step exactly as in :func:`dedup.simhash_pairs`.
+  quadratic-risk step.  :func:`dedup.simhash_pairs` pairs the same way.
 
 The reference has no image-dedup operator; this is a driver-brief
 addition (LLM training-data pipeline family) built on the repo's
@@ -21,11 +23,15 @@ raster codecs (``raster/codec.py``, ``raster/jpeg.py``).
 
 from __future__ import annotations
 
+from itertools import combinations
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
+
+from geowave_spark.operators.dedup import banded_pairs, replace_cache
 
 __all__ = ["phash_from_pixels", "phash_udf", "hamming_pairs", "image_phash_neardup"]
 
@@ -148,31 +154,20 @@ def hamming_pairs(
 ) -> DataFrame:
     """All id pairs within ``max_hamming`` of their 64-bit signatures.
 
-    ``sig`` must have columns ``_id`` and ``_sig`` (long).  Pigeonhole
-    banding, generalized to multi-index hashing (Manku et al. WWW'07 §3;
-    Norouzi et al., "Fast Search in Hamming Space with Multi-Index
-    Hashing"): split the word into k = d + m blocks; a pair within
-    distance d has errors in at most d blocks, so at least m blocks are
-    clean and the band keyed on exactly those m blocks matches →
-    equi-join per C(k, m) band, dedupe, exact popcount verify.
+    ``sig`` must have columns ``_id`` and ``_sig`` (long).  Multi-index
+    hashing (Manku et al. WWW'07 §3; Norouzi et al.): split the word into
+    k = d + m blocks; a pair within distance d is clean on at least m
+    blocks, so it shares the band keyed on those m blocks → one
+    :func:`dedup.banded_pairs` join over the C(k, m) bands, then an exact
+    popcount verify.  Recall is 1.0 and the row set is the same for every
+    m.
 
-    ``blocks_per_key`` (m) is the candidate-volume dial: expected
-    spurious candidates scale as C(k,m)·n²/2^(m·width).  m=1 is the
-    plain d+1-chunk scheme (fine at 10^5 rows); at web scale raise m so
-    the band keyspace outgrows n — e.g. d=4, m=2 turns 5 joins on 12-bit
-    keys (n²/4096 candidates) into 15 joins on 20-bit keys (n²/10^6).
-    The output row set is identical for every m (recall is 1.0 by the
-    pigeonhole argument; the popcount verify fixes precision).
-
-    When k = d + m does not divide 64, the leftover high bits are folded
-    into the LAST block (its width is 64 − (k−1)·⌊64/k⌋), so every bit of
-    the signature is covered by exactly one block and band keys stay
-    maximally selective.  k ≥ 2 is required: a single 64-bit block would
-    need a 2⁶⁴−1 mask literal that overflows a Spark long (and a
-    whole-word band is just an exact-match groupBy — use
-    ``dropDuplicates`` for that)."""
-    from itertools import combinations
-
+    ``blocks_per_key`` (m) dials candidate volume, ∝ C(k,m)·n²/2^(m·width):
+    d=4, m=2 turns 5 bands of 12-bit keys (n²/4096) into 15 bands of
+    20-bit keys (n²/10^6).  Leftover bits when k does not divide 64 fold
+    into the last block, so every bit is in exactly one block.  A band's
+    key is the signature masked to its m blocks.  k ≥ 2 is required (a
+    single whole-word band is an exact-match groupBy)."""
     m = blocks_per_key
     k = max_hamming + m
     if m < 1 or k < 2 or k > 64:
@@ -185,58 +180,19 @@ def hamming_pairs(
     # remainder, covering all 64 bits
     widths = [width] * (k - 1) + [64 - (k - 1) * width]
 
-    def block(b: int, col: str = "_sig"):
-        mask = (1 << widths[b]) - 1
-        return f"(shiftrightunsigned({col}, {b * width}) & {mask}L)"
+    def band_mask(combo):
+        # the combo's block bits, as a signed 64-bit literal: a band key is
+        # the signature with every other block masked out
+        mask = sum(((1 << widths[b]) - 1) << (b * width) for b in combo)
+        return mask - (1 << 64) if mask >> 63 else mask
 
-    def band_key(combo, col: str = "_sig"):
-        parts, shift = [], 0
-        for b in combo:
-            parts.append(f"({block(b, col)} << {shift})")
-            shift += widths[b]
-        return "(" + " | ".join(parts) + ")"
-
-    combos = list(combinations(range(k), m))
-    band_keys = [band_key(combo) for combo in combos]
-    exploded = sig.select(
-        "_id",
-        "_sig",
-        F.posexplode(F.expr("array(" + ", ".join(band_keys) + ")")).alias(
-            "band", "bkey"
-        ),
-    )
-    a = exploded.select(
-        F.col("_id").alias("id_a"), F.col("_sig").alias("_sa"), "band", "bkey"
-    )
-    b = exploded.select(
-        F.col("_id").alias("id_b"), F.col("_sig").alias("_sb"), "band", "bkey"
-    )
-    # first-matching-band dedup (Norouzi MIH's duplicate-candidate
-    # elimination): a pair agreeing on several bands would surface once
-    # per band; instead of shuffling every candidate row through
-    # dropDuplicates, keep a candidate only in the FIRST band whose keys
-    # agree (r5 — replaces the dropDuplicates exchange, the most
-    # expensive stage of the pairing join, with a codegen filter; each
-    # distinct pair survives exactly once, so the row set is unchanged).
-    # Kept COMPACT on purpose: k per-block equality terms feed C(k,m)
-    # band-match booleans and array_position picks the first true one —
-    # a naive "band j ⇒ every earlier band key differs" CASE repeats the
-    # band-key bit math O(C(k,m)²) times and blows past the JVM's 64 KB
-    # method limit, kicking the whole stage out of codegen (2M-signature
-    # bench, local[32] warm: 48 s naive CASE, ~12-13 s dropDuplicates,
-    # 8.6 s this form).
-    eq_terms = [f"(({block(i, '_sa')}) = ({block(i, '_sb')}))" for i in range(k)]
-    band_match = [
-        "(" + " AND ".join(eq_terms[i] for i in combo) + ")" for combo in combos
+    band_keys = [
+        lambda s, mask=band_mask(combo): s.bitwiseAND(mask)
+        for combo in combinations(range(k), m)
     ]
-    first_match = (
-        f"band = (array_position(array({', '.join(band_match)}), true) - 1)"
-    )
     return (
-        a.join(b, ["band", "bkey"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .where(F.expr(first_match))
-        .withColumn("hamming", F.bit_count(F.expr("_sa ^ _sb")))
+        banded_pairs(sig, band_keys)
+        .withColumn("hamming", F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb"))))
         .where(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )
@@ -256,22 +212,20 @@ def image_phash_neardup(
     Output: (id_a, id_b, hamming), id_a < id_b lexicographically.
     Raise ``blocks_per_key`` for large corpora (see :func:`hamming_pairs`).
 
-    If ``signature_col`` names a pre-materialized 64-bit hash column
-    (the input-hint images table already carries ``phash``), decode is
-    skipped entirely.  Otherwise the signature projection is persisted
-    and materialized BEFORE the band self-join, so the decode+DCT pandas
-    UDF — the expensive stage — evaluates exactly once per image instead
-    of once per join side; the cache holds only (id, 8-byte signature)
-    rows and is dropped with the session (or via
-    ``spark.catalog.clearCache()``)."""
+    ``signature_col`` names a pre-materialized 64-bit hash column (the
+    images table's ``phash``) and skips decode.  Otherwise the (id,
+    signature) projection is persisted and materialized before the band
+    self-join, so the decode+DCT UDF runs once per image, not once per
+    join side; the next call unpersists it."""
     if signature_col is not None:
         sig = images.select(
             F.col(id_col).alias("_id"),
             F.col(signature_col).cast("long").alias("_sig"),
         )
         return hamming_pairs(sig, max_hamming, blocks_per_key=blocks_per_key)
-    sig = images.select(
-        F.col(id_col).alias("_id"), phash_udf(bytes_col, fmt_col).alias("_sig")
-    ).persist()
+    sig = replace_cache(
+        "phash",
+        images.select(F.col(id_col).alias("_id"), phash_udf(bytes_col, fmt_col).alias("_sig")),
+    )
     sig.count()  # materialize once: both self-join legs read the cache
     return hamming_pairs(sig, max_hamming, blocks_per_key=blocks_per_key)

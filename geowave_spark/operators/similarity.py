@@ -15,7 +15,9 @@ Training-data-pipeline operators (driver brief):
   search only the ``nprobe`` nearest buckets.  Equi-join on bucket id, so
   the scan cost drops by ~C/nprobe vs brute force.
 - ``cosine_neardup_pairs``: embedding near-duplicate pairs via random
-  hyperplane LSH (sign bits → bucket equi-join) + exact cosine verify.
+  hyperplane LSH: sign bits packed into band keys, the shared
+  :func:`dedup.banded_pairs` kernel (ids and band keys only in its
+  exchange), then the vectors joined back by id for the exact cosine.
 """
 
 from __future__ import annotations
@@ -25,6 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, IntegerType, LongType, StructField, StructType
+
+from geowave_spark.operators.dedup import banded_pairs
 
 
 def _cosine_expr(a: str, b: str):
@@ -381,39 +385,32 @@ def cosine_neardup_pairs(
     seed: int = 42,
 ) -> DataFrame:
     """Embedding near-duplicate pairs (cosine ≥ threshold) via random
-    hyperplane LSH banding + exact verify."""
+    hyperplane LSH: each vector's sign bits pack into ``bands`` band keys,
+    :func:`dedup.banded_pairs` pairs rows sharing one (only ids and band
+    keys in its exchange), and the vectors are joined back by id for the
+    exact cosine."""
     dim = len(corpus.select(vec).first()[0])
     rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((num_planes, dim))
-    spark = corpus.sparkSession
-    bc = spark.sparkContext.broadcast(planes)
+    bc = corpus.sparkSession.sparkContext.broadcast(rng.standard_normal((num_planes, dim)))
     per_band = num_planes // bands
+    # band b's bits, most significant first, packed into one long
+    w = np.uint64(1) << np.arange(per_band - 1, -1, -1, dtype=np.uint64)
 
     @F.pandas_udf(ArrayType(LongType()))
     def _bandsig(v: pd.Series) -> pd.Series:
         X = np.array(v.tolist(), dtype=np.float64)
-        bits = (X @ bc.value.T > 0).astype(np.uint64)  # (N, P)
-        # pack each band's bits with a weight dot product — vectorized
-        # across the batch (loop only over the few bands)
-        w = np.uint64(1) << np.arange(per_band - 1, -1, -1, dtype=np.uint64)
-        sigs = np.empty((len(X), bands), dtype=np.uint64)
-        for b in range(bands):
-            chunk = bits[:, b * per_band : (b + 1) * per_band]
-            sigs[:, b] = (chunk * w).sum(axis=1) | (np.uint64(b) << np.uint64(56))
-        return pd.Series(list(sigs.astype(np.int64)))
+        bits = (X @ bc.value.T > 0)[:, : bands * per_band].reshape(len(X), bands, per_band)
+        return pd.Series(list((bits.astype(np.uint64) * w).sum(axis=2).astype(np.int64)))
 
-    sig = corpus.select(
-        F.col(corpus_id).alias("_id"),
-        F.col(vec).cast("array<double>").alias("_v"),
-        F.explode(_bandsig(F.col(vec))).alias("_bucket"),
+    sig = corpus.select(F.col(corpus_id).alias("_id"), _bandsig(F.col(vec)).alias("_sig"))
+    pairs = banded_pairs(sig, [lambda s, j=j: s[j] for j in range(bands)])
+    vecs = corpus.select(
+        F.col(corpus_id).alias("_id"), F.col(vec).cast("array<double>").alias("_v")
     )
-    a = sig.select(F.col("_id").alias("id_a"), F.col("_v").alias("_va"), "_bucket")
-    b = sig.select(F.col("_id").alias("id_b"), F.col("_v").alias("_vb"), "_bucket")
+    for s in "ab":
+        pairs = pairs.join(vecs.withColumnsRenamed({"_id": f"id_{s}", "_v": f"_v{s}"}), f"id_{s}")
     return (
-        a.join(b, "_bucket")
-        .where(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-        .withColumn("sim", _cosine_expr("_va", "_vb"))
+        pairs.withColumn("sim", _cosine_expr("_va", "_vb"))
         .where(F.col("sim") >= threshold)
         .select("id_a", "id_b", F.round("sim", 6).alias("sim"))
     )

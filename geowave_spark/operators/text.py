@@ -28,12 +28,6 @@ def token_count(col: Column) -> Column:
     return (occurrences(col, " ") + F.lit(1)).cast("long")
 
 
-def bpe_ish_token_count(col: Column) -> Column:
-    """Sub-word-ish token estimate: word tokens + punctuation marks, via a
-    regex over the built-in engine (regexp_count is JVM-side codegen)."""
-    return F.regexp_count(col, F.lit(r"\w+|[^\w\s]")).cast("long")
-
-
 # language marker words (space-padded so they match whole tokens)
 _LANG_MARKERS = {
     "en": [" the ", " a ", " of "],

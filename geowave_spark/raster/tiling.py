@@ -224,36 +224,6 @@ def merge_tiles(tiles: DataFrame, tile_size: int = 16) -> DataFrame:
     return tiles.groupBy("tier", "cell").applyInPandas(_merge, MERGED_SCHEMA)
 
 
-def mosaic_df(
-    merged: DataFrame,
-    tier: int,
-    bbox: tuple[float, float, float, float],
-    tile_size: int = 16,
-    strategy: TieredStrategy | None = None,
-) -> DataFrame:
-    """Distributed mosaic selection: tiles covering the bbox at the tier,
-    with their pixel offsets in the output grid — the executor-side part of
-    a read (GeoWaveRasterReader's tile scan).  A renderer (or
-    :func:`mosaic`) assembles the returned rows."""
-    strat = strategy or TieredStrategy()
-    minx, miny, maxx, maxy = bbox
-    gx, gy, cells = _cells_for_envelope(strat, tier, minx, miny, maxx, maxy)
-    ax, ay = int(gx.min()), int(gy.min())
-    spark = merged.sparkSession
-    pos = spark.createDataFrame(
-        [
-            (int(c), (int(x) - ax) * tile_size, (int(y) - ay) * tile_size)
-            for x, y, c in zip(gx.tolist(), gy.tolist(), cells.tolist())
-        ],
-        "cell long, x0 int, y0 int",
-    )
-    return (
-        merged.where(F.col("tier") == tier)
-        .join(F.broadcast(pos), "cell")
-        .select("cell", "x0", "y0", "tile")
-    )
-
-
 def mosaic(
     merged: DataFrame,
     tier: int,

@@ -88,14 +88,16 @@ def _clear_stale_location(spark: SparkSession, table: str) -> None:
     normal overwrite path handles this — the fallback is for
     local/in-memory catalogs.)"""
     spark.sql(f"DROP TABLE IF EXISTS {table}")
-    wh = spark.conf.get("spark.sql.warehouse.dir")
-    if wh.startswith("file:"):
+    # a managed table lives under its database's location: the warehouse
+    # root for `default`, {warehouse}/{db}.db for any other database
+    *ns, name = table.split(".")
+    db = ns[-1] if ns else spark.catalog.currentDatabase()
+    root = spark.catalog.getDatabase(db).locationUri
+    if root.startswith("file:"):
         import shutil
         from urllib.parse import urlparse
 
-        path = urlparse(wh).path
-        loc = f"{path}/{table.split('.')[-1].lower()}"
-        shutil.rmtree(loc, ignore_errors=True)
+        shutil.rmtree(f"{urlparse(root).path}/{name.lower()}", ignore_errors=True)
 
 
 def write_bucketed_points(

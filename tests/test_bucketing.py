@@ -117,6 +117,30 @@ class TestBucketedJoin:
                 spark, bucketed_table, (-4.0, -3.0, 5.0, 4.0), strategy=other
             )
 
+    def test_overwrite_db_qualified_after_registration_lost(self, spark, points, tmp_path):
+        """A `db.table` whose registration is gone (in-memory catalog after
+        a driver restart) but whose files survive under {warehouse}/{db}.db
+        must still overwrite, not fail with LOCATION_ALREADY_EXISTS."""
+        import os
+        import shutil
+        from urllib.parse import urlparse
+
+        spark.sql("CREATE DATABASE IF NOT EXISTS stale_db")
+        name = "stale_db.stale_pts"
+        try:
+            write_bucketed_points(points, name, RADIUS, n_buckets=4)
+            db_dir = urlparse(spark.catalog.getDatabase("stale_db").locationUri).path
+            assert db_dir.rstrip("/").endswith("stale_db.db")
+            loc = os.path.join(db_dir, "stale_pts")
+            assert os.path.isdir(loc)
+            shutil.copytree(loc, tmp_path / "kept")
+            spark.sql(f"DROP TABLE {name}")  # drops registration and files
+            shutil.copytree(tmp_path / "kept", loc)  # the files outlive it
+            write_bucketed_points(points.where("id < 100"), name, RADIUS, n_buckets=4)
+            assert spark.table(name).count() == 100
+        finally:
+            spark.sql("DROP DATABASE IF EXISTS stale_db CASCADE")
+
 
 class TestBucketedBboxScan:
     def test_bucket_pruned_scan_parity(self, spark, points, bucketed_table):

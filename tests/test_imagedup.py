@@ -173,6 +173,31 @@ class TestPairs:
         result.sparkSession.catalog.clearCache()
         images.cache().count()  # re-cache the module fixture for later tests
 
+    def test_wrapper_releases_previous_signature_cache(self, spark, images):
+        """A second call, on other input, unpersists the first call's
+        signature cache (Spark reuses a cache of an identical plan, so the
+        inputs differ)."""
+
+        def n_cached():
+            return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+        image_phash_neardup(images, max_hamming=4).collect()
+        once = n_cached()
+        image_phash_neardup(images.where("image_id < 'img0050'"), max_hamming=4).collect()
+        assert n_cached() <= once
+
+    def test_band_exchange_ships_id_and_signature_only(self, spark, band_exchange_outputs):
+        """The band join's exchange carries (id, 8-byte signature, band,
+        key) and no per-band key array."""
+        pdf = pd.DataFrame({"_id": np.arange(200, dtype=np.int64)})
+        pdf["_sig"] = np.random.default_rng(3).integers(0, 2**62, 200)
+        outs = band_exchange_outputs(
+            hamming_pairs(spark.createDataFrame(pdf), 4, blocks_per_key=2)
+        )
+        assert outs
+        for cols in outs:
+            assert sorted(t for _, t in cols) == ["bigint", "bigint", "bigint", "int"], cols
+
     def test_signature_col_skips_decode(self, spark, images, images_pdf):
         """A pre-materialized hash column (input-hint `phash`) must yield
         the same pairs with zero decode work in the plan."""

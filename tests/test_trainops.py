@@ -13,6 +13,7 @@ from geowave_spark.operators.dedup import (
     _shingles,
     exact_dedup,
     minhash_lsh_dedup,
+    minhash_udf,
     simhash_pairs,
 )
 from geowave_spark.operators.similarity import brute_topk, cosine_neardup_pairs, ivf_topk
@@ -110,6 +111,66 @@ class TestDedup:
         assert all(r["hamming"] <= 6 for r in rows)
         # planted near-dup groups should collide strongly
         assert len(rows) >= 5
+
+    def test_minhash_over_cap_first_band_found_in_later_band(self, spark):
+        """A pair whose FIRST shared band is an over-cap bucket must still
+        come out, once, through a later shared band, and the warning must
+        report the number of dropped buckets."""
+        minhash = minhash_udf().func  # the UDF's numpy body, on the driver
+        gen = np.random.default_rng(5)
+        a = " ".join(gen.choice(WORDS + ["india", "juliet", "kilo", "lima"], 60).tolist())
+        toks = a.split()
+        toks[40] = "mutated"
+        b = " ".join(toks)
+        sig_a, sig_b = minhash(pd.Series([a, b]))
+
+        def band(sig, j):
+            return tuple(sig[4 * j : 4 * j + 4])
+
+        shared = [j for j in range(16) if band(sig_a, j) == band(sig_b, j)]
+        assert shared[0] == 0 and len(shared) > 1
+        # c: a substring of a that keeps a's band-0 minhashes (so a, b and
+        # c overfill band 0's bucket at max_bucket=2) but misses a later
+        # band that a and b share
+        subs = [a[i:e] for i in range(0, len(a), 7) for e in range(i + 40, len(a) + 1, 7)]
+        c, sig_c = next(
+            (t, sc)
+            for t, sc in zip(subs, minhash(pd.Series(subs)))
+            if band(sc, 0) == band(sig_a, 0)
+            and any(band(sc, j) != band(sig_a, j) for j in shared)
+        )
+        n_over = sum(band(sig_a, j) == band(sig_b, j) == band(sig_c, j) for j in range(16))
+        docs = spark.createDataFrame(pd.DataFrame({"doc_id": [0, 1, 2], "text": [a, b, c]}))
+        with pytest.warns(UserWarning, match=rf"dropped {n_over} over-limit bucket"):
+            rows = minhash_lsh_dedup(docs, threshold=0.6, max_bucket=2).collect()
+        pairs = [(r["id_a"], r["id_b"]) for r in rows]
+        assert pairs.count((0, 1)) == 1 and len(pairs) == len(set(pairs))
+
+    def test_wrappers_release_previous_signature_cache(self, spark, docs):
+        """A second call, on other input, unpersists the first call's
+        signature cache (Spark reuses a cache of an identical plan, so the
+        inputs differ)."""
+
+        def n_cached():
+            return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+        for run in (
+            lambda d: minhash_lsh_dedup(d, threshold=0.6),
+            lambda d: simhash_pairs(d, max_hamming=6),
+        ):
+            run(docs).collect()
+            once = n_cached()
+            run(docs.where("doc_id < 100")).collect()
+            assert n_cached() <= once
+
+    def test_minhash_band_exchange_ships_band_hashes_only(self, spark, docs, band_exchange_outputs):
+        """The band join's exchange carries (id, 16 band hashes, band,
+        key): the 64-long minhash signature and the text are joined back
+        by id afterwards."""
+        outs = band_exchange_outputs(minhash_lsh_dedup(docs, threshold=0.6))
+        assert outs
+        for cols in outs:
+            assert sorted(t for _, t in cols) == ["array<bigint>", "bigint", "bigint", "int"], cols
 
 
 class TestSimilarity:
@@ -230,6 +291,33 @@ class TestSimilarity:
         ii, jj = np.nonzero(np.triu(sims >= 0.98, 1))
         want = set(zip(ii.tolist(), jj.tolist()))
         assert got <= want and len(got) >= 0.9 * len(want) and len(want) >= 10
+
+    def test_cosine_neardup_equals_banded_brute_force(self, spark, emb, emb_pdf):
+        """The exact row set: every pair sharing at least one band
+        signature with cosine ≥ threshold, each pair once."""
+        thr, planes, bands = 0.3, 16, 4
+        rows = cosine_neardup_pairs(emb, threshold=thr, num_planes=planes, bands=bands).collect()
+        pairs = [(r["id_a"], r["id_b"]) for r in rows]
+        X = np.array([v for v in emb_pdf["embedding"]], dtype=np.float64)
+        proj = X @ np.random.default_rng(42).standard_normal((planes, X.shape[1])).T
+        assert np.abs(proj).min() > 1e-9  # no sign bit on a knife edge
+        keys = ((proj > 0).reshape(len(X), bands, -1) * (1 << np.arange(3, -1, -1))).sum(axis=2)
+        share = np.triu((keys[:, None, :] == keys[None, :, :]).any(axis=2), 1)
+        Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
+        sims = Xn @ Xn.T
+        assert np.abs(sims[share] - thr).min() > 1e-9
+        ii, jj = np.nonzero(share & (sims >= thr))
+        want = set(zip(ii.tolist(), jj.tolist()))
+        assert len(pairs) == len(set(pairs)) and set(pairs) == want
+        assert len(want) >= 100
+
+    def test_cosine_band_exchange_ships_no_vectors(self, spark, emb, band_exchange_outputs):
+        """The band join's exchange carries (id, band keys, band, key); the
+        array<double> vectors are joined back by id afterwards."""
+        outs = band_exchange_outputs(cosine_neardup_pairs(emb, threshold=0.9))
+        assert outs
+        for cols in outs:
+            assert sorted(t for _, t in cols) == ["array<bigint>", "bigint", "bigint", "int"], cols
 
 
 class TestText:

@@ -51,6 +51,10 @@ def summarize(plan: str) -> list[str]:
         out.append(f"WholeStageCodegen spans: {n_wsc}")
     if "AdaptiveSparkPlan" in plan:
         out.append("AQE: on")
+    # near-dup band self-joins: what each side ships into the (band, bkey) join
+    if m := re.findall(r"Output \[\d+\]: \[([^\]]*\bbkey#[^\]]*)\]", plan):
+        sides = sorted({re.sub(r"#\d+L?", "", cols) for cols in m})
+        out.append("band-join input columns: " + " | ".join(sides))
     if m := re.findall(r"ReadSchema: struct<([^>]*)>", plan):
         cols = min(len(x.split(",")) for x in m if x)
         out.append(f"narrowest scan reads {cols} column(s)")
@@ -77,8 +81,10 @@ def main():
         "kmeans_hulls",            # deterministic Lloyd iterations
         "spatial_crosses_join",    # DE-9IM fine filter over the coarse cell phase
         "tile_assignment",         # zero-shuffle per-image lattice gather
-        "minhash_neardup",         # banded LSH bucket equi-join, no all-pairs
+        "minhash_neardup",         # band-hash join, then minhash + text joined back by id
         "phash_neardup",           # dedupe → multi-index band join → size join-back
+        "simhash_pairs",           # pigeonhole band join: (id, 8-byte sig) in the exchange
+        "cosine_neardup",          # band join on band keys; vectors joined back by id
         "spatial_distance_join_bucketed",  # one Exchange total: probe scans buckets
     ]
     lines = [
