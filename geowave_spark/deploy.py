@@ -8,6 +8,17 @@ need the package on their PYTHONPATH to unpickle our pandas UDFs —
 ``SparkContext.addPyFile``, the programmatic equivalent of --py-files.
 Every public operator entry point calls it; it is a no-op after the first
 call per session.
+
+Per-task worker cost: before every task a PySpark Python worker adds the
+shipped files to ``sys.path`` and calls ``importlib.invalidate_caches()``.
+Before Python 3.13 every ``zipimporter`` then re-reads its archive's
+whole directory — ``pyspark.zip`` once per package imported from it,
+plus this zip — which cost about 250 ms per task on a 4-core box, more
+than most UDF bodies.  ``import geowave_spark`` installs a guard
+(``geowave_spark._skip_unchanged_zip_rereads``) that skips the re-read
+while the archive's stat stamp is unchanged.  ``build_zip`` writes
+through ``os.replace``, so a rebuilt zip gets a new inode and is still
+re-read.
 """
 
 from __future__ import annotations

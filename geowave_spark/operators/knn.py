@@ -10,9 +10,9 @@ partition.  This engine keeps the same guarantee but picks the partition
 size adaptively and replaces the pairwise pass with a sub-linear search:
 
 1. **census** — one cheap count-per-cell aggregation sizes the
-   *supercell* (a block of S×S distance-cells targeted at
-   ~TARGET_GROUP candidates) and finds pathologically hot supercells
-   (the stats-driven analog of the reference's SplitsProvider).
+   *supercell* (a block of S×S distance-cells, the smallest S giving
+   ≤ GROUP_TARGET occupied supercells) and finds pathologically hot
+   supercells (the stats-driven analog of the reference's SplitsProvider).
 2. **halo duplication** — each candidate lands in its supercell plus any
    adjacent supercell whose border lies within ``max_distance`` (≤4
    copies at corners, ~1+ε on average).  Each QUERY lands in exactly one
@@ -37,7 +37,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-TARGET_GROUP = 30_000  # candidates per supercell the census aims for
+GROUP_TARGET = 256     # most occupied supercells the census accepts
 DENSE_CHUNK = 60_000   # queries per task above which a hot group splits
 
 
@@ -315,13 +315,13 @@ def knn_join(
     )
 
     # census: (a) total + distinct occupied distance-cells → supercell
-    # factor S targeting ~TARGET_GROUP candidates per group; (b) hot
-    # supercells (> chunk_limit candidates) → query-chunk split factors.
+    # factor S giving ≤ GROUP_TARGET groups; (b) hot supercells
+    # (> chunk_limit candidates) → query-chunk split factors.
     # Both aggregations return tiny results — no per-cell collect.
     gx = F.floor((F.col("_clon") + F.lit(180.0)) / F.lit(cs))
     gy = F.floor((F.col("_clat") + F.lit(90.0)) / F.lit(cs))
     # probe occupied supercell counts at several factors in ONE pass and
-    # pick the smallest S giving ≤ ~8 groups/core — few enough that
+    # pick the smallest S giving ≤ GROUP_TARGET groups — few enough that
     # per-group overhead amortizes, small enough that chunking still
     # bounds task size
     factors = [1, 4, 16, 64, 256, 1024]
@@ -339,12 +339,9 @@ def knn_join(
             [], f"{query_id} {dict(qry.dtypes)['_qid']}, {candidate_id} {dict(cand.dtypes)['_cid']}, rank int, dist2 double"
         )
         return empty if include_distance else empty.drop("dist2")
-    group_target = int(
-        __import__("os").environ.get("SPARK_GRAFT_KNN_GROUPS", "256")
-    )
     S = factors[-1]
     for s in factors:
-        if stats[f"g{s}"] <= group_target:
+        if stats[f"g{s}"] <= GROUP_TARGET:
             S = s
             break
     if auto_chunk:

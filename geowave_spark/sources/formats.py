@@ -446,8 +446,9 @@ def read_geojson(
     def _parse(content: bytes):
         feats = _geojson_features(json.loads(content))
         rows = _feature_rows(feats, keys)
-        # coerce numeric widening (a long-probed column may meet floats
-        # in later files only if the probe undersold it — cast defensively)
+        # coerce to the probed types; a long-probed column that meets a
+        # non-integral number, a boolean or a string in a later feature is
+        # schema drift the probe missed — fail rather than truncate
         out = []
         for r in rows:
             fixed = list(r[:3])
@@ -457,7 +458,13 @@ def read_geojson(
                     if t == "double":
                         v = float(v)
                     elif t == "long":
-                        v = int(v)
+                        if isinstance(v, float) and v.is_integer():
+                            v = int(v)
+                        elif isinstance(v, bool) or not isinstance(v, int):
+                            raise ValueError(
+                                f"GeoJSON property {k!r} was probed as long from "
+                                f"{first!r} but a later feature has {v!r}"
+                            )
                     elif t == "string" and not isinstance(v, str):
                         v = json.dumps(v)
                     elif t == "boolean":

@@ -13,8 +13,8 @@ analog:
   per (partition, field) to ``{path}/stats`` — each row carries MERGEABLE
   partials: count/nulls/min/max/sum/M2 (parallel-variance form), an HLL
   sketch (``hll_sketch_agg``, Datasketches binary — union-mergeable), and
-  a Bloom filter bitset (fixed m/k, OR-mergeable).  Everything computes
-  in ONE distributed aggregation pass per field.
+  a Bloom filter bitset (fixed m/k, OR-mergeable).  One JVM aggregate
+  and one Bloom aggregate cover all fields of a batch.
 - ``merged_statistics`` folds the partials across partitions (Chan
   parallel-variance merge; ``hll_union_agg`` for NDV; OR for Bloom) —
   O(partitions) driver work, no data scan.
@@ -40,6 +40,8 @@ BLOOM_M_BITS = 1 << 17  # 16 KiB bitset per (partition, field)
 BLOOM_K = 7
 _HK1 = "0123456789123456"
 _HK2 = "6543210987654321"
+# per-field partial columns of the stats table, after part_key, field, n
+_PARTIALS = ("nulls", "min", "max", "sum", "mean", "m2", "n_numeric", "hll", "bloom")
 
 
 def _bloom_indices(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -67,32 +69,55 @@ def update_statistics(
     fields: list[str],
 ) -> None:
     """Append per-(partition, field) mergeable stat partials for this batch."""
+    if not fields:
+        return
 
     @F.pandas_udf("binary")
     def _bloom(vals: pd.Series) -> bytes:
         return _bloom_bits(vals.dropna().astype(str).to_numpy(dtype=object))
 
     base = df.withColumn("part_key", F.col(part_col).cast("string"))
-    for field in fields:
-        c = F.col(field)
-        num = c.try_cast("double")  # non-numeric fields → NULL partials (ANSI-safe)
-        # a grouped-agg pandas UDF cannot share an agg() with JVM
-        # aggregates — compute the Bloom partial separately and join on
-        # the partition key (both aggs are map-side-combined)
-        jvm = base.groupBy("part_key").agg(
-            F.lit(field).alias("field"),
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.when(c.isNull(), 1).otherwise(0)).alias("nulls"),
-            F.min(num).alias("min"),
-            F.max(num).alias("max"),
-            F.sum(num).alias("sum"),
-            F.avg(num).alias("mean"),
-            (F.coalesce(F.var_pop(num), F.lit(0.0)) * F.count(num)).alias("m2"),
-            F.count(num).alias("n_numeric"),
-            F.hll_sketch_agg(c.cast("string")).alias("hll"),
-        )
-        blooms = base.groupBy("part_key").agg(_bloom(c.cast("string")).alias("bloom"))
-        jvm.join(blooms, "part_key").write.mode("append").parquet(f"{path}/stats")
+    cols = [F.col(f) for f in fields]
+    nums = [c.try_cast("double") for c in cols]  # non-numeric → NULL partials (ANSI-safe)
+    # a grouped-agg pandas UDF cannot share an agg() with JVM aggregates:
+    # one JVM aggregate and one Bloom aggregate cover every field, joined
+    # once on the partition key and unpivoted to a row per (part, field)
+    jvm = base.groupBy("part_key").agg(
+        F.count(F.lit(1)).alias("n"),
+        *[
+            agg.alias(f"{name}{i}")
+            for i, (c, num) in enumerate(zip(cols, nums))
+            for name, agg in (
+                ("nulls", F.sum(F.when(c.isNull(), 1).otherwise(0))),
+                ("min", F.min(num)),
+                ("max", F.max(num)),
+                ("sum", F.sum(num)),
+                ("mean", F.avg(num)),
+                ("m2", F.coalesce(F.var_pop(num), F.lit(0.0)) * F.count(num)),
+                ("n_numeric", F.count(num)),
+                ("hll", F.hll_sketch_agg(c.cast("string"))),
+            )
+        ],
+    )
+    blooms = base.groupBy("part_key").agg(
+        *[_bloom(c.cast("string")).alias(f"bloom{i}") for i, c in enumerate(cols)]
+    )
+    per_field = F.array(
+        *[
+            F.struct(
+                F.lit(field).alias("field"),
+                F.col("n"),
+                *[F.col(f"{name}{i}").alias(name) for name in _PARTIALS],
+            )
+            for i, field in enumerate(fields)
+        ]
+    )
+    (
+        jvm.join(blooms, "part_key")
+        .select("part_key", F.inline(per_field))
+        .write.mode("append")
+        .parquet(f"{path}/stats")
+    )
 
 
 def read_statistics(spark: SparkSession, path: str) -> DataFrame:

@@ -585,6 +585,40 @@ class TestGeoJSON:
         assert rows["1"]["wkt"] == "POINT (-3.25 7)"
         assert rows["a1"]["ok"] is True and rows["1"]["frac"] == 1.25
 
+    @staticmethod
+    def _pop_fc(values) -> str:
+        import json
+
+        return json.dumps({"type": "FeatureCollection", "features": [
+            {"type": "Feature", "geometry": {"type": "Point", "coordinates": [float(i), 0.0]},
+             "properties": {"pop": v}}
+            for i, v in enumerate(values)
+        ]})
+
+    @pytest.mark.parametrize("drift", [2.5, "12", True])
+    def test_long_property_drift_names_column(self, spark, tmp_path, drift):
+        """A property probed as long from the first file that meets a
+        non-integral number, a boolean or a string in a later file raises,
+        naming the column, the probed type and the value."""
+        from geowave_spark.sources.formats import read_geojson
+
+        (tmp_path / "a.geojson").write_text(self._pop_fc([1, 2]))
+        (tmp_path / "b.geojson").write_text(self._pop_fc([3, 4.0, drift]))
+        df = read_geojson(spark, str(tmp_path / "*.geojson"))
+        assert dict(df.dtypes)["pop"] == "bigint"
+        with pytest.raises(Exception) as exc:
+            df.collect()
+        msg = str(exc.value)
+        assert "'pop' was probed as long" in msg and repr(drift) in msg
+
+    def test_long_property_integral_float_is_kept(self, spark, tmp_path):
+        from geowave_spark.sources.formats import read_geojson
+
+        (tmp_path / "a.geojson").write_text(self._pop_fc([1, 2]))
+        (tmp_path / "b.geojson").write_text(self._pop_fc([3, 5.0]))
+        got = sorted(r["pop"] for r in read_geojson(spark, str(tmp_path / "*.geojson")).collect())
+        assert got == [1, 2, 3, 5]
+
     def test_geojson_seq_splittable_path(self, spark, tmp_path):
         import json
 

@@ -1,6 +1,7 @@
 """kNN (FIXTURES.md F6) and KDE (F7) parity vs numpy oracles."""
 
 import math
+import re
 
 import numpy as np
 import pytest
@@ -63,6 +64,34 @@ def test_knn_dense_cell_path_parity(spark, pts, pts_pdf):
         got[qid].sort(key=lambda t: t[1])
     want = {q: v for q, v in oracle_knn(pts_pdf, 3, 0.2).items() if v}
     assert got == want
+
+
+def test_knn_group_target_coarsens_supercells(spark, pts, monkeypatch):
+    """A small ``GROUP_TARGET`` picks a coarser supercell factor (a wider
+    supercell span in the plan) and returns the same rows."""
+    from geowave_spark.operators import knn
+
+    def run(group_target):
+        monkeypatch.setattr(knn, "GROUP_TARGET", group_target)
+        df = knn_join(
+            pts,
+            pts.select(pts.image_id.alias("cid"), "lon", "lat"),
+            k=3,
+            max_distance=0.2,
+            query_id="image_id",
+            candidate_id="cid",
+            exclude_self=True,
+        )
+        plan = df._jdf.queryExecution().analyzed().toString()
+        spans = {float(v) for v in re.findall(r"\+ 180\.0\) / ([0-9.E-]+)\)", plan)}
+        assert len(spans) == 1, spans
+        return spans.pop(), {tuple(r) for r in df.collect()}
+
+    span_default, rows_default = run(256)
+    span_small, rows_small = run(16)
+    assert span_small > span_default
+    assert rows_small == rows_default
+    assert rows_default
 
 
 def test_knn_coincident_tiebreak(spark):

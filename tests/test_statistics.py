@@ -58,6 +58,66 @@ def test_incremental_merge_matches_direct(spark, batches, store):
     assert got["variance"] == pytest.approx(allpdf.val.var(ddof=0), rel=1e-6)
 
 
+def _per_field_statistics(df, path, part_col, fields):
+    """The per-field form of ``update_statistics``: one JVM aggregate, one
+    Bloom aggregate and one join per field, appended field by field."""
+    from geowave_spark.sources.statistics import _bloom_bits
+
+    @F.pandas_udf("binary")
+    def _bloom(vals: pd.Series) -> bytes:
+        return _bloom_bits(vals.dropna().astype(str).to_numpy(dtype=object))
+
+    base = df.withColumn("part_key", F.col(part_col).cast("string"))
+    for field in fields:
+        c = F.col(field)
+        num = c.try_cast("double")
+        jvm = base.groupBy("part_key").agg(
+            F.lit(field).alias("field"),
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.when(c.isNull(), 1).otherwise(0)).alias("nulls"),
+            F.min(num).alias("min"),
+            F.max(num).alias("max"),
+            F.sum(num).alias("sum"),
+            F.avg(num).alias("mean"),
+            (F.coalesce(F.var_pop(num), F.lit(0.0)) * F.count(num)).alias("m2"),
+            F.count(num).alias("n_numeric"),
+            F.hll_sketch_agg(c.cast("string")).alias("hll"),
+        )
+        blooms = base.groupBy("part_key").agg(_bloom(c.cast("string")).alias("bloom"))
+        jvm.join(blooms, "part_key").write.mode("append").parquet(f"{path}/stats")
+
+
+def test_fused_update_matches_per_field(spark, batches, tmp_path):
+    """One aggregate for all fields writes the same stats table as one
+    aggregate per field, for a numeric and a string field with nulls."""
+    pdf = pd.concat(batches, ignore_index=True).astype(object)
+    pdf.loc[::7, "val"] = None
+    pdf.loc[::11, "word"] = None
+    pdf.loc[::13, "word"] = "3.25"  # numeric-looking strings get numeric partials
+    df = spark.createDataFrame(pdf, "part long, val double, word string")
+    fused, per_field = str(tmp_path / "fused"), str(tmp_path / "per_field")
+    update_statistics(df, fused, "part", ["val", "word"])
+    _per_field_statistics(df, per_field, "part", ["val", "word"])
+    got, want = read_statistics(spark, fused), read_statistics(spark, per_field)
+    assert got.schema == want.schema
+    assert got.columns[:3] == ["part_key", "field", "n"]
+
+    def rows(sdf):
+        out = sdf.withColumn("ndv", F.hll_sketch_estimate("hll")).drop("hll").collect()
+        return sorted((r.asDict() for r in out), key=lambda r: (r["part_key"], r["field"]))
+
+    g, w = rows(got), rows(want)
+    assert [(r["part_key"], r["field"]) for r in g] == [(r["part_key"], r["field"]) for r in w]
+    assert len(g) == 2 * pdf.part.nunique()
+    for a, b in zip(g, w):
+        for k in ("n", "nulls", "min", "max", "n_numeric", "bloom", "ndv"):
+            assert a[k] == b[k], (a["part_key"], a["field"], k)
+        for k in ("sum", "mean", "m2"):
+            assert a[k] == pytest.approx(b[k], rel=1e-12, abs=0.0), (a["part_key"], a["field"], k)
+    assert any(r["n_numeric"] for r in g if r["field"] == "word")
+    assert all(r["nulls"] for r in g)
+
+
 def test_optimal_count_no_scan(spark, batches, store):
     assert optimal_count(spark, store, "val") == sum(len(b) for b in batches)
 
