@@ -392,10 +392,8 @@ def q_spatial_kde(spark, sf_dir):
     """KDE in the default index CRS UNION the same job in EPSG:3857 —
     the reference's CustomCRSKDERasterResizeIT runs the identical
     pipeline in a non-default CRS (reprojection is a Catalyst expression
-    fused into the cell binning, geowave_spark/crs.py).  Latitude clamps
-    to the mercator square-world bound in both the query and the oracle
-    so the poles don't project to ±inf.  One driver entry (the gate caps
-    at 50 rows), two value-gated grids."""
+    fused into the cell binning, geowave_spark/crs.py).  One query
+    entry (the gate caps at 50 rows), two value-gated grids."""
     pts = _customer_points(spark, sf_dir)
     base = kde(pts, KDE_LEVEL).select(
         F.lit("EPSG:4326").alias("crs"),
@@ -403,11 +401,7 @@ def q_spatial_kde(spark, sf_dir):
         "cy",
         F.round("weight", 6).alias("weight"),
     )
-    clamped = pts.withColumn(
-        "lat",
-        F.greatest(F.lit(-MERC_MAX_LAT), F.least(F.lit(MERC_MAX_LAT), F.col("lat"))),
-    )
-    merc = kde(clamped, KDE_LEVEL, crs="EPSG:3857").select(
+    merc = kde(pts, KDE_LEVEL, crs="EPSG:3857").select(
         F.lit("EPSG:3857").alias("crs"),
         "cx",
         "cy",

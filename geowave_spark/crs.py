@@ -4,29 +4,19 @@ Reference parity: the reference runs its KDE / raster-resize pipeline in
 a custom CRS (test/.../CustomCRSKDERasterResizeIT.java:88-89) and
 reprojects raster coverage envelopes into the index CRS on ingest
 (core/geotime/.../RasterDataAdapter.java:444-550, via geotools).  No
-geotools/pyproj/GDAL exists in this container, so the transforms are
-implemented from the published formulas — spherical web mercator
-(EPSG:3857, the slippy-map projection) and transverse mercator via the
-Krüger n-series to n⁴ (Karney 2011, "Transverse Mercator with an
-accuracy of a few nanometers"; coefficients also in IOGP Guidance Note
-7-2) — as pure ``pyspark.sql.functions`` column expressions: JVM-side,
-whole-stage-codegen, zero Python in the hot path.  The numpy twins back
-driver-side envelope densification and the test oracles.
+geotools/pyproj/GDAL is used: every projection is implemented from its
+published formulas in :mod:`crs_conic`, written once against an ops
+shim.  This module parses CRS strings into those projection objects and
+evaluates them with one of two backends: ``pyspark.sql.functions``
+column expressions (JVM-side, whole-stage codegen, zero Python in the
+hot path) or numpy (driver-side envelope densification and test
+oracles).
 
-Supported CRS strings:
-
-* ``EPSG:4326``  — lon/lat WGS84 (identity; the engine's index CRS)
-* ``EPSG:3857``  — WGS84 spherical web mercator
-* ``EPSG:326zz`` / ``EPSG:327zz`` — UTM zone zz north / south (WGS84)
-* via :mod:`crs_conic` (same ops-shim formulas, Catalyst + numpy):
-  Lambert Conformal Conic (EPSG:2154, EPSG:3034, …), Albers Equal-Area
-  (EPSG:5070), Lambert Azimuthal Equal-Area (EPSG:3035), ellipsoidal
-  Mercator (EPSG:3395), generic Transverse Mercator, and arbitrary
-  ``+proj=`` parameter strings
-
-The Krüger series at n⁴ is accurate to well under a millimeter inside a
-UTM zone (|λ−λ₀| ≤ 3°), which matches the reference's geotools
-``lenient=true`` transform tolerance.
+Supported: ``EPSG:4326`` (lon/lat WGS84, the index CRS; identity),
+``EPSG:3857`` (web mercator, :class:`~crs_conic.SphericalMercator`),
+``EPSG:326zz``/``EPSG:327zz`` (WGS84 UTM zone zz north/south,
+:class:`~crs_conic.TransverseMercatorGeneric`), and every
+:mod:`crs_conic` EPSG registry code or ``+proj=`` parameter string.
 """
 
 from __future__ import annotations
@@ -40,71 +30,50 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import crs_conic
+from .crs_conic import (
+    CATALYST_OPS,
+    D2R,
+    NUMPY_OPS,
+    DatumShifted,
+    SphericalMercator,
+    TransverseMercatorGeneric,
+)
+
 # WGS84 ellipsoid
 A_WGS84 = 6378137.0
 F_WGS84 = 1.0 / 298.257223563
 
-# third flattening and rectifying radius (Krüger)
-_N = F_WGS84 / (2.0 - F_WGS84)
-_A1 = A_WGS84 / (1.0 + _N) * (1.0 + _N**2 / 4.0 + _N**4 / 64.0)
-
-# forward series α, inverse series β, conformal→geodetic series δ
-_ALPHA = (
-    _N / 2.0 - 2.0 * _N**2 / 3.0 + 5.0 * _N**3 / 16.0 + 41.0 * _N**4 / 180.0,
-    13.0 * _N**2 / 48.0 - 3.0 * _N**3 / 5.0 + 557.0 * _N**4 / 1440.0,
-    61.0 * _N**3 / 240.0 - 103.0 * _N**4 / 140.0,
-    49561.0 * _N**4 / 161280.0,
-)
-_BETA = (
-    _N / 2.0 - 2.0 * _N**2 / 3.0 + 37.0 * _N**3 / 96.0 - _N**4 / 360.0,
-    _N**2 / 48.0 + _N**3 / 15.0 - 437.0 * _N**4 / 1440.0,
-    17.0 * _N**3 / 480.0 - 37.0 * _N**4 / 840.0,
-    4397.0 * _N**4 / 161280.0,
-)
-_DELTA = (
-    2.0 * _N - 2.0 * _N**2 / 3.0 - 2.0 * _N**3 + 116.0 * _N**4 / 45.0,
-    7.0 * _N**2 / 3.0 - 8.0 * _N**3 / 5.0 - 227.0 * _N**4 / 45.0,
-    56.0 * _N**3 / 15.0 + 136.0 * _N**4 / 35.0,
-    4279.0 * _N**4 / 630.0,
-)
-
-_K0_UTM = 0.9996
-_FE_UTM = 500000.0
-_FN_SOUTH = 10000000.0
-# eccentricity term used by the conformal-latitude forward step
-_E2N = 2.0 * math.sqrt(_N) / (1.0 + _N)
-
 WEB_MERCATOR_EXTENT = A_WGS84 * math.pi  # 20037508.342789244
-# EPSG:3857's published latitude domain: atan(sinh(π)) — poles are outside
-# the projection; the numpy twin clamps here so no inf is ever computed
-WEB_MERCATOR_MAX_LAT = math.degrees(math.atan(math.sinh(math.pi)))  # 85.05112877980659
 
 _UTM_RE = re.compile(r"^EPSG:32([67])(\d\d)$")
 
 
 @functools.lru_cache(maxsize=256)
 def _parse(crs: str):
-    """→ ("lonlat",) | ("webmerc",) | ("utm", lon0_deg, fn) |
-    ("ext", proj, area) — the last via :mod:`crs_conic` (LCC / Albers /
-    LAEA / ellipsoidal Mercator / generic TM, EPSG registry + proj
-    strings).  Cached: extension parsing tokenizes a proj string and
-    precomputes transcendental scalar constants, and driver planning
-    loops (warp block plans) call transform_np thousands of times."""
+    """→ ("lonlat",) | ("ext", proj, area): a :mod:`crs_conic`
+    projection and its area of use as a lon/lat bbox.  Cached:
+    extension parsing tokenizes a proj string and precomputes
+    transcendental scalar constants, and driver planning loops (warp
+    block plans) call transform_np thousands of times."""
     c = crs.upper().replace(" ", "")
     if c in ("EPSG:4326", "CRS:84", "WGS84"):
         return ("lonlat",)
     if c in ("EPSG:3857", "EPSG:900913"):
-        return ("webmerc",)
+        b = SphericalMercator.MAX_LAT
+        return ("ext", SphericalMercator(A_WGS84, name=c), (-180.0, -b, 180.0, b))
     m = _UTM_RE.match(c)
     if m:
         zone = int(m.group(2))
         if not 1 <= zone <= 60:
             raise ValueError(f"bad UTM zone in {crs}")
         lon0 = -183.0 + 6.0 * zone
-        fn = _FN_SOUTH if m.group(1) == "7" else 0.0
-        return ("utm", lon0, fn)
-    from . import crs_conic
-
+        fn = 10000000.0 if m.group(1) == "7" else 0.0
+        proj = TransverseMercatorGeneric(
+            A_WGS84, F_WGS84, 0.0, lon0 * D2R, 500000.0, fn, 0.9996, name=c
+        )
+        # the official zone box: 6° wide, 80S..84N
+        return ("ext", proj, (lon0 - 3.0, -80.0, lon0 + 3.0, 84.0))
     ext = crs_conic.resolve(crs)
     if ext is not None:
         return ("ext", ext[0], ext[1])
@@ -116,33 +85,41 @@ def _parse(crs: str):
 
 def crs_extent(crs: str) -> tuple[float, float, float, float]:
     """Full valid (minx, miny, maxx, maxy) of the CRS plane — the KDE /
-    tile grid extent (mirrors the reference's CRS-bounds-driven grid)."""
+    tile grid extent (mirrors the reference's CRS-bounds-driven grid):
+    web mercator's square world, else the area of use projected."""
     kind = _parse(crs)
     if kind[0] == "lonlat":
         return (-180.0, -90.0, 180.0, 90.0)
-    if kind[0] == "webmerc":
+    if isinstance(kind[1], SphericalMercator):
         e = WEB_MERCATOR_EXTENT
         return (-e, -e, e, e)
-    if kind[0] == "ext":
-        # extension CRS: the registry's area-of-use bbox projected.
-        # densify=181 (2° steps): polar caps trace a full circle along
-        # one lon/lat edge, and coarse sampling would undercut its bbox
-        # radius by up to cos(half-step)
-        return reproject_envelope(kind[2], "EPSG:4326", crs, densify=181)
-    # UTM: the official zone box (6° wide, 84N..80S) projected
-    _, lon0, fn = kind
-    xs, ys = transform_np(
-        np.array([lon0 - 3.0, lon0 + 3.0, lon0, lon0]),
-        np.array([0.0, 0.0, -80.0, 84.0]),
-        "EPSG:4326",
-        crs,
-    )
-    return (float(xs.min()), float(ys[2]), float(xs.max()), float(ys[3]))
+    return _area_extent(kind[2], crs)
 
 
-# --------------------------------------------------------------------------
-# Catalyst expressions
-# --------------------------------------------------------------------------
+def _area_extent(area, crs: str):
+    """Projected bbox of a lon/lat box.  Each edge is sampled at 181
+    points (2° steps on a 360° edge: a polar cap traces a full circle
+    along one edge), then each extreme is re-sampled three times between
+    the samples next to it, each round 90× finer: uniform samples alone
+    undercut an extreme that falls between them (a UTM zone is widest
+    on the equator, which 181 samples of 80S..84N miss)."""
+    n = 181
+    minx, miny, maxx, maxy = area
+    best = np.full(4, np.inf)  # minima of x, y, −x, −y
+    edges = ((minx, miny, maxx, miny), (minx, maxy, maxx, maxy))
+    edges += ((minx, miny, minx, maxy), (maxx, miny, maxx, maxy))
+    for x0, y0, x1, y1 in edges:
+        for k in range(4):
+            lo, hi = 0.0, 1.0
+            for _ in range(4):
+                t = np.linspace(lo, hi, n)
+                px, py = transform_np(x0 + t * (x1 - x0), y0 + t * (y1 - y0), "EPSG:4326", crs)
+                v = (px, py, -px, -py)[k]
+                i = int(np.argmin(v))
+                best[k] = np.minimum(best[k], v[i])
+                step = (hi - lo) / (n - 1)
+                lo, hi = max(0.0, t[i] - step), min(1.0, t[i] + step)
+    return (float(best[0]), float(best[1]), float(-best[2]), float(-best[3]))
 
 
 def _arrow_transform_cols(proj, a: Column, b: Column, inverse: bool) -> tuple[Column, Column]:
@@ -160,7 +137,6 @@ def _arrow_transform_cols(proj, a: Column, b: Column, inverse: bool) -> tuple[Co
     per-row Python), and the values are bit-identical to the plain-
     Catalyst path wherever libm agrees because the numpy twin consumes
     literally the same parse-time literals."""
-    from .crs_conic import NUMPY_OPS
 
     @F.pandas_udf("x double, y double")
     def _tx(u: pd.Series, v: pd.Series) -> pd.DataFrame:
@@ -172,80 +148,34 @@ def _arrow_transform_cols(proj, a: Column, b: Column, inverse: bool) -> tuple[Co
     return out.getField("x"), out.getField("y")
 
 
-def forward_cols(crs: str, lon: Column | str, lat: Column | str) -> tuple[Column, Column]:
-    """(lon°, lat°) → projected (x, y) as Catalyst columns."""
-    lon = F.col(lon) if isinstance(lon, str) else lon
-    lat = F.col(lat) if isinstance(lat, str) else lat
+def _cols(crs: str, a: Column | str, b: Column | str, inverse: bool) -> tuple[Column, Column]:
+    a = F.col(a) if isinstance(a, str) else a
+    b = F.col(b) if isinstance(b, str) else b
     kind = _parse(crs)
     if kind[0] == "lonlat":
-        return lon, lat
-    if kind[0] == "ext":
-        from .crs_conic import CATALYST_OPS, DatumShifted
+        return a, b
+    proj = kind[1]
+    if isinstance(proj, DatumShifted):
+        return _arrow_transform_cols(proj, a, b, inverse)
+    return (proj.inverse if inverse else proj.forward)(CATALYST_OPS, a, b)
 
-        if isinstance(kind[1], DatumShifted):
-            return _arrow_transform_cols(kind[1], lon, lat, inverse=False)
-        return kind[1].forward(CATALYST_OPS, lon, lat)
-    if kind[0] == "webmerc":
-        # deg→rad as one multiply by the rounded π/180 literal (NOT
-        # F.radians, which the JVM evaluates as x/180*π): the same single
-        # IEEE op in any engine, so the DuckDB oracle twin is bit-exact
-        d2r = F.lit(math.pi / 180.0)
-        x = lon * d2r * F.lit(A_WGS84)
-        y = F.log(F.tan(F.lit(math.pi / 4.0) + lat * d2r / F.lit(2.0))) * F.lit(
-            A_WGS84
-        )
-        return x, y
-    _, lon0, fn = kind
-    phi = F.radians(lat)
-    lam = F.radians(lon - F.lit(lon0))
-    sphi = F.sin(phi)
-    # conformal latitude:  t = sinh(atanh sinφ − e·atanh(e·sinφ)), e-term via 2√n/(1+n)
-    t = F.sinh(F.atanh(sphi) - F.lit(_E2N) * F.atanh(F.lit(_E2N) * sphi))
-    xi = F.atan2(t, F.cos(lam))
-    eta = F.atanh(F.sin(lam) / F.sqrt(F.lit(1.0) + t * t))
-    xs, es = xi, eta
-    for j, a in enumerate(_ALPHA, start=1):
-        xs = xs + F.lit(a) * F.sin(F.lit(2.0 * j) * xi) * F.cosh(F.lit(2.0 * j) * eta)
-        es = es + F.lit(a) * F.cos(F.lit(2.0 * j) * xi) * F.sinh(F.lit(2.0 * j) * eta)
-    x = F.lit(_FE_UTM) + F.lit(_K0_UTM * _A1) * es
-    y = F.lit(fn) + F.lit(_K0_UTM * _A1) * xs
-    return x, y
+
+def forward_cols(crs: str, lon: Column | str, lat: Column | str) -> tuple[Column, Column]:
+    """(lon°, lat°) → projected (x, y) as Catalyst columns."""
+    return _cols(crs, lon, lat, inverse=False)
 
 
 def inverse_cols(crs: str, x: Column | str, y: Column | str) -> tuple[Column, Column]:
     """projected (x, y) → (lon°, lat°) as Catalyst columns."""
-    x = F.col(x) if isinstance(x, str) else x
-    y = F.col(y) if isinstance(y, str) else y
+    return _cols(crs, x, y, inverse=True)
+
+
+def _np(crs: str, a: np.ndarray, b: np.ndarray, inverse: bool):
     kind = _parse(crs)
     if kind[0] == "lonlat":
-        return x, y
-    if kind[0] == "ext":
-        from .crs_conic import CATALYST_OPS
-
-        from .crs_conic import DatumShifted
-
-        if isinstance(kind[1], DatumShifted):
-            return _arrow_transform_cols(kind[1], x, y, inverse=True)
-        return kind[1].inverse(CATALYST_OPS, x, y)
-    if kind[0] == "webmerc":
-        lon = F.degrees(x / F.lit(A_WGS84))
-        lat = F.degrees(
-            F.lit(2.0) * F.atan(F.exp(y / F.lit(A_WGS84))) - F.lit(math.pi / 2.0)
-        )
-        return lon, lat
-    _, lon0, fn = kind
-    xi = (y - F.lit(fn)) / F.lit(_K0_UTM * _A1)
-    eta = (x - F.lit(_FE_UTM)) / F.lit(_K0_UTM * _A1)
-    xp, ep = xi, eta
-    for j, b in enumerate(_BETA, start=1):
-        xp = xp - F.lit(b) * F.sin(F.lit(2.0 * j) * xi) * F.cosh(F.lit(2.0 * j) * eta)
-        ep = ep - F.lit(b) * F.cos(F.lit(2.0 * j) * xi) * F.sinh(F.lit(2.0 * j) * eta)
-    chi = F.asin(F.sin(xp) / F.cosh(ep))
-    phi = chi
-    for j, d in enumerate(_DELTA, start=1):
-        phi = phi + F.lit(d) * F.sin(F.lit(2.0 * j) * chi)
-    lam = F.atan2(F.sinh(ep), F.cos(xp))
-    return F.lit(lon0) + F.degrees(lam), F.degrees(phi)
+        return a.copy(), b.copy()
+    proj = kind[1]
+    return (proj.inverse if inverse else proj.forward)(NUMPY_OPS, a, b)
 
 
 def transform_df(
@@ -265,71 +195,6 @@ def transform_df(
     return df.withColumn(out_x, px).withColumn(out_y, py)
 
 
-# --------------------------------------------------------------------------
-# numpy twins (driver-side envelopes + test oracles)
-# --------------------------------------------------------------------------
-
-
-def _forward_np(crs: str, lon: np.ndarray, lat: np.ndarray):
-    kind = _parse(crs)
-    if kind[0] == "lonlat":
-        return lon.copy(), lat.copy()
-    if kind[0] == "ext":
-        from .crs_conic import NUMPY_OPS
-
-        return kind[1].forward(NUMPY_OPS, lon, lat)
-    if kind[0] == "webmerc":
-        d2r = math.pi / 180.0
-        # clamp to the projection's domain (|φ| ≤ 85.051129°) so the pole
-        # rows of a 4326 warp grid never feed log(tan(·)) an overflow —
-        # correctness must not ride on IEEE inf propagation
-        lat_c = np.clip(lat, -WEB_MERCATOR_MAX_LAT, WEB_MERCATOR_MAX_LAT)
-        return (
-            lon * d2r * A_WGS84,
-            np.log(np.tan(math.pi / 4.0 + lat_c * d2r / 2.0)) * A_WGS84,
-        )
-    _, lon0, fn = kind
-    phi = np.radians(lat)
-    lam = np.radians(lon - lon0)
-    sphi = np.sin(phi)
-    t = np.sinh(np.arctanh(sphi) - _E2N * np.arctanh(_E2N * sphi))
-    xi = np.arctan2(t, np.cos(lam))
-    eta = np.arctanh(np.sin(lam) / np.sqrt(1.0 + t * t))
-    xs, es = xi.copy(), eta.copy()
-    for j, a in enumerate(_ALPHA, start=1):
-        xs += a * np.sin(2.0 * j * xi) * np.cosh(2.0 * j * eta)
-        es += a * np.cos(2.0 * j * xi) * np.sinh(2.0 * j * eta)
-    return _FE_UTM + _K0_UTM * _A1 * es, fn + _K0_UTM * _A1 * xs
-
-
-def _inverse_np(crs: str, x: np.ndarray, y: np.ndarray):
-    kind = _parse(crs)
-    if kind[0] == "lonlat":
-        return x.copy(), y.copy()
-    if kind[0] == "ext":
-        from .crs_conic import NUMPY_OPS
-
-        return kind[1].inverse(NUMPY_OPS, x, y)
-    if kind[0] == "webmerc":
-        return (
-            np.degrees(x / A_WGS84),
-            np.degrees(2.0 * np.arctan(np.exp(y / A_WGS84)) - math.pi / 2.0),
-        )
-    _, lon0, fn = kind
-    xi = (y - fn) / (_K0_UTM * _A1)
-    eta = (x - _FE_UTM) / (_K0_UTM * _A1)
-    xp, ep = xi.copy(), eta.copy()
-    for j, b in enumerate(_BETA, start=1):
-        xp -= b * np.sin(2.0 * j * xi) * np.cosh(2.0 * j * eta)
-        ep -= b * np.cos(2.0 * j * xi) * np.sinh(2.0 * j * eta)
-    chi = np.arcsin(np.sin(xp) / np.cosh(ep))
-    phi = chi.copy()
-    for j, d in enumerate(_DELTA, start=1):
-        phi += d * np.sin(2.0 * j * chi)
-    lam = np.arctan2(np.sinh(ep), np.cos(xp))
-    return lon0 + np.degrees(lam), np.degrees(phi)
-
-
 def transform_np(
     x: np.ndarray, y: np.ndarray, src: str, dst: str
 ) -> tuple[np.ndarray, np.ndarray]:
@@ -337,8 +202,8 @@ def transform_np(
     oracle use; the distributed path is :func:`transform_df`)."""
     x = np.asarray(x, dtype=np.float64)
     y = np.asarray(y, dtype=np.float64)
-    lon, lat = _inverse_np(src, x, y)
-    return _forward_np(dst, lon, lat)
+    lon, lat = _np(src, x, y, inverse=True)
+    return _np(dst, lon, lat, inverse=False)
 
 
 def reproject_envelope(

@@ -1,27 +1,30 @@
-"""Arbitrary-CRS extension: conic / azimuthal / cylindrical projections.
+"""Projection formulas: every projected CRS of the engine, written once.
 
 Reference parity: the reference accepts any geotools-decodable CRS for
 KDE grids and raster mosaics (GeoWaveRasterReader.java:492-744,
 RasterDataAdapter.java:444-550 reproject through geotools'
-``CRS.decode``/``ReferencedEnvelope.transform``).  ``crs.py`` covers the
-three CRS families the driver gates (4326 / 3857 / UTM); this module
-extends the same dispatch to the remaining projection methods that
-dominate real-world EPSG usage, implemented from the published EPSG
+``CRS.decode``/``ReferencedEnvelope.transform``).  Each projection
+method here is a :class:`_Proj` implemented from the published EPSG
 Guidance Note 7-2 formulas (IOGP, public):
 
+* **Popular Visualisation Pseudo-Mercator** (method 1024) — EPSG:3857,
+  the spherical web-mercator slippy-map plane.
+* **Transverse Mercator** (method 9807) via the Krüger n-series to n⁴
+  (Karney 2011, "Transverse Mercator with an accuracy of a few
+  nanometers"), parameterized over ellipsoid, λ₀, k₀, FE/FN, φ₀ — the
+  WGS84 UTM zones (EPSG:326zz/327zz) are instances with k₀ = 0.9996.
 * **Lambert Conformal Conic 2SP** (EPSG method 9802; 1SP 9801 as the
   φ₁=φ₂ limit) — e.g. EPSG:2154 Lambert-93, EPSG:3034 ETRS89-LCC.
 * **Albers Equal-Area** (method 9822) — e.g. EPSG:5070 CONUS Albers.
 * **Lambert Azimuthal Equal-Area, oblique** (method 9820) — e.g.
   EPSG:3035 ETRS89-LAEA.
 * **Mercator, ellipsoidal** (methods 9804/9805).
-* **Transverse Mercator, arbitrary parameters** (method 9807) via the
-  same Krüger n-series as ``crs.py`` but parameterized over ellipsoid,
-  λ₀, k₀, FE/FN, φ₀.
+* **Polar Stereographic** (methods 9810/9829/9830) — EPSG:3413/3031, UPS.
 
 Plus a proj-string front door (``+proj=lcc +lat_1=… +ellps=GRS80 …``)
 mirroring geotools' ability to build a CRS from parameters, and an EPSG
-registry for the common codes.
+registry for the common codes.  :mod:`geowave_spark.crs` parses CRS
+strings into these objects and hands them a backend.
 
 Design: every formula is written ONCE against a tiny ops shim, then
 evaluated twice — with Catalyst ``pyspark.sql.functions`` (JVM-side,
@@ -79,7 +82,11 @@ CATALYST_OPS = SimpleNamespace(
     exp=F.exp,
     pow=F.pow,
     where=lambda c, a, b: F.when(c, a).otherwise(b),
-    clip=lambda x, lo, hi: F.least(F.greatest(x, F.lit(lo)), F.lit(hi)),
+    # np.clip semantics: null and NaN pass through (least/greatest alone
+    # would clamp them: they skip nulls and order NaN above every number)
+    clip=lambda x, lo, hi: F.when(x.isNull() | F.isnan(x), x).otherwise(
+        F.least(F.greatest(x, F.lit(lo)), F.lit(hi))
+    ),
     mod=lambda x, m: F.pmod(x, F.lit(m)),
 )
 
@@ -254,6 +261,12 @@ class LambertConformal(_Proj):
         super().__init__(a, f, lon0, fe, fn, name)
         self.lat0 = lat0
         e, e2 = self.e, self.e2
+        if max(abs(lat1), abs(lat2)) >= math.pi / 2.0:
+            raise ValueError(
+                f"LCC standard parallels lat_1={lat1 * R2D:g}, lat_2="
+                f"{lat2 * R2D:g}: a standard parallel at a pole collapses "
+                "the cone (t = 0) — use +proj=stere for the polar aspect"
+            )
         t0, t1 = _t_s(lat0, e), _t_s(lat1, e)
         if abs(lat1 - lat2) < 1e-12:
             self.n = math.sin(lat1)
@@ -397,6 +410,29 @@ class MercatorEllipsoidal(_Proj):
         return self._norm_lam(o, lam) * R2D, self._phi_from_t(o, t) * R2D
 
 
+class SphericalMercator(_Proj):
+    """EPSG method 1024 (EPSG:3857): Mercator of WGS84 lon/lat on the
+    sphere of radius ``a``.  Latitude clamps to the square-world bound
+    atan(sinh π) through ``o.clip``, so both backends map the poles to
+    ±extent rather than ±inf.  Deg→rad is one multiply by the rounded
+    π/180 literal (not F.radians, which the JVM evaluates as x/180·π),
+    so a SQL engine repeating this op order is bit-exact (the KDE gate's
+    DuckDB oracle)."""
+
+    MAX_LAT = math.degrees(math.atan(math.sinh(math.pi)))  # 85.05112877980659
+
+    def __init__(self, a, name=""):
+        super().__init__(a, 0.0, 0.0, 0.0, 0.0, name)
+
+    def forward(self, o, lon_deg, lat_deg):
+        lat = o.clip(lat_deg, -self.MAX_LAT, self.MAX_LAT)
+        y = o.log(o.tan(math.pi / 4.0 + lat * D2R / 2.0)) * self.a
+        return lon_deg * D2R * self.a, y
+
+    def inverse(self, o, x, y):
+        return x / self.a * R2D, (2.0 * o.atan(o.exp(y / self.a)) - math.pi / 2.0) * R2D
+
+
 class PolarStereographic(_Proj):
     """EPSG methods 9810 (variant A: k₀ at the pole) and 9829/9830
     (variant B/C: standard parallel φ_ts) — the polar complement to the
@@ -457,15 +493,11 @@ class GeographicLonLat(_Proj):
 
 class TransverseMercatorGeneric(_Proj):
     """EPSG method 9807 — Krüger n-series to n⁴ (Karney 2011 / IOGP
-    GN7-2), parameterized over ellipsoid, λ₀, φ₀, k₀, FE/FN.  The same
-    series as ``crs.py``'s fixed-WGS84 UTM path, recomputed for the
-    requested ellipsoid at parse time.
-
-    The duplication with crs.py's UTM branch is DELIBERATE: that path is
-    this module's independent cross-check anchor
-    (tests/test_crs_conic.py::test_generic_tmerc_matches_trusted_utm_path
-    pins the two to 1e-6 m over the zone), so folding one into the other
-    would turn the cross-implementation oracle into a tautology."""
+    GN7-2), parameterized over ellipsoid, λ₀, φ₀, k₀, FE/FN; the series
+    coefficients are computed for the requested ellipsoid at parse time.
+    The n⁴ series is accurate to well under a millimeter inside a UTM
+    zone (|λ−λ₀| ≤ 3°), which matches the reference's geotools
+    ``lenient=true`` transform tolerance."""
 
     def __init__(self, a, f, lat0, lon0, fe, fn, k0=1.0, name=""):
         super().__init__(a, f, lon0, fe, fn, name)

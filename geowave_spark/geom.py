@@ -672,36 +672,34 @@ def _segments_hit_rects(x1, y1, x2, y2, rminx, rminy, rmaxx, rmaxy) -> np.ndarra
     return out
 
 
-class LocalPolygonGrid:
-    """Uniform grid index over a (collected) polygon set, for map-side
-    point⋈polygon joins.
+class LocalGeomGrid:
+    """Uniform grid index over a (collected) geometry set, for map-side
+    point⋈geometry joins.
+
+    Indexes arbitrary parsed geometries (points / lines / polygons /
+    MULTI\\*) via a :class:`GeomBatch`, so the broadcast side of
+    ``point_in_polygon_join`` and ``geometry_distance_join`` handles the
+    reference's point × LINESTRING fixture (hail × tornado_tracks) with
+    correct open-polyline distances; exact predicates route through the
+    kind-aware kernels.
 
     The Spark-side analog is still a cell-key hash join — here the hash
     lookup runs inside the Arrow batch (numpy searchsorted on packed cell
     keys) against a broadcast index, so the probe side needs no shuffle and
     no tier explosion.  Cell size adapts to the median (buffered) envelope
-    so a polygon covers ~1-4 cells and a point's candidate list stays short
-    even when polygon sizes vary by orders of magnitude.
+    so a geometry covers ~1-4 cells and a point's candidate list stays
+    short even when geometry sizes vary by orders of magnitude.
 
     Everything is plain numpy arrays, so the object pickles efficiently
     into a Spark broadcast.
     """
 
-    def __init__(self, ids, polys, buffer: float = 0.0):
+    def __init__(self, ids, parsed: list[tuple[str, list[np.ndarray]]], buffer: float = 0.0):
         self.ids = np.asarray(ids, dtype=object)
-        self.padded = pad_rings(polys) if polys else np.zeros((0, 1, 2))
-        env = np.array(
-            [polygon_envelope(p) for p in polys], dtype=np.float64
-        ).reshape(len(polys), 4)
-        self._build_grid(env, buffer)
-
-    def _build_grid(self, env: np.ndarray, buffer: float) -> None:
-        n = env.shape[0]
-        env = env.copy()
-        env[:, 0] -= buffer
-        env[:, 1] -= buffer
-        env[:, 2] += buffer
-        env[:, 3] += buffer
+        self.gb = GeomBatch(parsed)
+        n = self.gb.n
+        env = self.gb.envelopes() if n else np.zeros((0, 4), dtype=np.float64)
+        env += (-buffer, -buffer, buffer, buffer)
         if n:
             w = np.median(np.maximum(env[:, 2] - env[:, 0], env[:, 3] - env[:, 1]))
             self.cell = max(float(w), 1e-9)
@@ -730,7 +728,7 @@ class LocalPolygonGrid:
         return ((gx + (1 << 31)) << 32) | (gy + (1 << 31))
 
     def candidates(self, px: np.ndarray, py: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """(probe_row_index, polygon_code) candidate pairs for N points."""
+        """(probe_row_index, geometry_code) candidate pairs for N points."""
         if not len(self.keys) or not len(px):
             z = np.zeros(0, dtype=np.int64)
             return z, z
@@ -753,26 +751,6 @@ class LocalPolygonGrid:
         off = np.arange(int(cnt.sum()), dtype=np.int64) - np.repeat(starts2, cnt)
         codes = self.codes[np.repeat(b, cnt) + off]
         return rowrep, codes
-
-
-class LocalGeomGrid(LocalPolygonGrid):
-    """Kind-aware :class:`LocalPolygonGrid`: indexes arbitrary parsed
-    geometries (points / lines / polygons / MULTI\\*) via a
-    :class:`GeomBatch`, so the broadcast join side of
-    ``geometry_distance_join`` handles the reference's point × LINESTRING
-    fixture (hail × tornado_tracks) with correct open-polyline distances.
-    Same packed-cell candidate lookup; exact predicates route through the
-    kind-aware kernels."""
-
-    def __init__(self, ids, parsed: list[tuple[str, list[np.ndarray]]], buffer: float = 0.0):
-        self.ids = np.asarray(ids, dtype=object)
-        self.gb = GeomBatch(parsed)
-        env = (
-            self.gb.envelopes()
-            if self.gb.n
-            else np.zeros((0, 4), dtype=np.float64)
-        )
-        self._build_grid(env, buffer)
 
     def dist2(self, px: np.ndarray, py: np.ndarray, codes: np.ndarray) -> np.ndarray:
         return points_geoms_dist2_batch(px, py, codes, self.gb)

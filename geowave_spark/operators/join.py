@@ -16,7 +16,7 @@ picks the cheapest Spark plan that preserves those row-set semantics:
   (TieredSpatialJoin.java:349) has nothing to remove.
 - **point × polygon** (PIP / within-distance): the polygon side is small
   relative to a planetary point table, so it broadcasts as a
-  :class:`~geowave_spark.geom.LocalPolygonGrid` cell-key hash index and
+  :class:`~geowave_spark.geom.LocalGeomGrid` cell-key hash index and
   the probe side streams through ONE map stage (candidate hash lookup +
   exact numpy predicate per Arrow batch) — zero shuffle.
 
@@ -425,7 +425,7 @@ def _local_grid_polygon_join(
 
     The polygon side of a planetary point⋈region join is small relative to
     the point side (10^3–10^6 regions vs 10^12 points), so it is collected
-    once, indexed into a :class:`LocalPolygonGrid` (cell-key hash index)
+    once, indexed into a :class:`LocalGeomGrid` (cell-key hash index)
     and broadcast.  The probe side then runs a single ``mapInPandas`` —
     candidate lookup (numpy hash probe on packed cell keys) + exact
     predicate per Arrow batch — with NO shuffle, NO tier explosion and no
@@ -437,8 +437,8 @@ def _local_grid_polygon_join(
     for closed rings, exact on-segment for polylines); otherwise
     within-distance (GeomWithinDistance semantics, buffered grid).  The
     build side takes ANY WKT kind — POINT / LINESTRING / POLYGON /
-    MULTI\\* — via the kind-aware :class:`LocalGeomGrid`, covering the
-    reference's point × line flagship fixture
+    MULTI\\* — since the grid's exact predicates are kind-aware, covering
+    the reference's point × line flagship fixture
     (GeoWaveSparkSpatialJoinIT.java:111-172).
     """
     from ..geom import LocalGeomGrid, parse_wkt_multi

@@ -35,16 +35,11 @@ def get_spark(
         # measurably hurts (many tiny partitions ⇒ per-task overhead)
         .config("spark.sql.files.maxPartitionBytes", "32m")
         # local mode shuffles through RAM (spark.local.dir on /dev/shm) with
-        # no network hop, so compression is pure CPU cost; a real cluster
-        # re-enables it via SPARK_GRAFT_SHUFFLE_COMPRESS=true
-        .config(
-            "spark.shuffle.compress",
-            os.environ.get("SPARK_GRAFT_SHUFFLE_COMPRESS", "false"),
-        )
-        .config(
-            "spark.shuffle.spill.compress",
-            os.environ.get("SPARK_GRAFT_SHUFFLE_COMPRESS", "false"),
-        )
+        # no network hop, so compression is pure CPU cost; on a cluster,
+        # where shuffle blocks cross the network, turn both back on here
+        # (settings made here override spark-defaults.conf and --conf)
+        .config("spark.shuffle.compress", "false")
+        .config("spark.shuffle.spill.compress", "false")
         # no-combine shuffles (repartition/exchange) with ≤200 partitions
         # default to the bypass-merge writer: one FILE PER REDUCE PARTITION
         # per map task (128 parts × 128 tasks ⇒ 16k creates+deletes), whose
@@ -53,10 +48,7 @@ def get_spark(
         # exchange).  Forcing the single-file sort writer removes the
         # per-partition file fan-out; on a real cluster the same setting
         # avoids inode storms on dense executors.
-        .config(
-            "spark.shuffle.sort.bypassMergeThreshold",
-            os.environ.get("SPARK_GRAFT_BYPASS_THRESHOLD", "4"),
-        )
+        .config("spark.shuffle.sort.bypassMergeThreshold", "4")
         # bucketed tables here are deliberate (sources/bucketing.py: the
         # persist-indexed-once layout); auto-de-bucketing would silently
         # drop bucket PRUNING on join-less range scans (measured: the

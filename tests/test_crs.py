@@ -12,7 +12,7 @@ from geowave_spark.crs import (
     A_WGS84,
     F_WGS84,
     WEB_MERCATOR_EXTENT,
-    _A1,
+    _parse,
     crs_extent,
     forward_cols,
     inverse_cols,
@@ -20,6 +20,7 @@ from geowave_spark.crs import (
     transform_df,
     transform_np,
 )
+import utm_oracle
 
 
 def test_web_mercator_known_vectors():
@@ -37,15 +38,17 @@ def test_web_mercator_known_vectors():
 
 
 def test_rectifying_radius_constant():
-    # A = a/(1+n)(1+n²/4+n⁴/64) for WGS84 is the published 6367449.1458 m
-    assert abs(_A1 - 6367449.145823415) < 1e-3
+    # A = a/(1+n)(1+n²/4+n⁴/64) for WGS84 is the published 6367449.1458 m,
+    # in the fixed-WGS84 oracle and in the parsed UTM projection alike
+    assert abs(utm_oracle.A1 - 6367449.145823415) < 1e-3
+    assert abs(_parse("EPSG:32631")[1].A1 - 6367449.145823415) < 1e-3
 
 
 def _snyder_utm_forward(lon, lat, lon0, fn):
     """Independent transverse-mercator forward — Snyder, 'Map Projections:
     A Working Manual' (USGS PP 1395), eqs. 8-9..8-15 / 3-21: a different
     published series (powers of e² with ν/T/C/A terms) than the Krüger
-    n-series in geowave_spark.crs."""
+    n-series of the engine's transverse Mercator."""
     a = A_WGS84
     f = F_WGS84
     e2 = f * (2 - f)
@@ -138,6 +141,31 @@ def test_catalyst_matches_numpy_twins(spark):
         # same IEEE formulas, JVM vs numpy: essentially bit-identical
         np.testing.assert_allclose(out["x"].to_numpy(), xs, rtol=1e-13, atol=1e-6)
         np.testing.assert_allclose(out["y"].to_numpy(), ys, rtol=1e-13, atol=1e-6)
+    # outside web mercator's latitude domain both backends clamp to the
+    # square world: the poles land on ±extent, not on ±inf or NaN
+    lat = np.array([90.0, -90.0, 85.06, -89.9])
+    lon = np.array([10.0, -20.0, 30.0, -40.0])
+    df = spark.createDataFrame(pd.DataFrame({"lon": lon, "lat": lat}))
+    out = transform_df(df, "EPSG:4326", "EPSG:3857").orderBy("lon").toPandas()
+    ref = np.argsort(lon)
+    xs, ys = transform_np(lon[ref], lat[ref], "EPSG:4326", "EPSG:3857")
+    assert np.isfinite(out["y"]).all() and np.isfinite(ys).all()
+    np.testing.assert_allclose(out["x"].to_numpy(), xs, rtol=1e-13, atol=1e-6)
+    np.testing.assert_allclose(out["y"].to_numpy(), ys, rtol=1e-13, atol=1e-6)
+    np.testing.assert_allclose(np.abs(ys), WEB_MERCATOR_EXTENT, rtol=1e-12)
+
+
+def test_mercator_clamp_passes_null_and_nan(spark):
+    """The latitude clamp keeps np.clip semantics in Catalyst: a null or
+    NaN latitude stays null / NaN instead of snapping to a domain edge."""
+    df = spark.createDataFrame(
+        [(0, 10.0, None), (1, 10.0, float("nan"))], "i int, lon double, lat double"
+    )
+    rows = transform_df(df, "EPSG:4326", "EPSG:3857").orderBy("i").collect()
+    assert rows[0]["y"] is None
+    assert math.isnan(rows[1]["y"])
+    _, ys = transform_np(np.array([10.0]), np.array([np.nan]), "EPSG:4326", "EPSG:3857")
+    assert math.isnan(ys[0])
 
 
 def test_inverse_cols_catalyst(spark):
@@ -184,6 +212,25 @@ def test_crs_extent():
     minx, miny, maxx, maxy = crs_extent("EPSG:32631")
     assert minx < 500000.0 < maxx
     assert miny < 0 < maxy  # 80S..84N straddles the equator northing 0
+
+
+@pytest.mark.parametrize("code", ["EPSG:32631", "EPSG:32733"])
+def test_utm_extent_covers_zone_box(code):
+    """The UTM extent is the projected zone box (6° wide, 80S..84N): its
+    edges, sampled every 0.01°, lie inside it to 1 mm — incl. the
+    corners (the y extremes) and the equator crossings of the side
+    edges (the x extremes) — and it is no more than 1 m wider."""
+    lon0 = -183.0 + 6.0 * int(code[-2:])
+    lons = np.linspace(lon0 - 3.0, lon0 + 3.0, 601)
+    lats = np.linspace(-80.0, 84.0, 16401)
+    ex = np.concatenate([lons, lons, np.full(lats.size, lon0 - 3.0), np.full(lats.size, lon0 + 3.0)])
+    ey = np.concatenate([np.full(lons.size, -80.0), np.full(lons.size, 84.0), lats, lats])
+    x, y = transform_np(ex, ey, "EPSG:4326", code)
+    minx, miny, maxx, maxy = crs_extent(code)
+    assert minx <= x.min() + 1e-3 and maxx >= x.max() - 1e-3
+    assert miny <= y.min() + 1e-3 and maxy >= y.max() - 1e-3
+    assert x.min() - minx < 1.0 and maxx - x.max() < 1.0
+    assert y.min() - miny < 1.0 and maxy - y.max() < 1.0
 
 
 def test_kde_in_web_mercator_matches_numpy(spark):

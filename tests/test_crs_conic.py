@@ -10,9 +10,10 @@ generic TM) — oracle strategy:
   must preserve the ellipsoidal area element (Jacobian test).  These are
   closed-form truths from the projection's published definition, not a
   re-run of the code under test.
-* **Cross-implementation checks** — the generic Krüger TM must agree
-  with crs.py's independent fixed-WGS84 UTM path; Catalyst and numpy
-  backends must agree bit-for-bit-ish on random points.
+* **Cross-implementation checks** — the generic Krüger TM (which also
+  serves the UTM codes) must agree with the fixed-WGS84 oracle in
+  ``utm_oracle.py``; Catalyst and numpy backends must agree
+  bit-for-bit-ish on random points.
 
 Reference parity: geotools CRS.decode + ReferencedEnvelope.transform
 (RasterDataAdapter.java:444-550); formulas from EPSG GN7-2 (public).
@@ -23,6 +24,7 @@ import math
 import numpy as np
 import pytest
 
+import utm_oracle
 from geowave_spark import crs
 from geowave_spark import crs_conic
 
@@ -143,16 +145,15 @@ def test_generic_tmerc_matches_trusted_utm_path():
     rng = np.random.default_rng(3)
     lon = rng.uniform(12.0, 18.0, 400)
     lat = rng.uniform(-75.0, 80.0, 400)
-    x1, y1 = crs.transform_np(lon, lat, "EPSG:4326", "EPSG:32633")
-    x2, y2 = crs.transform_np(
-        lon,
-        lat,
-        "EPSG:4326",
+    x1, y1 = utm_oracle.utm_forward(lon, lat, 15.0, 0.0)
+    for code in (
+        "EPSG:32633",
         "+proj=tmerc +lat_0=0 +lon_0=15 +k_0=0.9996 +x_0=500000 +y_0=0"
         " +ellps=WGS84 +units=m",
-    )
-    assert np.abs(x1 - x2).max() < 1e-6
-    assert np.abs(y1 - y2).max() < 1e-6
+    ):
+        x2, y2 = crs.transform_np(lon, lat, "EPSG:4326", code)
+        assert np.abs(x1 - x2).max() < 1e-6
+        assert np.abs(y1 - y2).max() < 1e-6
 
 
 def test_tmerc_nonzero_lat0_origin():
@@ -184,6 +185,9 @@ def test_proj_string_rejections():
         )
     with pytest.raises(ValueError):
         crs._parse("EPSG:9999")
+    # a standard parallel at a pole: a named error, not a bare log(0)
+    with pytest.raises(ValueError, match=r"lat_1=75, lat_2=90.*pole"):
+        crs_conic.parse_proj_string("+proj=lcc +lat_1=75 +lat_2=90")
 
 
 def test_sphere_ellipsoid_laea():
@@ -347,7 +351,7 @@ def test_catalyst_numpy_parity(spark):
 # property-based sweeps: random projection parameters, not just the registry
 # ---------------------------------------------------------------------------
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 
@@ -364,19 +368,38 @@ _lon = st.floats(min_value=-179.0, max_value=179.0)
     ellps=st.sampled_from(["WGS84", "GRS80", "intl", "sphere"]),
     which=st.sampled_from(["lcc", "aea"]),
 )
+# standard parallels symmetric about the equator: n = 0, the cylinder
+@example(lat1=-0.5, dlat2=1.0, lat0=0.0, lon0=0.0, ellps="WGS84", which="aea")
+# nearly symmetric: n ≈ 1e-7 is accepted, so the test moves off the cylinder
+@example(lat1=-0.5, dlat2=0.99999, lat0=0.0, lon0=0.0, ellps="WGS84", which="aea")
+# a standard parallel at the pole: the cone collapses (t = 0)
+@example(lat1=75.0, dlat2=15.0, lat0=0.0, lon0=0.0, ellps="WGS84", which="lcc")
 def test_conic_roundtrip_random_params(lat1, dlat2, lat0, lon0, ellps, which):
     """Any LCC/Albers parameterization round-trips and pins its natural
     origin at (FE, FN) — over random standard parallels, origins and
-    ellipsoids, not just the EPSG registry entries."""
+    ellipsoids, not just the EPSG registry entries.  Parameters the
+    parser rejects by design must fail with an error that names why."""
     lat2 = lat1 + dlat2
-    if abs(lat1) < 0.5 and abs(lat2) < 0.5 and which == "aea":
-        lat1, lat2 = lat1 + 5.0, lat2 + 10.0  # n→0 (cylindrical limit) is out of scope
-    if which == "lcc" and abs(lat1 + lat2) < 1.0:
-        lat1, lat2 = lat1 + 5.0, lat2 + 10.0  # n→0: secant parallels straddling the equator
-    p = (
-        f"+proj={which} +lat_0={lat0} +lat_1={lat1} +lat_2={lat2}"
-        f" +lon_0={lon0} +x_0=3000.0 +y_0=-2000.0 +ellps={ellps} +units=m"
-    )
+
+    def proj_string(lat1, lat2):
+        return (
+            f"+proj={which} +lat_0={lat0} +lat_1={lat1} +lat_2={lat2}"
+            f" +lon_0={lon0} +x_0=3000.0 +y_0=-2000.0 +ellps={ellps} +units=m"
+        )
+
+    if lat1 + lat2 == 0.0:
+        with pytest.raises(ValueError, match="degenerate"):
+            crs_conic.parse_proj_string(proj_string(lat1, lat2))
+        return
+    if which == "lcc" and math.radians(lat2) >= math.pi / 2.0:  # as parsed
+        with pytest.raises(ValueError, match="pole"):
+            crs_conic.parse_proj_string(proj_string(lat1, lat2))
+        return
+    if abs(lat1 + lat2) < 1.0:
+        # n→0: secant parallels straddling the equator approach the
+        # cylinder, where ρ ~ a/n cancels away the round trip's digits
+        lat1, lat2 = lat1 + 5.0, lat2 + 10.0
+    p = proj_string(lat1, lat2)
     ox, oy = crs.transform_np(np.array([lon0]), np.array([lat0]), "EPSG:4326", p)
     assert abs(float(ox[0]) - 3000.0) < 1e-5
     assert abs(float(oy[0]) + 2000.0) < 1e-5

@@ -13,8 +13,8 @@ import pytest
 from geowave_spark.crs import transform_np
 from geowave_spark.raster.grid import RasterSpec
 
-# the webmerc numpy twin clamps to the projection's latitude domain, so no
-# warp path may compute an inf/divide-by-zero — promote to a hard failure
+# web mercator clamps latitude to the projection's domain, so no warp
+# path may compute an inf/divide-by-zero — promote to a hard failure
 pytestmark = pytest.mark.filterwarnings("error::RuntimeWarning")
 from geowave_spark.raster.tiling import TieredStrategy, pick_tier
 from geowave_spark.raster.warp import warp_mosaic_array
