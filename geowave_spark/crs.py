@@ -93,33 +93,7 @@ def crs_extent(crs: str) -> tuple[float, float, float, float]:
     if isinstance(kind[1], SphericalMercator):
         e = WEB_MERCATOR_EXTENT
         return (-e, -e, e, e)
-    return _area_extent(kind[2], crs)
-
-
-def _area_extent(area, crs: str):
-    """Projected bbox of a lon/lat box.  Each edge is sampled at 181
-    points (2° steps on a 360° edge: a polar cap traces a full circle
-    along one edge), then each extreme is re-sampled three times between
-    the samples next to it, each round 90× finer: uniform samples alone
-    undercut an extreme that falls between them (a UTM zone is widest
-    on the equator, which 181 samples of 80S..84N miss)."""
-    n = 181
-    minx, miny, maxx, maxy = area
-    best = np.full(4, np.inf)  # minima of x, y, −x, −y
-    edges = ((minx, miny, maxx, miny), (minx, maxy, maxx, maxy))
-    edges += ((minx, miny, minx, maxy), (maxx, miny, maxx, maxy))
-    for x0, y0, x1, y1 in edges:
-        for k in range(4):
-            lo, hi = 0.0, 1.0
-            for _ in range(4):
-                t = np.linspace(lo, hi, n)
-                px, py = transform_np(x0 + t * (x1 - x0), y0 + t * (y1 - y0), "EPSG:4326", crs)
-                v = (px, py, -px, -py)[k]
-                i = int(np.argmin(v))
-                best[k] = np.minimum(best[k], v[i])
-                step = (hi - lo) / (n - 1)
-                lo, hi = max(0.0, t[i] - step), min(1.0, t[i] + step)
-    return (float(best[0]), float(best[1]), float(-best[2]), float(-best[3]))
+    return reproject_envelope(kind[2], "EPSG:4326", crs, densify=181)
 
 
 def _arrow_transform_cols(proj, a: Column, b: Column, inverse: bool) -> tuple[Column, Column]:
@@ -216,24 +190,25 @@ def reproject_envelope(
     ``ReferencedEnvelope.transform(…, true)`` behavior the reference uses
     for raster ingest (RasterDataAdapter.convertToIndex): project
     ``densify`` points along each edge and take the bbox, so curved edges
-    (e.g. UTM ↔ lon/lat) don't under-cover."""
+    (e.g. UTM ↔ lon/lat) don't under-cover.  Each extreme is then
+    re-sampled three times between the samples next to it, each round
+    (densify−1)/2× finer, so the box only grows: uniform samples alone
+    undercut an extreme that falls between them (a UTM zone is widest on
+    the equator, which 181 samples of 80S..84N miss)."""
     minx, miny, maxx, maxy = bounds
-    ts = np.linspace(0.0, 1.0, densify)
-    edges_x = np.concatenate(
-        [
-            minx + ts * (maxx - minx),  # bottom
-            minx + ts * (maxx - minx),  # top
-            np.full(densify, minx),  # left
-            np.full(densify, maxx),  # right
-        ]
-    )
-    edges_y = np.concatenate(
-        [
-            np.full(densify, miny),
-            np.full(densify, maxy),
-            miny + ts * (maxy - miny),
-            miny + ts * (maxy - miny),
-        ]
-    )
-    px, py = transform_np(edges_x, edges_y, src, dst)
-    return (float(px.min()), float(py.min()), float(px.max()), float(py.max()))
+    # edges (bottom, top, left, right) × extremes (min x, min y, max x, max y)
+    x0 = np.array([minx, minx, minx, maxx])[:, None, None]
+    y0 = np.array([miny, maxy, miny, miny])[:, None, None]
+    dx = np.array([maxx - minx, maxx - minx, 0.0, 0.0])[:, None, None]
+    dy = np.array([0.0, 0.0, maxy - miny, maxy - miny])[:, None, None]
+    lo, hi = np.zeros((4, 4, 1)), np.ones((4, 4, 1))
+    best = np.full(4, np.inf)  # minima of x, y, −x, −y
+    for _ in range(4):
+        t = lo + (hi - lo) * np.linspace(0.0, 1.0, densify)
+        px, py = transform_np(x0 + t * dx, y0 + t * dy, src, dst)
+        v = np.stack([px[:, 0], py[:, 1], -px[:, 2], -py[:, 3]], axis=1)
+        best = np.minimum(best, v.min(axis=(0, 2)))
+        ti = np.take_along_axis(t, v.argmin(axis=2)[..., None], axis=2)
+        step = (hi - lo) / (densify - 1)
+        lo, hi = np.maximum(0.0, ti - step), np.minimum(1.0, ti + step)
+    return (float(best[0]), float(best[1]), float(-best[2]), float(-best[3]))

@@ -62,6 +62,10 @@ from pyspark.sql import functions as F
 
 D2R = math.pi / 180.0
 R2D = 180.0 / math.pi
+# smallest |n| a conic (LCC, Albers) accepts: ρ ~ a/n, and below this the
+# cancellation between ρ₀ and ρ costs the round trip more than 1e-7°
+# (n = 1e-7 loses 1.8e-7°); such a cone is a cylinder to 1e-6 anyway
+MIN_CONE_N = 1e-6
 
 # --------------------------------------------------------------------------
 # ops shims — one formula source, two evaluation backends
@@ -275,10 +279,11 @@ class LambertConformal(_Proj):
             self.n = (math.log(_m_s(lat1, e2)) - math.log(_m_s(lat2, e2))) / (
                 math.log(t1) - math.log(t2)
             )
-        if abs(self.n) < 1e-10:
+        if abs(self.n) < MIN_CONE_N:
             raise ValueError(
-                "degenerate LCC cone (n≈0: equatorial/straddling standard "
-                "parallels) — use +proj=merc for the cylindrical limit"
+                f"degenerate LCC cone (|n| = {abs(self.n):.3g} < {MIN_CONE_N:g}: "
+                "equatorial/straddling standard parallels) — use +proj=merc "
+                "for the cylindrical limit"
             )
         self.F_ = k0 * _m_s(lat1, e2) / (self.n * t1**self.n)
         self.r0 = self.a * self.F_ * t0**self.n
@@ -314,11 +319,11 @@ class AlbersEqualArea(_Proj):
         else:
             q2 = _q_s(lat2, e, e2)
             self.n = (m1 * m1 - m2 * m2) / (q2 - q1)
-        if abs(self.n) < 1e-10:
+        if abs(self.n) < MIN_CONE_N:
             raise ValueError(
-                "degenerate Albers cone (n≈0: standard parallels symmetric "
-                "about the equator) — the cylindrical equal-area limit is "
-                "out of scope"
+                f"degenerate Albers cone (|n| = {abs(self.n):.3g} < {MIN_CONE_N:g}: "
+                "standard parallels symmetric about the equator) — the "
+                "cylindrical equal-area limit is out of scope"
             )
         self.C = m1 * m1 + self.n * q1
         self.rho0 = self.a * math.sqrt(self.C - self.n * q0) / self.n

@@ -245,25 +245,12 @@ def points_polygon_dist2(px: np.ndarray, py: np.ndarray, poly: np.ndarray) -> np
     return np.where(inside, 0.0, d2)
 
 
-def pad_rings(polys: list[np.ndarray]) -> np.ndarray:
-    """Stack open rings into one (K, E, 2) array, padding each ring by
-    repeating its last vertex (padding edges are zero-length and inert in
-    both the crossing and the distance tests)."""
-    rings = [p[:-1] if np.array_equal(p[0], p[-1]) else p for p in polys]
-    E = max(len(r) for r in rings)
-    out = np.empty((len(rings), E, 2), dtype=np.float64)
-    for k, r in enumerate(rings):
-        out[k, : len(r)] = r
-        out[k, len(r):] = r[-1]
-    return out
-
-
 def points_in_polygons_batch(
     px: np.ndarray, py: np.ndarray, codes: np.ndarray, padded: np.ndarray
 ) -> np.ndarray:
     """Boundary-inclusive PIP for N (point, polygon-code) rows in one shot.
 
-    ``padded`` is the (K, E, 2) output of :func:`pad_rings`; ``codes`` maps
+    ``padded`` is a (K, E, 2) :attr:`GeomBatch.padded` array; ``codes`` maps
     each row to its polygon.  One (N, E) vectorized pass — no per-group
     Python, which is what makes the join's fine filter scale.
     """

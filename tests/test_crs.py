@@ -205,6 +205,21 @@ def test_reproject_envelope_covers_interior():
     assert env[1] < min(cy) - 1.0
 
 
+def test_reproject_envelope_finds_extreme_between_samples():
+    # the side edges of this box are widest in UTM x on the equator, which
+    # none of the 21 default samples of −37..41 hits (uniform samples alone
+    # fall 152 m short); the envelope covers edges sampled every 0.01° to 1 mm
+    box = (0.5, -37.0, 5.5, 41.0)
+    env = reproject_envelope(box, "EPSG:4326", "EPSG:32631")
+    lons = np.linspace(box[0], box[2], 501)
+    lats = np.linspace(box[1], box[3], 7801)
+    ex = np.concatenate([lons, lons, np.full(lats.size, box[0]), np.full(lats.size, box[2])])
+    ey = np.concatenate([np.full(lons.size, box[1]), np.full(lons.size, box[3]), lats, lats])
+    x, y = transform_np(ex, ey, "EPSG:4326", "EPSG:32631")
+    assert env[0] <= x.min() + 1e-3 and env[2] >= x.max() - 1e-3
+    assert env[1] <= y.min() + 1e-3 and env[3] >= y.max() - 1e-3
+
+
 def test_crs_extent():
     assert crs_extent("EPSG:4326") == (-180.0, -90.0, 180.0, 90.0)
     e = crs_extent("EPSG:3857")

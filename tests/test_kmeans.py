@@ -34,7 +34,7 @@ def test_kmeans_recovers_separated_clusters(spark):
     assert len(hulls) == 3
     assert hulls["n_points"].sum() == 600
     # every hull is a polygon containing its cluster's points
-    from geowave_spark.geom import parse_wkt, points_in_polygons_batch, pad_rings
+    from geowave_spark.geom import GeomBatch, parse_wkt, points_in_polygons_batch
 
     for _, h in hulls.iterrows():
         kind, ring = parse_wkt(h["hull_wkt"])
@@ -42,7 +42,7 @@ def test_kmeans_recovers_separated_clusters(spark):
         sub = pdf[pdf["cluster"] == h["cluster"]]
         inside = points_in_polygons_batch(
             sub["lon"].to_numpy(), sub["lat"].to_numpy(),
-            np.zeros(len(sub), int), pad_rings([ring]),
+            np.zeros(len(sub), int), GeomBatch([("POLYGON", [ring])]).padded,
         )
         assert inside.all()
 
