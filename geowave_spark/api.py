@@ -34,7 +34,7 @@ def spatial_join(
     right_id: str,
     radius: float = 0.0,
     negative: bool = False,
-    salt: int | None = None,
+    salt: int | str | None = None,
     **kw,
 ) -> DataFrame:
     """Indexed spatial join returning distinct (left_id, right_id) pairs.

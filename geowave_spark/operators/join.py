@@ -4,29 +4,41 @@ From-scratch Spark-first re-expression of GeoWave's TieredSpatialJoin
 (analytics/spark/.../spatial/TieredSpatialJoin.java:76-551) and
 SpatialJoinRunner (SpatialJoinRunner.java:90-107).  The reference cogroups
 per tier with a nested-loop predicate inside each cell; here each join
-picks the cheapest Spark plan that preserves those row-set semantics:
+picks the cheapest Spark plan that preserves those row-set semantics.
 
-- **point × point distance** (:func:`distance_join`): single-tier grid
-  sized driver-side from the radius (the reference's NN partitioner rule,
-  AbstractPartitioner.java:230-267) → flat mapInPandas cell explode of the
-  buffered build side → shuffled **hash** equi-join on the cell id →
-  whole-stage-codegen distance post-filter.  No dedupe stage: a pair can
-  meet in at most one cell (build rows hold one tier/disjoint cells, probe
-  points truncate to one cell), so the reference's reduceByKey dedupe
-  (TieredSpatialJoin.java:349) has nothing to remove.
-- **point × polygon** (PIP / within-distance): the polygon side is small
-  relative to a planetary point table, so it broadcasts as a
+One keyed-join kernel, :func:`_cell_join` (optional salt → shuffled
+**hash** equi-join on the cell keys → exact predicate → optional dedupe),
+runs :func:`distance_join`, :func:`haversine_distance_join`,
+``sources.bucketing.bucketed_distance_join`` and the polygon joins'
+shuffle plan; each builds only its keyed sides and exact predicate, and
+:func:`_negative` is the one ``left_anti`` tail:
+
+- **point × point distance**: single-tier grid sized driver-side from
+  the radius (the reference's NN partitioner rule,
+  AbstractPartitioner.java:230-267) → flat mapInPandas cell explode of
+  the buffered build side (latitude-aware and dateline-split for the
+  haversine join) → kernel with a whole-stage-codegen distance filter.
+  No dedupe stage: a pair can meet in at most one cell (build rows hold
+  one tier/disjoint cells, probe points truncate to one cell), so the
+  reference's reduceByKey dedupe (TieredSpatialJoin.java:349) has
+  nothing to remove.
+- **point × polygon** (PIP / within-distance, one core
+  :func:`_polygon_join`): the polygon side is small relative to a
+  planetary point table, so it broadcasts as a
   :class:`~geowave_spark.geom.LocalGeomGrid` cell-key hash index and
   the probe side streams through ONE map stage (candidate hash lookup +
-  exact numpy predicate per Arrow batch) — zero shuffle.
+  exact numpy predicate per Arrow batch) — zero shuffle.  Past the
+  broadcast limit it falls back to the reference's tiered
+  ``(tier, cell)`` shuffle join through the kernel.
 
 Scale notes: the distance join's only shuffle is the hash join itself;
 hot cells (Zipfian data) can additionally be salted (build rows replicate
-``salt`` ways, probe rows pick one salt deterministically) on top of AQE's
-skew splitting.  The polygon joins shuffle nothing and scale linearly in
-the point count; their polygon side is bounded by driver memory
-(~10^6 polygons), which matches the reference's broadcast of the indexing
-strategy + its per-executor geometry caches.
+per salt value, probe rows pick one deterministically) on top of AQE's
+skew splitting — the same salting on the polygon shuffle plan.  The
+broadcast polygon plan shuffles nothing and scales linearly in the point
+count; its polygon side is bounded by driver memory (~10^6 polygons),
+which matches the reference's broadcast of the indexing strategy + its
+per-executor geometry caches.
 """
 
 from __future__ import annotations
@@ -35,7 +47,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from ..encode import (
     DEFAULT_STRATEGY,
@@ -57,100 +69,168 @@ from ..sfc import DEFAULT_MAX_DUPLICATES, JOIN_MAX_DUPLICATES, TieredStrategy
 POLYGON_BROADCAST_LIMIT = 100_000
 
 
-def _apply_salt(build: DataFrame, probe: DataFrame, salt: int) -> tuple[DataFrame, DataFrame]:
-    """Replicate build rows across `salt` buckets; probe rows hash into one.
-
-    Explicit skew handling (north rule): hot cell keys are spread over
-    `salt` reducers.  Deterministic: probe salt = pmod(xxhash64(probe
-    row), salt).
-    """
-    spark = build.sparkSession
-    salts = spark.createDataFrame([(i,) for i in range(salt)], "_salt int")
-    build_s = build.crossJoin(F.broadcast(salts))
-    probe_s = probe.withColumn(
-        "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in probe.columns]), F.lit(salt)).cast("int")
-    )
-    return build_s, probe_s
-
-
 MAX_SALT_FACTOR = 64
+DEFAULT_SALT_CAP = 100_000
 
 
-def _apply_auto_salt(
-    build: DataFrame, probe: DataFrame, cap: int
+def _apply_salt(
+    build: DataFrame, probe: DataFrame, keys: list[str], salt: int | str, cap: int
 ) -> tuple[DataFrame, DataFrame]:
-    """Census-driven salting: split ONLY cells whose probe occupancy
-    exceeds ``cap`` rows, each by its own factor ⌈count/cap⌉ (≤64).
+    """Spread hot join keys over reducers: each build row replicates once
+    per salt value of its key, each probe row hashes into one of them
+    (pmod(xxhash64(probe row), factor)).
 
-    A fixed global salt replicates the whole build side and widens the
-    shuffle whether or not any key is actually hot — measurably slower
-    than unsalted when skew is mild.  The census (one map-side-combined
-    count per cell; only over-cap cells reach the driver) prices the
-    skew first, so cold keys keep a single reducer and each hot key gets
-    exactly the parallelism its row count warrants — the same
-    stats-driven sizing the reference's SplitsProvider applies to scan
-    splits (SplitsProvider.java:148-228).  Deterministic given the data
-    AND the cluster: the factor is also capped by defaultParallelism, so
-    the plan adapts to cluster size the way AQE does — row sets are
-    identical at every parallelism, only reducer fan-out differs.
+    An int ``salt`` is a constant factor for every key.  ``"auto"`` prices
+    the skew first with a probe-side census (one map-side-combined count
+    per key; only keys over ``cap`` rows reach the driver) and splits only
+    those, each by its own factor ⌈count/cap⌉ (≤64).  A fixed global salt
+    replicates the whole build side and widens the shuffle whether or not
+    any key is actually hot — measurably slower than unsalted when skew is
+    mild; the census gives cold keys a single reducer and each hot key
+    exactly the parallelism its row count warrants — the same stats-driven
+    sizing the reference's SplitsProvider applies to scan splits
+    (SplitsProvider.java:148-228).  Deterministic given the data AND the
+    cluster: the auto factor is also capped by defaultParallelism, so the
+    plan adapts to cluster size the way AQE does — row sets are identical
+    at every parallelism, only reducer fan-out differs.
     """
     spark = build.sparkSession
-    # the split factor is additionally capped by the CLUSTER's parallelism:
-    # splitting a hot key across more reducers than there are cores buys
-    # no wall-clock and pays full build-replication overhead (measured:
-    # factor-64 salting ran 1.8× slower than unsalted at local[2] while
-    # winning at local[32]) — so the factor scales with the cluster, and
-    # the same job stays optimal from a laptop to 1000 executors
-    par_cap = max(2, int(spark.sparkContext.defaultParallelism))
-    hot = (
-        probe.groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("_cnt"))
-        .where(F.col("_cnt") > cap)
-        .select(
-            "cell",
-            F.least(
-                F.lit(min(MAX_SALT_FACTOR, par_cap)),
-                F.ceil(F.col("_cnt") / F.lit(cap)),
-            ).cast("int").alias("_f"),
+    probe_cols = [F.col(c) for c in probe.columns]
+    factor = F.lit(int(salt)) if salt != "auto" else F.coalesce(F.col("_f"), F.lit(1))
+    if salt == "auto":  # factor = the key's census factor, 1 for keys not in it
+        # the split factor is additionally capped by the CLUSTER's
+        # parallelism: splitting a hot key across more reducers than there
+        # are cores buys no wall-clock and pays full build-replication
+        # overhead (measured: factor-64 salting ran 1.8× slower than
+        # unsalted at local[2] while winning at local[32]) — so the factor
+        # scales with the cluster, and the same job stays optimal from a
+        # laptop to 1000 executors
+        par_cap = max(2, int(spark.sparkContext.defaultParallelism))
+        hot = (
+            probe.groupBy(*keys)
+            .agg(F.count(F.lit(1)).alias("_cnt"))
+            .where(F.col("_cnt") > cap)
+            .select(
+                *keys,
+                F.least(
+                    F.lit(min(MAX_SALT_FACTOR, par_cap)),
+                    F.ceil(F.col("_cnt") / F.lit(cap)),
+                ).cast("int").alias("_f"),
+            )
         )
-    )
-    hot_rows = hot.collect()  # over-cap cells only — tiny by construction
-    if not hot_rows:
-        return (
-            build.withColumn("_salt", F.lit(0)),
-            probe.withColumn("_salt", F.lit(0)),
-        )
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    hot_df = F.broadcast(
-        spark.createDataFrame([(r["cell"], r["_f"]) for r in hot_rows], "cell long, _f int")
-    )
-    build_s = (
-        build.join(hot_df, "cell", "left")
-        .withColumn("_f", F.coalesce(F.col("_f"), F.lit(1)))
-        .withColumn("_salt", F.explode(F.sequence(F.lit(0), F.col("_f") - 1)))
-        .drop("_f")
-    )
-    probe_s = (
-        probe.join(hot_df, "cell", "left")
-        .withColumn("_f", F.coalesce(F.col("_f"), F.lit(1)))
-        .withColumn(
-            "_salt",
-            F.pmod(
-                F.xxhash64(*[F.col(c) for c in probe.columns]), F.col("_f")
-            ).cast("int"),
-        )
-        .drop("_f")
-    )
+        hot_rows = hot.collect()  # over-cap keys only — tiny by construction
+        if not hot_rows:
+            return (
+                build.withColumn("_salt", F.lit(0)),
+                probe.withColumn("_salt", F.lit(0)),
+            )
+        schema = StructType([probe.schema[k] for k in keys] + [StructField("_f", IntegerType())])
+        hot_df = F.broadcast(spark.createDataFrame(hot_rows, schema))
+        build, probe = (df.join(hot_df, keys, "left") for df in (build, probe))
+    build = build.withColumn("_salt", F.explode(F.sequence(F.lit(0), factor - 1)))
+    probe = probe.withColumn("_salt", F.pmod(F.xxhash64(*probe_cols), factor).cast("int"))
     # explicit numbered repartition on the salted key: AQE's partition
     # coalescing targets shuffle BYTES, and a hot cell's shuffle input is
     # tiny while its join work is quadratic — left to itself AQE folds
     # the freshly-separated salt buckets back into one reducer.
     # repartition(n, keys) (REPARTITION_BY_NUM) must be honored exactly,
     # and the join reuses this distribution with no extra exchange.
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     return (
-        build_s.repartition(n_parts, "cell", "_salt"),
-        probe_s.repartition(n_parts, "cell", "_salt"),
+        build.drop("_f").repartition(n_parts, *keys, "_salt"),
+        probe.drop("_f").repartition(n_parts, *keys, "_salt"),
     )
+
+
+def _cell_join(
+    probe: DataFrame,
+    build: DataFrame,
+    keys: list[str],
+    match,
+    left_id: str,
+    right_id: str,
+    *,
+    salt: int | str | None = None,
+    salt_cap: int = DEFAULT_SALT_CAP,
+    dedupe: bool = False,
+) -> DataFrame:
+    """The keyed-join dataflow of every cell-probe join, on sides that
+    already carry their ``keys`` and ids (``_lid`` on the probe, ``_rid``
+    on the build): optional salt (:func:`_apply_salt`) → shuffled hash
+    equi-join (both sides are pre-projected, so a hash join saves
+    sort-merge's two full sorts of the candidate sets) → exact predicate
+    ``match`` → ``(left_id, right_id)`` pairs → optional dropDuplicates
+    on them (the reference's reduceByKey dedupe, TieredSpatialJoin.java:349)."""
+    if salt:
+        build, probe = _apply_salt(build, probe, keys, salt, salt_cap)
+        keys = [*keys, "_salt"]
+    pairs = (
+        probe.join(build.hint("shuffle_hash"), keys)
+        .where(match)
+        .select(F.col("_lid").alias(left_id), F.col("_rid").alias(right_id))
+    )
+    return pairs.dropDuplicates([left_id, right_id]) if dedupe else pairs
+
+
+def _negative(left: DataFrame, left_id: str, pairs: DataFrame) -> DataFrame:
+    """The distinct ``left_id`` values with NO pair — the reference's
+    negative-predicate subtractByKey (TieredSpatialJoin.java:360-378)."""
+    return (
+        left.select(F.col(left_id))
+        .distinct()
+        .join(pairs.select(left_id).distinct(), left_id, "left_anti")
+    )
+
+
+def _points(df: DataFrame, id_col: str, lon: str, lat: str, side: str, *extra: str) -> DataFrame:
+    """``(id, lon, lat)`` of a point frame as ``_{side}id, _{side}lon,
+    _{side}lat``, plus any ``extra`` columns as they are."""
+    return df.select(
+        F.col(id_col).alias(f"_{side}id"),
+        F.col(lon).alias(f"_{side}lon"),
+        F.col(lat).alias(f"_{side}lat"),
+        *extra,
+    )
+
+
+def _point_probe(
+    df: DataFrame, id_col: str, lon: str, lat: str, strategy: TieredStrategy, tier: int
+) -> DataFrame:
+    """Probe side of the point joins: each point keyed by its cell at ``tier``."""
+    return _points(df, id_col, lon, lat, "l").withColumn(
+        "cell", point_cell_at_tier_udf(strategy, tier)(F.col("_llon"), F.col("_llat"))
+    )
+
+
+def _planar_build(
+    df: DataFrame,
+    id_col: str,
+    lon: str,
+    lat: str,
+    radius: float,
+    strategy: TieredStrategy,
+    max_duplicates: int,
+    tier: int,
+):
+    """Build side and exact predicate of the planar distance joins: each
+    point's 2r × 2r envelope exploded into its cells at ``tier``
+    (TieredSpatialJoin.java:146-166: only the buffered side expands its
+    envelope; the flat mapInPandas explode keeps the Arrow exchange
+    object-free), then whole-stage-codegen distance ≤ r."""
+    build = explode_envelope_cells(
+        _points(df, id_col, lon, lat, "r"),
+        F.col("_rlon") - radius,
+        F.col("_rlat") - radius,
+        F.col("_rlon") + radius,
+        F.col("_rlat") + radius,
+        keep=["_rid", "_rlon", "_rlat"],
+        strategy=strategy,
+        max_duplicates=max_duplicates,
+        tier=tier,
+    ).drop("tier")
+    dx = F.col("_llon") - F.col("_rlon")
+    dy = F.col("_llat") - F.col("_rlat")
+    return build, dx * dx + dy * dy <= F.lit(radius * radius)
 
 
 def distance_join(
@@ -167,17 +247,13 @@ def distance_join(
     max_duplicates: int = DEFAULT_MAX_DUPLICATES,
     negative: bool = False,
     salt: int | str | None = None,
-    salt_cap: int = 100_000,
-    broadcast_build: bool = False,
-    dedupe_pairs: bool = False,
+    salt_cap: int = DEFAULT_SALT_CAP,
 ) -> DataFrame:
     """Point×point within-distance join → distinct (left_id, right_id) pairs.
 
     Precondition: ``left_id`` / ``right_id`` are unique keys of their
     inputs — then output pairs are distinct with no dedupe stage (see the
-    single-meeting-cell argument below).  If either id can repeat, pass
-    ``dedupe_pairs=True`` to add the reference's identity dedupe
-    (DedupeFilter semantics) as a final ``dropDuplicates``.
+    single-meeting-cell argument below).
 
     ``max_duplicates`` defaults to the reference's ingest-path 4 (2/dim,
     TieredSFCIndexStrategy.java:58) rather than its join-path 80
@@ -193,9 +269,8 @@ def distance_join(
 
     ``salt``: ``"auto"`` prices skew with a per-cell probe census and
     salts only cells above ``salt_cap`` rows, each by its own factor
-    (:func:`_apply_auto_salt` — the recommended mode); an int is the
-    legacy fixed global factor.  Either way the output row set is
-    unchanged.
+    (:func:`_apply_salt` — the recommended mode); an int is a fixed
+    factor for every cell.  Either way the output row set is unchanged.
 
     Distance is planar Euclidean on (lon, lat) — identical to the
     reference's GeomWithinDistance degree-radius semantics
@@ -209,47 +284,6 @@ def distance_join(
     # This removes the tier-collect job and the probe-side tier explosion;
     # the join key collapses to the single-tier cell id.
     t_star = strategy.tier_for_width(2.0 * radius, 2.0 * radius)
-    # build side = right, buffered by the radius (TieredSpatialJoin.java:146-166:
-    # only the buffered side expands its envelope); flat mapInPandas explode
-    # keeps the Arrow exchange object-free at millions-of-cells scale
-    build = explode_envelope_cells(
-        right.select(
-            F.col(right_id).alias("_rid"),
-            F.col(right_lon).alias("_rlon"),
-            F.col(right_lat).alias("_rlat"),
-        ),
-        F.col("_rlon") - radius,
-        F.col("_rlat") - radius,
-        F.col("_rlon") + radius,
-        F.col("_rlat") + radius,
-        keep=["_rid", "_rlon", "_rlat"],
-        strategy=strategy,
-        max_duplicates=max_duplicates,
-        tier=t_star,
-    ).drop("tier")
-
-    probe = left.select(
-        F.col(left_id).alias("_lid"),
-        F.col(left_lon).alias("_llon"),
-        F.col(left_lat).alias("_llat"),
-    ).withColumn(
-        "cell", point_cell_at_tier_udf(strategy, t_star)(F.col("_llon"), F.col("_llat"))
-    )
-
-    keys = ["cell"]
-    if salt == "auto":
-        # census-driven: salt only cells with > salt_cap probe rows, by
-        # ⌈count/cap⌉ (see _apply_auto_salt) — eager census collect
-        build, probe = _apply_auto_salt(build, probe, salt_cap)
-        keys = keys + ["_salt"]
-    elif salt:
-        build, probe = _apply_salt(build, probe, int(salt))
-        keys = keys + ["_salt"]
-    b = F.broadcast(build) if broadcast_build else build
-
-    r2 = radius * radius
-    dx = F.col("_llon") - F.col("_rlon")
-    dy = F.col("_llat") - F.col("_rlat")
     # No dedupe stage needed: each build row lands at exactly ONE tier with a
     # disjoint cell set, and a probe point truncates to exactly one cell per
     # tier — so a (left, right) pair can meet in at most one (tier, cell).
@@ -257,22 +291,14 @@ def distance_join(
     # dateline split can't produce a second tier for the same row.)  This
     # removes the reference's reduceByKey dedupe (TieredSpatialJoin.java:349)
     # and its full extra shuffle — the hottest stage at high parallelism.
-    # shuffle_hash: both sides are already exploded/pre-projected, and a hash
-    # join avoids sort-merge's two full sorts of the candidate sets.
-    pairs = (
-        probe.join(b.hint("shuffle_hash"), keys)
-        .where(dx * dx + dy * dy <= F.lit(r2))
-        .select(F.col("_lid").alias(left_id), F.col("_rid").alias(right_id))
+    build, within = _planar_build(
+        right, right_id, right_lon, right_lat, radius, strategy, max_duplicates, t_star
     )
-    if dedupe_pairs:
-        pairs = pairs.dropDuplicates([left_id, right_id])
-    if negative:
-        return (
-            left.select(F.col(left_id))
-            .distinct()
-            .join(pairs.select(left_id).distinct(), left_id, "left_anti")
-        )
-    return pairs
+    pairs = _cell_join(
+        _point_probe(left, left_id, left_lon, left_lat, strategy, t_star),
+        build, ["cell"], within, left_id, right_id, salt=salt, salt_cap=salt_cap,
+    )
+    return _negative(left, left_id, pairs) if negative else pairs
 
 
 EARTH_RADIUS_M = 6371008.8
@@ -334,11 +360,7 @@ def haversine_distance_join(
     dlat = radius_m / _M_PER_DEG
     t_star = strategy.tier_for_width(2.0 * dlat, 2.0 * dlat)
 
-    r = right.select(
-        F.col(right_id).alias("_rid"),
-        F.col(right_lon).alias("_rlon"),
-        F.col(right_lat).alias("_rlat"),
-    )
+    r = _points(right, right_id, right_lon, right_lat, "r")
     phi_worst = F.least(F.abs(F.col("_rlat")) + F.lit(dlat), F.lit(89.9))
     polar = (F.abs(F.col("_rlat")) + F.lit(dlat)) >= F.lit(89.9)
     # exact lon-separation bound: Δλ = 2·asin(sin(d/2R)/cos φ) — the linear
@@ -391,100 +413,61 @@ def haversine_distance_join(
         strategy=strategy,
         tier=t_star,
     ).drop("tier")
-
-    probe = left.select(
-        F.col(left_id).alias("_lid"),
-        F.col(left_lon).alias("_llon"),
-        F.col(left_lat).alias("_llat"),
-    ).withColumn(
-        "cell", point_cell_at_tier_udf(strategy, t_star)(F.col("_llon"), F.col("_llat"))
-    )
-    return (
-        probe.join(build.hint("shuffle_hash"), ["cell"])
-        .where(
-            haversine_expr(
-                F.col("_llon"), F.col("_llat"), F.col("_rlon"), F.col("_rlat")
-            )
-            <= F.lit(float(radius_m))
-        )
-        .select(F.col("_lid").alias(left_id), F.col("_rid").alias(right_id))
+    within = haversine_expr(F.col("_llon"), F.col("_llat"), F.col("_rlon"), F.col("_rlat"))
+    return _cell_join(
+        _point_probe(left, left_id, left_lon, left_lat, strategy, t_star),
+        build, ["cell"], within <= F.lit(float(radius_m)), left_id, right_id,
     )
 
 
-def _local_grid_polygon_join(
-    points: DataFrame,
-    polygons: DataFrame,
-    point_id: str,
-    polygon_id: str,
-    lon: str,
-    lat: str,
-    wkt: str,
-    radius: float | None,
-) -> DataFrame:
-    """Shared core of the point⋈polygon joins: one map-side pass.
+def _geom_grid(polygons: DataFrame, polygon_id: str, wkt: str, buffer: float, limit: int | None):
+    """Broadcast :class:`LocalGeomGrid` over the collected geometry side,
+    or None when it holds more than ``limit`` rows.
 
-    The polygon side of a planetary point⋈region join is small relative to
-    the point side (10^3–10^6 regions vs 10^12 points), so it is collected
-    once, indexed into a :class:`LocalGeomGrid` (cell-key hash index)
-    and broadcast.  The probe side then runs a single ``mapInPandas`` —
-    candidate lookup (numpy hash probe on packed cell keys) + exact
-    predicate per Arrow batch — with NO shuffle, NO tier explosion and no
-    pair materialization beyond true matches.  This is the broadcast-side
-    specialization of the reference's TieredSpatialJoin; its cogrouped
-    shuffle plan only wins when *both* sides are too big to broadcast.
-
-    ``radius=None`` ⇒ boundary-inclusive point-in-geometry (containment
-    for closed rings, exact on-segment for polylines); otherwise
-    within-distance (GeomWithinDistance semantics, buffered grid).  The
-    build side takes ANY WKT kind — POINT / LINESTRING / POLYGON /
-    MULTI\\* — since the grid's exact predicates are kind-aware, covering
-    the reference's point × line flagship fixture
-    (GeoWaveSparkSpatialJoinIT.java:111-172).
+    With a ``limit`` this is ONE bounded collect of at most limit+1 rows:
+    it both decides whether the side fits the driver and feeds the grid.
+    The coalesce to one partition keeps it one Spark job — a collect
+    under a limit otherwise scans partitions in scale-up rounds, one job
+    each — and the scan still stops after limit+1 rows.
     """
     from ..geom import LocalGeomGrid, parse_wkt_multi
 
-    spark = points.sparkSession
-    rows = polygons.select(polygon_id, wkt).collect()
-    ids = [r[0] for r in rows]
-    geoms = [parse_wkt_multi(r[1]) for r in rows]
-    grid_bc = spark.sparkContext.broadcast(
-        LocalGeomGrid(ids, geoms, buffer=radius or 0.0)
-    )
-    r2 = None if radius is None else radius * radius
+    q = polygons.select(polygon_id, wkt)
+    rows = (q if limit is None else q.coalesce(1).limit(limit + 1)).collect()
+    if limit is not None and len(rows) > limit:
+        return None
+    grid = LocalGeomGrid([r[0] for r in rows], [parse_wkt_multi(r[1]) for r in rows], buffer)
+    return polygons.sparkSession.sparkContext.broadcast(grid)
 
-    src = points.select(
-        F.col(point_id).alias("_pid"),
-        F.col(lon).alias("_plon"),
-        F.col(lat).alias("_plat"),
-    )
-    out_schema = StructType(
-        [
-            StructField(point_id, points.schema[point_id].dataType),
-            StructField(polygon_id, polygons.schema[polygon_id].dataType),
-        ]
-    )
+
+def _grid_probe(
+    src: DataFrame, grid_bc, lon: str, lat: str, keep: dict[str, str], polygon: StructField, r2
+) -> DataFrame:
+    """One ``mapInPandas`` pass of ``src`` points against a broadcast
+    :class:`LocalGeomGrid`: per Arrow batch, a numpy hash lookup of
+    candidate geometries, then the exact predicate — boundary-inclusive
+    intersection when ``r2`` is None, else squared distance ≤ ``r2``.
+    Emits one row per true match: the ``keep`` columns (output name →
+    ``src`` column) and the ``polygon`` id field."""
 
     def _gen(batches):
         g = grid_bc.value
         for pdf in batches:
-            px = pdf["_plon"].to_numpy(np.float64)
-            py = pdf["_plat"].to_numpy(np.float64)
+            px = pdf[lon].to_numpy(np.float64)
+            py = pdf[lat].to_numpy(np.float64)
             rowrep, codes = g.candidates(px, py)
-            if len(rowrep):
-                if r2 is None:
-                    m = g.intersects(px[rowrep], py[rowrep], codes)
-                else:
-                    m = g.dist2(px[rowrep], py[rowrep], codes) <= r2
-            else:
+            if not len(rowrep):
                 m = np.zeros(0, dtype=bool)
-            yield pd.DataFrame(
-                {
-                    point_id: pdf["_pid"].to_numpy()[rowrep[m]],
-                    polygon_id: g.ids[codes[m]],
-                }
-            )
+            elif r2 is None:
+                m = g.intersects(px[rowrep], py[rowrep], codes)
+            else:
+                m = g.dist2(px[rowrep], py[rowrep], codes) <= r2
+            out = {name: pdf[c].to_numpy()[rowrep[m]] for name, c in keep.items()}
+            out[polygon.name] = g.ids[codes[m]]
+            yield pd.DataFrame(out)
 
-    return src.mapInPandas(_gen, out_schema)
+    fields = [StructField(name, src.schema[c].dataType) for name, c in keep.items()]
+    return src.mapInPandas(_gen, StructType([*fields, polygon]))
 
 
 def _pair_match_udf(radius: float | None):
@@ -523,7 +506,7 @@ def _pair_match_udf(radius: float | None):
     return _m
 
 
-def _shuffle_polygon_join(
+def _polygon_join(
     points: DataFrame,
     polygons: DataFrame,
     point_id: str,
@@ -534,11 +517,31 @@ def _shuffle_polygon_join(
     radius: float | None,
     strategy: TieredStrategy,
     max_duplicates: int,
-    salt: int | None = None,
+    negative: bool,
+    salt: int | str | None,
+    plan: str,
+    broadcast_limit: int,
 ) -> DataFrame:
-    """Big-both-sides point⋈polygon join — the reference's actual
-    TieredSpatialJoin dataflow (TieredSpatialJoin.java:76-551), with no
-    driver collect of geometry:
+    """Shared core of the point⋈geometry joins: ``radius=None`` ⇒
+    boundary-inclusive point-in-geometry (containment for closed rings,
+    exact on-segment for polylines), else within-distance
+    (GeomWithinDistance semantics, buffered).  The geometry side takes ANY
+    WKT kind — POINT / LINESTRING / POLYGON / MULTI\\* — since the exact
+    predicates are kind-aware, covering the reference's point × line
+    flagship fixture (GeoWaveSparkSpatialJoinIT.java:111-172).
+
+    **Broadcast plan**: the geometry side of a planetary point⋈region join
+    is small relative to the point side (10^3–10^6 regions vs 10^12
+    points), so it is collected once into a broadcast
+    :class:`LocalGeomGrid` (:func:`_geom_grid`) and the points run ONE
+    map-side pass (:func:`_grid_probe`) — no shuffle, no tier explosion
+    and no pair materialization beyond true matches.  ``plan='auto'``
+    takes it when the geometry side has at most ``broadcast_limit`` rows,
+    decided by the same bounded collect that feeds the grid.
+
+    **Shuffle plan** (above the limit, or ``plan='shuffle'``): the
+    reference's big-both-sides TieredSpatialJoin dataflow
+    (TieredSpatialJoin.java:76-551), with no driver collect of geometry:
 
     1. build side: flat ``mapInPandas`` explode of each (buffered) polygon
        to its insertion cells with trimIndexIds pruning
@@ -552,60 +555,48 @@ def _shuffle_polygon_join(
        list — tier re-projection is a Catalyst bit shift
        (:func:`~geowave_spark.encode.cell_at_tier`), the cheap analog of
        reprojectToTier (TieredSpatialJoin.java:471-511);
-    4. shuffled hash equi-join on (tier, cell) + exact vectorized
-       post-filter (:func:`_pair_match_udf`) + dropDuplicates — the
-       reference's cogroup + nested-loop predicate + reduceByKey dedupe.
+    4. :func:`_cell_join` on (tier, cell), salted when asked — shuffled
+       hash equi-join + exact vectorized post-filter
+       (:func:`_pair_match_udf`) + dropDuplicates, the reference's
+       cogroup + nested-loop predicate + reduceByKey dedupe.
 
     At 1000 executors this is one shuffle of |polygons|·dup + |points|·|tiers|
     rows on a uniform key space (Hilbert cells), no single-node bottleneck.
     """
     buffer = radius or 0.0
-    build = explode_polygon_cells(
-        polygons.select(
-            F.col(polygon_id).alias("_gid"), F.col(wkt).alias("_gwkt")
-        ),
-        "_gwkt",
-        keep=["_gid", "_gwkt"],
-        strategy=strategy,
-        max_duplicates=max_duplicates,
-        buffer=buffer,
-    )
-    tiers = distinct_polygon_tiers(
-        polygons, wkt, strategy, max_duplicates=max_duplicates, buffer=buffer
-    )
-    probe = (
-        points.select(
-            F.col(point_id).alias("_pid"),
-            F.col(lon).alias("_plon"),
-            F.col(lat).alias("_plat"),
+    pts = _points(points, point_id, lon, lat, "l")
+    grid_bc = None
+    if plan != "shuffle":
+        limit = broadcast_limit if plan == "auto" else None
+        grid_bc = _geom_grid(polygons, polygon_id, wkt, buffer, limit)
+    if grid_bc is not None:
+        pairs = _grid_probe(
+            pts, grid_bc, "_llon", "_llat", {point_id: "_lid"}, polygons.schema[polygon_id],
+            None if radius is None else radius * radius,
         )
-        .withColumn("_top", point_cell_udf(strategy)(F.col("_plon"), F.col("_plat")))
-        .crossJoin(F.broadcast(tiers))
-        .withColumn("cell", cell_at_tier("_top", "tier", strategy.max_bits))
-        .drop("_top")
-    )
-    keys = ["tier", "cell"]
-    if salt:
-        # hot (tier, cell) buckets (many points meeting one big polygon's
-        # cell) spread across `salt` reducers: build rows replicate,
-        # probe rows hash into one — same mechanics as the point join
-        build, probe = _apply_salt(build, probe, int(salt))
-        keys = keys + ["_salt"]
-    return (
-        probe.join(build.hint("shuffle_hash"), keys)
-        .where(_pair_match_udf(radius)(F.col("_plon"), F.col("_plat"), F.col("_gwkt")))
-        .select(F.col("_pid").alias(point_id), F.col("_gid").alias(polygon_id))
-        .dropDuplicates([point_id, polygon_id])
-    )
-
-
-def _polygon_join_plan(polygons: DataFrame, plan: str, broadcast_limit: int) -> str:
-    """Resolve plan='auto' with a bounded count probe (scans at most
-    broadcast_limit+1 polygon rows; never the whole table)."""
-    if plan != "auto":
-        return plan
-    n = polygons.limit(broadcast_limit + 1).count()
-    return "broadcast" if n <= broadcast_limit else "shuffle"
+    else:
+        build = explode_polygon_cells(
+            polygons.select(F.col(polygon_id).alias("_rid"), F.col(wkt).alias("_rwkt")),
+            "_rwkt",
+            keep=["_rid", "_rwkt"],
+            strategy=strategy,
+            max_duplicates=max_duplicates,
+            buffer=buffer,
+        )
+        tiers = distinct_polygon_tiers(
+            polygons, wkt, strategy, max_duplicates=max_duplicates, buffer=buffer
+        )
+        probe = (
+            pts.withColumn("_top", point_cell_udf(strategy)(F.col("_llon"), F.col("_llat")))
+            .crossJoin(F.broadcast(tiers))
+            .withColumn("cell", cell_at_tier("_top", "tier", strategy.max_bits))
+            .drop("_top")
+        )
+        match = _pair_match_udf(radius)(F.col("_llon"), F.col("_llat"), F.col("_rwkt"))
+        pairs = _cell_join(
+            probe, build, ["tier", "cell"], match, point_id, polygon_id, salt=salt, dedupe=True
+        )
+    return _negative(points, point_id, pairs) if negative else pairs
 
 
 def point_in_polygon_join(
@@ -619,46 +610,28 @@ def point_in_polygon_join(
     strategy: TieredStrategy = DEFAULT_STRATEGY,
     max_duplicates: int = JOIN_MAX_DUPLICATES,
     negative: bool = False,
-    salt: int | None = None,
+    salt: int | str | None = None,
     plan: str = "auto",
     broadcast_limit: int = POLYGON_BROADCAST_LIMIT,
 ) -> DataFrame:
     """Point-in-polygon join → distinct (point_id, polygon_id) pairs.
 
-    Plan selection (``plan='auto'``): up to ``broadcast_limit`` polygons
-    the join runs as a zero-shuffle broadcast cell-grid
-    (:func:`_local_grid_polygon_join`); above it — or with
-    ``plan='shuffle'`` — it falls back to the reference's big-both-sides
-    tiered shuffle join (:func:`_shuffle_polygon_join`), which never
-    collects geometry to the driver.  The probe is a bounded
-    ``limit(broadcast_limit+1).count()``, not a full count.
-    ``salt`` (int) spreads hot (tier, cell) buckets on the shuffle plan
-    (same replicate/hash mechanics as the distance joins); the broadcast
-    plan has no shuffle, so salt is a no-op there.
+    Plan selection (``plan='auto'``, :func:`_polygon_join`): up to
+    ``broadcast_limit`` polygons the join runs as a zero-shuffle broadcast
+    cell-grid; above it — or with ``plan='shuffle'`` — it falls back to
+    the reference's big-both-sides tiered shuffle join, which never
+    collects geometry to the driver.  The probe is one bounded
+    ``limit(broadcast_limit+1)`` collect whose rows, when they fit, also
+    build the grid — never a full count.
+    ``salt`` (int or ``"auto"``, as in :func:`distance_join`) spreads hot
+    (tier, cell) buckets on the shuffle plan; the broadcast plan has no
+    shuffle, so salt is a no-op there.  ``negative=True`` returns the
+    points inside NO polygon.
     """
-    if salt == "auto":
-        raise ValueError(
-            "salt='auto' is point-join-only (its census prices point cell "
-            "occupancy); pass an int factor for polygon joins"
-        )
-    how = _polygon_join_plan(polygons, plan, broadcast_limit)
-    if how == "shuffle":
-        pairs = _shuffle_polygon_join(
-            points, polygons, point_id, polygon_id, lon, lat, wkt,
-            radius=None, strategy=strategy, max_duplicates=max_duplicates,
-            salt=salt,
-        )
-    else:
-        pairs = _local_grid_polygon_join(
-            points, polygons, point_id, polygon_id, lon, lat, wkt, radius=None
-        )
-    if negative:
-        return (
-            points.select(F.col(point_id))
-            .distinct()
-            .join(pairs.select(point_id).distinct(), point_id, "left_anti")
-        )
-    return pairs
+    return _polygon_join(
+        points, polygons, point_id, polygon_id, lon, lat, wkt, None,
+        strategy, max_duplicates, negative, salt, plan, broadcast_limit,
+    )
 
 
 def polygon_distance_join(
@@ -675,42 +648,18 @@ def polygon_distance_join(
     plan: str = "auto",
     broadcast_limit: int = POLYGON_BROADCAST_LIMIT,
     negative: bool = False,
-    salt: int | None = None,
+    salt: int | str | None = None,
 ) -> DataFrame:
     """Point within `radius` of polygon → distinct pairs (GeomWithinDistance
     against extended geometries, the hail×tornado_tracks fixture shape).
-    Broadcast cell-grid plan up to ``broadcast_limit`` polygons, tiered
-    shuffle join beyond it — same plan selection as
-    :func:`point_in_polygon_join`.
-
-    ``negative=True`` returns the points with NO polygon within the
-    radius (JoinOptions negative-predicate semantics; one distinct +
-    left_anti over the positive pairs).  ``salt`` (int) spreads hot
-    (tier, cell) buckets on the shuffle plan; the broadcast plan has no
-    shuffle, so salt is a documented no-op there."""
-    if salt == "auto":
-        raise ValueError(
-            "salt='auto' is point-join-only (its census prices point cell "
-            "occupancy); pass an int factor for polygon distance joins"
-        )
-    how = _polygon_join_plan(polygons, plan, broadcast_limit)
-    if how == "shuffle":
-        pairs = _shuffle_polygon_join(
-            points, polygons, point_id, polygon_id, lon, lat, wkt,
-            radius=radius, strategy=strategy, max_duplicates=max_duplicates,
-            salt=salt,
-        )
-    else:
-        pairs = _local_grid_polygon_join(
-            points, polygons, point_id, polygon_id, lon, lat, wkt, radius=radius
-        )
-    if negative:
-        return (
-            points.select(F.col(point_id))
-            .distinct()
-            .join(pairs.select(point_id).distinct(), point_id, "left_anti")
-        )
-    return pairs
+    Same plan selection, ``negative`` and ``salt`` as
+    :func:`point_in_polygon_join`; ``negative=True`` returns the points
+    with NO polygon within the radius (JoinOptions negative-predicate
+    semantics)."""
+    return _polygon_join(
+        points, polygons, point_id, polygon_id, lon, lat, wkt, radius,
+        strategy, max_duplicates, negative, salt, plan, broadcast_limit,
+    )
 
 
 # The kind-aware grid/kernels make the "polygon" joins correct for ANY WKT

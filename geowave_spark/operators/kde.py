@@ -63,7 +63,9 @@ def kde(
 
     minx, miny, maxx, maxy = crs_extent(crs)
     px, py = forward_cols(crs, lon, lat)
-    base = points.select(
+    # a point with a null or NaN coordinate has no cell: binned, it would
+    # land in row or column 0, because greatest(0, null) is 0
+    base = points.dropna(subset=[lon, lat]).select(
         F.floor((px - F.lit(minx)) / F.lit(maxx - minx) * nx).cast("long").alias("_px"),
         F.floor((py - F.lit(miny)) / F.lit(maxy - miny) * ny).cast("long").alias("_py"),
         (F.col(weight) if weight else F.lit(1.0)).alias("_w0"),

@@ -34,10 +34,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..encode import explode_envelope_cells, point_cell_at_tier_udf
-from ..sfc.tiered import TieredStrategy
-
-DEFAULT_STRATEGY = TieredStrategy()
+from ..encode import DEFAULT_STRATEGY, point_cell_at_tier_udf
+from ..operators.join import _cell_join, _planar_build, _points
+from ..sfc.tiered import DEFAULT_MAX_DUPLICATES, TieredStrategy
 
 _PROP_TIER = "geowave.cell.tier"
 _PROP_RADIUS = "geowave.cell.max_radius"
@@ -149,6 +148,19 @@ def _table_props(spark: SparkSession, table: str) -> dict[str, str]:
     return {r["key"]: r["value"] for r in rows}
 
 
+def _bucketed_props(spark: SparkSession, table: str, strategy: TieredStrategy) -> dict[str, str]:
+    """Properties of a table written by :func:`write_bucketed_points`,
+    verified against the query's ``strategy``."""
+    props = _table_props(spark, table)
+    if _PROP_TIER not in props:
+        raise ValueError(
+            f"{table} was not written by write_bucketed_points "
+            f"(missing {_PROP_TIER} property)"
+        )
+    _check_strategy(props, table, strategy)
+    return props
+
+
 def bucketed_distance_join(
     spark: SparkSession,
     left_table: str,
@@ -160,7 +172,7 @@ def bucketed_distance_join(
     right_lon: str = "lon",
     right_lat: str = "lat",
     strategy: TieredStrategy = DEFAULT_STRATEGY,
-    max_duplicates: int = 4,
+    max_duplicates: int = DEFAULT_MAX_DUPLICATES,
 ) -> DataFrame:
     """Point×point within-distance join whose probe side is a bucketed
     table written by :func:`write_bucketed_points` — same output row set
@@ -169,13 +181,7 @@ def bucketed_distance_join(
     required distribution; only the exploded build side shuffles, into
     the table's bucket count).
     """
-    props = _table_props(spark, left_table)
-    if _PROP_TIER not in props:
-        raise ValueError(
-            f"{left_table} was not written by write_bucketed_points "
-            f"(missing {_PROP_TIER} property)"
-        )
-    _check_strategy(props, left_table, strategy)
+    props = _bucketed_props(spark, left_table, strategy)
     tier = strategy.tier_for_width(2.0 * radius, 2.0 * radius)
     stored = int(props[_PROP_TIER])
     if stored != tier:
@@ -188,39 +194,14 @@ def bucketed_distance_join(
     # the writer recorded which columns the cell was derived from —
     # using anything else here would silently pair ids against the
     # wrong coordinates (pre-r4 the names were hard-coded "lon"/"lat")
-    probe = spark.table(left_table).select(
-        F.col(left_id).alias("_lid"),
-        F.col(props.get(_PROP_LON, "lon")).alias("_llon"),
-        F.col(props.get(_PROP_LAT, "lat")).alias("_llat"),
-        "cell",
+    probe = _points(
+        spark.table(left_table), left_id,
+        props.get(_PROP_LON, "lon"), props.get(_PROP_LAT, "lat"), "l", "cell",
     )
-    build = explode_envelope_cells(
-        right.select(
-            F.col(right_id).alias("_rid"),
-            F.col(right_lon).alias("_rlon"),
-            F.col(right_lat).alias("_rlat"),
-        ),
-        F.col("_rlon") - radius,
-        F.col("_rlat") - radius,
-        F.col("_rlon") + radius,
-        F.col("_rlat") + radius,
-        keep=["_rid", "_rlon", "_rlat"],
-        strategy=strategy,
-        max_duplicates=max_duplicates,
-        tier=tier,
-    ).drop("tier")
-    r2 = radius * radius
-    dx = F.col("_llon") - F.col("_rlon")
-    dy = F.col("_llat") - F.col("_rlat")
-    # no shuffle_hash hint here: SHJ and SMJ both satisfy the bucketed
-    # side's distribution without an Exchange, but the hint would pick
-    # the build side by size estimate; let Spark plan it so the bucketed
-    # scan's outputPartitioning is preserved verbatim
-    return (
-        probe.join(build, "cell")
-        .where(dx * dx + dy * dy <= F.lit(r2))
-        .select(F.col("_lid").alias(left_id), F.col("_rid").alias(right_id))
+    build, within = _planar_build(
+        right, right_id, right_lon, right_lat, radius, strategy, max_duplicates, tier
     )
+    return _cell_join(probe, build, ["cell"], within, left_id, right_id)
 
 
 def count_exchanges(df: DataFrame) -> int:
@@ -255,13 +236,7 @@ def bucketed_bbox_scan(
 
     from ..sfc.hilbert import xy_to_hilbert
 
-    props = _table_props(spark, table)
-    if _PROP_TIER not in props:
-        raise ValueError(
-            f"{table} was not written by write_bucketed_points "
-            f"(missing {_PROP_TIER} property)"
-        )
-    _check_strategy(props, table, strategy)
+    props = _bucketed_props(spark, table, strategy)
     tier = int(props[_PROP_TIER])
     minx, miny, maxx, maxy = bbox
     df = spark.table(table)

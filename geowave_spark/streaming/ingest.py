@@ -190,64 +190,38 @@ def stream_pip_join(
     geometry table (any WKT kind), zero shuffle.
 
     The geometry side is collected once at plan time into the same
-    broadcast :class:`LocalGeomGrid` the batch PIP join uses
-    (operators/join.py:_local_grid_polygon_join) and the stream probes it
-    with one stateless ``mapInPandas`` per micro-batch — exactly the
-    plan Structured Streaming wants (no stream-side state, watermarks
+    broadcast :class:`LocalGeomGrid` the batch PIP join uses, by the same
+    loader and per-batch matcher (operators/join.py:_geom_grid,
+    _grid_probe): one stateless ``mapInPandas`` per micro-batch — exactly
+    the plan Structured Streaming wants (no stream-side state, watermarks
     and windowed aggs compose downstream).  ``keep`` columns pass
     through, so the output feeds windowed per-region rollups directly.
 
     The static side must fit the driver/broadcast — ``broadcast_limit``
-    is a hard guard (counted with a bounded ``limit(n+1)`` probe, never a
-    full count), mirroring the batch join's probe.  Unlike the batch
-    path there is no tiered-shuffle fallback here: a static side above
-    the limit raises with instructions (pre-filter the geometry table to
-    the stream's region of interest, or run the batch join on sink
-    output) rather than silently OOMing the driver at deploy time.
+    is a hard guard (one bounded ``limit(n+1)`` collect, never a full
+    count), the batch join's probe.  Unlike the batch path there is no
+    tiered-shuffle fallback here: a static side above the limit raises
+    with instructions (pre-filter the geometry table to the stream's
+    region of interest, or run the batch join on sink output) rather than
+    silently OOMing the driver at deploy time.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import StructField, StructType
+    from ..operators.join import _geom_grid, _grid_probe
 
-    from ..geom import LocalGeomGrid, parse_wkt_multi
-
-    spark = stream.sparkSession
-    if polygons.limit(broadcast_limit + 1).count() > broadcast_limit:
+    grid_bc = _geom_grid(polygons, polygon_id, wkt, 0.0, broadcast_limit)
+    if grid_bc is None:
         raise ValueError(
             f"stream_pip_join static side exceeds broadcast_limit="
             f"{broadcast_limit}; pre-filter the geometry table to the "
             "stream's region of interest or join on the batch path "
             "(operators.join) over the ingested sink output"
         )
-    rows = polygons.select(polygon_id, wkt).collect()
-    grid_bc = spark.sparkContext.broadcast(
-        LocalGeomGrid([r[0] for r in rows], [parse_wkt_multi(r[1]) for r in rows])
-    )
     # dict.fromkeys dedupes while preserving order — keep may itself
     # contain lon/lat and a duplicate column name would break the
     # pandas batches below
     src = stream.select(*dict.fromkeys([*keep, "lon", "lat"]))
-    out_schema = StructType(
-        [stream.schema[c] for c in keep]
-        + [StructField(polygon_id, polygons.schema[polygon_id].dataType)]
+    return _grid_probe(
+        src, grid_bc, "lon", "lat", {c: c for c in keep}, polygons.schema[polygon_id], None
     )
-
-    def _gen(batches):
-        g = grid_bc.value
-        for pdf in batches:
-            px = pdf["lon"].to_numpy(np.float64)
-            py = pdf["lat"].to_numpy(np.float64)
-            rowrep, codes = g.candidates(px, py)
-            m = (
-                g.intersects(px[rowrep], py[rowrep], codes)
-                if len(rowrep)
-                else np.zeros(0, dtype=bool)
-            )
-            out = {c: pdf[c].to_numpy()[rowrep[m]] for c in keep}
-            out[polygon_id] = g.ids[codes[m]]
-            yield pd.DataFrame(out)
-
-    return src.mapInPandas(_gen, out_schema)
 
 
 def windowed_region_counts(

@@ -304,6 +304,15 @@ class TestDeploy:
 
 
 class TestStreamPipJoin:
+    def test_static_side_over_broadcast_limit_raises(self, spark):
+        from geowave_spark.sources.fixtures import regions_pdf
+        from geowave_spark.streaming.ingest import stream_pip_join, synthetic_point_stream
+
+        regions = spark.createDataFrame(regions_pdf(30))
+        stream = synthetic_point_stream(spark, rows_per_second=10)
+        with pytest.raises(ValueError, match="exceeds broadcast_limit=10"):
+            stream_pip_join(stream, regions, broadcast_limit=10)
+
     def test_stream_static_pip_matches_batch(self, spark, tmp_path):
         """Stream-static PIP join over a memory-ish harness: run the rate
         stream briefly into a sink, then re-check every emitted (event,

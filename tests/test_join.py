@@ -184,12 +184,27 @@ class TestPolygonJoins:
             "region_id",
         )
         assert salted == base and len(base) > 20
-        import pytest as _pytest
 
-        with _pytest.raises(ValueError, match="auto"):
-            polygon_distance_join(
-                points, regions, r, "image_id", "region_id", salt="auto"
-            )
+    def test_polygon_distance_auto_salt_same_rows(self, spark, points, regions, monkeypatch):
+        """salt="auto" on the shuffle plan: the census groups by its
+        (tier, cell) keys and must not change the row set.  The census cap
+        is lowered so that hot keys really are split."""
+        import geowave_spark.operators.join as J
+
+        salt = J._apply_salt
+        monkeypatch.setattr(J, "_apply_salt", lambda b, p, keys, s, cap: salt(b, p, keys, s, 5))
+        r = 0.5
+        base = _pairs(
+            polygon_distance_join(points, regions, r, "image_id", "region_id", plan="shuffle"),
+            "image_id",
+            "region_id",
+        )
+        auto = polygon_distance_join(
+            points, regions, r, "image_id", "region_id", plan="shuffle", salt="auto"
+        )
+        assert _pairs(auto, "image_id", "region_id") == base and len(base) > 20
+        # hot keys were found, so the salted sides were repartitioned
+        assert "REPARTITION_BY_NUM" in auto._jdf.queryExecution().executedPlan().toString()
 
 
 class TestShufflePolygonJoin:
@@ -231,6 +246,19 @@ class TestShufflePolygonJoin:
         )
         assert got == want
         assert len(want) > 20
+
+    def test_auto_plan_one_job_below_limit(self, spark, points, regions):
+        """Below broadcast_limit the auto plan runs ONE bounded collect that
+        both picks the plan and feeds the grid: one Spark job while the
+        join is built."""
+        sc = spark.sparkContext
+        group = "pip_auto_plan_construction"
+        sc.setJobGroup(group, group)
+        try:
+            point_in_polygon_join(points, regions, "image_id", "region_id")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
 
     def test_auto_plan_picks_shuffle_above_limit(self, spark, points, regions):
         """auto must switch to the shuffle plan past broadcast_limit and

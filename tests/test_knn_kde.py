@@ -173,6 +173,18 @@ def test_kde_parity(spark, pts, pts_pdf):
     assert rows[top] == 1.0
 
 
+@pytest.mark.parametrize("crs", ["EPSG:4326", "EPSG:3857"])
+def test_kde_drops_null_and_nan_coordinates(spark, crs):
+    """A row with a null or NaN coordinate has no cell and adds no weight."""
+    valid = spark.createDataFrame([(10.0, 20.0)], "lon double, lat double")
+    bad = spark.createDataFrame([(10.0, None), (10.0, float("nan"))], "lon double, lat double")
+
+    def total(df):
+        return kde(df, 2, crs=crs).agg(F.sum("weight")).first()[0]
+
+    assert math.isclose(total(valid.unionByName(bad)), total(valid), rel_tol=1e-12)
+
+
 def test_kde_ext_crs_parity(spark, pts, pts_pdf):
     """KDE in an extension CRS (EPSG:3035 Europe LAEA via crs_conic):
     the binning must match a numpy twin that projects with transform_np
