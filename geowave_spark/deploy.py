@@ -6,8 +6,9 @@ process instead (the driver's verify harness, a notebook), executors still
 need the package on their PYTHONPATH to unpickle our pandas UDFs —
 ``ensure_py_files(spark)`` zips the package once and registers it with
 ``SparkContext.addPyFile``, the programmatic equivalent of --py-files.
-Every public operator entry point calls it; it is a no-op after the first
-call per session.
+``session.get_spark`` calls it on every session it returns, so operators
+need no call of their own; it is a no-op after the first call per
+SparkContext.
 
 Per-task worker cost: before every task a PySpark Python worker adds the
 shipped files to ``sys.path`` and calls ``importlib.invalidate_caches()``.
@@ -24,16 +25,18 @@ re-read.
 from __future__ import annotations
 
 import os
+import tempfile
 import zipfile
 
 _SHIPPED: set[int] = set()
 
 
 def build_zip(path: str | None = None) -> str:
-    """Zip the geowave_spark package (deterministic contents)."""
+    """Zip the geowave_spark package (deterministic contents), by default
+    into the process's temp directory (``TMPDIR``)."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    out = path or os.path.join("/tmp", "geowave_spark_pyfiles.zip")
-    tmp = out + ".tmp"
+    out = path or os.path.join(tempfile.gettempdir(), "geowave_spark_pyfiles.zip")
+    tmp = f"{out}.{os.getpid()}.tmp"
     with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
         for root, _dirs, files in os.walk(pkg_dir):
             if "__pycache__" in root:
@@ -49,14 +52,13 @@ def build_zip(path: str | None = None) -> str:
 
 
 def ensure_py_files(spark) -> None:
-    """Make the package importable on executors (idempotent per session)."""
+    """Make the package importable on executors (idempotent per
+    SparkContext).  A failure to build the zip propagates: without it every
+    pandas UDF that pickles a package function by reference dies on the
+    Python workers with ``ModuleNotFoundError``."""
     sc = spark.sparkContext
     key = id(sc)
     if key in _SHIPPED:
         return
-    try:
-        sc.addPyFile(build_zip())
-    except Exception:
-        # already added under the same name in this context — fine
-        pass
+    sc.addPyFile(build_zip())
     _SHIPPED.add(key)

@@ -10,9 +10,10 @@ surface (core/geotime/.../gwql/SpatialPredicates.java): after
     SELECT * FROM a JOIN b
     ON st_within_distance(st_point(a.lon, a.lat), b.wkt, 0.5)
 
-Geometry travels as WKT strings (this environment has no shapely/UDT);
-every predicate is an Arrow pandas UDF over the vectorized numpy kernels in
-``geowave_spark.geom``, with a per-executor parse cache.  GWQL's grammar is
+Geometry travels as WKT strings (no shapely/UDT); every function is an
+Arrow pandas UDF over the vectorized numpy kernels in ``geowave_spark.geom``
+and ``geowave_spark.relate``, registered in one loop that applies Spark's
+NULL-in, NULL-out rule.  GWQL's grammar is
 a strict subset of Spark SQL once these are registered (SURVEY.md §3.2), so
 there is no separate parser: Spark SQL *is* the SQL surface.
 
@@ -33,168 +34,55 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, DoubleType, StringType
 
 from ..geom import (
-    GeomBatch,
-    any_pair_dist2,
     as_components,
+    cell_rect_intersects_geom,
     flatten_parts,
     geom_is_closed,
-    geoms_pair_dist2,
-    parse_wkt_multi,
-    points_geoms_dist2_batch,
-    points_intersect_geoms_batch,
+    pairs_dist2,
+    parse_wkt_cached,
     polygon_envelope,
 )
-
-_PARSE_MULTI_CACHE: dict[str, tuple[str, list[np.ndarray]]] = {}
-_PREPARED_CACHE: dict[str, object] = {}
+from ..relate import RELATIONS, relation_batch
 
 
-def _prepared(w: str):
-    """WKT → PreparedGeom (exact DE-9IM machinery), per-executor cache."""
-    g = _PREPARED_CACHE.get(w)
-    if g is None:
-        from ..relate import prepare
+def _sql_udf(rtype, fn):
+    """Arrow pandas UDF over ``fn(*cols) -> values``, with Spark's NULL
+    rule applied once for every function: a row with a NULL argument
+    returns NULL and never reaches ``fn``."""
 
-        g = prepare(_parse_multi(w))
-        if len(_PREPARED_CACHE) < 200_000:
-            _PREPARED_CACHE[w] = g
-    return g
+    @F.pandas_udf(rtype)
+    def udf(*cols: pd.Series) -> pd.Series:
+        null = np.logical_or.reduce([c.isna().to_numpy() for c in cols])
+        if not null.any():
+            return pd.Series(fn(*cols))
+        out = pd.Series([None] * len(null), dtype=object)
+        if not null.all():
+            keep = ~null
+            out[keep] = list(fn(*(c[keep].reset_index(drop=True) for c in cols)))
+        return out
 
-
-def _parse_multi(w: str) -> tuple[str, list[np.ndarray]]:
-    g = _PARSE_MULTI_CACHE.get(w)
-    if g is None:
-        g = parse_wkt_multi(w)
-        if len(_PARSE_MULTI_CACHE) < 500_000:
-            _PARSE_MULTI_CACHE[w] = g
-    return g
-
-
-def _pairwise_dist2(a: pd.Series, b: pd.Series) -> np.ndarray:
-    """Squared distance between geometry pairs — kind-aware (POINT,
-    LINESTRING, POLYGON, MULTI\\*).  Open polylines use only their real
-    segments (no phantom closing edge, no containment — the round-2
-    line-distance fix); closed rings keep interior-distance-0."""
-    n = len(a)
-    out = np.empty(n, dtype=np.float64)
-    ga = [_parse_multi(w) for w in a]
-    gb = [_parse_multi(w) for w in b]
-    # vectorize the common point↔point case
-    pp = np.array([x[0] == "POINT" and y[0] == "POINT" for x, y in zip(ga, gb)], dtype=bool)
-    if pp.any():
-        ii = np.nonzero(pp)[0]
-        ax = np.array([ga[i][1][0][0, 0] for i in ii])
-        ay = np.array([ga[i][1][0][0, 1] for i in ii])
-        bx = np.array([gb[i][1][0][0, 0] for i in ii])
-        by = np.array([gb[i][1][0][0, 1] for i in ii])
-        out[ii] = (ax - bx) ** 2 + (ay - by) ** 2
-    mixed = np.nonzero(~pp)[0]
-    if len(mixed):
-        # point↔geometry (either order) batches through one GeomBatch;
-        # geometry↔geometry is exact pairwise (0 on intersection, else min
-        # vertex→edge either way — exact for piecewise-linear shapes)
-        pts_x, pts_y, rows, geoms = [], [], [], []
-        for i in mixed:
-            (ka, pa), (kb, pb) = ga[i], gb[i]
-            if ka == "GEOMETRYCOLLECTION" or kb == "GEOMETRYCOLLECTION":
-                # mixed collection: min over component pairs (JTS union)
-                out[i] = any_pair_dist2(ga[i], gb[i])
-            elif ka == "POINT" and kb != "POINT":
-                pts_x.append(pa[0][0, 0]); pts_y.append(pa[0][0, 1]); geoms.append(gb[i]); rows.append(i)
-            elif kb == "POINT":
-                pts_x.append(pb[0][0, 0]); pts_y.append(pb[0][0, 1]); geoms.append(ga[i]); rows.append(i)
-            else:
-                out[i] = geoms_pair_dist2(
-                    pa, geom_is_closed(ka), pb, geom_is_closed(kb)
-                )
-        if pts_x:
-            batch = GeomBatch(geoms)
-            d = points_geoms_dist2_batch(
-                np.array(pts_x), np.array(pts_y),
-                np.arange(len(geoms), dtype=np.int64), batch,
-            )
-            out[np.array(rows, dtype=np.int64)] = d
-    return out
-
-
-import re as _re
-
-_POINT_RE = _re.compile(r"^\s*POINT\s*\(\s*([-+0-9.eE]+)\s+([-+0-9.eE]+)\s*\)\s*$")
-
-
-def _point_coords(col: pd.Series) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(is_point mask, x, y) for a WKT column — one vectorized regex pass."""
-    ext = col.str.extract(_POINT_RE, expand=True)
-    ok = ext[0].notna().to_numpy()
-    x = pd.to_numeric(ext[0], errors="coerce").to_numpy(np.float64)
-    y = pd.to_numeric(ext[1], errors="coerce").to_numpy(np.float64)
-    return ok, x, y
-
-
-def _locate_vs(geoms: pd.Series, px: np.ndarray, py: np.ndarray, rows: np.ndarray) -> np.ndarray:
-    """locate() the given points against their row's geometry, batched per
-    DISTINCT geometry (the dominant SQL shape is one constant region vs a
-    point column, where this is a single vectorized call)."""
-    out = np.full(len(rows), 2, dtype=np.int8)
-    codes, uniq = pd.factorize(geoms.iloc[rows] if hasattr(geoms, "iloc") else pd.Series(geoms).iloc[rows])
-    for k, w in enumerate(uniq):
-        m = codes == k
-        out[m] = _prepared(w).locate(px[rows[m]], py[rows[m]])
-    return out
-
-
-def _relate_point_fast(a: pd.Series, b: pd.Series, point_side: str, want) -> pd.Series:
-    """Shared body for the point-side predicates: rows whose ``point_side``
-    column is a POINT evaluate via one vectorized ``locate`` batch per
-    distinct other-side geometry (loc ∈ {0 interior, 1 boundary, 2
-    exterior} decides contains/covers/touches exactly — see relate.py);
-    remaining rows take the full per-pair DE-9IM path."""
-    from ..relate import prepare  # noqa: F401  (slow path uses _prepared)
-
-    n = len(a)
-    pts, other = (b, a) if point_side == "b" else (a, b)
-    ok, px, py = _point_coords(pts)
-    out = np.zeros(n, dtype=bool)
-    rows = np.nonzero(ok)[0]
-    if len(rows):
-        loc = _locate_vs(other, px, py, rows)
-        out[rows] = want(loc)
-    slow = np.nonzero(~ok)[0]
-    return out, slow
-
-
-def _intersects_pair(a, b) -> bool:
-    """Kind-aware INTERSECTS on parsed-multi geometries."""
-    (ka, pa), (kb, pb) = a, b
-    if ka == "GEOMETRYCOLLECTION" or kb == "GEOMETRYCOLLECTION":
-        # mixed collection: any component pair intersects (JTS union)
-        return any(
-            _intersects_pair(x, y) for x in as_components(a) for y in as_components(b)
-        )
-    if ka == "POINT" and kb == "POINT":
-        return bool(np.all(pa[0][0] == pb[0][0]))
-    if ka == "POINT" or kb == "POINT":
-        (pt_parts, other) = (pa, b) if ka == "POINT" else (pb, a)
-        batch = GeomBatch([other])
-        return bool(
-            points_intersect_geoms_batch(
-                pt_parts[0][:1, 0], pt_parts[0][:1, 1], np.zeros(1, np.int64), batch
-            )[0]
-        )
-    # extended × extended: any vertex of one inside/on the other, else edge
-    # crossing between any part pair
-    ca, cb_ = geom_is_closed(ka), geom_is_closed(kb)
-    return geoms_pair_dist2(pa, ca, pb, cb_) == 0.0
+    return udf
 
 
 # WKT coordinate token (2D engine: numbers come in x y pairs)
 _WKT_NUM_RE = re.compile(r"[-+]?(?:\d+\.?\d*|\.\d+)(?:[eE][-+]?\d+)?")
 
 
-def _st_transform_batch(g: pd.Series, src: pd.Series, dst: pd.Series) -> pd.Series:
-    """Batch kernel for st_transform: group rows by (src, dst), tokenize
-    each WKT's coordinates textually, run ONE vectorized transform over
-    the group's concatenated coordinates, substitute tokens in place."""
+def _st_transform_batch(g: pd.Series, src: pd.Series, dst: pd.Series) -> list:
+    """st_transform: reproject WKT geometries between CRSes — the SQL face
+    of the engine's geotools-reprojection analog (the reference reprojects
+    feature/raster geometry into the index CRS on ingest, core/geotime
+    GeometryUtils crsTransform path; any CRS the :mod:`geowave_spark.crs`
+    dispatch accepts works here, including crs_conic registry codes and
+    +proj= strings).
+
+    Structure-preserving by construction: rows are grouped by (src, dst),
+    each WKT's coordinate tokens are located textually and substituted in
+    place, so ring grouping (holes, multipolygon shells) and nested
+    GEOMETRYCOLLECTION nesting survive exactly — no parse→flatten→
+    reserialize loss.  The arithmetic is ONE vectorized transform_np call
+    over all coordinates of a group per Arrow batch; only tokenization and
+    substitution are per-row."""
     from ..crs import transform_np
 
     gv = g.to_numpy(dtype=object)
@@ -203,8 +91,7 @@ def _st_transform_batch(g: pd.Series, src: pd.Series, dst: pd.Series) -> pd.Seri
     out: list = [None] * len(gv)
     groups: dict[tuple, list[int]] = {}
     for i in range(len(gv)):
-        if gv[i] is not None and sv[i] is not None and dv[i] is not None:
-            groups.setdefault((sv[i], dv[i]), []).append(i)
+        groups.setdefault((sv[i], dv[i]), []).append(i)
     for (s, d), idxs in groups.items():
         row_tok = []
         xs: list[float] = []
@@ -245,248 +132,96 @@ def _st_transform_batch(g: pd.Series, src: pd.Series, dst: pd.Series) -> pd.Seri
             pieces.append(w[last:])
             out[i] = "".join(pieces)
             pos += n
-    return pd.Series(out)
+    return out
+
+
+def _env_of(w: str):
+    c = np.vstack(flatten_parts(parse_wkt_cached(w)))
+    if len(c) == 1:
+        return c[0][0], c[0][1], c[0][0], c[0][1]
+    return polygon_envelope(c)
+
+
+def _envelope_wkt(w: str) -> str:
+    x0, y0, x1, y1 = _env_of(w)
+    return (
+        f"POLYGON (({x0:.17g} {y0:.17g}, {x1:.17g} {y0:.17g}, "
+        f"{x1:.17g} {y1:.17g}, {x0:.17g} {y1:.17g}, {x0:.17g} {y0:.17g}))"
+    )
+
+
+def _bbox_hit(w: str, x0: float, y0: float, x1: float, y1: float) -> bool:
+    """Exact geometry ∩ box; a collection intersects the box iff any
+    homogeneous component does (union semantics)."""
+    for kind, parts in as_components(parse_wkt_cached(w)):
+        if kind == "POINT":
+            c = parts[0]
+            hit = x0 <= c[0][0] <= x1 and y0 <= c[0][1] <= y1
+        else:
+            hit = cell_rect_intersects_geom(
+                np.array([x0]), np.array([y0]), np.array([x1]), np.array([y1]),
+                parts, geom_is_closed(kind),
+            )[0]
+        if hit:
+            return True
+    return False
+
+
+def _envelopes_meet(e, f) -> bool:
+    return not (e[2] < f[0] or e[0] > f[2] or e[3] < f[1] or e[1] > f[3])
+
+
+def _functions() -> dict:
+    """SQL name → (return type, ``fn(*cols) -> values``).
+
+    The exact predicates are thin callers of the two batch kernels:
+    :func:`~geowave_spark.geom.pairs_dist2` for distance, within-distance,
+    intersects (``== 0``) and disjoint, and
+    :func:`~geowave_spark.relate.relation_batch` for ``st_<name>`` of every
+    DE-9IM relation in :data:`~geowave_spark.relate.RELATIONS` — the same
+    two kernels :func:`~geowave_spark.operators.join.geom_pair_join` calls.
+
+    The GWQL predicate surface (SpatialPredicates.java, registered in
+    GWQLSpatialTemporalExtensions.java:36-47) adds BBOX (+LOOSE), the LOOSE
+    intersects and the envelope accessors; LOOSE is the envelope-only test
+    (the reference's index-constraint-only variants return a superset,
+    which is exactly the envelope semantics here)."""
+    fns = {
+        "st_distance": (DoubleType(), lambda a, b: np.sqrt(pairs_dist2(a, b))),
+        "st_within_distance": (
+            BooleanType(), lambda a, b, r: pairs_dist2(a, b) <= r.to_numpy(np.float64) ** 2,
+        ),
+        "st_intersects": (BooleanType(), lambda a, b: pairs_dist2(a, b) == 0),
+        "st_disjoint": (BooleanType(), lambda a, b: pairs_dist2(a, b) != 0),
+        **{
+            f"st_{name}": (BooleanType(), lambda a, b, name=name: relation_batch(name, a, b))
+            for name in RELATIONS
+        },
+        "st_point": (
+            StringType(),
+            lambda lon, lat: [f"POINT ({x:.17g} {y:.17g})" for x, y in zip(lon, lat)],
+        ),
+        "st_envelope": (StringType(), lambda g: [_envelope_wkt(w) for w in g]),
+        "st_bbox": (
+            BooleanType(),
+            lambda g, *box: [_bbox_hit(w, *map(float, b)) for w, *b in zip(g, *box)],
+        ),
+        "st_bbox_loose": (
+            BooleanType(),
+            lambda g, *box: [_envelopes_meet(_env_of(w), b) for w, *b in zip(g, *box)],
+        ),
+        "st_intersects_loose": (
+            BooleanType(),
+            lambda a, b: [_envelopes_meet(_env_of(x), _env_of(y)) for x, y in zip(a, b)],
+        ),
+        "st_transform": (StringType(), _st_transform_batch),
+    }
+    for k, name in enumerate(("st_xmin", "st_ymin", "st_xmax", "st_ymax")):
+        fns[name] = (DoubleType(), lambda g, k=k: [float(_env_of(w)[k]) for w in g])
+    return fns
 
 
 def register_all(spark: SparkSession) -> None:
     """Register every ST function with the session (idempotent)."""
-
-    @F.pandas_udf(DoubleType())
-    def st_distance(a: pd.Series, b: pd.Series) -> pd.Series:
-        return pd.Series(np.sqrt(_pairwise_dist2(a, b)))
-
-    @F.pandas_udf(BooleanType())
-    def st_within_distance(a: pd.Series, b: pd.Series, r: pd.Series) -> pd.Series:
-        return pd.Series(_pairwise_dist2(a, b) <= r.to_numpy(np.float64) ** 2)
-
-    @F.pandas_udf(BooleanType())
-    def st_intersects(a: pd.Series, b: pd.Series) -> pd.Series:
-        return pd.Series([_intersects_pair(_parse_multi(x), _parse_multi(y)) for x, y in zip(a, b)])
-
-    @F.pandas_udf(BooleanType())
-    def st_disjoint(a: pd.Series, b: pd.Series) -> pd.Series:
-        return pd.Series([not _intersects_pair(_parse_multi(x), _parse_multi(y)) for x, y in zip(a, b)])
-
-    @F.pandas_udf(BooleanType())
-    def st_contains(a: pd.Series, b: pd.Series) -> pd.Series:
-        """a CONTAINS b — exact JTS semantics (DE-9IM [T*****FF*]) for any
-        kind pair via :mod:`geowave_spark.relate` (r3: replaces the
-        vertex-sample approximation).  POINT rows on the contained side
-        take the vectorized locate() batch (contains(a, p) ⇔ p strictly
-        in a's interior — for every kind of a)."""
-        from ..relate import relate_contains
-
-        out, slow = _relate_point_fast(a, b, "b", lambda loc: loc == 0)
-        for i in slow:
-            out[i] = relate_contains(_prepared(a.iloc[i]), _prepared(b.iloc[i]))
-        return pd.Series(out)
-
-    @F.pandas_udf(BooleanType())
-    def st_within(a: pd.Series, b: pd.Series) -> pd.Series:
-        """a WITHIN b — mirror of contains."""
-        from ..relate import relate_contains
-
-        out, slow = _relate_point_fast(a, b, "a", lambda loc: loc == 0)
-        for i in slow:
-            out[i] = relate_contains(_prepared(b.iloc[i]), _prepared(a.iloc[i]))
-        return pd.Series(out)
-
-    @F.pandas_udf(BooleanType())
-    def st_covers(a: pd.Series, b: pd.Series) -> pd.Series:
-        """a COVERS b: no point of b in a's exterior (GeomCovers parity);
-        covers(a, p) ⇔ p not in a's exterior."""
-        from ..relate import relate_covers
-
-        out, slow = _relate_point_fast(a, b, "b", lambda loc: loc != 2)
-        for i in slow:
-            out[i] = relate_covers(_prepared(a.iloc[i]), _prepared(b.iloc[i]))
-        return pd.Series(out)
-
-    @F.pandas_udf(BooleanType())
-    def st_covered_by(a: pd.Series, b: pd.Series) -> pd.Series:
-        from ..relate import relate_covers
-
-        out, slow = _relate_point_fast(a, b, "a", lambda loc: loc != 2)
-        for i in slow:
-            out[i] = relate_covers(_prepared(b.iloc[i]), _prepared(a.iloc[i]))
-        return pd.Series(out)
-
-    @F.pandas_udf(BooleanType())
-    def st_equals(a: pd.Series, b: pd.Series) -> pd.Series:
-        """Topological equality (covers both ways — GeomEquals parity)."""
-        from ..relate import relate_equals
-
-        return pd.Series(
-            [relate_equals(_prepared(x), _prepared(y)) for x, y in zip(a, b)]
-        )
-
-    @F.pandas_udf(StringType())
-    def st_envelope(a: pd.Series) -> pd.Series:
-        out = []
-        for w in a:
-            # flatten_parts handles mixed GEOMETRYCOLLECTION, whose parts
-            # list holds (kind, parts) tuples rather than coord arrays
-            c = np.vstack(flatten_parts(_parse_multi(w)))
-            x0, y0, x1, y1 = polygon_envelope(c) if len(c) > 1 else (c[0][0], c[0][1], c[0][0], c[0][1])
-            out.append(
-                f"POLYGON (({x0:.17g} {y0:.17g}, {x1:.17g} {y0:.17g}, "
-                f"{x1:.17g} {y1:.17g}, {x0:.17g} {y1:.17g}, {x0:.17g} {y0:.17g}))"
-            )
-        return pd.Series(out)
-
-    for name, fn in [
-        ("st_distance", st_distance),
-        ("st_within_distance", st_within_distance),
-        ("st_intersects", st_intersects),
-        ("st_disjoint", st_disjoint),
-        ("st_contains", st_contains),
-        ("st_within", st_within),
-        ("st_covers", st_covers),
-        ("st_covered_by", st_covered_by),
-        ("st_equals", st_equals),
-        ("st_envelope", st_envelope),
-    ]:
-        spark.udf.register(name, fn)
-    @F.pandas_udf(StringType())
-    def st_point(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        return pd.Series(
-            [f"POINT ({x:.17g} {y:.17g})" for x, y in zip(lon, lat)]
-        )
-
-    spark.udf.register("st_point", st_point)
-
-    # ---- GWQL predicate surface (SpatialPredicates.java, reg
-    # GWQLSpatialTemporalExtensions.java:36-47): BBOX(+LOOSE), the LOOSE
-    # intersects, envelope accessors (BBOX aggregate support), and the
-    # remaining topological predicates.  LOOSE = envelope-only test (the
-    # reference's index-constraint-only variants return a superset, which
-    # is exactly the envelope semantics here).
-
-    def _env_of(w: str):
-        c = np.vstack(flatten_parts(_parse_multi(w)))
-        if len(c) == 1:
-            return c[0][0], c[0][1], c[0][0], c[0][1]
-        return polygon_envelope(c)
-
-    @F.pandas_udf(BooleanType())
-    def st_bbox(g: pd.Series, minx: pd.Series, miny: pd.Series, maxx: pd.Series, maxy: pd.Series) -> pd.Series:
-        from ..geom import cell_rect_intersects_geom
-
-        out = np.zeros(len(g), dtype=bool)
-        for i, w in enumerate(g):
-            x0, y0, x1, y1 = float(minx[i]), float(miny[i]), float(maxx[i]), float(maxy[i])
-            # union semantics: a collection intersects the box iff any
-            # homogeneous component does (as_components is a singleton
-            # for non-collections)
-            hit = False
-            for kind, parts in as_components(_parse_multi(w)):
-                if kind == "POINT":
-                    c = parts[0]
-                    hit = bool(x0 <= c[0][0] <= x1 and y0 <= c[0][1] <= y1)
-                else:
-                    hit = bool(
-                        cell_rect_intersects_geom(
-                            np.array([x0]), np.array([y0]), np.array([x1]), np.array([y1]),
-                            parts, geom_is_closed(kind),
-                        )[0]
-                    )
-                if hit:
-                    break
-            out[i] = hit
-        return pd.Series(out)
-
-    @F.pandas_udf(BooleanType())
-    def st_bbox_loose(g: pd.Series, minx: pd.Series, miny: pd.Series, maxx: pd.Series, maxy: pd.Series) -> pd.Series:
-        out = np.zeros(len(g), dtype=bool)
-        for i, w in enumerate(g):
-            ex0, ey0, ex1, ey1 = _env_of(w)
-            out[i] = not (
-                ex1 < float(minx[i]) or ex0 > float(maxx[i]) or ey1 < float(miny[i]) or ey0 > float(maxy[i])
-            )
-        return pd.Series(out)
-
-    @F.pandas_udf(BooleanType())
-    def st_intersects_loose(a: pd.Series, b: pd.Series) -> pd.Series:
-        out = np.zeros(len(a), dtype=bool)
-        for i, (x, y) in enumerate(zip(a, b)):
-            ax0, ay0, ax1, ay1 = _env_of(x)
-            bx0, by0, bx1, by1 = _env_of(y)
-            out[i] = not (ax1 < bx0 or ax0 > bx1 or ay1 < by0 or ay0 > by1)
-        return pd.Series(out)
-
-    def _env_acc(idx):
-        @F.pandas_udf(DoubleType())
-        def _acc(g: pd.Series) -> pd.Series:
-            return pd.Series([float(_env_of(w)[idx]) for w in g])
-
-        return _acc
-
-    @F.pandas_udf(BooleanType())
-    def st_overlaps(a: pd.Series, b: pd.Series) -> pd.Series:
-        """JTS OVERLAPS, exact for every same-dimension kind pair (r3:
-        DE-9IM via geowave_spark.relate — interiors intersect, each has
-        interior outside the other; line pairs additionally require a
-        1-D shared piece).  Mixed-dimension pairs are false (JTS rule)."""
-        from ..relate import relate_overlaps
-
-        return pd.Series(
-            [relate_overlaps(_prepared(x), _prepared(y)) for x, y in zip(a, b)]
-        )
-
-    @F.pandas_udf(BooleanType())
-    def st_touches(a: pd.Series, b: pd.Series) -> pd.Series:
-        """JTS TOUCHES, exact for every kind pair (r3): the geometries
-        intersect but their interiors do not.  A single-POINT side takes
-        the vectorized locate() batch (touches(p, g) ⇔ p on g's
-        boundary)."""
-        from ..relate import relate_touches
-
-        out, slow = _relate_point_fast(a, b, "b", lambda loc: loc == 1)
-        for i in slow:
-            # the a side may be the point instead (touches is symmetric)
-            out[i] = relate_touches(_prepared(a.iloc[i]), _prepared(b.iloc[i]))
-        return pd.Series(out)
-
-    @F.pandas_udf(BooleanType())
-    def st_crosses(a: pd.Series, b: pd.Series) -> pd.Series:
-        """JTS CROSSES, exact for every kind pair (r3): interiors share a
-        lower-dimensional piece — point-set × line/polygon, line × line at
-        isolated points, line × polygon through the interior."""
-        from ..relate import relate_crosses
-
-        return pd.Series(
-            [relate_crosses(_prepared(x), _prepared(y)) for x, y in zip(a, b)]
-        )
-
-    @F.pandas_udf(StringType())
-    def st_transform(g: pd.Series, src: pd.Series, dst: pd.Series) -> pd.Series:
-        """Reproject a WKT geometry column between CRSes — the SQL face
-        of the engine's geotools-reprojection analog (the reference
-        reprojects feature/raster geometry into the index CRS on ingest,
-        core/geotime GeometryUtils crsTransform path; any CRS the
-        :mod:`geowave_spark.crs` dispatch accepts works here, including
-        crs_conic registry codes and +proj= strings).
-
-        Structure-preserving by construction: coordinate tokens are
-        located textually and substituted in place, so ring grouping
-        (holes, multipolygon shells) and nested GEOMETRYCOLLECTION
-        nesting survive exactly — no parse→flatten→reserialize loss.
-        The arithmetic is ONE vectorized transform_np call over all
-        coordinates of all rows sharing a (src, dst) pair per Arrow
-        batch; only tokenization/substitution is per-row."""
-        return _st_transform_batch(g, src, dst)
-
-    for name, fn in [
-        ("st_bbox", st_bbox),
-        ("st_bbox_loose", st_bbox_loose),
-        ("st_intersects_loose", st_intersects_loose),
-        ("st_xmin", _env_acc(0)),
-        ("st_ymin", _env_acc(1)),
-        ("st_xmax", _env_acc(2)),
-        ("st_ymax", _env_acc(3)),
-        ("st_overlaps", st_overlaps),
-        ("st_touches", st_touches),
-        ("st_crosses", st_crosses),
-        ("st_transform", st_transform),
-    ]:
-        spark.udf.register(name, fn)
+    for name, (rtype, fn) in _functions().items():
+        spark.udf.register(name, _sql_udf(rtype, fn))

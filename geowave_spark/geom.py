@@ -490,6 +490,58 @@ def geoms_pair_dist2(
     return float(min(d1, d2))
 
 
+_PARSE_CACHE: dict[str, tuple[str, list]] = {}
+
+
+def parse_wkt_cached(w: str) -> tuple[str, list]:
+    """:func:`parse_wkt_multi` through a bounded per-process cache (a
+    Python worker keeps it across the Arrow batches of its tasks)."""
+    g = _PARSE_CACHE.get(w)
+    if g is None:
+        g = parse_wkt_multi(w)
+        if len(_PARSE_CACHE) < 500_000:
+            _PARSE_CACHE[w] = g
+    return g
+
+
+def pairs_dist2(a, b) -> np.ndarray:
+    """Squared distance of each WKT pair ``(a[i], b[i])``, any kinds; NaN
+    where either side is null (a null geometry is at no distance).
+
+    The one exact distance kernel behind the SQL distance predicates and
+    :func:`~geowave_spark.operators.join.geom_pair_join`: intersects is
+    ``== 0``, within-distance ``<= r²``.  POINT × POINT pairs are one
+    vectorized pass, POINT × geometry pairs (either order) one
+    :class:`GeomBatch` pass, and the remaining pairs go through
+    :func:`any_pair_dist2` (open polylines keep only their real segments;
+    closed rings keep interior distance 0)."""
+    a = np.asarray(a, dtype=object)
+    b = np.asarray(b, dtype=object)
+    out = np.full(len(a), np.nan, dtype=np.float64)
+    rows = [i for i in range(len(a)) if isinstance(a[i], str) and isinstance(b[i], str)]
+    ga = {i: parse_wkt_cached(a[i]) for i in rows}
+    gb = {i: parse_wkt_cached(b[i]) for i in rows}
+    pp, pts, geoms, prow = [], [], [], []
+    for i in rows:
+        if ga[i][0] == "POINT" and gb[i][0] == "POINT":
+            pp.append(i)
+        elif ga[i][0] == "POINT" or gb[i][0] == "POINT":
+            p, g = (ga[i], gb[i]) if ga[i][0] == "POINT" else (gb[i], ga[i])
+            pts.append(p[1][0][0]); geoms.append(g); prow.append(i)
+        else:
+            out[i] = any_pair_dist2(ga[i], gb[i])
+    if pp:
+        pa = np.array([ga[i][1][0][0] for i in pp])
+        pb = np.array([gb[i][1][0][0] for i in pp])
+        out[pp] = ((pa - pb) ** 2).sum(axis=1)
+    if prow:
+        xy = np.array(pts)
+        out[prow] = points_geoms_dist2_batch(
+            xy[:, 0], xy[:, 1], np.arange(len(geoms), dtype=np.int64), GeomBatch(geoms)
+        )
+    return out
+
+
 def cell_rect_intersects_geom(
     cminx: np.ndarray,
     cminy: np.ndarray,

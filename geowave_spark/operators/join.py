@@ -58,7 +58,9 @@ from ..encode import (
     point_cell_at_tier_udf,
     point_cell_udf,
 )
+from ..geom import pairs_dist2
 from ..geom import parse_wkt  # noqa: F401  (re-export for callers)
+from ..relate import RELATIONS, relation_batch
 from ..sfc import DEFAULT_MAX_DUPLICATES, JOIN_MAX_DUPLICATES, TieredStrategy
 
 # Above this many polygon rows the build side no longer collects/broadcasts;
@@ -562,7 +564,11 @@ def _polygon_join(
 
     At 1000 executors this is one shuffle of |polygons|·dup + |points|·|tiers|
     rows on a uniform key space (Hilbert cells), no single-node bottleneck.
+
+    A geometry row with a null WKT matches nothing, like a null equi-join
+    key, and is dropped before either plan.
     """
+    polygons = polygons.where(F.col(wkt).isNotNull())
     buffer = radius or 0.0
     pts = _points(points, point_id, lon, lat, "l")
     grid_bc = None
@@ -688,11 +694,12 @@ def geom_pair_join(
     within-distance — TieredSpatialJoin's general case
     (TieredSpatialJoin.java:76-551 accepts arbitrary JTS geometry pairs).
 
-    ``predicate`` swaps the fine filter for any exact DE-9IM relation
-    (touches / crosses / overlaps / contains / within / covers /
-    covered_by / equals — the SpatialJoinRunner GeomFunction parameter);
-    the coarse cell phase is unchanged because every one of these
-    relations implies envelope intersection.
+    ``predicate`` swaps the fine filter for any exact DE-9IM relation of
+    :data:`~geowave_spark.relate.RELATIONS` (touches / crosses / overlaps /
+    contains / within / covers / covered_by / equals — the
+    SpatialJoinRunner GeomFunction parameter) or ``"intersects"``; the
+    coarse cell phase is unchanged because every one of these relations
+    implies envelope intersection.
 
     Plan (the reference's tier-by-tier join, TieredSpatialJoin.java:76-551):
 
@@ -715,20 +722,24 @@ def geom_pair_join(
        predicate once per distinct pair.
 
     ``left_id`` / ``right_id`` must be unique keys of their inputs (the
-    dedupe keeps one geometry pair per id pair).
+    dedupe keeps one geometry pair per id pair).  Rows with a null WKT
+    match nothing and are dropped first.
 
     Scale: shuffle volume is |left|·dup·|right tiers| + |right|·dup·|left
     tiers| rows of (id, WKT) — bounded by the inputs, independent of
-    envelope area; nothing is collected to the driver; the exact
-    stage caches each parsed geometry per Arrow batch.
+    envelope area; nothing is collected to the driver; the exact stage
+    is one batch-kernel call per Arrow batch over per-process parse
+    caches.
     """
     if predicate is not None and radius is not None:
         raise ValueError(
             "predicate joins take no radius (use radius= for within-distance)"
         )
     probe, build = _pair_keyed_sides(
-        left.select(F.col(left_id).alias("_pid"), F.col(left_wkt).alias("_pwkt")),
-        right.select(F.col(right_id).alias("_gid"), F.col(right_wkt).alias("_gwkt")),
+        left.select(F.col(left_id).alias("_pid"), F.col(left_wkt).alias("_pwkt"))
+        .where(F.col("_pwkt").isNotNull()),
+        right.select(F.col(right_id).alias("_gid"), F.col(right_wkt).alias("_gwkt"))
+        .where(F.col("_gwkt").isNotNull()),
         radius or 0.0, strategy, max_duplicates,
     )
     return (
@@ -768,79 +779,29 @@ def _pair_keyed_sides(
 
 
 def _geom_pair_match_udf(radius: float | None, predicate: str | None = None):
-    """Pandas UDF: (wkt_a, wkt_b) → exact pair predicate for extended
-    geometries.  Factorizes both columns so each distinct geometry parses
-    once per batch; the pair evaluation itself is per-candidate (bounded by
-    the cell join's selectivity), each pair running the vectorized
-    vertex/edge kernels.
+    """Pandas UDF: (wkt_a, wkt_b) → exact pair predicate, one batch-kernel
+    call per Arrow batch.  ``predicate`` names a DE-9IM relation of
+    :data:`~geowave_spark.relate.RELATIONS` (the reference's
+    SpatialJoinRunner GeomFunction parameter) and runs
+    :func:`~geowave_spark.relate.relation_batch`; None or ``"intersects"``
+    is ``pairs_dist2 <= radius²`` (radius 0 when None) — the same two
+    kernels the ``st_*`` SQL functions call."""
+    if predicate in (None, "intersects"):
+        r2 = (radius or 0.0) ** 2
 
-    ``predicate`` selects the exact DE-9IM relation (the reference's
-    SpatialJoinRunner GeomFunction parameter, GeomFunction.java subtypes):
-    touches / crosses / overlaps / contains / within / covers /
-    covered_by / equals / intersects; None = distance semantics."""
-    r2 = 0.0 if radius is None else radius * radius
+        def match(wa, wb):
+            return pairs_dist2(wa, wb) <= r2
 
-    if predicate is not None and predicate != "intersects":
-        from ..relate import (
-            relate_contains,
-            relate_covers,
-            relate_crosses,
-            relate_equals,
-            relate_intersects,
-            relate_overlaps,
-            relate_touches,
-        )
+    elif predicate in RELATIONS:
 
-        fns = {
-            "touches": relate_touches,
-            "crosses": relate_crosses,
-            "overlaps": relate_overlaps,
-            "contains": relate_contains,
-            "within": lambda a, b: relate_contains(b, a),
-            "covers": relate_covers,
-            "covered_by": lambda a, b: relate_covers(b, a),
-            "equals": relate_equals,
-            "intersects": relate_intersects,
-        }
-        if predicate not in fns:
-            raise ValueError(f"unknown join predicate: {predicate}")
-        fn = fns[predicate]
+        def match(wa, wb):
+            return relation_batch(predicate, wa, wb)
 
-        @F.pandas_udf("boolean")
-        def _mr(wa: pd.Series, wb: pd.Series) -> pd.Series:
-            from ..geom import parse_wkt_multi
-            from ..relate import prepare
-
-            cache: dict[str, object] = {}
-
-            def p(w):
-                g = cache.get(w)
-                if g is None:
-                    g = prepare(parse_wkt_multi(w))
-                    cache[w] = g
-                return g
-
-            return pd.Series([bool(fn(p(x), p(y))) for x, y in zip(wa, wb)])
-
-        return _mr
+    else:
+        raise ValueError(f"unknown join predicate: {predicate}")
 
     @F.pandas_udf("boolean")
     def _m(wa: pd.Series, wb: pd.Series) -> pd.Series:
-        from ..geom import any_pair_dist2, parse_wkt_multi
-
-        cache: dict[str, tuple[str, list[np.ndarray]]] = {}
-
-        def p(w):
-            g = cache.get(w)
-            if g is None:
-                g = parse_wkt_multi(w)
-                cache[w] = g
-            return g
-
-        out = np.zeros(len(wa), dtype=bool)
-        for i, (x, y) in enumerate(zip(wa, wb)):
-            d2 = any_pair_dist2(p(x), p(y))
-            out[i] = d2 <= r2
-        return pd.Series(out)
+        return pd.Series(match(wa, wb))
 
     return _m

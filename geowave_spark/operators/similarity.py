@@ -389,9 +389,6 @@ def cosine_neardup_pairs(
     :func:`dedup.banded_pairs` pairs rows sharing one (only ids and band
     keys in its exchange), and the vectors are joined back by id for the
     exact cosine."""
-    dim = len(corpus.select(vec).first()[0])
-    rng = np.random.default_rng(seed)
-    bc = corpus.sparkSession.sparkContext.broadcast(rng.standard_normal((num_planes, dim)))
     per_band = num_planes // bands
     # band b's bits, most significant first, packed into one long
     w = np.uint64(1) << np.arange(per_band - 1, -1, -1, dtype=np.uint64)
@@ -399,7 +396,10 @@ def cosine_neardup_pairs(
     @F.pandas_udf(ArrayType(LongType()))
     def _bandsig(v: pd.Series) -> pd.Series:
         X = np.array(v.tolist(), dtype=np.float64)
-        bits = (X @ bc.value.T > 0)[:, : bands * per_band].reshape(len(X), bands, per_band)
+        # the same seeded draw in every batch: the planes need no driver
+        # job to learn the vector length and no broadcast
+        planes = np.random.default_rng(seed).standard_normal((num_planes, X.shape[1]))
+        bits = (X @ planes.T > 0)[:, : bands * per_band].reshape(len(X), bands, per_band)
         return pd.Series(list((bits.astype(np.uint64) * w).sum(axis=2).astype(np.int64)))
 
     sig = corpus.select(F.col(corpus_id).alias("_id"), _bandsig(F.col(vec)).alias("_sig"))

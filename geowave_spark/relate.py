@@ -53,8 +53,9 @@ interior or boundary falls in a's exterior.
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 
-from .geom import GeomBatch, geom_is_closed, points_contained_batch
+from .geom import GeomBatch, geom_is_closed, parse_wkt_cached, points_contained_batch
 
 _DIM = {
     "POINT": 0,
@@ -470,9 +471,10 @@ def relate(a: PreparedGeom, b: PreparedGeom) -> tuple[np.ndarray, int]:
 
 
 # --- predicate layer -------------------------------------------------------
-# Callers that evaluate many pairs should cache PreparedGeom per WKT (the
-# registry does); these wrappers accept either PreparedGeom or a parsed
-# (kind, parts) tuple.
+# The relate_* wrappers take one pair, as PreparedGeom or a parsed (kind,
+# parts) tuple.  Many pairs go through relation_batch over RELATIONS, the
+# one table behind the st_* SQL relations and geom_pair_join(predicate=…);
+# it caches PreparedGeom per WKT.
 
 
 def prepare(parsed) -> PreparedGeom:
@@ -549,3 +551,62 @@ def relate_equals(a, b) -> bool:
         and not M[E][I]
         and not M[E][B]
     )
+
+
+# name → (predicate on prepared geometries, the side that may be a POINT,
+# the locate() rule that decides the relation for such a POINT against the
+# other side).  contains(g, p) ⇔ p in g's interior, covers(g, p) ⇔ p not in
+# g's exterior, touches(g, p) ⇔ p on g's boundary, for every kind of g.
+RELATIONS = {
+    "contains": (relate_contains, "b", lambda loc: loc == I),
+    "within": (lambda a, b: relate_contains(b, a), "a", lambda loc: loc == I),
+    "covers": (relate_covers, "b", lambda loc: loc != E),
+    "covered_by": (lambda a, b: relate_covers(b, a), "a", lambda loc: loc != E),
+    "touches": (relate_touches, "b", lambda loc: loc == B),
+    "crosses": (relate_crosses, None, None),
+    "overlaps": (relate_overlaps, None, None),
+    "equals": (relate_equals, None, None),
+}
+
+_PREPARED_CACHE: dict[str, PreparedGeom] = {}
+_POINT_RE = r"^\s*POINT\s*\(\s*([-+0-9.eE]+)\s+([-+0-9.eE]+)\s*\)\s*$"
+
+
+def _prepared(w: str) -> PreparedGeom:
+    """WKT → PreparedGeom through a bounded per-process cache."""
+    g = _PREPARED_CACHE.get(w)
+    if g is None:
+        g = prepare(parse_wkt_cached(w))
+        if len(_PREPARED_CACHE) < 200_000:
+            _PREPARED_CACHE[w] = g
+    return g
+
+
+def relation_batch(name: str, a, b) -> np.ndarray:
+    """``RELATIONS[name]`` over each WKT pair ``(a[i], b[i])``; False where
+    either side is null (a null geometry is in no relation).
+
+    Rows whose point side is a POINT take one vectorized ``locate`` per
+    distinct other-side geometry (the dominant SQL shape, one constant
+    region against a point column, is a single call); the other rows run
+    the full DE-9IM relate."""
+    fn, side, rule = RELATIONS[name]
+    a = pd.Series(np.asarray(a, dtype=object))
+    b = pd.Series(np.asarray(b, dtype=object))
+    out = np.zeros(len(a), dtype=bool)
+    todo = a.notna() & b.notna()
+    if side is not None:
+        pts, other = (b, a) if side == "b" else (a, b)
+        xy = pts.astype(str).str.extract(_POINT_RE).apply(pd.to_numeric, errors="coerce")
+        fast = todo & xy.notna().all(axis=1)
+        codes, uniq = pd.factorize(other[fast])
+        px, py = xy[0][fast].to_numpy(np.float64), xy[1][fast].to_numpy(np.float64)
+        hit = np.zeros(len(codes), dtype=bool)
+        for k, w in enumerate(uniq):
+            m = codes == k
+            hit[m] = rule(_prepared(w).locate(px[m], py[m]))
+        out[fast.to_numpy()] = hit
+        todo &= ~fast
+    for i in np.nonzero(todo.to_numpy())[0]:
+        out[i] = fn(_prepared(a[i]), _prepared(b[i]))
+    return out

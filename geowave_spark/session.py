@@ -6,6 +6,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from .deploy import ensure_py_files
+
 
 def get_spark(
     app: str = "geowave_spark",
@@ -17,7 +19,10 @@ def get_spark(
     These mirror what a production deployment would set cluster-wide:
     adaptive execution (runtime shuffle coalescing + skew-join splitting —
     our analog of the reference's histogram-balanced SplitsProvider),
-    Arrow-batched Python exchange for every pandas UDF.
+    Arrow-batched Python exchange for every pandas UDF.  The package is
+    shipped to the executors (:func:`~geowave_spark.deploy.ensure_py_files`),
+    so UDFs unpickle on Python workers whatever the driver's working
+    directory.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
@@ -73,4 +78,6 @@ def get_spark(
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    ensure_py_files(spark)
+    return spark

@@ -16,9 +16,9 @@ arguments silently defeated):
 1. parse the SQL with Spark's own parser
    (``sessionState().sqlParser().parsePlan``) and walk the unresolved
    logical plan: exactly two relation references, exactly one supported
-   spatial predicate — ``st_within_distance(a.g, b.g, r)`` or any
-   DE-9IM relation (``st_contains/st_within/st_intersects/st_touches/
-   st_crosses/st_overlaps/st_covers/st_covered_by/st_equals``) — sitting in a
+   spatial predicate — ``st_within_distance(a.g, b.g, r)``,
+   ``st_intersects`` or ``st_<name>`` for any DE-9IM relation of
+   :data:`~geowave_spark.relate.RELATIONS` — sitting in a
    Filter/Join condition reachable from the condition root only through
    ``And`` (the reference's exactly-one-top-level-conjunct rule,
    SqlQueryRunner.java:164-245);
@@ -45,22 +45,12 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_SPATIAL_FNS = {
-    "st_within_distance",
-    "st_intersects",
-    "st_contains",
-    "st_within",
-    # r3: the whole DE-9IM family — every one of these relations implies
-    # the pair intersects, so the intersects-superset prune below is a
-    # valid participant filter and the re-run re-evaluates the exact
-    # predicate over the pruned views
-    "st_touches",
-    "st_crosses",
-    "st_overlaps",
-    "st_covers",
-    "st_covered_by",
-    "st_equals",
-}
+from .relate import RELATIONS
+
+# every DE-9IM relation implies the pair intersects, so the
+# intersects-superset prune below is a valid participant filter for each,
+# and the re-run re-evaluates the exact predicate over the pruned views
+_SPATIAL_FNS = {"st_within_distance", "st_intersects"} | {f"st_{n}" for n in RELATIONS}
 
 
 def _geom_kind(df: DataFrame, col: str) -> str:

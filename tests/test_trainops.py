@@ -319,6 +319,24 @@ class TestSimilarity:
         for cols in outs:
             assert sorted(t for _, t in cols) == ["array<bigint>", "bigint", "bigint", "int"], cols
 
+    def test_cosine_neardup_empty_corpus(self, spark):
+        empty = spark.createDataFrame([], "vec_id bigint, embedding array<double>")
+        out = cosine_neardup_pairs(empty)
+        assert out.columns == ["id_a", "id_b", "sim"]
+        assert out.collect() == []
+
+    def test_cosine_neardup_builds_without_jobs(self, spark, emb):
+        """The hyperplanes are drawn in the workers from the batch's vector
+        length, so building the frame runs no Spark job."""
+        sc = spark.sparkContext
+        group = "cosine_neardup_construction"
+        sc.setJobGroup(group, group)
+        try:
+            cosine_neardup_pairs(emb, threshold=0.9)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+
 
 class TestText:
     def test_token_count_and_quality(self, spark, docs, docs_pdf):
