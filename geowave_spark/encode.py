@@ -160,6 +160,15 @@ def with_spatiotemporal_cells(
     )
 
 
+def _envelopes(geoms: list) -> np.ndarray:
+    """(n, 4) minx, miny, maxx, maxy of non-EMPTY parsed geometries."""
+    env = np.empty((len(geoms), 4), dtype=np.float64)
+    for i, g in enumerate(geoms):
+        c = np.vstack(flatten_parts(g))
+        env[i] = (c[:, 0].min(), c[:, 1].min(), c[:, 0].max(), c[:, 1].max())
+    return env
+
+
 def distinct_polygon_tiers(
     df: DataFrame,
     wkt_col: str,
@@ -176,25 +185,18 @@ def distinct_polygon_tiers(
 
     @F.pandas_udf(ArrayType(IntegerType()))
     def _tiers(wkt: pd.Series) -> pd.Series:
-        coords = [np.vstack(flatten_parts(parse_wkt_multi(w))) for w in wkt]
-        env = np.array(
-            [
-                (c[:, 0].min(), c[:, 1].min(), c[:, 0].max(), c[:, 1].max())
-                for c in coords
-            ],
-            dtype=np.float64,
-        ).reshape(len(coords), 4)
-        t = strategy.envelope_tiers(
-            env[:, 0] - buffer,
-            env[:, 1] - buffer,
-            env[:, 2] + buffer,
-            env[:, 3] + buffer,
-            max_duplicates=max_duplicates,
-        )
-        u = np.unique(t).astype(np.int32).tolist()
+        geoms = [g for g in map(parse_wkt_multi, wkt) if flatten_parts(g)]  # EMPTY: no tier
         out: list[list[int]] = [[] for _ in range(len(wkt))]
-        if out:
-            out[0] = u
+        if geoms:
+            env = _envelopes(geoms)
+            t = strategy.envelope_tiers(
+                env[:, 0] - buffer,
+                env[:, 1] - buffer,
+                env[:, 2] + buffer,
+                env[:, 3] + buffer,
+                max_duplicates=max_duplicates,
+            )
+            out[0] = np.unique(t).astype(np.int32).tolist()
         return pd.Series(out)
 
     return df.select(F.explode(_tiers(F.col(wkt_col))).alias("tier")).distinct()
@@ -294,10 +296,10 @@ def polygon_cells_np(
         geoms = [("POLYGON", [p]) for p in polys]
     else:
         geoms = [parse_wkt_multi(w) for w in wkts]
-    env = np.empty((n, 4), dtype=np.float64)
-    for i, g in enumerate(geoms):
-        c = np.vstack(flatten_parts(g))
-        env[i] = (c[:, 0].min(), c[:, 1].min(), c[:, 0].max(), c[:, 1].max())
+    full = [i for i, g in enumerate(geoms) if flatten_parts(g)]  # EMPTY: no cells
+    if not full:
+        return (np.empty(0, dtype=np.int64),) * 3
+    env = _envelopes([geoms[i] for i in full])
     row, tier, cell = strategy.envelope_insertion_ids(
         env[:, 0] - buffer,
         env[:, 1] - buffer,
@@ -305,6 +307,7 @@ def polygon_cells_np(
         env[:, 3] + buffer,
         max_duplicates=max_duplicates,
     )
+    row = np.asarray(full, dtype=np.int64)[row]
     keep_mask = np.ones(len(row), dtype=bool)
     if trim and len(row):
         counts = np.bincount(row, minlength=n)

@@ -506,7 +506,8 @@ def parse_wkt_cached(w: str) -> tuple[str, list]:
 
 def pairs_dist2(a, b) -> np.ndarray:
     """Squared distance of each WKT pair ``(a[i], b[i])``, any kinds; NaN
-    where either side is null (a null geometry is at no distance).
+    where either side is null (a null geometry is at no distance) and inf
+    where either side is EMPTY (an empty point set meets nothing).
 
     The one exact distance kernel behind the SQL distance predicates and
     :func:`~geowave_spark.operators.join.geom_pair_join`: intersects is
@@ -523,7 +524,9 @@ def pairs_dist2(a, b) -> np.ndarray:
     gb = {i: parse_wkt_cached(b[i]) for i in rows}
     pp, pts, geoms, prow = [], [], [], []
     for i in rows:
-        if ga[i][0] == "POINT" and gb[i][0] == "POINT":
+        if not ga[i][1] or not gb[i][1]:
+            out[i] = np.inf
+        elif ga[i][0] == "POINT" and gb[i][0] == "POINT":
             pp.append(i)
         elif ga[i][0] == "POINT" or gb[i][0] == "POINT":
             p, g = (ga[i], gb[i]) if ga[i][0] == "POINT" else (gb[i], ga[i])

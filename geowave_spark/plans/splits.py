@@ -40,6 +40,13 @@ def update_histogram_statistics(
     (part_key, field, lo, hi, bin, n) rows, mergeable by summation
     (RowRangeHistogramStatistics analog; ``field`` is typically the SFC
     cell column, but any numeric works)."""
+    histogram_partials(df, part_col, field, lo, hi, nbins).write.mode("append").parquet(f"{path}/hist")
+
+
+def histogram_partials(
+    df: DataFrame, part_col: str, field: str, lo: float, hi: float, nbins: int = 1024
+) -> DataFrame:
+    """The rows :func:`update_histogram_statistics` appends."""
     if not hi > lo:
         raise ValueError("hi must exceed lo")
     c = F.col(field).cast("double")
@@ -50,7 +57,7 @@ def update_histogram_statistics(
             F.floor((c - F.lit(lo)) / F.lit(hi - lo) * nbins).cast("int"),
         ),
     )
-    (
+    return (
         df.where(c.isNotNull())
         .groupBy(
             F.col(part_col).cast("string").alias("part_key"),
@@ -66,8 +73,6 @@ def update_histogram_statistics(
             "bin",
             "n",
         )
-        .write.mode("append")
-        .parquet(f"{path}/hist")
     )
 
 

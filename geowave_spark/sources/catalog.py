@@ -11,31 +11,54 @@ directory-partition append).
 
 Layout for a logical table at ``path``:
   {path}/data/part_key=<v>/...parquet     — the rows, partitioned
-  {path}/lineage/...parquet               — (part_key, n_rows, fingerprint)
-                                            one row per completed partition
   {path}/metrics/...parquet               — (part_key, n_rows, minx/maxx/
                                             miny/maxy) per partition
+  {path}/stats, {path}/hist               — with ``stats_fields`` /
+                                            ``histogram_field``: the
+                                            statistics store's partials
+  {path}/lineage/...parquet               — (part_key, n_rows, fingerprint)
+                                            one row per completed partition
+
+Every side table is a projection of one per-partition summary — one JVM
+aggregate (row count, fingerprint, envelope, every stats field's
+partials) plus the one Bloom aggregate — computed once, the analog of
+the reference's statistics-on-write.  All of it is resolved
+before the first write, so a bad column raises with nothing written.
 
 ``checkpointed_write`` is idempotent per partition: partitions already
 recorded in lineage are skipped (resume after a crash recomputes nothing
-that finished).  The fingerprint (xxhash64-sum of the partition's rows)
+that finished).  Lineage is written last, as the commit marker: a
+partition counts as done only once its data and every other side table
+are written.  The fingerprint (xxhash64-sum of the partition's rows)
 lets an auditor verify a resumed table matches a from-scratch one.
 """
 
 from __future__ import annotations
 
-import os
-
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.splits import histogram_partials
+from .statistics import partials_summary, per_field_rows
+
 
 def _existing_partitions(spark: SparkSession, path: str) -> set:
+    """Partitions recorded in lineage; a missing or empty lineage table
+    means nothing is written yet, and any other read failure raises."""
     lineage = f"{path}/lineage"
     try:
         return {r["part_key"] for r in spark.read.parquet(lineage).select("part_key").distinct().collect()}
-    except Exception:
-        return set()
+    except Exception as e:
+        condition = e.getCondition() if isinstance(e, AnalysisException) else None
+        if condition in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            return set()
+        raise RuntimeError(f"cannot read the lineage table {lineage}") from e
+
+
+def _fingerprint(columns: list[str]):
+    """Order-free fingerprint of a partition's rows over ``columns``."""
+    return F.sum(F.pmod(F.xxhash64(*columns), F.lit(2147483647))).alias("fingerprint")
 
 
 def checkpointed_write(
@@ -65,37 +88,34 @@ def checkpointed_write(
     todo_df = df.withColumn("part_key", F.col(part_col).cast("string"))
     if done:
         todo_df = todo_df.where(~F.col("part_key").isin(list(done)))
-    todo_df = todo_df.persist()
-
-    parts = [r["part_key"] for r in todo_df.select("part_key").distinct().collect()]
+    fields = list(stats_fields or [])
+    extra, envelope = [_fingerprint(df.columns)], []
+    if lon and lon in df.columns:
+        envelope = ["minx", "maxx", "miny", "maxy"]
+        extra += [F.min(lon).alias("minx"), F.max(lon).alias("maxx")]
+        extra += [F.min(lat).alias("miny"), F.max(lat).alias("maxy")]
+    # every aggregate is resolved here, so a bad column raises before
+    # anything is written; the persisted frame serves them at execution
+    summary = partials_summary(todo_df, "part_key", fields, extra=extra)
+    hist = histogram_partials(todo_df, "part_key", *histogram_field) if histogram_field else None
+    todo_df.persist()
+    # computed once (a local checkpoint, unlike a cached plan, lets the
+    # adaptive planner coalesce its final stage); every table reads it
+    summary = summary.localCheckpoint()
+    parts = sorted(r["part_key"] for r in summary.select("part_key").collect())
     if parts:
         todo_df.write.mode("append").partitionBy("part_key").parquet(f"{path}/data")
-        aggs = [
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.pmod(F.xxhash64(*[c for c in df.columns]), F.lit(2147483647))).alias("fingerprint"),
-        ]
-        lineage = todo_df.groupBy("part_key").agg(*aggs)
-        lineage.write.mode("append").parquet(f"{path}/lineage")
-        m_aggs = [F.count(F.lit(1)).alias("n_rows")]
-        if lon and lon in df.columns:
-            m_aggs += [
-                F.min(lon).alias("minx"),
-                F.max(lon).alias("maxx"),
-                F.min(lat).alias("miny"),
-                F.max(lat).alias("maxy"),
-            ]
-        todo_df.groupBy("part_key").agg(*m_aggs).write.mode("append").parquet(f"{path}/metrics")
-        if stats_fields:
-            from .statistics import update_statistics
-
-            update_statistics(todo_df, path, "part_key", stats_fields)
-        if histogram_field:
-            from ..plans.splits import update_histogram_statistics
-
-            col, lo, hi = histogram_field
-            update_histogram_statistics(todo_df, path, "part_key", col, lo, hi)
+        side = summary.coalesce(1)  # one file per side table
+        if fields:
+            side.select("part_key", per_field_rows(fields)).write.mode("append").parquet(f"{path}/stats")
+        if hist is not None:
+            hist.write.mode("append").parquet(f"{path}/hist")
+        n_rows = F.col("n").alias("n_rows")
+        side.select("part_key", n_rows, *envelope).write.mode("append").parquet(f"{path}/metrics")
+        # lineage last: a partition counts as written once it is listed here
+        side.select("part_key", n_rows, "fingerprint").write.mode("append").parquet(f"{path}/lineage")
     todo_df.unpersist()
-    return {"written": sorted(parts), "skipped": sorted(done)}
+    return {"written": parts, "skipped": sorted(done)}
 
 
 def read_indexed(spark: SparkSession, path: str) -> DataFrame:
@@ -112,18 +132,6 @@ def read_lineage(spark: SparkSession, path: str) -> DataFrame:
 
 def verify_lineage(spark: SparkSession, path: str, df: DataFrame, part_col: str) -> bool:
     """Recompute partition fingerprints from df and compare to lineage."""
-    want = {
-        r["part_key"]: (r["n_rows"], r["fingerprint"])
-        for r in df.withColumn("part_key", F.col(part_col).cast("string"))
-        .groupBy("part_key")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.pmod(F.xxhash64(*[c for c in df.columns]), F.lit(2147483647))).alias("fingerprint"),
-        )
-        .collect()
-    }
-    got = {
-        r["part_key"]: (r["n_rows"], r["fingerprint"])
-        for r in read_lineage(spark, path).collect()
-    }
-    return got == want
+    base = df.withColumn("part_key", F.col(part_col).cast("string"))
+    want = partials_summary(base, "part_key", [], extra=[_fingerprint(df.columns)])
+    return {tuple(r) for r in want.collect()} == {tuple(r) for r in read_lineage(spark, path).collect()}

@@ -14,7 +14,9 @@ analog:
   partials: count/nulls/min/max/sum/M2 (parallel-variance form), an HLL
   sketch (``hll_sketch_agg``, Datasketches binary — union-mergeable), and
   a Bloom filter bitset (fixed m/k, OR-mergeable).  One JVM aggregate
-  and one Bloom aggregate cover all fields of a batch.
+  and one Bloom aggregate cover all fields of a batch
+  (``partials_summary``, the one partials builder, which also serves
+  ``update_binned_statistics`` and ``checkpointed_write``'s summary).
 - ``merged_statistics`` folds the partials across partitions (Chan
   parallel-variance merge; ``hll_union_agg`` for NDV; OR for Bloom) —
   O(partitions) driver work, no data scan.
@@ -24,9 +26,9 @@ analog:
   definitive, True is probabilistic (classic Bloom contract).
 
 Incremental semantics: call ``update_statistics`` per ingest batch with
-the partitions that batch wrote (checkpointed_write does this when given
-``stats_fields``); partials append and merge at read time, so a resumed
-ingest never recomputes finished partitions' stats.
+the partitions that batch wrote (checkpointed_write writes the same rows
+when given ``stats_fields``); partials append and merge at read time, so
+a resumed ingest never recomputes finished partitions' stats.
 """
 
 from __future__ import annotations
@@ -42,6 +44,8 @@ _HK1 = "0123456789123456"
 _HK2 = "6543210987654321"
 # per-field partial columns of the stats table, after part_key, field, n
 _PARTIALS = ("nulls", "min", "max", "sum", "mean", "m2", "n_numeric", "hll", "bloom")
+# the per-(bin, field) partial columns of the binned stats table
+_BINNED_PARTIALS = ("nulls", "min", "max", "sum", "hll")
 
 
 def _bloom_indices(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -62,28 +66,22 @@ def _bloom_bits(values: np.ndarray) -> bytes:
     return bits.tobytes()
 
 
-def update_statistics(
-    df: DataFrame,
-    path: str,
-    part_col: str,
-    fields: list[str],
-) -> None:
-    """Append per-(partition, field) mergeable stat partials for this batch."""
-    if not fields:
-        return
+def partials_summary(
+    df: DataFrame, key: str, fields: list[str], extra: tuple = (), bloom: bool = True
+) -> DataFrame:
+    """One row per ``key`` value: ``n`` (its rows), the ``extra``
+    aggregates, and every mergeable partial ``name`` of ``fields[i]`` as
+    column ``{name}{i}`` (``name`` in :data:`_PARTIALS`; Catalyst drops
+    the ones a projection does not read).
 
-    @F.pandas_udf("binary")
-    def _bloom(vals: pd.Series) -> bytes:
-        return _bloom_bits(vals.dropna().astype(str).to_numpy(dtype=object))
-
-    base = df.withColumn("part_key", F.col(part_col).cast("string"))
+    One JVM aggregate covers every field and the ``extra`` columns.  A
+    grouped-agg pandas UDF cannot share an agg() with JVM aggregates, so
+    the Bloom partials come from one more aggregate, joined on ``key``."""
     cols = [F.col(f) for f in fields]
     nums = [c.try_cast("double") for c in cols]  # non-numeric → NULL partials (ANSI-safe)
-    # a grouped-agg pandas UDF cannot share an agg() with JVM aggregates:
-    # one JVM aggregate and one Bloom aggregate cover every field, joined
-    # once on the partition key and unpivoted to a row per (part, field)
-    jvm = base.groupBy("part_key").agg(
+    jvm = df.groupBy(key).agg(
         F.count(F.lit(1)).alias("n"),
+        *extra,
         *[
             agg.alias(f"{name}{i}")
             for i, (c, num) in enumerate(zip(cols, nums))
@@ -99,22 +97,44 @@ def update_statistics(
             )
         ],
     )
-    blooms = base.groupBy("part_key").agg(
+    if not (bloom and fields):
+        return jvm
+
+    @F.pandas_udf("binary")
+    def _bloom(vals: pd.Series) -> bytes:
+        return _bloom_bits(vals.dropna().astype(str).to_numpy(dtype=object))
+
+    blooms = df.groupBy(key).agg(
         *[_bloom(c.cast("string")).alias(f"bloom{i}") for i, c in enumerate(cols)]
     )
-    per_field = F.array(
-        *[
-            F.struct(
-                F.lit(field).alias("field"),
-                F.col("n"),
-                *[F.col(f"{name}{i}").alias(name) for name in _PARTIALS],
-            )
-            for i, field in enumerate(fields)
-        ]
-    )
+    return jvm.join(blooms, key)
+
+
+def per_field_rows(fields: list[str], names: tuple[str, ...] = _PARTIALS):
+    """Generator column unpivoting a :func:`partials_summary` row to one
+    row per field: ``(field, n, *names)``."""
+    rows = [
+        F.struct(
+            F.lit(field).alias("field"), F.col("n"), *[F.col(f"{name}{i}").alias(name) for name in names]
+        )
+        for i, field in enumerate(fields)
+    ]
+    return F.inline(F.array(*rows))
+
+
+def update_statistics(
+    df: DataFrame,
+    path: str,
+    part_col: str,
+    fields: list[str],
+) -> None:
+    """Append per-(partition, field) mergeable stat partials for this batch."""
+    if not fields:
+        return
+    base = df.withColumn("part_key", F.col(part_col).cast("string"))
     (
-        jvm.join(blooms, "part_key")
-        .select("part_key", F.inline(per_field))
+        partials_summary(base, "part_key", fields)
+        .select("part_key", per_field_rows(fields))
         .write.mode("append")
         .parquet(f"{path}/stats")
     )
@@ -146,20 +166,15 @@ def update_binned_statistics(
     fold, HLL unions), so a resumed ingest never recomputes finished
     batches.
     """
+    if not fields:
+        return
     base = df.withColumn("_bin", bin_col.cast("string"))
-    for field in fields:
-        c = F.col(field)
-        num = c.try_cast("double")
-        part = base.groupBy(F.col("_bin").alias(bin_name)).agg(
-            F.lit(field).alias("field"),
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.when(c.isNull(), 1).otherwise(0)).alias("nulls"),
-            F.min(num).alias("min"),
-            F.max(num).alias("max"),
-            F.sum(num).alias("sum"),
-            F.hll_sketch_agg(c.cast("string")).alias("hll"),
-        )
-        part.write.mode("append").parquet(f"{path}/stats_binned")
+    (
+        partials_summary(base, "_bin", fields, bloom=False)
+        .select(F.col("_bin").alias(bin_name), per_field_rows(fields, _BINNED_PARTIALS))
+        .write.mode("append")
+        .parquet(f"{path}/stats_binned")
+    )
 
 
 def binned_statistics(

@@ -1,10 +1,12 @@
 """Checkpointed sink (lineage/metrics/resume), pruning predicates, streaming ingest."""
 
 import os
+import re
 import tempfile
 
 import numpy as np
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from geowave_spark.encode import with_point_cells
@@ -18,6 +20,7 @@ from geowave_spark.sources.catalog import (
     verify_lineage,
 )
 from geowave_spark.sources.fixtures import points_pdf
+from geowave_spark.sources.statistics import read_statistics
 
 
 @pytest.fixture(scope="module")
@@ -57,6 +60,39 @@ class TestCheckpointedWrite:
             assert verify_lineage(spark, path, pts, "grp")
             m = read_metrics(spark, path).collect()
             assert len(m) == 6 and all(r["minx"] >= -180 and r["maxx"] <= 180 for r in m)
+
+
+    def test_bad_column_writes_nothing(self, spark, pts):
+        """Every aggregate resolves before the first write: a misspelled
+        stats field, or a missing lat beside lon, raises with nothing
+        written, and a retry with the right fields writes stats for every
+        partition."""
+        with tempfile.TemporaryDirectory() as d:
+            path, no_lat = os.path.join(d, "tbl"), os.path.join(d, "no_lat")
+            with pytest.raises(AnalysisException, match="UNRESOLVED_COLUMN"):
+                checkpointed_write(pts, path, "grp", stats_fields=["lon", "no_such_col"])
+            with pytest.raises(AnalysisException, match="UNRESOLVED_COLUMN"):
+                checkpointed_write(pts.drop("lat"), no_lat, "grp")
+            assert os.listdir(d) == []
+            res = checkpointed_write(pts, path, "grp", stats_fields=["lon", "lat"])
+            assert res["skipped"] == [] and len(res["written"]) == 6
+            stats = {(r["part_key"], r["field"]) for r in read_statistics(spark, path).collect()}
+            assert stats == {(p, f) for p in res["written"] for f in ("lon", "lat")}
+
+    def test_lineage_read_failure_raises(self, spark, pts):
+        """A missing or empty lineage table means nothing is written yet;
+        an unreadable one raises, naming its path, instead of re-appending
+        every partition."""
+        with tempfile.TemporaryDirectory() as d:
+            path, empty = os.path.join(d, "tbl"), os.path.join(d, "empty")
+            checkpointed_write(pts, path, "grp")
+            with open(os.path.join(path, "lineage", "part-99999-bad.parquet"), "wb") as f:
+                f.write(b"not a parquet file")
+            with pytest.raises(RuntimeError, match=re.escape(f"{path}/lineage")):
+                checkpointed_write(pts, path, "grp")
+            assert read_indexed(spark, path).count() == pts.count()
+            os.makedirs(os.path.join(empty, "lineage"))
+            assert len(checkpointed_write(pts, empty, "grp")["written"]) == 6
 
 
 class TestPruning:

@@ -14,6 +14,7 @@ import pandas as pd
 import pytest
 
 from geowave_spark.functions.registry import register_all
+from geowave_spark.geom import pairs_dist2
 from geowave_spark.operators.join import geom_pair_join, point_in_polygon_join
 from geowave_spark.relate import RELATIONS
 
@@ -173,3 +174,44 @@ def test_null_geometry(spark, case):
     df = spark.createDataFrame(rows, "a string, b string")
     vals = [r.v for r in df.selectExpr(f"{call} AS v").collect()]
     assert [v is None for v in vals] == [False, True, ", b" in call, True], vals
+
+
+EMPTY_KINDS = [
+    "POINT", "LINESTRING", "POLYGON",
+    "MULTIPOINT", "MULTILINESTRING", "MULTIPOLYGON", "GEOMETRYCOLLECTION",
+]
+
+
+@pytest.mark.parametrize("empty_first", [True, False], ids=["empty_a", "empty_b"])
+@pytest.mark.parametrize("kind", EMPTY_KINDS)
+def test_empty_geometry(spark, kind, empty_first):
+    """An EMPTY geometry of any kind, in either argument, is at infinite
+    distance from a point, a line, a polygon and itself: it intersects
+    nothing, is disjoint from everything and pairs with nothing in the
+    join."""
+    empty = f"{kind} EMPTY"
+    others = [PT, "LINESTRING (0 0, 2 2)", SQ, empty]
+    pairs = [(empty, o) if empty_first else (o, empty) for o in others]
+    a, b = (list(side) for side in zip(*pairs))
+    assert np.isinf(pairs_dist2(a, b)).all()
+    register_all(spark)
+    df = spark.createDataFrame(pairs, "a string, b string")
+    got = df.selectExpr(
+        "st_distance(a, b)", "st_intersects(a, b)", "st_within_distance(a, b, 1.0)", "st_disjoint(a, b)"
+    ).collect()
+    assert [tuple(r) for r in got] == [(np.inf, False, False, True)] * len(others)
+
+    # the join: the EMPTY row beside a real geometry on its side pairs nothing
+    own = [("e", empty), ("s", SQ)]
+    rest = [(f"o{i}", o) for i, o in enumerate(others[:3])]
+    left, right = (own, rest) if empty_first else (rest, own)
+
+    def join(drop):
+        sides = [
+            spark.createDataFrame([r for r in rows if r[0] != drop], f"{name} string, wkt string")
+            for rows, name in ((left, "aid"), (right, "bid"))
+        ]
+        return {tuple(r) for r in geom_pair_join(*sides, "aid", "bid").collect()}
+
+    want = join(drop="e")
+    assert join(drop=None) == want and want

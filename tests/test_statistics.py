@@ -4,6 +4,8 @@ to the same answer as a from-scratch computation, OptimalCount answers
 from stats alone, Bloom membership has no false negatives and a bounded
 false-positive rate, HLL NDV estimates land near truth."""
 
+import os
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -16,6 +18,7 @@ from geowave_spark.sources.statistics import (
     merged_statistics,
     optimal_count,
     read_statistics,
+    update_binned_statistics,
     update_statistics,
 )
 
@@ -248,3 +251,136 @@ def test_binned_statistics_per_cell(spark, tmp_path):
     }
     assert counts == {b: w[0] for b, w in want.items()}
     assert len(want) > 10  # fixture spans many cells
+
+
+def _parent_form_write(df, path, part_col, stats_fields):
+    """The side tables of ``checkpointed_write`` in their separate-aggregate
+    form: lineage, metrics and stats each from its own aggregate over the
+    partitions lineage does not list yet (the data itself is not written)."""
+    spark = df.sparkSession
+    lineage = f"{path}/lineage"
+    done = (
+        {r["part_key"] for r in spark.read.parquet(lineage).collect()}
+        if os.path.exists(lineage)
+        else set()
+    )
+    todo = df.withColumn("part_key", F.col(part_col).cast("string"))
+    todo = todo.where(~F.col("part_key").isin(list(done))) if done else todo
+    todo.groupBy("part_key").agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.sum(F.pmod(F.xxhash64(*df.columns), F.lit(2147483647))).alias("fingerprint"),
+    ).write.mode("append").parquet(lineage)
+    todo.groupBy("part_key").agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.min("lon").alias("minx"),
+        F.max("lon").alias("maxx"),
+        F.min("lat").alias("miny"),
+        F.max("lat").alias("maxy"),
+    ).write.mode("append").parquet(f"{path}/metrics")
+    _per_field_statistics(todo, path, "part_key", stats_fields)
+
+
+def _per_field_binned(df, path, bin_col, fields):
+    """The per-field form of ``update_binned_statistics``: one aggregate
+    and one append per field."""
+    base = df.withColumn("_bin", bin_col.cast("string"))
+    for field in fields:
+        c = F.col(field)
+        num = c.try_cast("double")
+        base.groupBy(F.col("_bin").alias("bin")).agg(
+            F.lit(field).alias("field"),
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.when(c.isNull(), 1).otherwise(0)).alias("nulls"),
+            F.min(num).alias("min"),
+            F.max(num).alias("max"),
+            F.sum(num).alias("sum"),
+            F.hll_sketch_agg(c.cast("string")).alias("hll"),
+        ).write.mode("append").parquet(f"{path}/stats_binned")
+
+
+def _assert_same_table(spark, got_path, want_path, key):
+    """Same schema, column order and rows (HLL sketches compared by their
+    estimate, floating sums to 1e-12)."""
+    got, want = spark.read.parquet(got_path), spark.read.parquet(want_path)
+    assert got.schema == want.schema
+
+    def rows(sdf):
+        if "hll" in sdf.columns:
+            sdf = sdf.withColumn("hll", F.hll_sketch_estimate("hll"))
+        return sorted((r.asDict() for r in sdf.collect()), key=lambda r: [str(r[k]) for k in key])
+
+    g, w = rows(got), rows(want)
+    assert [[r[k] for k in key] for r in g] == [[r[k] for k in key] for r in w]
+    for a, b in zip(g, w):
+        for k in a:
+            if isinstance(b[k], float):
+                assert a[k] == pytest.approx(b[k], rel=1e-12, abs=0.0), (k, a)
+            else:
+                assert a[k] == b[k], (k, a)
+
+
+@pytest.fixture(scope="module")
+def side_table_input(spark):
+    rng = np.random.default_rng(29)
+    n = 1200
+    pdf = pd.DataFrame(
+        {
+            "part": rng.integers(0, 6, n).astype(np.int64),
+            "lon": rng.uniform(-30, 40, n),
+            "lat": rng.uniform(-10, 20, n),
+            "v": rng.normal(0.0, 3.0, n).round(5),
+            "word": [f"w{k}" for k in rng.integers(0, 90, n)],
+        }
+    ).astype(object)
+    pdf.loc[::9, "v"] = None
+    pdf.loc[::7, "word"] = None
+    pdf.loc[::13, "word"] = "2.5"  # numeric-looking strings get numeric partials
+    pdf.loc[::17, "lat"] = None
+    schema = "part long, lon double, lat double, v double, word string"
+    return spark.createDataFrame(pdf, schema).cache()
+
+
+def test_side_tables_match_separate_aggregates(spark, side_table_input, tmp_path):
+    """The one per-partition summary writes lineage, metrics and stats
+    identical to one aggregate per side table, across a resumed second
+    write; the fused binned update writes the per-field form's rows."""
+    from geowave_spark.sources.catalog import checkpointed_write
+
+    df, fields = side_table_input, ["v", "word"]
+    got, want = str(tmp_path / "got"), str(tmp_path / "want")
+    for batch in (df.where(F.col("part") <= 2), df):
+        checkpointed_write(batch, got, "part", stats_fields=fields)
+        _parent_form_write(batch, want, "part", fields)
+    _assert_same_table(spark, f"{got}/lineage", f"{want}/lineage", ["part_key"])
+    _assert_same_table(spark, f"{got}/metrics", f"{want}/metrics", ["part_key"])
+    _assert_same_table(spark, f"{got}/stats", f"{want}/stats", ["part_key", "field"])
+    assert read_statistics(spark, got).count() == 2 * 6
+
+    bin_col = F.pmod(F.col("part"), F.lit(4))
+    for batch in (df.where(F.col("part") <= 2), df.where(F.col("part") > 2)):
+        update_binned_statistics(batch, got, bin_col, ["v", "word", "lat"])
+        _per_field_binned(batch, want, bin_col, ["v", "word", "lat"])
+    _assert_same_table(spark, f"{got}/stats_binned", f"{want}/stats_binned", ["bin", "field", "n"])
+
+
+def _jobs(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_side_table_job_counts(spark, side_table_input, tmp_path):
+    """A two-field checkpointed write runs 11 Spark jobs (12 with one
+    aggregate per side table) and a three-field binned update 2 (one
+    aggregate and one append per field: 6)."""
+    from geowave_spark.sources.catalog import checkpointed_write
+
+    df = side_table_input
+    path = str(tmp_path / "tbl")
+    assert _jobs(spark, "ckpt_two_fields", lambda: checkpointed_write(df, path, "part", stats_fields=["lon", "lat"])) == 11
+    bin_col = F.pmod(F.col("part"), F.lit(4))
+    assert _jobs(spark, "binned_three_fields", lambda: update_binned_statistics(df, path, bin_col, ["v", "word", "lat"])) == 2
