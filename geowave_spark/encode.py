@@ -28,14 +28,11 @@ from pyspark.sql.types import (
 )
 
 from .geom import (
-    as_components,
-    cell_rect_intersects_geom,
-    cell_rect_intersects_polygon,  # noqa: F401  (re-export)
     flatten_parts,
-    geom_is_closed,
     parse_wkt,  # noqa: F401  (re-export)
     parse_wkt_multi,
     polygon_envelope,  # noqa: F401  (re-export)
+    rects_hit_geoms,
 )
 from .sfc import TieredStrategy
 from .sfc.geohash import geohash_encode
@@ -179,9 +176,12 @@ def distinct_polygon_tiers(
     """Distinct insertion tiers of a polygon table, as a one-column
     ``tier int`` DataFrame, from a light WKT scan (no cell explosion, no
     persist) — the analog of the reference's tier-byte collectAsync
-    (TieredSpatialJoin.java:174-191).  Lazy: the joins broadcast it, so
-    the scan runs inside the join's own job, beside its cell explodes,
-    instead of as a separate driver-side job."""
+    (TieredSpatialJoin.java:174-191).  It serves the point×polygon
+    shuffle plan, whose probe points need the build side's tiers; the
+    geometry-pair join keys on cell ancestors instead and scans no tiers.
+    Lazy: the join broadcasts it, so the scan runs inside the join's own
+    job, beside its cell explode, instead of as a separate driver-side
+    job."""
 
     @F.pandas_udf(ArrayType(IntegerType()))
     def _tiers(wkt: pd.Series) -> pd.Series:
@@ -281,21 +281,17 @@ def polygon_cells_np(
     max_duplicates: int = 4,
     buffer: float = 0.0,
     trim: bool = True,
-    polys=None,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Insertion cells for a batch of WKT geometries → (row_index, tier,
     cell) numpy arrays, with trimIndexIds pruning (RDDUtils.java:158-184:
     when an entity received more than 3 cells, drop cells whose rectangle
     does not intersect the buffered geometry).  Kind-aware: polylines trim
     against their real segments (a cell inside a line's phantom hull does
-    NOT keep the line), closed rings use the exact polygon test.  Shared
-    by the executor-side mapInPandas explode and the driver-side
-    broadcast-build path."""
-    n = len(wkts)
-    if polys is not None:
-        geoms = [("POLYGON", [p]) for p in polys]
-    else:
-        geoms = [parse_wkt_multi(w) for w in wkts]
+    NOT keep the line), closed rings use the exact polygon test.  The trim
+    is one :func:`~geowave_spark.geom.rects_hit_geoms` call over every
+    trimmed cell of the batch, with one ``hilbert_to_xy`` per distinct
+    tier."""
+    geoms = [parse_wkt_multi(w) for w in wkts]
     full = [i for i, g in enumerate(geoms) if flatten_parts(g)]  # EMPTY: no cells
     if not full:
         return (np.empty(0, dtype=np.int64),) * 3
@@ -308,28 +304,53 @@ def polygon_cells_np(
         max_duplicates=max_duplicates,
     )
     row = np.asarray(full, dtype=np.int64)[row]
-    keep_mask = np.ones(len(row), dtype=bool)
-    if trim and len(row):
-        counts = np.bincount(row, minlength=n)
-        for i in np.nonzero(counts > 3)[0]:
-            m = row == i
-            t = int(tier[m][0])
-            if t == 0:
-                continue
-            cx, cy = hilbert_to_xy(cell[m].astype(np.uint64), t)
-            span_x = strategy.dim_x.range / (1 << t)
-            span_y = strategy.dim_y.range / (1 << t)
-            rminx = strategy.dim_x.min + cx.astype(np.float64) * span_x - buffer
-            rminy = strategy.dim_y.min + cy.astype(np.float64) * span_y - buffer
-            hit = np.zeros(int(m.sum()), dtype=bool)
-            for kind, parts in as_components(geoms[i]):
-                hit |= cell_rect_intersects_geom(
-                    rminx, rminy,
-                    rminx + span_x + 2 * buffer, rminy + span_y + 2 * buffer,
-                    parts, geom_is_closed(kind),
-                )
-            keep_mask[np.nonzero(m)[0][~hit]] = False
-    return row[keep_mask], tier[keep_mask], cell[keep_mask]
+    if not trim or not len(row):
+        return row, tier, cell
+    sel = np.nonzero((np.bincount(row)[row] > 3) & (tier != 0))[0]
+    if not len(sel):
+        return row, tier, cell
+    rminx, rminy, span_x, span_y = (np.empty(len(sel)) for _ in range(4))
+    for t in np.unique(tier[sel]):
+        m = tier[sel] == t
+        cx, cy = hilbert_to_xy(cell[sel[m]].astype(np.uint64), int(t))
+        span_x[m] = strategy.dim_x.range / (1 << int(t))
+        span_y[m] = strategy.dim_y.range / (1 << int(t))
+        rminx[m] = strategy.dim_x.min + cx.astype(np.float64) * span_x[m] - buffer
+        rminy[m] = strategy.dim_y.min + cy.astype(np.float64) * span_y[m] - buffer
+    trimmed, rect_geom = np.unique(row[sel], return_inverse=True)
+    hit = rects_hit_geoms(
+        rminx, rminy,
+        rminx + span_x + 2 * buffer, rminy + span_y + 2 * buffer,
+        rect_geom, [geoms[i] for i in trimmed],
+    )
+    keep = np.ones(len(row), dtype=bool)
+    keep[sel[~hit]] = False
+    return row[keep], tier[keep], cell[keep]
+
+
+def cell_ancestors(
+    row: np.ndarray, tier: np.ndarray, cell: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Distinct strict ancestors of each row's cells → (row_index, tier,
+    cell): ``cell >> 2·(tier − t)`` at every tier ``t < tier`` (the Hilbert
+    prefix, as in :func:`cell_at_tier`), one entry per (row, t, ancestor).
+    Walks one tier up per step over the sorted frontier, so siblings merge
+    as they go and a row emits at most its tier count times its cells.
+    Each row's cells share one tier, as in :func:`polygon_cells_np`'s
+    covers (a geometry's own envelope never wraps the antimeridian)."""
+    order = np.lexsort((cell, tier, row))
+    r, t, c = row[order], tier[order].astype(np.int64), cell[order]
+    empty = np.empty(0, dtype=np.int64)
+    out = [(empty, empty, empty)]
+    while True:
+        m = t > 0
+        r, t, c = r[m], t[m] - 1, c[m] >> 2  # stays sorted by (r, t, c)
+        if not len(r):
+            break
+        new = np.r_[True, (r[1:] != r[:-1]) | (t[1:] != t[:-1]) | (c[1:] != c[:-1])]
+        r, t, c = r[new], t[new], c[new]
+        out.append((r, t, c))
+    return tuple(np.concatenate(a) for a in zip(*out))
 
 
 def explode_polygon_cells(
@@ -371,7 +392,8 @@ def cell_at_tier(cell: str, tier: str, from_tier: str | int) -> Column:
     (TieredSpatialJoin.java:471-511) with no geometry re-encode.
     ``cell`` / ``tier`` are column names or SQL expressions; ``from_tier``
     is one too, or an int literal (e.g. ``max_bits`` for top-tier point
-    cells).  Both the point×polygon and the geometry-pair joins key on it.
+    cells).  The point×polygon shuffle plan keys its probe points on it;
+    :func:`cell_ancestors` is its numpy form for whole covers.
     """
     return F.expr(
         f"CASE WHEN {tier} = 0 THEN CAST(0 AS BIGINT) "

@@ -34,13 +34,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, DoubleType, StringType
 
 from ..geom import (
-    as_components,
-    cell_rect_intersects_geom,
     flatten_parts,
-    geom_is_closed,
     pairs_dist2,
     parse_wkt_cached,
     polygon_envelope,
+    rects_hit_geoms,
 )
 from ..relate import RELATIONS, relation_batch
 
@@ -150,21 +148,12 @@ def _envelope_wkt(w: str) -> str:
     )
 
 
-def _bbox_hit(w: str, x0: float, y0: float, x1: float, y1: float) -> bool:
-    """Exact geometry ∩ box; a collection intersects the box iff any
-    homogeneous component does (union semantics)."""
-    for kind, parts in as_components(parse_wkt_cached(w)):
-        if kind == "POINT":
-            c = parts[0]
-            hit = x0 <= c[0][0] <= x1 and y0 <= c[0][1] <= y1
-        else:
-            hit = cell_rect_intersects_geom(
-                np.array([x0]), np.array([y0]), np.array([x1]), np.array([y1]),
-                parts, geom_is_closed(kind),
-            )[0]
-        if hit:
-            return True
-    return False
+def _bbox_hits(g: pd.Series, *box: pd.Series) -> np.ndarray:
+    """st_bbox: exact geometry ∩ box for each row, one
+    :func:`~geowave_spark.geom.rects_hit_geoms` call per batch (a
+    collection meets the box iff any component does)."""
+    x0, y0, x1, y1 = (b.to_numpy(np.float64) for b in box)
+    return rects_hit_geoms(x0, y0, x1, y1, np.arange(len(g)), [parse_wkt_cached(w) for w in g])
 
 
 def _envelopes_meet(e, f) -> bool:
@@ -202,10 +191,7 @@ def _functions() -> dict:
             lambda lon, lat: [f"POINT ({x:.17g} {y:.17g})" for x, y in zip(lon, lat)],
         ),
         "st_envelope": (StringType(), lambda g: [_envelope_wkt(w) for w in g]),
-        "st_bbox": (
-            BooleanType(),
-            lambda g, *box: [_bbox_hit(w, *map(float, b)) for w, *b in zip(g, *box)],
-        ),
+        "st_bbox": (BooleanType(), _bbox_hits),
         "st_bbox_loose": (
             BooleanType(),
             lambda g, *box: [_envelopes_meet(_env_of(w), b) for w, *b in zip(g, *box)],

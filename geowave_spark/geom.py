@@ -553,32 +553,148 @@ def cell_rect_intersects_geom(
     parts: list[np.ndarray],
     closed: bool,
 ) -> np.ndarray:
-    """Rect ∩ geometry test for insertion-id trimming, kind-aware: closed
-    rings use the exact polygon test; open polylines use vertex-in-rect or
-    segment-hits-rect only (a rect strictly inside the phantom hull of a
-    line does NOT intersect it)."""
-    if closed:
-        out = np.zeros(len(cminx), dtype=bool)
-        for p in parts:
-            out |= cell_rect_intersects_polygon(cminx, cminy, cmaxx, cmaxy, p)
-        return out
-    out = np.zeros(len(cminx), dtype=bool)
-    for p in parts:
-        vx, vy = p[:, 0], p[:, 1]
-        out |= (
-            (vx[None, :] >= cminx[:, None])
-            & (vx[None, :] <= cmaxx[:, None])
-            & (vy[None, :] >= cminy[:, None])
-            & (vy[None, :] <= cmaxy[:, None])
-        ).any(axis=1)
-        if len(p) > 1:
-            s, e = _part_edges(p, False)
-            todo = np.nonzero(~out)[0]
-            out[todo] = _segments_hit_rects(
-                s[:, 0], s[:, 1], e[:, 0], e[:, 1],
-                cminx[todo], cminy[todo], cmaxx[todo], cmaxy[todo],
+    """Each rect ∩ one geometry given as parts, closed rings or open
+    polylines: :func:`rects_hit_geoms` as a batch of one geometry."""
+    g = ("MULTIPOLYGON" if closed else "MULTILINESTRING", list(parts))
+    return rects_hit_geoms(cminx, cminy, cmaxx, cmaxy, np.zeros(len(cminx), dtype=np.int64), [g])
+
+
+# (rect, vertex or edge) pairs evaluated per numpy pass
+_RECT_PAIR_BLOCK = 1 << 20
+
+
+class _EdgeTable:
+    """Flat vertex and edge tables of parsed geometries for
+    :func:`rects_hit_geoms`, each sorted by geometry, then part.  A closed
+    ring drops its repeated closing vertex and keeps its wrap edge; an open
+    part keeps its real segments only (none for a single vertex)."""
+
+    def __init__(self, geoms: list):
+        parts = [
+            (gi, c, p[:-1] if c and np.array_equal(p[0], p[-1]) else p)
+            for gi, g in enumerate(geoms)
+            for kind, ps in as_components(g)
+            for c in (geom_is_closed(kind),)
+            for p in ps
+        ]
+        n = len(geoms)
+        nv = np.array([len(p) for _, _, p in parts], dtype=np.int64)
+        v = np.concatenate([p for _, _, p in parts]) if parts else np.zeros((0, 2))
+        vgeom = np.repeat(np.array([gi for gi, _, _ in parts], dtype=np.int64), nv)
+        vpart = np.repeat(np.arange(len(parts), dtype=np.int64), nv)
+        closed = np.repeat(np.array([c for _, c, _ in parts], dtype=bool), nv)
+        first = np.repeat(np.cumsum(nv) - nv, nv)
+        nxt = np.arange(len(v), dtype=np.int64) + 1
+        last = nxt == first + np.repeat(nv, nv)
+        nxt[last] = first[last]  # a closed ring wraps to its first vertex
+        e = closed | ~last
+        self.vx, self.vy = v[:, 0], v[:, 1]
+        self.v_range = _ranges(vgeom, n)
+        # every edge: the clip test; closed rings' edges: corner parity
+        self.x1, self.y1 = v[e, 0], v[e, 1]
+        self.x2, self.y2 = v[nxt[e], 0], v[nxt[e], 1]
+        self.e_range = _ranges(vgeom[e], n)
+        ring = closed[e]
+        self.ring_edge = np.nonzero(ring)[0]
+        self.ring_part = vpart[e][ring]
+        self.r_range = _ranges(vgeom[e][ring], n)
+
+
+def _ranges(sorted_geom: np.ndarray, n: int) -> tuple[np.ndarray, np.ndarray]:
+    """(start, count) of each geometry's run in a geometry-sorted table."""
+    count = np.bincount(sorted_geom, minlength=n).astype(np.int64)
+    return np.cumsum(count) - count, count
+
+
+def _rect_pairs(rects: np.ndarray, rect_geom: np.ndarray, ranges):
+    """(rect, item) index pairs: each rect of ``rects`` against every item
+    of its geometry's (start, count) range, in blocks of about
+    ``_RECT_PAIR_BLOCK`` pairs that never split a rect."""
+    start, count = ranges
+    g = rect_geom[rects]
+    cnt = count[g]
+    ends = np.cumsum(cnt)
+    lo = 0
+    while lo < len(rects):
+        base = ends[lo - 1] if lo else 0
+        hi = max(lo + 1, int(np.searchsorted(ends, base + _RECT_PAIR_BLOCK, side="right")))
+        c = cnt[lo:hi]
+        if c.any():
+            off = np.arange(int(c.sum()), dtype=np.int64) - np.repeat(np.cumsum(c) - c, c)
+            yield np.repeat(rects[lo:hi], c), np.repeat(start[g[lo:hi]], c) + off
+        lo = hi
+
+
+def rects_hit_geoms(
+    rminx: np.ndarray,
+    rminy: np.ndarray,
+    rmaxx: np.ndarray,
+    rmaxy: np.ndarray,
+    rect_geom: np.ndarray,
+    geoms: list,
+) -> np.ndarray:
+    """Does each closed rect ``k`` intersect the parsed geometry
+    ``geoms[rect_geom[k]]``?  → (K,) bool.
+
+    The package's one rect ∩ geometry test: the trimIndexIds pruning of
+    :func:`~geowave_spark.encode.polygon_cells_np` (RDDUtils.java:158-184)
+    and ``st_bbox``.  Kind-aware per component: a rect hits a geometry
+    when one of its vertices lies in the rect, a rect corner lies in one
+    of its closed rings (crossing parity, or exactly on a ring edge), or
+    one of its edges crosses the rect (Liang–Barsky clip).  Open polylines
+    take only the vertex and clip tests, so a rect inside a line's
+    phantom hull misses it.  Each test runs once over all (rect, vertex)
+    or (rect, edge) pairs, and a rect that one test hits skips the rest.
+    """
+    rminx, rminy, rmaxx, rmaxy = (np.asarray(a, dtype=np.float64) for a in (rminx, rminy, rmaxx, rmaxy))
+    rect_geom = np.asarray(rect_geom, dtype=np.int64)
+    t = _EdgeTable(geoms)
+    hit = np.zeros(len(rminx), dtype=bool)
+    for r, i in _rect_pairs(np.arange(len(rminx)), rect_geom, t.v_range):
+        vx, vy = t.vx[i], t.vy[i]
+        hit[r[(vx >= rminx[r]) & (vx <= rmaxx[r]) & (vy >= rminy[r]) & (vy <= rmaxy[r])]] = True
+    for r, i in _rect_pairs(np.nonzero(~hit)[0], rect_geom, t.r_range):
+        e = t.ring_edge[i]
+        x1, y1, x2, y2 = t.x1[e], t.y1[e], t.x2[e], t.y2[e]
+        part = t.ring_part[i]
+        first = np.nonzero(np.r_[True, (r[1:] != r[:-1]) | (part[1:] != part[:-1])])[0]
+        for px, py in ((rminx, rminy), (rminx, rmaxy), (rmaxx, rminy), (rmaxx, rmaxy)):
+            pxv, pyv = px[r], py[r]
+            cond = (y1 > pyv) != (y2 > pyv)
+            with np.errstate(divide="ignore", invalid="ignore"):
+                xint = x1 + (pyv - y1) / (y2 - y1) * (x2 - x1)
+            odd = np.add.reduceat(cond & (pxv < xint), first, dtype=np.int64) % 2 == 1
+            cross = (x2 - x1) * (pyv - y1) - (y2 - y1) * (pxv - x1)
+            on_edge = (
+                (cross == 0.0)
+                & (pxv >= np.minimum(x1, x2))
+                & (pxv <= np.maximum(x1, x2))
+                & (pyv >= np.minimum(y1, y2))
+                & (pyv <= np.maximum(y1, y2))
             )
-    return out
+            hit[r[first[odd]]] = True
+            hit[r[on_edge]] = True
+    for r, i in _rect_pairs(np.nonzero(~hit)[0], rect_geom, t.e_range):
+        x1, y1 = t.x1[i], t.y1[i]
+        dx, dy = t.x2[i] - x1, t.y2[i] - y1
+        t0 = np.zeros(len(r))
+        t1 = np.ones(len(r))
+        ok = np.ones(len(r), dtype=bool)
+        for p, q in (
+            (-dx, x1 - rminx[r]),
+            (dx, rmaxx[r] - x1),
+            (-dy, y1 - rminy[r]),
+            (dy, rmaxy[r] - y1),
+        ):
+            with np.errstate(divide="ignore", invalid="ignore"):
+                s = q / p
+            ok &= ~((p == 0) & (q < 0))
+            ent = np.where(p < 0, s, -np.inf)
+            ext = np.where(p > 0, s, np.inf)
+            t0 = np.maximum(t0, np.where(np.isfinite(ent), ent, t0))
+            t1 = np.minimum(t1, np.where(np.isfinite(ext), ext, t1))
+        hit[r[ok & (t0 <= t1)]] = True
+    return hit
 
 
 def rings_edges_intersect(
@@ -640,78 +756,6 @@ def polygon_envelope(poly: np.ndarray) -> tuple[float, float, float, float]:
         float(poly[:, 0].max()),
         float(poly[:, 1].max()),
     )
-
-
-def cell_rect_intersects_polygon(
-    cminx: np.ndarray, cminy: np.ndarray, cmaxx: np.ndarray, cmaxy: np.ndarray, poly: np.ndarray
-) -> np.ndarray:
-    """Does each axis-aligned cell rectangle intersect the polygon?
-
-    Used for insertion-id trimming (reference: RDDUtils.trimIndexIds,
-    analytics/spark/.../RDDUtils.java:158-184 — drop cells whose rectangle
-    misses the geometry, applied only when an entity got >3 cells).
-    Exact for convex and non-convex rings: rect∩poly ≠ ∅ iff a rect corner
-    is in the poly, a poly vertex is in the rect, or edges cross.
-    """
-    n = len(cminx)
-    out = np.zeros(n, dtype=bool)
-    ring = poly if not np.array_equal(poly[0], poly[-1]) else poly[:-1]
-    # poly vertex inside rect
-    vx, vy = ring[:, 0], ring[:, 1]
-    out |= (
-        (vx[None, :] >= cminx[:, None])
-        & (vx[None, :] <= cmaxx[:, None])
-        & (vy[None, :] >= cminy[:, None])
-        & (vy[None, :] <= cmaxy[:, None])
-    ).any(axis=1)
-    # rect corner inside poly
-    for cx, cy in ((cminx, cminy), (cminx, cmaxy), (cmaxx, cminy), (cmaxx, cmaxy)):
-        todo = ~out
-        if todo.any():
-            out[todo] |= points_in_polygon(cx[todo], cy[todo], poly)
-    # edge crossings: segment vs rect via separating-axis on each poly edge
-    todo = np.nonzero(~out)[0]
-    if len(todo):
-        x1, y1 = ring[:, 0], ring[:, 1]
-        x2, y2 = np.roll(x1, -1), np.roll(y1, -1)
-        out[todo] = _segments_hit_rects(
-            x1, y1, x2, y2, cminx[todo], cminy[todo], cmaxx[todo], cmaxy[todo]
-        )
-    return out
-
-
-def _segments_hit_rects(x1, y1, x2, y2, rminx, rminy, rmaxx, rmaxy) -> np.ndarray:
-    """Liang-Barsky style clip test: does any of the E segments intersect
-    each of the K rects?  → (K,) bool.  Evaluated as (rects × segments)
-    blocks of at most ~2^20 elements."""
-    x1, y1, x2, y2 = (np.asarray(v, dtype=np.float64)[None, :] for v in (x1, y1, x2, y2))
-    dx = x2 - x1
-    dy = y2 - y1
-    out = np.zeros(len(rminx), dtype=bool)
-    step = max(1, (1 << 20) // max(x1.shape[1], 1))
-    for k in range(0, len(rminx), step):
-        sl = slice(k, k + step)
-        r0x, r0y = rminx[sl, None], rminy[sl, None]
-        r1x, r1y = rmaxx[sl, None], rmaxy[sl, None]
-        shape = (len(r0x), x1.shape[1])
-        t0 = np.zeros(shape)
-        t1 = np.ones(shape)
-        ok = np.ones(shape, dtype=bool)
-        for p, q in (
-            (-dx, x1 - r0x),
-            (dx, r1x - x1),
-            (-dy, y1 - r0y),
-            (dy, r1y - y1),
-        ):
-            with np.errstate(divide="ignore", invalid="ignore"):
-                r = q / p
-            ok &= ~((p == 0) & (q < 0))
-            ent = np.where(p < 0, r, -np.inf)
-            ext = np.where(p > 0, r, np.inf)
-            t0 = np.maximum(t0, np.where(np.isfinite(ent), ent, t0))
-            t1 = np.minimum(t1, np.where(np.isfinite(ext), ext, t1))
-        out[sl] = (ok & (t0 <= t1)).any(axis=1)
-    return out
 
 
 class LocalGeomGrid:

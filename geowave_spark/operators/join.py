@@ -47,16 +47,18 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, StructField, StructType
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from ..encode import (
     DEFAULT_STRATEGY,
+    cell_ancestors,
     cell_at_tier,
     distinct_polygon_tiers,
     explode_envelope_cells,
     explode_polygon_cells,
     point_cell_at_tier_udf,
     point_cell_udf,
+    polygon_cells_np,
 )
 from ..geom import pairs_dist2
 from ..geom import parse_wkt  # noqa: F401  (re-export for callers)
@@ -701,34 +703,42 @@ def geom_pair_join(
     coarse cell phase is unchanged because every one of these relations
     implies envelope intersection.
 
-    Plan (the reference's tier-by-tier join, TieredSpatialJoin.java:76-551):
+    Plan (the reference's tier-by-tier join, TieredSpatialJoin.java:76-551,
+    keyed so that neither side needs the other side's tier list):
 
-    1. both sides explode to their natural insertion cells with
-       trimIndexIds pruning (:func:`~geowave_spark.encode.explode_polygon_cells`,
-       at most ``max_duplicates`` cells per geometry); only the right side
+    1. each side explodes once (one ``mapInPandas`` pass,
+       :func:`_pair_keyed`) to its natural insertion cells with
+       trimIndexIds pruning (:func:`~geowave_spark.encode.polygon_cells_np`,
+       at most ``max_duplicates`` cells per geometry) and to the distinct
+       strict ancestors of those cells at every coarser tier
+       (:func:`~geowave_spark.encode.cell_ancestors`); only the right side
        is buffered by ``radius`` (TieredSpatialJoin.java:146-166);
-    2. each side's distinct tiers come from a light tier-only scan
-       (:func:`~geowave_spark.encode.distinct_polygon_tiers`) and every
-       cell row is crossed with the OTHER side's tiny tier list (broadcast
-       cross join);
-    3. the join key is (tier_a, tier_b, cell at min(tier_a, tier_b)): the
-       finer side's cell is re-projected to the coarser tier by a Catalyst
-       bit shift (:func:`~geowave_spark.encode.cell_at_tier`, the analog of
-       reprojectToTier, TieredSpatialJoin.java:471-511);
-    4. one shuffled hash equi-join, then dropDuplicates on the id pair
-       (both sides span cell ranges and the shift merges sibling cells, so
-       a pair CAN meet in several cells — the reference's reduceByKey
-       dedupe, TieredSpatialJoin.java:349), then the exact kind-aware pair
+    2. a role flag ``_k`` makes the key ``(_t, cell, _k)`` meet each pair
+       at the coarser of the two tiers exactly once per shared coarse
+       cell: left own cells carry ``_k = 0`` and left ancestors ``_k = 1``;
+       right own cells appear with both flags and right ancestors carry
+       ``_k = 0``.  ``_k = 0`` rows pair a left geometry with right ones
+       of the same or a finer tier, ``_k = 1`` rows with right ones of a
+       coarser tier — the pair set of the reference's re-projection of the
+       finer cell to the coarser tier (reprojectToTier,
+       TieredSpatialJoin.java:471-511);
+    3. one shuffled hash equi-join, then dropDuplicates on the id pair
+       (both sides span cell ranges, so a pair CAN meet in several coarse
+       cells — the reference's reduceByKey dedupe,
+       TieredSpatialJoin.java:349), then the exact kind-aware pair
        predicate once per distinct pair.
 
     ``left_id`` / ``right_id`` must be unique keys of their inputs (the
     dedupe keeps one geometry pair per id pair).  Rows with a null WKT
     match nothing and are dropped first.
 
-    Scale: shuffle volume is |left|·dup·|right tiers| + |right|·dup·|left
-    tiers| rows of (id, WKT) — bounded by the inputs, independent of
-    envelope area; nothing is collected to the driver; the exact stage
-    is one batch-kernel call per Arrow batch over per-process parse
+    Scale: a geometry ships at most its own cells plus its tier count
+    times those cells as keyed rows (ancestors merge as the tiers
+    coarsen, so it is usually own cells plus about one row per tier), and
+    the right side's own cells twice — bounded by the inputs, independent
+    of envelope area and of the other side's tiers.  Rows carry (id, WKT);
+    nothing is collected to the driver and no tier scan runs; the exact
+    stage is one batch-kernel call per Arrow batch over per-process parse
     caches.
     """
     if predicate is not None and radius is not None:
@@ -743,7 +753,7 @@ def geom_pair_join(
         radius or 0.0, strategy, max_duplicates,
     )
     return (
-        probe.join(build.hint("shuffle_hash"), ["_ta", "_tb", "cell"])
+        probe.join(build.hint("shuffle_hash"), ["_t", "cell", "_k"])
         .dropDuplicates(["_pid", "_gid"])
         .where(_geom_pair_match_udf(radius, predicate)(F.col("_pwkt"), F.col("_gwkt")))
         .select(F.col("_pid").alias(left_id), F.col("_gid").alias(right_id))
@@ -753,29 +763,46 @@ def geom_pair_join(
 def _pair_keyed_sides(
     left: DataFrame, right: DataFrame, buffer: float, strategy: TieredStrategy, max_duplicates: int
 ) -> tuple[DataFrame, DataFrame]:
-    """The keyed sides of :func:`geom_pair_join` from two (id, wkt) frames:
-    one row per own insertion cell per tier of the other side, columns
-    ``id, wkt, _ta, _tb, cell`` with ``cell`` at tier min(_ta, _tb).  Only
-    the right side is buffered."""
-
-    def keyed(df, buf, own, other, other_tiers):
-        cells = explode_polygon_cells(
-            df, df.columns[1], keep=df.columns, strategy=strategy,
-            max_duplicates=max_duplicates, buffer=buf,
-        )
-        return (
-            cells.withColumnRenamed("tier", own)
-            .crossJoin(F.broadcast(other_tiers.withColumnRenamed("tier", other)))
-            .withColumn("cell", cell_at_tier("cell", "least(_ta, _tb)", own))
-        )
-
-    def tiers(df, buf):
-        return distinct_polygon_tiers(df, df.columns[1], strategy, max_duplicates, buf)
-
+    """The keyed sides of :func:`geom_pair_join` from two (id, wkt) frames,
+    columns ``id, wkt, _t, cell, _k``: the left side's own cells with
+    ``_k = 0`` and ancestors with ``_k = 1``; the right side's own cells
+    with both flags and ancestors with ``_k = 0``.  Only the right side is
+    buffered."""
     return (
-        keyed(left, 0.0, "_ta", "_tb", tiers(right, buffer)),
-        keyed(right, buffer, "_tb", "_ta", tiers(left, 0.0)),
+        _pair_keyed(left, 0.0, (0,), 1, strategy, max_duplicates),
+        _pair_keyed(right, buffer, (0, 1), 0, strategy, max_duplicates),
     )
+
+
+def _pair_keyed(
+    df: DataFrame,
+    buffer: float,
+    own_roles: tuple[int, ...],
+    ancestor_role: int,
+    strategy: TieredStrategy,
+    max_duplicates: int,
+) -> DataFrame:
+    """One ``mapInPandas`` explode of an (id, wkt) frame to its own cells
+    (one row per flag of ``own_roles``) and its cells' distinct strict
+    ancestors (flag ``ancestor_role``), as ``id, wkt, _t, cell, _k``."""
+    schema = StructType(
+        df.schema.fields
+        + [StructField("_t", IntegerType()), StructField("cell", LongType()), StructField("_k", IntegerType())]
+    )
+
+    def _gen(batches):
+        for pdf in batches:
+            own = polygon_cells_np(list(pdf.iloc[:, 1]), strategy, max_duplicates, buffer)
+            sides = [own] * len(own_roles) + [cell_ancestors(*own)]
+            roles = list(own_roles) + [ancestor_role]
+            row, tier, cell = (np.concatenate(a) for a in zip(*sides))
+            out = pdf.iloc[row].reset_index(drop=True)
+            out["_t"] = tier.astype(np.int32)
+            out["cell"] = cell
+            out["_k"] = np.repeat(np.array(roles, dtype=np.int32), [len(s[0]) for s in sides])
+            yield out
+
+    return df.mapInPandas(_gen, schema)
 
 
 def _geom_pair_match_udf(radius: float | None, predicate: str | None = None):

@@ -297,6 +297,11 @@ def knn_join(
     """
     if max_distance <= 0:
         raise ValueError("max_distance must be positive")
+    if query_id == candidate_id:
+        raise ValueError(
+            f"knn_join: query_id and candidate_id are both {query_id!r}; "
+            "the output needs two id columns, so rename one side's id"
+        )
     cs = float(max_distance)
     r2 = cs * cs
     spark = queries.sparkSession

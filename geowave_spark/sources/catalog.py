@@ -98,6 +98,8 @@ def checkpointed_write(
     # anything is written; the persisted frame serves them at execution
     summary = partials_summary(todo_df, "part_key", fields, extra=extra)
     hist = histogram_partials(todo_df, "part_key", *histogram_field) if histogram_field else None
+    if done and todo_df.isEmpty():  # a fully resumed write: one probe job
+        return {"written": [], "skipped": sorted(done)}
     todo_df.persist()
     # computed once (a local checkpoint, unlike a cached plan, lets the
     # adaptive planner coalesce its final stage); every table reads it

@@ -13,7 +13,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from geowave_spark.encode import DEFAULT_STRATEGY, distinct_polygon_tiers, polygon_cells_np
+from geowave_spark.encode import DEFAULT_STRATEGY, polygon_cells_np
 from geowave_spark.geom import (
     GeomBatch,
     cell_rect_intersects_geom,
@@ -358,22 +358,85 @@ class TestGeomPairJoin:
         assert len(want) > 5
 
     def test_keyed_sides_bounded(self, spark, ra, rb):
-        """Each keyed side ships one row per own trimmed insertion cell per
-        tier of the other side — bounded by |side|·dup·|other tiers|, not by
-        envelope area (re-covering one side's envelope at the other side's
-        finest tier made this fixture's probe side ~15.7M rows)."""
+        """Each keyed side ships its own trimmed insertion cells (the right
+        side's twice, once per role flag) plus the distinct strict
+        ancestors of those cells — bounded by |side|·dup·(2 + max_bits),
+        not by envelope area (re-covering one side's envelope at the other
+        side's finest tier made this fixture's probe side ~15.7M rows)."""
         da = spark.createDataFrame(ra[["gid", "wkt"]]).withColumnRenamed("gid", "aid")
         db = spark.createDataFrame(rb[["gid", "wkt"]]).withColumnRenamed("gid", "bid")
         probe, build = _pair_keyed_sides(da, db, 0.0, DEFAULT_STRATEGY, JOIN_MAX_DUPLICATES)
-        tiers_a = distinct_polygon_tiers(da, "wkt", max_duplicates=JOIN_MAX_DUPLICATES).count()
-        tiers_b = distinct_polygon_tiers(db, "wkt", max_duplicates=JOIN_MAX_DUPLICATES).count()
         n_probe, n_build = probe.count(), build.count()
-        assert n_probe <= self.NA * JOIN_MAX_DUPLICATES * tiers_b
-        assert n_build <= self.NB * JOIN_MAX_DUPLICATES * tiers_a
-        cells_a = len(polygon_cells_np(list(ra["wkt"]), max_duplicates=JOIN_MAX_DUPLICATES)[0])
-        cells_b = len(polygon_cells_np(list(rb["wkt"]), max_duplicates=JOIN_MAX_DUPLICATES)[0])
-        assert n_probe == cells_a * tiers_b
-        assert n_build == cells_b * tiers_a
+        per_geom = JOIN_MAX_DUPLICATES * (2 + DEFAULT_STRATEGY.max_bits)
+        assert n_probe <= self.NA * per_geom
+        assert n_build <= self.NB * per_geom
+
+        def own_and_ancestors(wkts):
+            row, tier, cell = polygon_cells_np(list(wkts), max_duplicates=JOIN_MAX_DUPLICATES)
+            anc = {
+                (int(r), t, int(c) >> (2 * (int(k) - t)))
+                for r, k, c in zip(row, tier, cell)
+                for t in range(int(k))
+            }
+            return len(row), len(anc)
+
+        own_a, anc_a = own_and_ancestors(ra["wkt"])
+        own_b, anc_b = own_and_ancestors(rb["wkt"])
+        assert n_probe == own_a + anc_a
+        assert n_build == 2 * own_b + anc_b
+
+    def test_candidate_rows_one_per_shared_coarse_cell(self, spark, ra, rb):
+        """The equi-join meets a pair once per coarse cell the two sides
+        share at the coarser tier — no more rows than the tier-shift key
+        (tier_a, tier_b, cell at the min tier), which meets it once per
+        pair of own cells shifted onto one coarse cell.  Both counts come
+        from a pandas merge of the numpy covers."""
+        da = spark.createDataFrame(ra[["gid", "wkt"]]).withColumnRenamed("gid", "aid")
+        db = spark.createDataFrame(rb[["gid", "wkt"]]).withColumnRenamed("gid", "bid")
+        probe, build = _pair_keyed_sides(da, db, 0.0, DEFAULT_STRATEGY, JOIN_MAX_DUPLICATES)
+        n_rows = probe.join(build, ["_t", "cell", "_k"]).count()
+
+        def cover(wkts):
+            row, tier, cell = polygon_cells_np(list(wkts), max_duplicates=JOIN_MAX_DUPLICATES)
+            return pd.DataFrame({"row": row, "tier": tier, "cell": cell})
+
+        a, b = cover(ra["wkt"]), cover(rb["wkt"])
+        merged = []
+        for ta in a["tier"].unique():
+            for tb in b["tier"].unique():
+                m = min(ta, tb)
+                ka = a[a["tier"] == ta].assign(key=lambda d: d["cell"] >> (2 * (ta - m)))
+                kb = b[b["tier"] == tb].assign(key=lambda d: d["cell"] >> (2 * (tb - m)))
+                merged.append(ka.merge(kb, on="key").assign(m=m)[["row_x", "row_y", "m", "key"]])
+        merged = pd.concat(merged)
+        tier_shift_rows = len(merged)
+        assert n_rows == len(merged.drop_duplicates())
+        assert n_rows <= tier_shift_rows
+        assert n_rows >= len(merged[["row_x", "row_y"]].drop_duplicates()) > 0
+
+    def test_action_job_count(self, spark, ra, rb):
+        """Building the join runs no Spark job, and a digest of its output
+        runs at most 5 (the tier-list plan ran 9: two tier scans, each
+        with its own shuffle and broadcast, told each side the other's
+        tiers)."""
+        da = spark.createDataFrame(ra[["gid", "wkt"]]).withColumnRenamed("gid", "aid")
+        db = spark.createDataFrame(rb[["gid", "wkt"]]).withColumnRenamed("gid", "bid")
+        sc = spark.sparkContext
+
+        def jobs(group, fn):
+            sc.setJobGroup(group, group)
+            try:
+                fn()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            return len(sc.statusTracker().getJobIdsForGroup(group))
+
+        out = []
+        assert jobs("geom_pair_build", lambda: out.append(geom_pair_join(da, db, "aid", "bid"))) == 0
+        digest = out[0].agg(
+            F.count(F.lit(1)), F.sum(F.xxhash64("aid", "bid").cast("decimal(20,0)"))
+        )
+        assert jobs("geom_pair_action", digest.collect) <= 5
 
     @pytest.mark.parametrize("empty", ["left", "right"])
     def test_empty_side(self, spark, ra, empty):

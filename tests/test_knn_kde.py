@@ -129,6 +129,13 @@ def test_knn_coincident_tiebreak(spark):
         assert sorted(got[f"q{i}"]) == [(rk + 1, f"c{i}_{rk}") for rk in range(3)]
 
 
+def test_knn_same_id_column_rejected(spark, pts):
+    """Equal query and candidate id names cannot make two output columns;
+    the frame refuses them by name before any job runs."""
+    with pytest.raises(ValueError, match="'image_id'"):
+        knn_join(pts, pts, k=1, max_distance=0.1, query_id="image_id", candidate_id="image_id")
+
+
 @pytest.mark.parametrize("k,max_dist", [(1, 0.05), (5, 0.2)])
 def test_knn_parity(spark, pts, pts_pdf, k, max_dist):
     got_rows = knn_join(

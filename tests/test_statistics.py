@@ -384,3 +384,19 @@ def test_side_table_job_counts(spark, side_table_input, tmp_path):
     assert _jobs(spark, "ckpt_two_fields", lambda: checkpointed_write(df, path, "part", stats_fields=["lon", "lat"])) == 11
     bin_col = F.pmod(F.col("part"), F.lit(4))
     assert _jobs(spark, "binned_three_fields", lambda: update_binned_statistics(df, path, bin_col, ["v", "word", "lat"])) == 2
+
+
+def test_resumed_write_job_count(spark, side_table_input, tmp_path):
+    """A write whose partitions are all in lineage reads the lineage and
+    probes the remainder for a row, and builds no summary: at most 4 Spark
+    jobs (8 when it checkpointed the empty summary)."""
+    from geowave_spark.sources.catalog import checkpointed_write
+
+    df = side_table_input
+    path = str(tmp_path / "tbl")
+    first = checkpointed_write(df, path, "part", stats_fields=["lon", "lat"])
+    resumed = []
+    n = _jobs(spark, "ckpt_resumed", lambda: resumed.append(checkpointed_write(df, path, "part", stats_fields=["lon", "lat"])))
+    assert resumed == [{"written": [], "skipped": first["written"]}]
+    assert n <= 4
+
