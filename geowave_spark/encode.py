@@ -27,13 +27,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .geom import (
-    flatten_parts,
-    parse_wkt,  # noqa: F401  (re-export)
-    parse_wkt_multi,
-    polygon_envelope,  # noqa: F401  (re-export)
-    rects_hit_geoms,
-)
+from .geom import GeomBatch, flatten_parts, parse_wkt_multi, rects_hit_geoms
 from .sfc import TieredStrategy
 from .sfc.geohash import geohash_encode
 from .sfc.hilbert import hilbert_to_xy
@@ -159,11 +153,7 @@ def with_spatiotemporal_cells(
 
 def _envelopes(geoms: list) -> np.ndarray:
     """(n, 4) minx, miny, maxx, maxy of non-EMPTY parsed geometries."""
-    env = np.empty((len(geoms), 4), dtype=np.float64)
-    for i, g in enumerate(geoms):
-        c = np.vstack(flatten_parts(g))
-        env[i] = (c[:, 0].min(), c[:, 1].min(), c[:, 0].max(), c[:, 1].max())
-    return env
+    return GeomBatch(geoms).envelopes()
 
 
 def distinct_polygon_tiers(
@@ -291,11 +281,11 @@ def polygon_cells_np(
     is one :func:`~geowave_spark.geom.rects_hit_geoms` call over every
     trimmed cell of the batch, with one ``hilbert_to_xy`` per distinct
     tier."""
-    geoms = [parse_wkt_multi(w) for w in wkts]
-    full = [i for i, g in enumerate(geoms) if flatten_parts(g)]  # EMPTY: no cells
-    if not full:
+    gb = GeomBatch([parse_wkt_multi(w) for w in wkts])
+    full = np.nonzero(gb.v_range[1])[0]  # EMPTY: no cells
+    if not len(full):
         return (np.empty(0, dtype=np.int64),) * 3
-    env = _envelopes([geoms[i] for i in full])
+    env = gb.envelopes()[full]
     row, tier, cell = strategy.envelope_insertion_ids(
         env[:, 0] - buffer,
         env[:, 1] - buffer,
@@ -303,7 +293,7 @@ def polygon_cells_np(
         env[:, 3] + buffer,
         max_duplicates=max_duplicates,
     )
-    row = np.asarray(full, dtype=np.int64)[row]
+    row = full[row]
     if not trim or not len(row):
         return row, tier, cell
     sel = np.nonzero((np.bincount(row)[row] > 3) & (tier != 0))[0]
@@ -317,11 +307,8 @@ def polygon_cells_np(
         span_y[m] = strategy.dim_y.range / (1 << int(t))
         rminx[m] = strategy.dim_x.min + cx.astype(np.float64) * span_x[m] - buffer
         rminy[m] = strategy.dim_y.min + cy.astype(np.float64) * span_y[m] - buffer
-    trimmed, rect_geom = np.unique(row[sel], return_inverse=True)
     hit = rects_hit_geoms(
-        rminx, rminy,
-        rminx + span_x + 2 * buffer, rminy + span_y + 2 * buffer,
-        rect_geom, [geoms[i] for i in trimmed],
+        rminx, rminy, rminx + span_x + 2 * buffer, rminy + span_y + 2 * buffer, row[sel], gb
     )
     keep = np.ones(len(row), dtype=bool)
     keep[sel[~hit]] = False

@@ -3,18 +3,22 @@
 Implements the exact-predicate math GeoWave gets from JTS
 (core/geotime/.../store/query/filter/SpatialQueryFilter.java predicates,
 analytics/spark/.../sparksql/udf/{GeomIntersects,GeomWithinDistance,
-GeomDistance}.java): point-in-polygon, point↔segment/polygon distance,
-envelope intersection — the fine-filter stage that runs after the coarse
-cell-range join.
+GeomDistance}.java): point-in-polygon, point↔geometry and
+geometry↔geometry distance, rect↔geometry intersection — the fine-filter
+stage that runs after the coarse cell-range join.
 
-Polygons are (N, 2) float arrays of ring vertices.  Interior rings
-(holes) are supported as of r3: ``parse_wkt_multi`` keeps every ring,
-and geometry-level containment is the CROSSING PARITY of strict
-containment across a geometry's closed rings OR exactly-on-boundary —
-one rule that covers exterior+hole rings and disjoint multipolygon
-shells alike (``points_contained_batch``).  The single-ring fast paths
-(``points_in_polygons_batch``) stay as-is for the simple-ring pipelines.
-A minimal WKT POLYGON/POINT parser reads the fixture format.
+``parse_wkt_multi`` reads POINT, LINESTRING, POLYGON (holes kept), their
+MULTI* forms and GEOMETRYCOLLECTION into ``(kind, parts)``.
+:class:`GeomBatch` lays a batch of parsed geometries out as one flat
+vertex table, and every exact kernel reads it: the point kernels, the
+geometry-pair distance, the cell trim's rect test and the DE-9IM relate
+(:mod:`geowave_spark.relate`).  A kernel pairs each item only with its
+own geometry's vertices or edges, in blocks of bounded size, so no row
+pays for the longest ring of its batch.  Containment is the CROSSING
+PARITY of strict containment across a geometry's closed rings OR exactly
+on a ring — one rule for exterior + hole rings and disjoint multipolygon
+shells alike.  ``points_in_polygon``, ``points_segments_dist2`` and
+``points_polygon_dist2`` are the single-ring reference forms.
 """
 
 from __future__ import annotations
@@ -22,7 +26,7 @@ from __future__ import annotations
 import numpy as np
 
 
-# --- WKT (minimal: POINT, POLYGON without holes) -------------------------
+# --- WKT -----------------------------------------------------------------
 
 def parse_wkt(wkt: str) -> tuple[str, np.ndarray]:
     """Parse 'POINT (x y)' or 'POLYGON ((x y, ...))' → (kind, coords).
@@ -144,16 +148,9 @@ def flatten_parts(g: tuple[str, list]) -> list[np.ndarray]:
 
 def any_pair_dist2(a: tuple[str, list], b: tuple[str, list]) -> float:
     """Squared distance between two parsed geometries of ANY kind
-    (collections = min over component pairs — JTS union semantics)."""
-    best = np.inf
-    for ka, pa in as_components(a):
-        for kb, pb in as_components(b):
-            d = geoms_pair_dist2(pa, geom_is_closed(ka), pb, geom_is_closed(kb))
-            if d < best:
-                best = d
-            if best == 0.0:
-                return 0.0
-    return float(best)
+    (collections = min over component pairs — JTS union semantics): the
+    pair kernel of :func:`pairs_dist2` on a batch of one."""
+    return float(_parsed_pairs_dist2([a], [b])[0])
 
 
 def _coords(txt: str) -> np.ndarray:
@@ -245,153 +242,207 @@ def points_polygon_dist2(px: np.ndarray, py: np.ndarray, poly: np.ndarray) -> np
     return np.where(inside, 0.0, d2)
 
 
-def points_in_polygons_batch(
-    px: np.ndarray, py: np.ndarray, codes: np.ndarray, padded: np.ndarray
-) -> np.ndarray:
-    """Boundary-inclusive PIP for N (point, polygon-code) rows in one shot.
-
-    ``padded`` is a (K, E, 2) :attr:`GeomBatch.padded` array; ``codes`` maps
-    each row to its polygon.  One (N, E) vectorized pass — no per-group
-    Python, which is what makes the join's fine filter scale.
-    """
-    P = padded[codes]  # (N, E, 2)
-    x1 = P[:, :, 0]
-    y1 = P[:, :, 1]
-    x2 = np.roll(x1, -1, axis=1)
-    y2 = np.roll(y1, -1, axis=1)
-    pxv = px[:, None]
-    pyv = py[:, None]
-    cond = (y1 > pyv) != (y2 > pyv)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        xint = x1 + (pyv - y1) / (y2 - y1) * (x2 - x1)
-    inside = ((cond & (pxv < xint)).sum(axis=1) % 2) == 1
-    cross = (x2 - x1) * (pyv - y1) - (y2 - y1) * (pxv - x1)
-    on_edge = (
-        (cross == 0.0)
-        & (pxv >= np.minimum(x1, x2))
-        & (pxv <= np.maximum(x1, x2))
-        & (pyv >= np.minimum(y1, y2))
-        & (pyv <= np.maximum(y1, y2))
-    ).any(axis=1)
-    return inside | on_edge
-
-
 class GeomBatch:
-    """Part-batched geometries for the vectorized kernels.
+    """Parsed geometries as one flat vertex table: the one layout every
+    exact kernel reads.
 
-    Holds K parts (rings / polylines / points) across N geometries as one
-    padded (K, E, 2) vertex array plus a per-part ``closed`` flag and a
-    part→geometry map.  Closed parts (polygon exterior rings) keep their
-    wrap edge and participate in containment; open parts (LINESTRING,
-    POINT) get the wrap edge masked to zero length and never "contain" —
-    this is the fix for the phantom-ring line-distance bug (round-2
-    verdict #2): a LINESTRING's distance is min over its E−1 real
-    segments, with no closing edge and no interior.
+    Vertices ``x``, ``y`` are sorted by geometry, then part.  A closed part
+    (a polygon ring) drops its repeated closing vertex, so a ring given as
+    one coordinate is empty.  Its vertex ``j`` starts the edge to ``j + 1``
+    and its last vertex wraps to its first.  An open part (LINESTRING,
+    POINT) keeps its real segments only, with no closing edge and no
+    interior, so a LINESTRING's distance never sees a phantom ring (round-2
+    verdict #2).  Parts of a mixed GEOMETRYCOLLECTION keep their own
+    closedness, so containment sees only the polygon-family rings: the
+    union semantics MULTIPOLYGON already gets.  A closed part of fewer
+    than three vertices has no interior: the point kernels treat it as
+    open.
+
+    Pickled, the table keeps the vertices and three per-part arrays, so a
+    broadcast costs Σ vertices × 16 B plus 17 B per part; the index arrays
+    are rebuilt on load.
     """
+
+    _STATE = ("n", "x", "y", "part_geom", "part_closed", "part_nv")
 
     def __init__(self, parsed: list[tuple[str, list[np.ndarray]]]):
-        parts: list[np.ndarray] = []
-        closed: list[bool] = []
-        part_geom: list[int] = []
-        for gi, g in enumerate(parsed):
-            # mixed GEOMETRYCOLLECTION (r4): flatten components with
-            # PER-PART closedness — the parity containment rule then sees
-            # only the polygon-family rings, which is exactly the union
-            # semantics MULTIPOLYGON already gets
-            for kind, ps in as_components(g):
-                c = geom_is_closed(kind)
-                for p in ps:
-                    if c and len(p) > 1 and np.array_equal(p[0], p[-1]):
-                        p = p[:-1]
-                    parts.append(p)
-                    closed.append(bool(c) and len(p) >= 3)
-                    part_geom.append(gi)
+        parts = [
+            (gi, c, p[:-1] if c and np.array_equal(p[0], p[-1]) else p)
+            for gi, g in enumerate(parsed)
+            for kind, ps in as_components(g)
+            for c in (geom_is_closed(kind),)
+            for p in ps
+        ]
+        parts = [t for t in parts if len(t[2])]
+        v = np.concatenate([p for *_, p in parts]) if parts else np.zeros((0, 2))
         self.n = len(parsed)
-        if parts:
-            E = max(len(p) for p in parts)
-            padded = np.empty((len(parts), E, 2), dtype=np.float64)
-            for k, p in enumerate(parts):
-                padded[k, : len(p)] = p
-                padded[k, len(p):] = p[-1]
-            self.padded = padded
-        else:
-            self.padded = np.zeros((0, 1, 2), dtype=np.float64)
-        self.closed = np.array(closed, dtype=bool)
-        self.part_geom = np.array(part_geom, dtype=np.int64)
-        counts = np.bincount(self.part_geom, minlength=self.n).astype(np.int64)
-        self.part_count = counts
-        self.part_start = np.concatenate(([0], np.cumsum(counts)[:-1])).astype(np.int64)
+        self.x = np.ascontiguousarray(v[:, 0], dtype=np.float64)
+        self.y = np.ascontiguousarray(v[:, 1], dtype=np.float64)
+        self.part_geom = np.array([gi for gi, _, _ in parts], dtype=np.int64)
+        self.part_closed = np.array([c for _, c, _ in parts], dtype=bool)
+        self.part_nv = np.array([len(p) for *_, p in parts], dtype=np.int64)
+        self._index()
+
+    def __getstate__(self):
+        return {k: self.__dict__[k] for k in self._STATE}
+
+    def __setstate__(self, state):
+        self.__dict__.update(state)
+        self._index()
+
+    def _index(self) -> None:
+        nv = self.part_nv
+        self.vpart = np.repeat(np.arange(len(nv), dtype=np.int64), nv)
+        vgeom = self.part_geom[self.vpart]
+        self.v_range = _ranges(vgeom, self.n)
+        # the parts with an interior: closed, with three vertices or more
+        self.ring = self.part_closed & (nv >= 3)
+        j = np.arange(len(self.x), dtype=np.int64)
+        first = (np.cumsum(nv) - nv)[self.vpart]
+        last = j == first + nv[self.vpart] - 1
+        # the point kernels' segment from each vertex: a ring's last vertex
+        # wraps, any other part's ends in its zero-length last vertex
+        self.nxt = np.where(last, np.where(self.ring[self.vpart], first, j), j + 1)
+        # every edge: a closed part's n (a one-vertex ring's is zero-length),
+        # an open part's n - 1
+        e = self.part_closed[self.vpart] | ~last
+        self.e_start = j[e]
+        self.e_end = np.where(last, first, j + 1)[e]
+        self.e_range = _ranges(vgeom[e], self.n)
 
     def envelopes(self) -> np.ndarray:
-        """(N, 4) per-geometry envelope over all parts (padding vertices
-        repeat real ones, so they never widen the box)."""
-        env = np.empty((self.n, 4), dtype=np.float64)
-        pminx = self.padded[:, :, 0].min(axis=1)
-        pmaxx = self.padded[:, :, 0].max(axis=1)
-        pminy = self.padded[:, :, 1].min(axis=1)
-        pmaxy = self.padded[:, :, 1].max(axis=1)
-        env[:, 0] = np.inf
-        env[:, 1] = np.inf
-        env[:, 2] = -np.inf
-        env[:, 3] = -np.inf
-        np.minimum.at(env[:, 0], self.part_geom, pminx)
-        np.minimum.at(env[:, 1], self.part_geom, pminy)
-        np.maximum.at(env[:, 2], self.part_geom, pmaxx)
-        np.maximum.at(env[:, 3], self.part_geom, pmaxy)
+        """(N, 4) minx, miny, maxx, maxy per geometry; (inf, inf, -inf,
+        -inf) for one without vertices (EMPTY)."""
+        env = np.full((self.n, 4), np.inf)
+        env[:, 2:] = -np.inf
+        start, count = self.v_range
+        m = count > 0
+        if m.any():
+            for k, (f, c) in enumerate(
+                ((np.minimum, self.x), (np.minimum, self.y), (np.maximum, self.x), (np.maximum, self.y))
+            ):
+                env[m, k] = f.reduceat(c, start[m])
         return env
 
 
-def _expand_to_parts(codes: np.ndarray, gb: GeomBatch) -> tuple[np.ndarray, np.ndarray]:
-    """(row, geom_code) rows → (expanded_row_index, part_index) with one
-    entry per part of the row's geometry (vectorized explode)."""
-    cnt = gb.part_count[codes]
-    total = int(cnt.sum())
-    rows = np.repeat(np.arange(len(codes), dtype=np.int64), cnt)
-    starts2 = np.concatenate(([0], np.cumsum(cnt)[:-1]))
-    off = np.arange(total, dtype=np.int64) - np.repeat(starts2, cnt)
-    pcodes = np.repeat(gb.part_start[codes], cnt) + off
-    return rows, pcodes
+def _ranges(sorted_geom: np.ndarray, n: int) -> tuple[np.ndarray, np.ndarray]:
+    """(start, count) of each geometry's run in a geometry-sorted table."""
+    count = np.bincount(sorted_geom, minlength=n).astype(np.int64)
+    return np.cumsum(count) - count, count
 
 
-def _points_parts_dist2(
-    px: np.ndarray,
-    py: np.ndarray,
-    pcodes: np.ndarray,
-    gb: GeomBatch,
-    interior_zero: bool = True,
-) -> np.ndarray:
-    """Squared distance from each point to its part (0 inside closed rings
-    unless ``interior_zero=False`` — the parity-aware geometry-level
-    callers zero the interior themselves; open parts use only their real
-    segments — no wrap edge)."""
-    P = gb.padded[pcodes]
-    x1 = P[:, :, 0]
-    y1 = P[:, :, 1]
-    x2 = np.roll(x1, -1, axis=1)
-    y2 = np.roll(y1, -1, axis=1)
-    open_m = ~gb.closed[pcodes]
-    if open_m.any():
-        # wrap edge (last padded vertex → first vertex) exists only for
-        # closed rings; zero it out for open parts so it is inert
-        x2[open_m, -1] = x1[open_m, -1]
-        y2[open_m, -1] = y1[open_m, -1]
+# (item, vertex or edge) pairs evaluated per numpy pass
+_RECT_PAIR_BLOCK = 1 << 20
+
+
+def _range_pairs(items: np.ndarray, item_geom: np.ndarray, ranges):
+    """(item, index) pairs: each of ``items`` against every index of its
+    geometry ``item_geom[item]``'s (start, count) range, in blocks of
+    about ``_RECT_PAIR_BLOCK`` pairs that never split an item.  Pairs come
+    sorted by item, then index."""
+    start, count = ranges
+    g = item_geom[items]
+    cnt = count[g]
+    ends = np.cumsum(cnt)
+    lo = 0
+    while lo < len(items):
+        base = ends[lo - 1] if lo else 0
+        hi = max(lo + 1, int(np.searchsorted(ends, base + _RECT_PAIR_BLOCK, side="right")))
+        c = cnt[lo:hi]
+        if c.any():
+            off = np.arange(int(c.sum()), dtype=np.int64) - np.repeat(np.cumsum(c) - c, c)
+            yield np.repeat(items[lo:hi], c), np.repeat(start[g[lo:hi]], c) + off
+        lo = hi
+
+
+def _run_starts(item: np.ndarray, part: np.ndarray) -> np.ndarray:
+    """Start of each (item, part) run of pairs sorted by item, then part."""
+    return np.nonzero(np.r_[True, (item[1:] != item[:-1]) | (part[1:] != part[:-1])])[0]
+
+
+def _cross(px, py, x1, y1, x2, y2):
+    """Orientation of each point against its segment (x1, y1)→(x2, y2):
+    0 on the segment's line."""
+    return (x2 - x1) * (py - y1) - (y2 - y1) * (px - x1)
+
+
+def _on_segment(px, py, x1, y1, x2, y2, cross):
+    """Exact on-segment test: ``cross`` 0 and the point in the segment's box."""
+    return (
+        (cross == 0.0)
+        & (px >= np.minimum(x1, x2))
+        & (px <= np.maximum(x1, x2))
+        & (py >= np.minimum(y1, y2))
+        & (py <= np.maximum(y1, y2))
+    )
+
+
+def _ray_parity(px, py, x1, y1, x2, y2, first):
+    """Per run of (point, edge) pairs starting at ``first``: does the
+    point's rightward ray cross the run's edges an odd number of times,
+    and does the point lie exactly on one of them?"""
+    cond = (y1 > py) != (y2 > py)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        xint = x1 + (py - y1) / (y2 - y1) * (x2 - x1)
+    odd = np.add.reduceat(cond & (px < xint), first, dtype=np.int64) % 2 == 1
+    on = _on_segment(px, py, x1, y1, x2, y2, _cross(px, py, x1, y1, x2, y2))
+    return odd, np.logical_or.reduceat(on, first)
+
+
+def _seg_dist2(px, py, x1, y1, x2, y2):
+    """Squared distance from each point to its segment; a zero-length
+    segment is its vertex."""
     dx = x2 - x1
     dy = y2 - y1
     seg_len2 = dx * dx + dy * dy
     safe = np.where(seg_len2 == 0, 1.0, seg_len2)
-    pxv = px[:, None]
-    pyv = py[:, None]
-    t = np.clip(((pxv - x1) * dx + (pyv - y1) * dy) / safe, 0.0, 1.0)
+    t = np.clip(((px - x1) * dx + (py - y1) * dy) / safe, 0.0, 1.0)
     cx = x1 + t * dx
     cy = y1 + t * dy
-    d2 = ((pxv - cx) ** 2 + (pyv - cy) ** 2).min(axis=1)
-    if interior_zero:
-        cmask = gb.closed[pcodes]
-        if cmask.any():
-            sub = np.nonzero(cmask)[0]
-            ins = points_in_polygons_batch(px[sub], py[sub], pcodes[sub], gb.padded)
-            d2[sub[ins]] = 0.0
-    return d2
+    return (px - cx) ** 2 + (py - cy) ** 2
+
+
+def _points_kernel(px, py, codes, gb: GeomBatch):
+    """Each point against the parts of its geometry ``codes[k]`` of
+    ``gb`` → (contained, dist2, on_open) per point.
+
+    One pass over (point, vertex) pairs, vertex ``j`` standing for the
+    segment to ``gb.nxt[j]``.  Per (point, part): the squared distance is
+    the min over those segments, and a ring adds its crossing parity (one
+    ``np.add.reduceat``) and an exact on-edge test.  Containment is hole-
+    and multipart-aware (r3): the XOR over rings of inside (odd parity or
+    on an edge), OR at distance 0 from some ring, so a hole's boundary
+    belongs to the polygon.  ``dist2`` is the min over parts, 0 where contained;
+    ``on_open`` is distance 0 to a part without interior."""
+    px = np.asarray(px, dtype=np.float64)
+    py = np.asarray(py, dtype=np.float64)
+    codes = np.asarray(codes, dtype=np.int64)
+    n = len(codes)
+    runs = []
+    for r, j in _range_pairs(np.arange(n, dtype=np.int64), codes, gb.v_range):
+        part = gb.vpart[j]
+        first = _run_starts(r, part)
+        qx, qy = px[r], py[r]
+        x1, y1, x2, y2 = gb.x[j], gb.y[j], gb.x[gb.nxt[j]], gb.y[gb.nxt[j]]
+        odd, on = _ray_parity(qx, qy, x1, y1, x2, y2, first)
+        d2 = np.minimum.reduceat(_seg_dist2(qx, qy, x1, y1, x2, y2), first)
+        runs.append((r[first], part[first], d2, odd | on))
+    if runs:
+        row, part, d2, incl = (np.concatenate(c) for c in zip(*runs))
+    else:
+        row = part = np.zeros(0, dtype=np.int64)
+        d2, incl = np.zeros(0), np.zeros(0, dtype=bool)
+    ring = gb.ring[part]
+    zero = d2 == 0.0
+    contained = np.zeros(n, dtype=bool)
+    np.logical_xor.at(contained, row[ring], incl[ring])
+    contained[row[ring & zero]] = True
+    dist2 = np.full(n, np.inf)
+    np.minimum.at(dist2, row, d2)
+    dist2[contained] = 0.0
+    on_open = np.zeros(n, dtype=bool)
+    on_open[row[~ring & zero]] = True
+    return contained, dist2, on_open
 
 
 def points_contained_batch(
@@ -402,19 +453,7 @@ def points_contained_batch(
     geometry's closed rings (odd ⇒ in the filled area — one rule covers
     exterior+hole rings AND disjoint multipolygon shells) OR exactly on
     any ring boundary (the hole boundary belongs to the polygon)."""
-    rows, pcodes = _expand_to_parts(codes, gb)
-    cmask = gb.closed[pcodes]
-    parity = np.zeros(len(codes), dtype=bool)
-    on_ring = np.zeros(len(codes), dtype=bool)
-    if cmask.any():
-        sub = np.nonzero(cmask)[0]
-        sx, sy = px[rows[sub]], py[rows[sub]]
-        incl = points_in_polygons_batch(sx, sy, pcodes[sub], gb.padded)
-        seg_d2 = _points_parts_dist2(sx, sy, pcodes[sub], gb, interior_zero=False)
-        on = seg_d2 == 0.0
-        np.logical_xor.at(parity, rows[sub], incl & ~on)
-        np.logical_or.at(on_ring, rows[sub], on)
-    return parity | on_ring
+    return _points_kernel(px, py, codes, gb)[0]
 
 
 def points_geoms_dist2_batch(
@@ -424,12 +463,7 @@ def points_geoms_dist2_batch(
     over every part's segments, then 0 where the geometry contains the
     point (parity rule — a point inside a hole keeps its distance to the
     hole boundary instead of snapping to 0)."""
-    rows, pcodes = _expand_to_parts(codes, gb)
-    d2 = _points_parts_dist2(px[rows], py[rows], pcodes, gb, interior_zero=False)
-    out = np.full(len(codes), np.inf, dtype=np.float64)
-    np.minimum.at(out, rows, d2)
-    out[points_contained_batch(px, py, codes, gb)] = 0.0
-    return out
+    return _points_kernel(px, py, codes, gb)[1]
 
 
 def points_intersect_geoms_batch(
@@ -438,56 +472,83 @@ def points_intersect_geoms_batch(
     """Point INTERSECTS geometry: hole-aware parity containment for the
     closed rings; exact on-segment (d² == 0) for open parts; coordinate
     equality for point parts."""
-    rows, pcodes = _expand_to_parts(codes, gb)
-    hit = np.zeros(len(rows), dtype=bool)
-    omask = ~gb.closed[pcodes]
-    if omask.any():
-        sub = np.nonzero(omask)[0]
-        hit[sub] = (
-            _points_parts_dist2(px[rows[sub]], py[rows[sub]], pcodes[sub], gb) == 0.0
-        )
-    out = np.zeros(len(codes), dtype=bool)
-    np.logical_or.at(out, rows, hit)
-    return out | points_contained_batch(px, py, codes, gb)
+    contained, _, on_open = _points_kernel(px, py, codes, gb)
+    return contained | on_open
 
 
-def _part_edges(p: np.ndarray, closed: bool) -> tuple[np.ndarray, np.ndarray]:
-    """Explicit (start, end) edge arrays of one part, honoring openness."""
-    if closed:
-        a = p[:-1] if len(p) > 1 and np.array_equal(p[0], p[-1]) else p
-        return a, np.roll(a, -1, axis=0)
-    return p[:-1], p[1:]
+def points_on_edges(
+    px: np.ndarray, py: np.ndarray, codes: np.ndarray, gb: GeomBatch
+) -> np.ndarray:
+    """Does each point lie exactly on an edge of its geometry (cross
+    product 0 within the edge's box)?  A one-vertex ring has no edge to
+    lie on."""
+    px = np.asarray(px, dtype=np.float64)
+    py = np.asarray(py, dtype=np.float64)
+    out = np.zeros(len(px), dtype=bool)
+    for r, i in _range_pairs(np.arange(len(px), dtype=np.int64), np.asarray(codes, dtype=np.int64), gb.e_range):
+        s, e = gb.e_start[i], gb.e_end[i]
+        x1, y1, x2, y2 = gb.x[s], gb.y[s], gb.x[e], gb.y[e]
+        on = _on_segment(px[r], py[r], x1, y1, x2, y2, _cross(px[r], py[r], x1, y1, x2, y2))
+        out[r[on & (s != e)]] = True
+    return out
 
 
-def geoms_pair_dist2(
-    parts_a: list[np.ndarray], closed_a: bool,
-    parts_b: list[np.ndarray], closed_b: bool,
-) -> float:
-    """Squared distance between two arbitrary geometries (each a list of
-    open polylines OR closed rings): 0 if any edges intersect or either's
-    vertices lie inside the other's closed rings; else the min vertex→edge
-    distance either way (exact for piecewise-linear, non-crossing
-    geometries — the closest approach of two non-intersecting segment sets
-    is attained at a vertex of one of them)."""
-    for a in parts_a:
-        for b in parts_b:
-            if len(a) > 1 and len(b) > 1 and rings_edges_intersect(
-                a, b, closed_a=closed_a, closed_b=closed_b
-            ):
-                return 0.0
-    kb = "POLYGON" if closed_b else "LINESTRING"
-    ka = "POLYGON" if closed_a else "LINESTRING"
-    gb_b = GeomBatch([(kb, parts_b)])
-    gb_a = GeomBatch([(ka, parts_a)])
-    va = np.vstack(parts_a)
-    vb = np.vstack(parts_b)
-    d1 = points_geoms_dist2_batch(
-        va[:, 0], va[:, 1], np.zeros(len(va), dtype=np.int64), gb_b
-    ).min()
-    d2 = points_geoms_dist2_batch(
-        vb[:, 0], vb[:, 1], np.zeros(len(vb), dtype=np.int64), gb_a
-    ).min()
-    return float(min(d1, d2))
+def _segments_meet(ax1, ay1, ax2, ay2, bx1, by1, bx2, by2):
+    """Do segments a and b share a point?  Orientation test; collinear
+    and endpoint touches count."""
+    d1 = _cross(ax1, ay1, bx1, by1, bx2, by2)
+    d2 = _cross(ax2, ay2, bx1, by1, bx2, by2)
+    d3 = _cross(bx1, by1, ax1, ay1, ax2, ay2)
+    d4 = _cross(bx2, by2, ax1, ay1, ax2, ay2)
+    proper = (
+        ((d1 > 0) != (d2 > 0)) & ((d3 > 0) != (d4 > 0))
+        & (d1 != 0) & (d2 != 0) & (d3 != 0) & (d4 != 0)
+    )
+    return (
+        proper
+        | _on_segment(ax1, ay1, bx1, by1, bx2, by2, d1)
+        | _on_segment(ax2, ay2, bx1, by1, bx2, by2, d2)
+        | _on_segment(bx1, by1, ax1, ay1, ax2, ay2, d3)
+        | _on_segment(bx2, by2, ax1, ay1, ax2, ay2, d4)
+    )
+
+
+def _parsed_pairs_dist2(a: list, b: list) -> np.ndarray:
+    """Squared distance between parsed geometries ``a[i]`` and ``b[i]``,
+    any kinds.  A collection is the union of its components (JTS), so a
+    row's distance is the min over its component pairs.  A component pair
+    is at 0 when an edge of one meets an edge of the other; otherwise at
+    the min vertex → geometry distance either way, which is 0 for a vertex
+    inside the other's rings.  That is exact for piecewise-linear
+    geometries: two segment sets that do not cross come closest at a
+    vertex of one of them."""
+    ca, cb, row = [], [], []
+    for i, (ga, gb) in enumerate(zip(a, b)):
+        for x in as_components(ga):
+            for y in as_components(gb):
+                ca.append(x)
+                cb.append(y)
+                row.append(i)
+    ta, tb = GeomBatch(ca), GeomBatch(cb)
+    pair = np.arange(len(ca), dtype=np.int64)
+    meet = np.zeros(len(ca), dtype=bool)
+    for p, ea in _range_pairs(pair, pair, ta.e_range):
+        for k, eb in _range_pairs(np.arange(len(p), dtype=np.int64), p, tb.e_range):
+            sa, fa = ta.e_start[ea[k]], ta.e_end[ea[k]]
+            sb, fb = tb.e_start[eb], tb.e_end[eb]
+            hit = _segments_meet(
+                ta.x[sa], ta.y[sa], ta.x[fa], ta.y[fa], tb.x[sb], tb.y[sb], tb.x[fb], tb.y[fb]
+            )
+            meet[p[k[hit]]] = True
+    d_ab, d_ba = (np.full(len(ca), np.inf) for _ in range(2))
+    for d, t, u in ((d_ab, ta, tb), (d_ba, tb, ta)):
+        for p, v in _range_pairs(pair, pair, t.v_range):
+            np.minimum.at(d, p, points_geoms_dist2_batch(t.x[v], t.y[v], p, u))
+    d = np.where(d_ba < d_ab, d_ba, d_ab)  # min(d_ab, d_ba): a NaN d_ba never wins
+    d[meet] = 0.0
+    out = np.full(len(a), np.inf)
+    np.fmin.at(out, np.asarray(row, dtype=np.int64), d)
+    return out
 
 
 _PARSE_CACHE: dict[str, tuple[str, list]] = {}
@@ -512,17 +573,17 @@ def pairs_dist2(a, b) -> np.ndarray:
     The one exact distance kernel behind the SQL distance predicates and
     :func:`~geowave_spark.operators.join.geom_pair_join`: intersects is
     ``== 0``, within-distance ``<= r²``.  POINT × POINT pairs are one
-    vectorized pass, POINT × geometry pairs (either order) one
-    :class:`GeomBatch` pass, and the remaining pairs go through
-    :func:`any_pair_dist2` (open polylines keep only their real segments;
-    closed rings keep interior distance 0)."""
+    vectorized pass, POINT × geometry pairs (either order) one point-kernel
+    pass, and the remaining pairs one :func:`any_pair_dist2` pass over
+    every component pair of the batch (open polylines keep only their real
+    segments; closed rings keep interior distance 0)."""
     a = np.asarray(a, dtype=object)
     b = np.asarray(b, dtype=object)
     out = np.full(len(a), np.nan, dtype=np.float64)
     rows = [i for i in range(len(a)) if isinstance(a[i], str) and isinstance(b[i], str)]
     ga = {i: parse_wkt_cached(a[i]) for i in rows}
     gb = {i: parse_wkt_cached(b[i]) for i in rows}
-    pp, pts, geoms, prow = [], [], [], []
+    pp, pts, geoms, prow, ext = [], [], [], [], []
     for i in rows:
         if not ga[i][1] or not gb[i][1]:
             out[i] = np.inf
@@ -532,7 +593,7 @@ def pairs_dist2(a, b) -> np.ndarray:
             p, g = (ga[i], gb[i]) if ga[i][0] == "POINT" else (gb[i], ga[i])
             pts.append(p[1][0][0]); geoms.append(g); prow.append(i)
         else:
-            out[i] = any_pair_dist2(ga[i], gb[i])
+            ext.append(i)
     if pp:
         pa = np.array([ga[i][1][0][0] for i in pp])
         pb = np.array([gb[i][1][0][0] for i in pp])
@@ -542,6 +603,8 @@ def pairs_dist2(a, b) -> np.ndarray:
         out[prow] = points_geoms_dist2_batch(
             xy[:, 0], xy[:, 1], np.arange(len(geoms), dtype=np.int64), GeomBatch(geoms)
         )
+    if ext:
+        out[ext] = _parsed_pairs_dist2([ga[i] for i in ext], [gb[i] for i in ext])
     return out
 
 
@@ -559,82 +622,17 @@ def cell_rect_intersects_geom(
     return rects_hit_geoms(cminx, cminy, cmaxx, cmaxy, np.zeros(len(cminx), dtype=np.int64), [g])
 
 
-# (rect, vertex or edge) pairs evaluated per numpy pass
-_RECT_PAIR_BLOCK = 1 << 20
-
-
-class _EdgeTable:
-    """Flat vertex and edge tables of parsed geometries for
-    :func:`rects_hit_geoms`, each sorted by geometry, then part.  A closed
-    ring drops its repeated closing vertex and keeps its wrap edge; an open
-    part keeps its real segments only (none for a single vertex)."""
-
-    def __init__(self, geoms: list):
-        parts = [
-            (gi, c, p[:-1] if c and np.array_equal(p[0], p[-1]) else p)
-            for gi, g in enumerate(geoms)
-            for kind, ps in as_components(g)
-            for c in (geom_is_closed(kind),)
-            for p in ps
-        ]
-        n = len(geoms)
-        nv = np.array([len(p) for _, _, p in parts], dtype=np.int64)
-        v = np.concatenate([p for _, _, p in parts]) if parts else np.zeros((0, 2))
-        vgeom = np.repeat(np.array([gi for gi, _, _ in parts], dtype=np.int64), nv)
-        vpart = np.repeat(np.arange(len(parts), dtype=np.int64), nv)
-        closed = np.repeat(np.array([c for _, c, _ in parts], dtype=bool), nv)
-        first = np.repeat(np.cumsum(nv) - nv, nv)
-        nxt = np.arange(len(v), dtype=np.int64) + 1
-        last = nxt == first + np.repeat(nv, nv)
-        nxt[last] = first[last]  # a closed ring wraps to its first vertex
-        e = closed | ~last
-        self.vx, self.vy = v[:, 0], v[:, 1]
-        self.v_range = _ranges(vgeom, n)
-        # every edge: the clip test; closed rings' edges: corner parity
-        self.x1, self.y1 = v[e, 0], v[e, 1]
-        self.x2, self.y2 = v[nxt[e], 0], v[nxt[e], 1]
-        self.e_range = _ranges(vgeom[e], n)
-        ring = closed[e]
-        self.ring_edge = np.nonzero(ring)[0]
-        self.ring_part = vpart[e][ring]
-        self.r_range = _ranges(vgeom[e][ring], n)
-
-
-def _ranges(sorted_geom: np.ndarray, n: int) -> tuple[np.ndarray, np.ndarray]:
-    """(start, count) of each geometry's run in a geometry-sorted table."""
-    count = np.bincount(sorted_geom, minlength=n).astype(np.int64)
-    return np.cumsum(count) - count, count
-
-
-def _rect_pairs(rects: np.ndarray, rect_geom: np.ndarray, ranges):
-    """(rect, item) index pairs: each rect of ``rects`` against every item
-    of its geometry's (start, count) range, in blocks of about
-    ``_RECT_PAIR_BLOCK`` pairs that never split a rect."""
-    start, count = ranges
-    g = rect_geom[rects]
-    cnt = count[g]
-    ends = np.cumsum(cnt)
-    lo = 0
-    while lo < len(rects):
-        base = ends[lo - 1] if lo else 0
-        hi = max(lo + 1, int(np.searchsorted(ends, base + _RECT_PAIR_BLOCK, side="right")))
-        c = cnt[lo:hi]
-        if c.any():
-            off = np.arange(int(c.sum()), dtype=np.int64) - np.repeat(np.cumsum(c) - c, c)
-            yield np.repeat(rects[lo:hi], c), np.repeat(start[g[lo:hi]], c) + off
-        lo = hi
-
-
 def rects_hit_geoms(
     rminx: np.ndarray,
     rminy: np.ndarray,
     rmaxx: np.ndarray,
     rmaxy: np.ndarray,
     rect_geom: np.ndarray,
-    geoms: list,
+    geoms,
 ) -> np.ndarray:
-    """Does each closed rect ``k`` intersect the parsed geometry
-    ``geoms[rect_geom[k]]``?  → (K,) bool.
+    """Does each closed rect ``k`` intersect the geometry ``rect_geom[k]``
+    of ``geoms`` (parsed geometries, or their :class:`GeomBatch`)?
+    → (K,) bool.
 
     The package's one rect ∩ geometry test: the trimIndexIds pruning of
     :func:`~geowave_spark.encode.polygon_cells_np` (RDDUtils.java:158-184)
@@ -648,35 +646,23 @@ def rects_hit_geoms(
     """
     rminx, rminy, rmaxx, rmaxy = (np.asarray(a, dtype=np.float64) for a in (rminx, rminy, rmaxx, rmaxy))
     rect_geom = np.asarray(rect_geom, dtype=np.int64)
-    t = _EdgeTable(geoms)
+    t = geoms if isinstance(geoms, GeomBatch) else GeomBatch(geoms)
     hit = np.zeros(len(rminx), dtype=bool)
-    for r, i in _rect_pairs(np.arange(len(rminx)), rect_geom, t.v_range):
-        vx, vy = t.vx[i], t.vy[i]
+    for r, j in _range_pairs(np.arange(len(rminx)), rect_geom, t.v_range):
+        vx, vy = t.x[j], t.y[j]
         hit[r[(vx >= rminx[r]) & (vx <= rmaxx[r]) & (vy >= rminy[r]) & (vy <= rmaxy[r])]] = True
-    for r, i in _rect_pairs(np.nonzero(~hit)[0], rect_geom, t.r_range):
-        e = t.ring_edge[i]
-        x1, y1, x2, y2 = t.x1[e], t.y1[e], t.x2[e], t.y2[e]
-        part = t.ring_part[i]
-        first = np.nonzero(np.r_[True, (r[1:] != r[:-1]) | (part[1:] != part[:-1])])[0]
+    ring = np.nonzero(t.part_closed[t.vpart[t.e_start]])[0]
+    r_range = _ranges(t.part_geom[t.vpart[t.e_start[ring]]], t.n)
+    for r, i in _range_pairs(np.nonzero(~hit)[0], rect_geom, r_range):
+        s, e = t.e_start[ring[i]], t.e_end[ring[i]]
+        x1, y1, x2, y2 = t.x[s], t.y[s], t.x[e], t.y[e]
+        first = _run_starts(r, t.vpart[s])
         for px, py in ((rminx, rminy), (rminx, rmaxy), (rmaxx, rminy), (rmaxx, rmaxy)):
-            pxv, pyv = px[r], py[r]
-            cond = (y1 > pyv) != (y2 > pyv)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                xint = x1 + (pyv - y1) / (y2 - y1) * (x2 - x1)
-            odd = np.add.reduceat(cond & (pxv < xint), first, dtype=np.int64) % 2 == 1
-            cross = (x2 - x1) * (pyv - y1) - (y2 - y1) * (pxv - x1)
-            on_edge = (
-                (cross == 0.0)
-                & (pxv >= np.minimum(x1, x2))
-                & (pxv <= np.maximum(x1, x2))
-                & (pyv >= np.minimum(y1, y2))
-                & (pyv <= np.maximum(y1, y2))
-            )
-            hit[r[first[odd]]] = True
-            hit[r[on_edge]] = True
-    for r, i in _rect_pairs(np.nonzero(~hit)[0], rect_geom, t.e_range):
-        x1, y1 = t.x1[i], t.y1[i]
-        dx, dy = t.x2[i] - x1, t.y2[i] - y1
+            odd, on = _ray_parity(px[r], py[r], x1, y1, x2, y2, first)
+            hit[r[first[odd | on]]] = True
+    for r, i in _range_pairs(np.nonzero(~hit)[0], rect_geom, t.e_range):
+        x1, y1 = t.x[t.e_start[i]], t.y[t.e_start[i]]
+        dx, dy = t.x[t.e_end[i]] - x1, t.y[t.e_end[i]] - y1
         t0 = np.zeros(len(r))
         t1 = np.ones(len(r))
         ok = np.ones(len(r), dtype=bool)
@@ -695,58 +681,6 @@ def rects_hit_geoms(
             t1 = np.minimum(t1, np.where(np.isfinite(ext), ext, t1))
         hit[r[ok & (t0 <= t1)]] = True
     return hit
-
-
-def rings_edges_intersect(
-    ra: np.ndarray, rb: np.ndarray, closed_a: bool = True, closed_b: bool = True
-) -> bool:
-    """Do any edges of the two parts intersect? (orientation test,
-    vectorized over the E_a × E_b edge pairs; collinear touches count).
-    ``closed_*=False`` treats the part as an open polyline (no wrap
-    edge)."""
-    p1, p2 = _part_edges(ra, closed_a)
-    q1, q2 = _part_edges(rb, closed_b)
-    if not len(p1) or not len(q1):
-        return False
-
-    def cross(ox, oy, ax_, ay, bx, by):
-        return (ax_ - ox) * (by - oy) - (ay - oy) * (bx - ox)
-
-    # (Ea, Eb) orientation values
-    d1 = cross(q1[None, :, 0], q1[None, :, 1], q2[None, :, 0], q2[None, :, 1], p1[:, None, 0], p1[:, None, 1])
-    d2 = cross(q1[None, :, 0], q1[None, :, 1], q2[None, :, 0], q2[None, :, 1], p2[:, None, 0], p2[:, None, 1])
-    d3 = cross(p1[:, None, 0], p1[:, None, 1], p2[:, None, 0], p2[:, None, 1], q1[None, :, 0], q1[None, :, 1])
-    d4 = cross(p1[:, None, 0], p1[:, None, 1], p2[:, None, 0], p2[:, None, 1], q2[None, :, 0], q2[None, :, 1])
-    proper = ((d1 > 0) != (d2 > 0)) & ((d3 > 0) != (d4 > 0)) & (d1 != 0) & (d2 != 0) & (d3 != 0) & (d4 != 0)
-    if proper.any():
-        return True
-    # collinear / endpoint touches: a zero orientation with bbox overlap
-    for d, s1, s2, pt in (
-        (d1, q1, q2, p1),
-        (d2, q1, q2, p2),
-        (d3, p1, p2, q1),
-        (d4, p1, p2, q2),
-    ):
-        z = d == 0
-        if z.any():
-            if d is d1 or d is d2:
-                px_ = pt[:, None, 0]; py_ = pt[:, None, 1]
-                sx1 = s1[None, :, 0]; sy1 = s1[None, :, 1]
-                sx2 = s2[None, :, 0]; sy2 = s2[None, :, 1]
-            else:
-                px_ = pt[None, :, 0]; py_ = pt[None, :, 1]
-                sx1 = s1[:, None, 0]; sy1 = s1[:, None, 1]
-                sx2 = s2[:, None, 0]; sy2 = s2[:, None, 1]
-            on = (
-                z
-                & (px_ >= np.minimum(sx1, sx2))
-                & (px_ <= np.maximum(sx1, sx2))
-                & (py_ >= np.minimum(sy1, sy2))
-                & (py_ <= np.maximum(sy1, sy2))
-            )
-            if on.any():
-                return True
-    return False
 
 
 def polygon_envelope(poly: np.ndarray) -> tuple[float, float, float, float]:
@@ -784,19 +718,17 @@ class LocalGeomGrid:
         self.ids = np.asarray(ids, dtype=object)
         self.gb = GeomBatch(parsed)
         n = self.gb.n
-        env = self.gb.envelopes() if n else np.zeros((0, 4), dtype=np.float64)
-        env += (-buffer, -buffer, buffer, buffer)
-        if n:
-            w = np.median(np.maximum(env[:, 2] - env[:, 0], env[:, 3] - env[:, 1]))
+        env = self.gb.envelopes() + (-buffer, -buffer, buffer, buffer)
+        # an EMPTY geometry (infinite envelope) gets no cells
+        full = np.isfinite(env).all(axis=1)
+        if full.any():
+            w = np.median(np.maximum(env[full, 2] - env[full, 0], env[full, 3] - env[full, 1]))
             self.cell = max(float(w), 1e-9)
         else:
             self.cell = 1.0
-        gx0 = np.floor(env[:, 0] / self.cell).astype(np.int64)
-        gx1 = np.floor(env[:, 2] / self.cell).astype(np.int64)
-        gy0 = np.floor(env[:, 1] / self.cell).astype(np.int64)
-        gy1 = np.floor(env[:, 3] / self.cell).astype(np.int64)
+        gx0, gy0, gx1, gy1 = np.floor(np.where(full[:, None], env, 0.0) / self.cell).astype(np.int64).T
         cnx = gx1 - gx0 + 1
-        cnt = cnx * (gy1 - gy0 + 1)
+        cnt = np.where(full, cnx * (gy1 - gy0 + 1), 0)
         code = np.repeat(np.arange(n, dtype=np.int64), cnt)
         starts = np.concatenate(([0], np.cumsum(cnt)[:-1]))
         off = np.arange(int(cnt.sum()), dtype=np.int64) - np.repeat(starts, cnt)

@@ -61,15 +61,15 @@ from ..encode import (
     polygon_cells_np,
 )
 from ..geom import pairs_dist2
-from ..geom import parse_wkt  # noqa: F401  (re-export for callers)
 from ..relate import RELATIONS, relation_batch
 from ..sfc import DEFAULT_MAX_DUPLICATES, JOIN_MAX_DUPLICATES, TieredStrategy
 
 # Above this many polygon rows the build side no longer collects/broadcasts;
 # the join falls back to the reference's big-both-sides tiered shuffle shape
 # (cell-explode both sides + equi-join + exact post-filter + dedupe).  The
-# limit bounds driver memory: ~10^5 rings × ~100 vertices × 16 B ≈ 160 MB
-# padded, comfortably under a 1 GiB broadcast budget.
+# limit bounds driver memory: the grid's geometry table costs Σ vertices ×
+# 16 B, so ~10^5 rings × ~100 vertices ≈ 160 MB, comfortably under a 1 GiB
+# broadcast budget.
 POLYGON_BROADCAST_LIMIT = 100_000
 
 
@@ -478,9 +478,10 @@ def _pair_match_udf(radius: float | None):
     """Pandas UDF: (lon, lat, wkt) → does the exact predicate hold?
 
     Runs after the (tier, cell) equi-join of the shuffle plan.  Each Arrow
-    batch factorizes its WKT values, parses each distinct geometry once and
-    evaluates the whole batch in one vectorized pass — candidate pairs of
-    the same geometry cluster in a batch because the join key is its cell.
+    batch factorizes its WKT values, parses each distinct geometry once per
+    worker (:func:`~geowave_spark.geom.parse_wkt_cached`) and evaluates
+    the whole batch in one vectorized pass — candidate pairs of the same
+    geometry cluster in a batch because the join key is its cell.
     Kind-aware: polylines keep open-segment distances, closed rings keep
     containment.
     """
@@ -490,7 +491,7 @@ def _pair_match_udf(radius: float | None):
     def _m(lon: pd.Series, lat: pd.Series, wkt: pd.Series) -> pd.Series:
         from ..geom import (
             GeomBatch,
-            parse_wkt_multi,
+            parse_wkt_cached,
             points_geoms_dist2_batch,
             points_intersect_geoms_batch,
         )
@@ -500,7 +501,7 @@ def _pair_match_udf(radius: float | None):
         codes, uniq = pd.factorize(wkt)
         if not len(uniq):
             return pd.Series(np.zeros(0, dtype=bool))
-        gb = GeomBatch([parse_wkt_multi(w) for w in uniq])
+        gb = GeomBatch([parse_wkt_cached(w) for w in uniq])
         if r2 is None:
             m = points_intersect_geoms_batch(px, py, codes, gb)
         else:

@@ -55,7 +55,13 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from .geom import GeomBatch, geom_is_closed, parse_wkt_cached, points_contained_batch
+from .geom import (
+    GeomBatch,
+    geom_is_closed,
+    parse_wkt_cached,
+    points_contained_batch,
+    points_on_edges,
+)
 
 _DIM = {
     "POINT": 0,
@@ -76,56 +82,32 @@ class PreparedGeom:
         self.kind = kind
         self.dim = _DIM[kind]
         self.parts = parts
+        # segments, vertices and locate() all read the one flat table; a
+        # one-vertex ring's zero-length edge is no segment here
+        self.gb = GeomBatch([(kind, parts)])
+        self.verts = np.c_[self.gb.x, self.gb.y]
+        seg = self.gb.e_start != self.gb.e_end
+        self.seg_s = self.verts[self.gb.e_start[seg]]
+        self.seg_e = self.verts[self.gb.e_end[seg]]
         if self.dim == 0:
-            self.pts = (
-                np.vstack(parts) if parts else np.zeros((0, 2), dtype=np.float64)
-            )
-            self.seg_s = np.zeros((0, 2), dtype=np.float64)
-            self.seg_e = self.seg_s
-            self.verts = self.pts
+            self.pts = self.verts
             self.vert_boundary = np.zeros(len(self.pts), dtype=bool)
-            self.gb = None
             return
-        closed = geom_is_closed(kind)
-        ss, ee, verts = [], [], []
-        ends: dict[tuple[float, float], int] = {}
-        for p in parts:
-            ring = p
-            if closed and len(ring) > 1 and np.array_equal(ring[0], ring[-1]):
-                ring = ring[:-1]
-            if len(ring) < 2:
-                verts.append(ring)
-                continue
-            verts.append(ring)
-            if closed:
-                ss.append(ring)
-                ee.append(np.roll(ring, -1, axis=0))
-            else:
-                ss.append(ring[:-1])
-                ee.append(ring[1:])
-                # OGC mod-2 boundary rule over part endpoints
-                for v in (ring[0], ring[-1]):
-                    k = (float(v[0]), float(v[1]))
-                    ends[k] = ends.get(k, 0) + 1
-        self.seg_s = (
-            np.vstack(ss) if ss else np.zeros((0, 2), dtype=np.float64)
-        )
-        self.seg_e = (
-            np.vstack(ee) if ee else np.zeros((0, 2), dtype=np.float64)
-        )
-        self.verts = (
-            np.vstack(verts) if verts else np.zeros((0, 2), dtype=np.float64)
-        )
-        if closed:
+        if geom_is_closed(kind):
             # every polygon vertex lies on the boundary
             self.vert_boundary = np.ones(len(self.verts), dtype=bool)
         else:
+            # OGC mod-2 boundary rule over part endpoints
+            nv = self.gb.part_nv
+            end = np.cumsum(nv)[nv >= 2]
+            ends: dict[tuple[float, float], int] = {}
+            for v in np.r_[self.verts[end - nv[nv >= 2]], self.verts[end - 1]]:
+                k = (float(v[0]), float(v[1]))
+                ends[k] = ends.get(k, 0) + 1
             bnd = {k for k, c in ends.items() if c % 2 == 1}
             self.vert_boundary = np.array(
                 [(float(v[0]), float(v[1])) in bnd for v in self.verts], dtype=bool
             )
-            self._bnd_set = bnd
-        self.gb = GeomBatch([(kind, parts)]) if closed else None
         self._interior_pts: np.ndarray | None = None
 
     # -- region classification of points --------------------------------
@@ -143,7 +125,8 @@ class PreparedGeom:
                 )
                 out[eq.any(axis=1)] = I  # point boundary is empty
             return out
-        on = _points_on_segments(xs, ys, self.seg_s, self.seg_e)
+        zeros = np.zeros(n, dtype=np.int64)
+        on = points_on_edges(xs, ys, zeros, self.gb)
         if self.dim == 1:
             bnd = np.zeros(n, dtype=bool)
             if on.any() and self.vert_boundary.any():
@@ -155,10 +138,7 @@ class PreparedGeom:
             out[on] = I
             out[on & bnd] = B
             return out
-        inside = points_contained_batch(
-            xs, ys, np.zeros(n, dtype=np.int64), self.gb
-        )
-        out[inside] = I
+        out[points_contained_batch(xs, ys, zeros, self.gb)] = I
         out[on] = B  # containment is boundary-inclusive; on-ring wins
         return out
 
@@ -195,15 +175,10 @@ class PreparedGeom:
             keep = mids[xs[:-1] < xs[1:]]
             if not len(keep):
                 continue
-            ins = points_contained_batch(
-                keep,
-                np.full(len(keep), ystar),
-                np.zeros(len(keep), dtype=np.int64),
-                self.gb,
-            )
-            on = _points_on_segments(
-                keep, np.full(len(keep), ystar), self.seg_s, self.seg_e
-            )
+            ky = np.full(len(keep), ystar)
+            zeros = np.zeros(len(keep), dtype=np.int64)
+            ins = points_contained_batch(keep, ky, zeros, self.gb)
+            on = points_on_edges(keep, ky, zeros, self.gb)
             for x in keep[ins & ~on]:
                 cands.append((float(x), ystar))
         self._interior_pts = (
@@ -212,26 +187,6 @@ class PreparedGeom:
             else np.zeros((0, 2), dtype=np.float64)
         )
         return self._interior_pts
-
-
-def _points_on_segments(
-    xs: np.ndarray, ys: np.ndarray, s: np.ndarray, e: np.ndarray
-) -> np.ndarray:
-    """Exact on-any-segment test (cross == 0 within the segment bbox)."""
-    if not len(s) or not len(xs):
-        return np.zeros(len(xs), dtype=bool)
-    x1, y1 = s[None, :, 0], s[None, :, 1]
-    x2, y2 = e[None, :, 0], e[None, :, 1]
-    px, py = xs[:, None], ys[:, None]
-    cross = (x2 - x1) * (py - y1) - (y2 - y1) * (px - x1)
-    on = (
-        (cross == 0.0)
-        & (px >= np.minimum(x1, x2))
-        & (px <= np.maximum(x1, x2))
-        & (py >= np.minimum(y1, y2))
-        & (py <= np.maximum(y1, y2))
-    )
-    return on.any(axis=1)
 
 
 def _edge_matrix(a: PreparedGeom, b: PreparedGeom):

@@ -17,7 +17,6 @@ from geowave_spark.geom import (
     as_components,
     flatten_parts,
     geom_is_closed,
-    geoms_pair_dist2,
     parse_wkt_multi,
     points_geoms_dist2_batch,
     points_intersect_geoms_batch,
@@ -77,10 +76,7 @@ def _brute_dist2(wkt_a: str, wkt_b: str) -> float:
     best = np.inf
     for ka, pa in as_components(parse_wkt_multi(wkt_a)):
         for kb, pb in as_components(parse_wkt_multi(wkt_b)):
-            best = min(
-                best,
-                geoms_pair_dist2(pa, geom_is_closed(ka), pb, geom_is_closed(kb)),
-            )
+            best = min(best, any_pair_dist2((ka, pa), (kb, pb)))
     return float(best)
 
 

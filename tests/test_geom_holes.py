@@ -6,7 +6,7 @@ import numpy as np
 
 from geowave_spark.geom import (
     GeomBatch,
-    geoms_pair_dist2,
+    any_pair_dist2,
     parse_wkt_multi,
     points_contained_batch,
     points_geoms_dist2_batch,
@@ -91,17 +91,17 @@ def test_simple_ring_unchanged():
 
 def test_pair_distance_geometry_in_hole():
     # a square fully inside the donut's hole: distance is to the hole ring
-    _, inner = parse_wkt_multi("POLYGON ((4.5 4.5, 5.5 4.5, 5.5 5.5, 4.5 5.5, 4.5 4.5))")
-    _, donut = parse_wkt_multi(DONUT)
-    d2 = geoms_pair_dist2(inner, True, donut, True)
+    inner = parse_wkt_multi("POLYGON ((4.5 4.5, 5.5 4.5, 5.5 5.5, 4.5 5.5, 4.5 4.5))")
+    donut = parse_wkt_multi(DONUT)
+    d2 = any_pair_dist2(inner, donut)
     assert abs(np.sqrt(d2) - 1.5) < 1e-12
     # and a line crossing only the hole interior does not intersect
-    _, line = parse_wkt_multi("LINESTRING (4 5, 6 5)")
-    d2l = geoms_pair_dist2(line, False, donut, True)
+    line = parse_wkt_multi("LINESTRING (4 5, 6 5)")
+    d2l = any_pair_dist2(line, donut)
     assert abs(np.sqrt(d2l) - 1.0) < 1e-12
 
 
 def test_line_entering_hole_from_filled_area_intersects():
-    _, donut = parse_wkt_multi(DONUT)
-    _, line = parse_wkt_multi("LINESTRING (1 5, 5 5)")  # filled → hole
-    assert geoms_pair_dist2(line, False, donut, True) == 0.0
+    donut = parse_wkt_multi(DONUT)
+    line = parse_wkt_multi("LINESTRING (1 5, 5 5)")  # filled → hole
+    assert any_pair_dist2(line, donut) == 0.0

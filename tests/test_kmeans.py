@@ -34,15 +34,15 @@ def test_kmeans_recovers_separated_clusters(spark):
     assert len(hulls) == 3
     assert hulls["n_points"].sum() == 600
     # every hull is a polygon containing its cluster's points
-    from geowave_spark.geom import GeomBatch, parse_wkt, points_in_polygons_batch
+    from geowave_spark.geom import GeomBatch, parse_wkt, points_contained_batch
 
     for _, h in hulls.iterrows():
         kind, ring = parse_wkt(h["hull_wkt"])
         assert kind == "POLYGON"
         sub = pdf[pdf["cluster"] == h["cluster"]]
-        inside = points_in_polygons_batch(
+        inside = points_contained_batch(
             sub["lon"].to_numpy(), sub["lat"].to_numpy(),
-            np.zeros(len(sub), int), GeomBatch([("POLYGON", [ring])]).padded,
+            np.zeros(len(sub), int), GeomBatch([("POLYGON", [ring])]),
         )
         assert inside.all()
 

@@ -215,3 +215,12 @@ def test_empty_geometry(spark, kind, empty_first):
 
     want = join(drop="e")
     assert join(drop=None) == want and want
+
+    # the point joins, broadcast and shuffle plans: one geometry side, so
+    # one order; the EMPTY row beside the square pairs nothing
+    if empty_first:
+        points = spark.createDataFrame([("p1", 1.0, 1.0)], "pid string, lon double, lat double")
+        regions = spark.createDataFrame([("e", empty), ("a", SQ)], "gid string, wkt string")
+        for plan in ("auto", "shuffle"):
+            got = point_in_polygon_join(points, regions, "pid", "gid", plan=plan).collect()
+            assert [tuple(r) for r in got] == [("p1", "a")], plan
