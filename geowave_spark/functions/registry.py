@@ -167,8 +167,10 @@ def _functions() -> dict:
     :func:`~geowave_spark.geom.pairs_dist2` for distance, within-distance,
     intersects (``== 0``) and disjoint, and
     :func:`~geowave_spark.relate.relation_batch` for ``st_<name>`` of every
-    DE-9IM relation in :data:`~geowave_spark.relate.RELATIONS` — the same
-    two kernels :func:`~geowave_spark.operators.join.geom_pair_join` calls.
+    DE-9IM relation in :data:`~geowave_spark.relate.RELATIONS` (one batched
+    relate per Arrow batch, POINT rows included) — the same two kernels
+    :func:`~geowave_spark.operators.join.geom_pair_join` calls, sharing one
+    point-on-segment rule, so ``st_intersects`` and the relations agree.
 
     The GWQL predicate surface (SpatialPredicates.java, registered in
     GWQLSpatialTemporalExtensions.java:36-47) adds BBOX (+LOOSE), the LOOSE

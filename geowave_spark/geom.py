@@ -379,41 +379,42 @@ def _on_segment(px, py, x1, y1, x2, y2, cross):
 
 def _ray_parity(px, py, x1, y1, x2, y2, first):
     """Per run of (point, edge) pairs starting at ``first``: does the
-    point's rightward ray cross the run's edges an odd number of times,
-    and does the point lie exactly on one of them?"""
+    point's rightward ray cross the run's edges an odd number of times?"""
     cond = (y1 > py) != (y2 > py)
     with np.errstate(divide="ignore", invalid="ignore"):
         xint = x1 + (py - y1) / (y2 - y1) * (x2 - x1)
-    odd = np.add.reduceat(cond & (px < xint), first, dtype=np.int64) % 2 == 1
-    on = _on_segment(px, py, x1, y1, x2, y2, _cross(px, py, x1, y1, x2, y2))
-    return odd, np.logical_or.reduceat(on, first)
+    return np.add.reduceat(cond & (px < xint), first, dtype=np.int64) % 2 == 1
 
 
 def _seg_dist2(px, py, x1, y1, x2, y2):
-    """Squared distance from each point to its segment; a zero-length
-    segment is its vertex."""
-    dx = x2 - x1
-    dy = y2 - y1
-    seg_len2 = dx * dx + dy * dy
-    safe = np.where(seg_len2 == 0, 1.0, seg_len2)
-    t = np.clip(((px - x1) * dx + (py - y1) * dy) / safe, 0.0, 1.0)
-    cx = x1 + t * dx
-    cy = y1 + t * dy
-    return (px - cx) ** 2 + (py - cy) ** 2
+    """Squared distance from each point to its segment, in the form of JTS
+    ``Distance.pointToSegment``: the nearer end where the projection falls
+    outside (a zero-length segment is its vertex), else cross²/len².  So it
+    is 0 exactly where :func:`_on_segment` holds."""
+    dx, dy = x2 - x1, y2 - y1
+    ex, ey = px - x1, py - y1
+    len2 = dx * dx + dy * dy
+    dot = ex * dx + ey * dy
+    cross = dx * ey - dy * ex  # _cross, term for term
+    with np.errstate(divide="ignore", invalid="ignore"):
+        inner = cross * cross / len2
+    near_a = dot <= 0
+    end = np.where(near_a, ex * ex + ey * ey, (px - x2) ** 2 + (py - y2) ** 2)
+    return np.where(near_a | (dot >= len2), end, inner)
 
 
 def _points_kernel(px, py, codes, gb: GeomBatch):
     """Each point against the parts of its geometry ``codes[k]`` of
-    ``gb`` → (contained, dist2, on_open) per point.
+    ``gb`` → (contained, dist2, on) per point.
 
     One pass over (point, vertex) pairs, vertex ``j`` standing for the
     segment to ``gb.nxt[j]``.  Per (point, part): the squared distance is
     the min over those segments, and a ring adds its crossing parity (one
-    ``np.add.reduceat``) and an exact on-edge test.  Containment is hole-
-    and multipart-aware (r3): the XOR over rings of inside (odd parity or
-    on an edge), OR at distance 0 from some ring, so a hole's boundary
-    belongs to the polygon.  ``dist2`` is the min over parts, 0 where contained;
-    ``on_open`` is distance 0 to a part without interior."""
+    ``np.add.reduceat``).  Containment is hole- and multipart-aware (r3):
+    the XOR over rings of odd parity, OR at distance 0 from some ring
+    (exactly on one of its edges), so a hole's boundary belongs to the
+    polygon.  ``dist2`` is the min over parts, 0 where contained;
+    ``on`` is distance 0 to some part: on a ring, an open part or a point."""
     px = np.asarray(px, dtype=np.float64)
     py = np.asarray(py, dtype=np.float64)
     codes = np.asarray(codes, dtype=np.int64)
@@ -424,25 +425,25 @@ def _points_kernel(px, py, codes, gb: GeomBatch):
         first = _run_starts(r, part)
         qx, qy = px[r], py[r]
         x1, y1, x2, y2 = gb.x[j], gb.y[j], gb.x[gb.nxt[j]], gb.y[gb.nxt[j]]
-        odd, on = _ray_parity(qx, qy, x1, y1, x2, y2, first)
+        odd = _ray_parity(qx, qy, x1, y1, x2, y2, first)
         d2 = np.minimum.reduceat(_seg_dist2(qx, qy, x1, y1, x2, y2), first)
-        runs.append((r[first], part[first], d2, odd | on))
+        runs.append((r[first], part[first], d2, odd))
     if runs:
-        row, part, d2, incl = (np.concatenate(c) for c in zip(*runs))
+        row, part, d2, odd = (np.concatenate(c) for c in zip(*runs))
     else:
         row = part = np.zeros(0, dtype=np.int64)
-        d2, incl = np.zeros(0), np.zeros(0, dtype=bool)
+        d2, odd = np.zeros(0), np.zeros(0, dtype=bool)
     ring = gb.ring[part]
     zero = d2 == 0.0
     contained = np.zeros(n, dtype=bool)
-    np.logical_xor.at(contained, row[ring], incl[ring])
+    np.logical_xor.at(contained, row[ring], odd[ring])
     contained[row[ring & zero]] = True
     dist2 = np.full(n, np.inf)
     np.minimum.at(dist2, row, d2)
     dist2[contained] = 0.0
-    on_open = np.zeros(n, dtype=bool)
-    on_open[row[~ring & zero]] = True
-    return contained, dist2, on_open
+    on = np.zeros(n, dtype=bool)
+    on[row[zero]] = True
+    return contained, dist2, on
 
 
 def points_contained_batch(
@@ -470,27 +471,10 @@ def points_intersect_geoms_batch(
     px: np.ndarray, py: np.ndarray, codes: np.ndarray, gb: GeomBatch
 ) -> np.ndarray:
     """Point INTERSECTS geometry: hole-aware parity containment for the
-    closed rings; exact on-segment (d² == 0) for open parts; coordinate
-    equality for point parts."""
-    contained, _, on_open = _points_kernel(px, py, codes, gb)
-    return contained | on_open
-
-
-def points_on_edges(
-    px: np.ndarray, py: np.ndarray, codes: np.ndarray, gb: GeomBatch
-) -> np.ndarray:
-    """Does each point lie exactly on an edge of its geometry (cross
-    product 0 within the edge's box)?  A one-vertex ring has no edge to
-    lie on."""
-    px = np.asarray(px, dtype=np.float64)
-    py = np.asarray(py, dtype=np.float64)
-    out = np.zeros(len(px), dtype=bool)
-    for r, i in _range_pairs(np.arange(len(px), dtype=np.int64), np.asarray(codes, dtype=np.int64), gb.e_range):
-        s, e = gb.e_start[i], gb.e_end[i]
-        x1, y1, x2, y2 = gb.x[s], gb.y[s], gb.x[e], gb.y[e]
-        on = _on_segment(px[r], py[r], x1, y1, x2, y2, _cross(px[r], py[r], x1, y1, x2, y2))
-        out[r[on & (s != e)]] = True
-    return out
+    closed rings; exact on-segment (d² == 0) for open parts and point
+    parts."""
+    contained, _, on = _points_kernel(px, py, codes, gb)
+    return contained | on
 
 
 def _segments_meet(ax1, ay1, ax2, ay2, bx1, by1, bx2, by2):
@@ -513,6 +497,22 @@ def _segments_meet(ax1, ay1, ax2, ay2, bx1, by1, bx2, by2):
     )
 
 
+def _meeting_edges(ta: GeomBatch, ea, ia, tb: GeomBatch, eb, ib):
+    """The package's one segment-pair pass: every (row, edge_a, edge_b)
+    where edge ``edge_a`` of geometry ``ia[row]`` meets edge ``edge_b`` of
+    geometry ``ib[row]`` (:func:`_segments_meet`).  ``ea``, ``eb`` are
+    (start vertex, end vertex, per-geometry range) edge lists of ``ta``,
+    ``tb``; the triples are enumerated in blocks of about
+    ``_RECT_PAIR_BLOCK``, and one block yields its meeting ones."""
+    (sa, fa, ra), (sb, fb, rb) = ea, eb
+    ib = np.asarray(ib, dtype=np.int64)
+    for p, ka in _range_pairs(np.arange(len(ia), dtype=np.int64), np.asarray(ia, dtype=np.int64), ra):
+        for k, kb in _range_pairs(np.arange(len(p), dtype=np.int64), ib[p], rb):
+            i, j, u, v = sa[ka[k]], fa[ka[k]], sb[kb], fb[kb]
+            hit = _segments_meet(ta.x[i], ta.y[i], ta.x[j], ta.y[j], tb.x[u], tb.y[u], tb.x[v], tb.y[v])
+            yield p[k[hit]], ka[k[hit]], kb[hit]
+
+
 def _parsed_pairs_dist2(a: list, b: list) -> np.ndarray:
     """Squared distance between parsed geometries ``a[i]`` and ``b[i]``,
     any kinds.  A collection is the union of its components (JTS), so a
@@ -532,14 +532,9 @@ def _parsed_pairs_dist2(a: list, b: list) -> np.ndarray:
     ta, tb = GeomBatch(ca), GeomBatch(cb)
     pair = np.arange(len(ca), dtype=np.int64)
     meet = np.zeros(len(ca), dtype=bool)
-    for p, ea in _range_pairs(pair, pair, ta.e_range):
-        for k, eb in _range_pairs(np.arange(len(p), dtype=np.int64), p, tb.e_range):
-            sa, fa = ta.e_start[ea[k]], ta.e_end[ea[k]]
-            sb, fb = tb.e_start[eb], tb.e_end[eb]
-            hit = _segments_meet(
-                ta.x[sa], ta.y[sa], ta.x[fa], ta.y[fa], tb.x[sb], tb.y[sb], tb.x[fb], tb.y[fb]
-            )
-            meet[p[k[hit]]] = True
+    edges = [(t.e_start, t.e_end, t.e_range) for t in (ta, tb)]
+    for p, _, _ in _meeting_edges(ta, edges[0], pair, tb, edges[1], pair):
+        meet[p] = True
     d_ab, d_ba = (np.full(len(ca), np.inf) for _ in range(2))
     for d, t, u in ((d_ab, ta, tb), (d_ba, tb, ta)):
         for p, v in _range_pairs(pair, pair, t.v_range):
@@ -658,8 +653,10 @@ def rects_hit_geoms(
         x1, y1, x2, y2 = t.x[s], t.y[s], t.x[e], t.y[e]
         first = _run_starts(r, t.vpart[s])
         for px, py in ((rminx, rminy), (rminx, rmaxy), (rmaxx, rminy), (rmaxx, rmaxy)):
-            odd, on = _ray_parity(px[r], py[r], x1, y1, x2, y2, first)
-            hit[r[first[odd | on]]] = True
+            qx, qy = px[r], py[r]
+            on = _on_segment(qx, qy, x1, y1, x2, y2, _cross(qx, qy, x1, y1, x2, y2))
+            odd = _ray_parity(qx, qy, x1, y1, x2, y2, first)
+            hit[r[first[odd | np.logical_or.reduceat(on, first)]]] = True
     for r, i in _range_pairs(np.nonzero(~hit)[0], rect_geom, t.e_range):
         x1, y1 = t.x[t.e_start[i]], t.y[t.e_start[i]]
         dx, dy = t.x[t.e_end[i]] - x1, t.y[t.e_end[i]] - y1

@@ -811,9 +811,10 @@ def _geom_pair_match_udf(radius: float | None, predicate: str | None = None):
     call per Arrow batch.  ``predicate`` names a DE-9IM relation of
     :data:`~geowave_spark.relate.RELATIONS` (the reference's
     SpatialJoinRunner GeomFunction parameter) and runs
-    :func:`~geowave_spark.relate.relation_batch`; None or ``"intersects"``
-    is ``pairs_dist2 <= radius²`` (radius 0 when None) — the same two
-    kernels the ``st_*`` SQL functions call."""
+    :func:`~geowave_spark.relate.relation_batch`, one batched DE-9IM relate
+    over the batch's distinct pairs; None or ``"intersects"`` is
+    ``pairs_dist2 <= radius²`` (radius 0 when None) — the same two kernels,
+    with one point-on-segment rule, that the ``st_*`` SQL functions call."""
     if predicate in (None, "intersects"):
         r2 = (radius or 0.0) ** 2
 

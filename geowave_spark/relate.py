@@ -5,18 +5,23 @@ OVERLAPS / CONTAINS with the real intersection-matrix semantics GeoWave
 gets from JTS (analytics/spark/.../sparksql/udf/{GeomTouches,GeomCrosses,
 GeomOverlaps,GeomContains,GeomWithin,GeomEquals,GeomCovers}.java delegate
 to Geometry.touches/crosses/… — JTS RelateOp).  Everything here is pure
-numpy over the parsed-multi representation from :mod:`geowave_spark.geom`;
-no shapely.
+numpy over the flat :class:`~geowave_spark.geom.GeomBatch` table; no
+shapely.
 
-Method (exact for valid piecewise-linear input whose contact parameters
-are representable in double precision — e.g. lattice or dyadic-rational
-coordinates; for inputs with nearly-parallel edges or nearly-coincident
-contacts the rounded split parameters t = qpxs/rxs can land a midpoint
-on the wrong side, where JTS would fall back to robust orientation
-predicates.  Near-duplicate split parameters are snapped within 1e-12
-before midpoint classification to keep slivers from degrading this):
+One batched kernel relates row k of one table with row k of another and
+returns a (P, 3, 3) matrix and a (P,) dim(II) per batch; the ``relate_*``
+functions are batches of one.  Method (exact for valid piecewise-linear
+input whose contact parameters are representable in double precision —
+e.g. lattice or dyadic-rational coordinates; for nearly-parallel edges or
+nearly-coincident contacts the rounded split parameters t = qpxs/rxs can
+land a midpoint on the wrong side, where JTS would fall back to robust
+orientation predicates.  Near-duplicate split parameters are snapped
+within 1e-12 before midpoint classification to keep slivers from
+degrading this):
 
-* Every boundary/line contact between two segment sets is one of
+* Every boundary/line contact between two segment sets is found by the
+  package's one segment-pair pass (``geom._meeting_edges``, the one
+  ``pairs_dist2`` uses) and is one of
   (a) a PROPER crossing — opposite strict orientation signs both ways,
   (b) a vertex of one lying ON a segment of the other — exact
       cross-product-zero + bbox test on the input coordinates,
@@ -24,18 +29,21 @@ before midpoint classification to keep slivers from degrading this):
       tracked as a *parameter interval* on the edge, bounded by vertices
       of one of the two inputs, so "this subsegment lies ON the other
       geometry" is bookkeeping, never a float re-test.
-* Each edge is split at all contact parameters; every open subsegment is
-  then HOMOGENEOUS (entirely interior / on-boundary / exterior of the
-  other geometry), so classifying its midpoint classifies the whole
-  subsegment.
+* Each edge is split at all its contact parameters (one ``lexsort`` over
+  every (pair, edge, t) of the batch); every open subsegment is then
+  HOMOGENEOUS (entirely interior / on-boundary / exterior of the other
+  geometry), so classifying its midpoint classifies the whole subsegment.
+  The midpoints and vertices of one side are located in the other side in
+  one point-kernel pass: "on" is the kernel's distance 0, the same rule
+  ``st_intersects`` uses.
 * Line boundaries follow the OGC mod-2 rule (an endpoint is boundary iff
   it terminates an odd number of part-ends), so closed LINESTRINGs have
   empty boundary, exactly like JTS.
-* Polygon interior tests are the hole-aware crossing parity from
-  ``geom.points_contained_batch``; the "boundaries coincide" corner
-  (identical rings, a polygon equal to another's hole, …) is resolved by
-  per-ring scanline interior points — one candidate interior point per
-  connected component of the interior, never a sampled guess.
+* Polygon interior tests are the hole-aware crossing parity of the point
+  kernel; the "boundaries coincide" corner (identical rings, a polygon
+  equal to another's hole, …) is resolved by per-ring scanline interior
+  points — one candidate interior point per connected component of the
+  interior, never a sampled guess.
 
 The DE-9IM matrix M[i][j] = (region_i(a) ∩ region_j(b)) ≠ ∅ with regions
 (Interior, Boundary, Exterior); predicates derive from it the JTS way:
@@ -56,385 +64,375 @@ import numpy as np
 import pandas as pd
 
 from .geom import (
+    _KIND_FAMILY,
     GeomBatch,
-    geom_is_closed,
+    _cross,
+    _meeting_edges,
+    _on_segment,
+    _points_kernel,
+    _range_pairs,
+    _ranges,
     parse_wkt_cached,
-    points_contained_batch,
-    points_on_edges,
 )
-
-_DIM = {
-    "POINT": 0,
-    "MULTIPOINT": 0,
-    "LINESTRING": 1,
-    "MULTILINESTRING": 1,
-    "POLYGON": 2,
-    "MULTIPOLYGON": 2,
-}
 
 I, B, E = 0, 1, 2  # matrix row/col indices
 
 
-class PreparedGeom:
-    """Per-geometry structures shared by every relate() against it."""
-
-    def __init__(self, kind: str, parts: list[np.ndarray]):
-        self.kind = kind
-        self.dim = _DIM[kind]
-        self.parts = parts
-        # segments, vertices and locate() all read the one flat table; a
-        # one-vertex ring's zero-length edge is no segment here
-        self.gb = GeomBatch([(kind, parts)])
-        self.verts = np.c_[self.gb.x, self.gb.y]
-        seg = self.gb.e_start != self.gb.e_end
-        self.seg_s = self.verts[self.gb.e_start[seg]]
-        self.seg_e = self.verts[self.gb.e_end[seg]]
-        if self.dim == 0:
-            self.pts = self.verts
-            self.vert_boundary = np.zeros(len(self.pts), dtype=bool)
-            return
-        if geom_is_closed(kind):
-            # every polygon vertex lies on the boundary
-            self.vert_boundary = np.ones(len(self.verts), dtype=bool)
-        else:
-            # OGC mod-2 boundary rule over part endpoints
-            nv = self.gb.part_nv
-            end = np.cumsum(nv)[nv >= 2]
-            ends: dict[tuple[float, float], int] = {}
-            for v in np.r_[self.verts[end - nv[nv >= 2]], self.verts[end - 1]]:
-                k = (float(v[0]), float(v[1]))
-                ends[k] = ends.get(k, 0) + 1
-            bnd = {k for k, c in ends.items() if c % 2 == 1}
-            self.vert_boundary = np.array(
-                [(float(v[0]), float(v[1])) in bnd for v in self.verts], dtype=bool
-            )
-        self._interior_pts: np.ndarray | None = None
-
-    # -- region classification of points --------------------------------
-
-    def locate(self, xs: np.ndarray, ys: np.ndarray) -> np.ndarray:
-        """0 interior / 1 boundary / 2 exterior for each point, exact."""
-        n = len(xs)
-        out = np.full(n, E, dtype=np.int8)
-        if n == 0:
-            return out
-        if self.dim == 0:
-            if len(self.pts):
-                eq = (xs[:, None] == self.pts[None, :, 0]) & (
-                    ys[:, None] == self.pts[None, :, 1]
-                )
-                out[eq.any(axis=1)] = I  # point boundary is empty
-            return out
-        zeros = np.zeros(n, dtype=np.int64)
-        on = points_on_edges(xs, ys, zeros, self.gb)
-        if self.dim == 1:
-            bnd = np.zeros(n, dtype=bool)
-            if on.any() and self.vert_boundary.any():
-                bv = self.verts[self.vert_boundary]
-                bnd = (
-                    (xs[:, None] == bv[None, :, 0])
-                    & (ys[:, None] == bv[None, :, 1])
-                ).any(axis=1)
-            out[on] = I
-            out[on & bnd] = B
-            return out
-        out[points_contained_batch(xs, ys, zeros, self.gb)] = I
-        out[on] = B  # containment is boundary-inclusive; on-ring wins
-        return out
-
-    def interior_points(self) -> np.ndarray:
-        """One-or-more points strictly inside EVERY connected component of
-        a polygon's interior: per ring, a horizontal scanline just above
-        the ring's lowest vertex, crossed with ALL rings; midpoints of the
-        parity-inside intervals are interior points, and the interval next
-        to each ring's own crossing guarantees per-component coverage."""
-        if self._interior_pts is not None:
-            return self._interior_pts
-        cands: list[tuple[float, float]] = []
-        sx, sy = self.seg_s, self.seg_e
-        for p in self.parts:
-            ring = p
-            if len(ring) > 1 and np.array_equal(ring[0], ring[-1]):
-                ring = ring[:-1]
-            if len(ring) < 3:
-                continue
-            yu = np.unique(ring[:, 1])
-            if len(yu) < 2:
-                continue
-            ystar = (yu[0] + yu[1]) / 2.0
-            y1, y2 = sx[:, 1], sy[:, 1]
-            crossing = (y1 > ystar) != (y2 > ystar)
-            if not crossing.any():
-                continue
-            with np.errstate(divide="ignore", invalid="ignore"):
-                xint = sx[:, 0] + (ystar - y1) / (y2 - y1) * (sy[:, 0] - sx[:, 0])
-            xs = np.sort(xint[crossing])
-            mids = (xs[:-1] + xs[1:]) / 2.0
-            if not len(mids):
-                continue
-            keep = mids[xs[:-1] < xs[1:]]
-            if not len(keep):
-                continue
-            ky = np.full(len(keep), ystar)
-            zeros = np.zeros(len(keep), dtype=np.int64)
-            ins = points_contained_batch(keep, ky, zeros, self.gb)
-            on = points_on_edges(keep, ky, zeros, self.gb)
-            for x in keep[ins & ~on]:
-                cands.append((float(x), ystar))
-        self._interior_pts = (
-            np.array(cands, dtype=np.float64)
-            if cands
-            else np.zeros((0, 2), dtype=np.float64)
-        )
-        return self._interior_pts
+def _expand(items, item_geom, ranges):
+    """All (item, index) pairs of :func:`geom._range_pairs`, unblocked."""
+    blocks = list(_range_pairs(np.asarray(items, dtype=np.int64), item_geom, ranges))
+    if not blocks:
+        z = np.zeros(0, dtype=np.int64)
+        return z, z
+    return tuple(np.concatenate(c) for c in zip(*blocks))
 
 
-def _edge_matrix(a: PreparedGeom, b: PreparedGeom):
-    """All pairwise orientation data between a's and b's segment sets."""
-    p, p2 = a.seg_s[:, None, :], a.seg_e[:, None, :]
-    q, q2 = b.seg_s[None, :, :], b.seg_e[None, :, :]
-    r = p2 - p
-    s = q2 - q
-    qp = q - p
-    rxs = r[:, :, 0] * s[:, :, 1] - r[:, :, 1] * s[:, :, 0]
-    qpxs = qp[:, :, 0] * s[:, :, 1] - qp[:, :, 1] * s[:, :, 0]
-    qpxr = qp[:, :, 0] * r[:, :, 1] - qp[:, :, 1] * r[:, :, 0]
-    return r, s, qp, rxs, qpxs, qpxr
+def _runs(g, x, y):
+    """Run id of each (g, x, y) triple; equal triples share one."""
+    o = np.lexsort((y, x, g))
+    g, x, y = g[o], x[o], y[o]
+    new = np.ones(len(o), dtype=bool)
+    new[1:] = (g[1:] != g[:-1]) | (x[1:] != x[:-1]) | (y[1:] != y[:-1])
+    run = np.empty(len(o), dtype=np.int64)
+    run[o] = np.cumsum(new) - 1
+    return run
 
 
-def _subsegments(a: PreparedGeom, b: PreparedGeom):
-    """Split a's edges at every contact with b.
+def _member(g, x, y, sg, sx, sy):
+    """Is each (g, x, y) one of the triples (sg, sx, sy)?"""
+    run = _runs(*(np.concatenate(c) for c in ((sg, g), (sx, x), (sy, y))))
+    has = np.zeros(len(run) + 1, dtype=bool)
+    has[run[: len(sg)]] = True
+    return has[run[len(sg):]]
 
-    Returns (mid_x, mid_y, on_b) over all subsegment midpoints of a's
-    edges, where on_b marks subsegments that lie ON b (from collinear
-    overlaps — provenance, not a float re-test), plus has_proper (any
-    proper crossing between the edge sets).
-    """
-    Ea, Eb = len(a.seg_s), len(b.seg_s)
-    if Ea == 0:
-        z = np.zeros(0, dtype=np.float64)
-        return z, z, np.zeros(0, dtype=bool), False
-    if Eb == 0:
-        mids = (a.seg_s + a.seg_e) / 2.0
-        return mids[:, 0], mids[:, 1], np.zeros(Ea, dtype=bool), False
-    r, s, qp, rxs, qpxs, qpxr = _edge_matrix(a, b)
+
+class _Table:
+    """A :class:`GeomBatch` plus what relate reads of each geometry: its
+    dimension, its line boundary (the OGC mod-2 part ends), each vertex's
+    region in its own geometry and the edges contacts are sought on."""
+
+    def __init__(self, parsed):
+        gb = self.gb = GeomBatch(parsed)
+        self.dim = np.array([_KIND_FAMILY[k] for k, _ in parsed], dtype=np.int64)
+        vgeom = gb.part_geom[gb.vpart]
+        nv = gb.part_nv
+        first = np.cumsum(nv) - nv
+        line = ~gb.part_closed & (nv >= 2)
+        ends = np.concatenate((first[line], (first + nv - 1)[line]))
+        g, x, y = vgeom[ends], gb.x[ends], gb.y[ends]
+        run = _runs(g, x, y)
+        odd = np.bincount(run)[run] % 2 == 1
+        self.ends = g[odd], x[odd], y[odd]
+        vdim = self.dim[vgeom]
+        lv = np.nonzero(vdim == 1)[0]
+        bnd = np.zeros(len(gb.x), dtype=bool)
+        if len(lv):
+            bnd[lv] = _member(vgeom[lv], gb.x[lv], gb.y[lv], *self.ends)
+        # every polygon vertex lies on the boundary, a point is interior
+        self.vrow = np.where((vdim == 2) | bnd, B, I)
+        bv = np.nonzero(bnd)[0]
+        self.bnd = bv, _ranges(vgeom[bv], gb.n)
+        # the edges, plus one zero-length edge at each one-vertex open
+        # part, so that every vertex ends some edge
+        j = np.nonzero(~gb.part_closed[gb.vpart] & (nv[gb.vpart] == 1))[0]
+        self.edges = gb.e_start, gb.e_end, gb.e_range
+        if len(j):
+            s, e = np.concatenate((gb.e_start, j)), np.concatenate((gb.e_end, j))
+            o = np.argsort(s, kind="stable")
+            self.edges = s[o], e[o], _ranges(vgeom[s[o]], gb.n)
+
+    def locate(self, codes, x, y):
+        """I / B / E of each point in its geometry ``codes[k]``."""
+        contained, _, on = _points_kernel(x, y, codes, self.gb)
+        d = self.dim[codes]
+        loc = np.full(len(x), E, dtype=np.int64)
+        loc[on] = I
+        loc[(d == 2) & contained] = I
+        loc[(d == 2) & on] = B
+        k = np.nonzero(on & (d == 1))[0]
+        if len(k):
+            loc[k[_member(codes[k], x[k], y[k], *self.ends)]] = B
+        return loc
+
+    def interior_points(self, geoms):
+        """Points strictly inside every connected component of each of the
+        polygons ``geoms`` → (geom, x, y) sorted by geom: per ring, a
+        horizontal scanline just above the ring's lowest vertex, crossed
+        with ALL rings of its geometry; midpoints of the parity-inside
+        intervals are interior points, and the interval next to each
+        ring's own crossing guarantees per-component coverage."""
+        gb = self.gb
+        want = np.zeros(gb.n, dtype=bool)
+        want[geoms] = True
+        rp = np.nonzero(gb.ring & want[gb.part_geom])[0]
+        nv = gb.part_nv
+        r, v = _expand(np.arange(len(rp)), rp, (np.cumsum(nv) - nv, nv))
+        first = np.searchsorted(r, np.arange(len(rp)))
+        vy = gb.y[v]
+        y0 = np.minimum.reduceat(vy, first) if len(rp) else np.zeros(0)
+        y1 = np.minimum.reduceat(np.where(vy > y0[r], vy, np.inf), first) if len(rp) else y0
+        ystar = (y0 + y1) / 2.0
+        ok = np.nonzero(np.isfinite(y1))[0]
+        ri, k = _expand(ok, gb.part_geom[rp], gb.e_range)
+        x1, ya, x2, yb = gb.x[gb.e_start[k]], gb.y[gb.e_start[k]], gb.x[gb.e_end[k]], gb.y[gb.e_end[k]]
+        ys = ystar[ri]
+        c = (ya > ys) != (yb > ys)
+        ri, x1, ya, x2, yb, ys = ri[c], x1[c], ya[c], x2[c], yb[c], ys[c]
+        xint = x1 + (ys - ya) / (yb - ya) * (x2 - x1)
+        o = np.lexsort((xint, ri))
+        ri, xs = ri[o], xint[o]
+        keep = np.nonzero((ri[1:] == ri[:-1]) & (xs[:-1] < xs[1:]))[0]
+        g = gb.part_geom[rp[ri[keep]]]
+        x, y = (xs[keep] + xs[keep + 1]) / 2.0, ystar[ri[keep]]
+        ins = self.locate(g, x, y) == I
+        g, x, y = g[ins], x[ins], y[ins]
+        o = np.argsort(g, kind="stable")
+        return g[o], x[o], y[o]
+
+
+def _contacts(p1x, p1y, p2x, p2y, q1x, q1y, q2x, q2y):
+    """Contacts of each segment p with its segment q → (proper, which, t,
+    overlap, lo, hi): ``t`` are the split parameters along p of the pairs
+    ``which`` (crossings, collinear-overlap ends and q's ends lying on p),
+    ``overlap`` marks the pairs whose overlap interval along p is [lo, hi],
+    and ``proper`` the crossings strictly inside both segments."""
+    rx, ry = p2x - p1x, p2y - p1y
+    sx, sy = q2x - q1x, q2y - q1y
+    qx, qy = q1x - p1x, q1y - p1y
+    rxs = rx * sy - ry * sx
+    qpxs = qx * sy - qy * sx
+    qpxr = qx * ry - qy * rx
     with np.errstate(divide="ignore", invalid="ignore"):
         t = qpxs / rxs
         u = qpxr / rxs
     nonpar = rxs != 0
     hit = nonpar & (t >= 0) & (t <= 1) & (u >= 0) & (u <= 1)
     proper = nonpar & (t > 0) & (t < 1) & (u > 0) & (u < 1)
-    has_proper = bool(proper.any())
-    # collinear overlaps: parallel AND b's start on a's support line
-    col = (rxs == 0) & (qpxr == 0)
-    rr = (r[:, :, 0] ** 2 + r[:, :, 1] ** 2)
+    rr = rx ** 2 + ry ** 2
     rr_safe = np.where(rr == 0, 1.0, rr)
-    t0 = (qp[:, :, 0] * r[:, :, 0] + qp[:, :, 1] * r[:, :, 1]) / rr_safe
-    qp2 = (b.seg_e[None, :, :] - a.seg_s[:, None, :])
-    t1 = (qp2[:, :, 0] * r[:, :, 0] + qp2[:, :, 1] * r[:, :, 1]) / rr_safe
+    t0 = (qx * rx + qy * ry) / rr_safe
+    t1 = ((q2x - p1x) * rx + (q2y - p1y) * ry) / rr_safe
     lo = np.maximum(np.minimum(t0, t1), 0.0)
     hi = np.minimum(np.maximum(t0, t1), 1.0)
-    overlap = col & (lo < hi) & (rr != 0)
-    # b vertices exactly on a's edges (covers endpoint touches and
-    # T-junctions; exact cross-product test)
-    bx, by = b.verts[:, 0], b.verts[:, 1]
-    x1, y1 = a.seg_s[:, None, 0], a.seg_s[:, None, 1]
-    x2, y2 = a.seg_e[:, None, 0], a.seg_e[:, None, 1]
-    vcross = (x2 - x1) * (by[None, :] - y1) - (y2 - y1) * (bx[None, :] - x1)
-    von = (
-        (vcross == 0.0)
-        & (bx[None, :] >= np.minimum(x1, x2))
-        & (bx[None, :] <= np.maximum(x1, x2))
-        & (by[None, :] >= np.minimum(y1, y2))
-        & (by[None, :] <= np.maximum(y1, y2))
+    overlap = ~nonpar & (qpxr == 0) & (lo < hi) & (rr != 0)
+    on1 = _on_segment(q1x, q1y, p1x, p1y, p2x, p2y, _cross(q1x, q1y, p1x, p1y, p2x, p2y))
+    on2 = _on_segment(q2x, q2y, p1x, p1y, p2x, p2y, _cross(q2x, q2y, p1x, p1y, p2x, p2y))
+    sel = (hit, overlap, overlap, on1, on2)
+    cut = np.concatenate([v[m] for m, v in zip(sel, (t, lo, hi, t0, t1))])
+    which = np.concatenate([np.nonzero(m)[0] for m in sel])
+    return proper, which, np.clip(cut, 0.0, 1.0), overlap, lo, hi
+
+
+def _midpoints(t: _Table, rows, geom, cuts, spans):
+    """Split every edge of geometry ``geom[p]`` for each p of ``rows`` at
+    its contact parameters ``cuts`` (pair, edge, t) → the midpoints of its
+    subsegments (pair, x, y, on), where ``on`` marks the subsegments inside
+    a collinear overlap ``spans`` (pair, edge, lo, hi)."""
+    s, e, (rs, rc) = t.edges
+    pos = np.zeros(len(geom), dtype=np.int64)
+    pos[rows] = np.arange(len(rows))
+    cnt = rc[geom[rows]]
+    base = np.cumsum(cnt) - cnt  # key of a row's first edge
+
+    def key(p, k):
+        return base[pos[p]] + k - rs[geom[p]]
+
+    kp, ke = _expand(rows, geom, (rs, rc))
+    base_key = np.arange(len(kp))
+    keys = np.concatenate((base_key, base_key, key(cuts[0], cuts[1])))
+    vals = np.concatenate((np.zeros(len(kp)), np.ones(len(kp)), cuts[2]))
+    o = np.lexsort((vals, keys))
+    keys, vals = keys[o], vals[o]
+    # drop duplicates and snap parameters within 1e-12 of the one before:
+    # the same contact can arrive via two float routes (proper crossing t
+    # vs vertex-on-edge projection) differing in the last ulps, and the
+    # sliver between them would put a midpoint AT the contact
+    keep = np.ones(len(keys), dtype=bool)
+    keep[1:] = (keys[1:] != keys[:-1]) | (np.diff(vals) > 1e-12)
+    keys, vals = keys[keep], vals[keep]
+    m = np.nonzero((keys[1:] == keys[:-1]) & (vals[:-1] < vals[1:]))[0]
+    mk = keys[m]
+    tm = (vals[m] + vals[m + 1]) / 2.0
+    real = s[ke[mk]] != e[ke[mk]]
+    mk, tm = mk[real], tm[real]
+    on = np.zeros(len(mk), dtype=bool)
+    sk = key(spans[0], spans[1])
+    for i, j in _range_pairs(np.arange(len(sk)), sk, _ranges(mk, len(kp))):
+        on[j[(tm[j] > spans[2][i]) & (tm[j] < spans[3][i])]] = True
+    i, f = s[ke[mk]], e[ke[mk]]
+    x = t.gb.x[i] + tm * (t.gb.x[f] - t.gb.x[i])
+    y = t.gb.y[i] + tm * (t.gb.y[f] - t.gb.y[i])
+    return kp[mk], x, y, on
+
+
+def _relate_rows(ta: _Table, ia, tb: _Table, ib):
+    """(P, 3, 3) DE-9IM and (P,) dim(II) of ``ta``'s geometry ``ia[k]``
+    against ``tb``'s ``ib[k]``, for rows with dim(a) ≤ dim(b)."""
+    P = len(ia)
+    da, db = ta.dim[ia], tb.dim[ib]
+    rows = np.arange(P, dtype=np.int64)
+    M = np.zeros((P, 3, 3), dtype=bool)
+    M[:, E, E] = True
+    dim = np.full(P, -1, dtype=np.int64)
+    if not P:
+        return M, dim
+    lines = da >= 1
+    a_row = np.where(da == 1, I, B)  # a's edges are its interior (line)
+    b_col = np.where(db == 1, I, B)  # or its boundary (polygon rings)
+
+    # every vertex of a; b's vertices where they can add to the matrix:
+    # against a point set only a point set's, or a line's boundary
+    pa, va = _expand(rows, ia, ta.gb.v_range)
+    pb, vb = _expand(rows[lines | (db == 0)], ib, tb.gb.v_range)
+    bp, bk = _expand(rows[~lines & (db == 1)], ib, tb.bnd[1])
+    pb, vb = np.concatenate((pb, bp)), np.concatenate((vb, tb.bnd[0][bk]))
+
+    # contacts between the edge sets of line / polygon pairs
+    lp = rows[lines]
+    cuts_a, cuts_b, spans_a, spans_b = [], [], [], []
+    proper = np.zeros(P, dtype=bool)
+    for p, ka, kb in _meeting_edges(ta.gb, ta.edges, ia[lp], tb.gb, tb.edges, ib[lp]):
+        p = lp[p]
+        a = [c[i] for i in (ta.edges[0][ka], ta.edges[1][ka]) for c in (ta.gb.x, ta.gb.y)]
+        b = [c[i] for i in (tb.edges[0][kb], tb.edges[1][kb]) for c in (tb.gb.x, tb.gb.y)]
+        for cuts, spans, k, (pr, w, t, ov, lo, hi) in (
+            (cuts_a, spans_a, ka, _contacts(*a, *b)),
+            (cuts_b, spans_b, kb, _contacts(*b, *a)),
+        ):
+            cuts.append((p[w], k[w], t))
+            spans.append((p[ov], k[ov], lo[ov], hi[ov]))
+            proper[p[pr]] = True  # the same crossings from either side
+
+    def cat(chunks, n):
+        if not chunks:
+            return (np.zeros(0, dtype=np.int64),) * n
+        return tuple(np.concatenate(c) for c in zip(*chunks))
+
+    ma = _midpoints(ta, lp, ia, cat(cuts_a, 3), cat(spans_a, 4))
+    mb = _midpoints(tb, lp, ib, cat(cuts_b, 3), cat(spans_b, 4))
+
+    # one locate pass per side: vertices, then midpoints
+    la, lb = (
+        u.locate(*(np.concatenate(c) for c in ((h[pv], h[m[0]]), (t.gb.x[v], m[1]), (t.gb.y[v], m[2]))))
+        for t, pv, v, m, u, h in ((ta, pa, va, ma, tb, ib), (tb, pb, vb, mb, ta, ia))
     )
-    dx = a.seg_e[:, 0] - a.seg_s[:, 0]
-    dy = a.seg_e[:, 1] - a.seg_s[:, 1]
-    len2 = np.where(dx * dx + dy * dy == 0, 1.0, dx * dx + dy * dy)
-    mid_x: list[np.ndarray] = []
-    mid_y: list[np.ndarray] = []
-    marked: list[np.ndarray] = []
-    for i in range(Ea):
-        ts = [0.0, 1.0]
-        hj = np.nonzero(hit[i])[0]
-        if len(hj):
-            ts.extend(t[i, hj].tolist())
-        oj = np.nonzero(overlap[i])[0]
-        ivals = []
-        if len(oj):
-            ts.extend(lo[i, oj].tolist())
-            ts.extend(hi[i, oj].tolist())
-            ivals = list(zip(lo[i, oj].tolist(), hi[i, oj].tolist()))
-        vj = np.nonzero(von[i])[0]
-        if len(vj):
-            tv = (
-                (b.verts[vj, 0] - a.seg_s[i, 0]) * dx[i]
-                + (b.verts[vj, 1] - a.seg_s[i, 1]) * dy[i]
-            ) / len2[i]
-            ts.extend(np.clip(tv, 0.0, 1.0).tolist())
-        tt = np.unique(np.clip(np.asarray(ts, dtype=np.float64), 0.0, 1.0))
-        if len(tt) > 1:
-            # snap split parameters that agree to within 1e-12: the same
-            # geometric contact can arrive via two float routes (proper
-            # intersection t vs vertex-on-edge projection) differing in
-            # the last ulps; without snapping the sliver between them
-            # yields a midpoint AT the contact, whose side classification
-            # is unreliable (round-3 ADVICE)
-            tt = tt[np.concatenate(([True], np.diff(tt) > 1e-12))]
-        tm = (tt[:-1] + tt[1:]) / 2.0
-        tm = tm[tt[:-1] < tt[1:]]
-        if not len(tm):
-            continue
-        mid_x.append(a.seg_s[i, 0] + tm * dx[i])
-        mid_y.append(a.seg_s[i, 1] + tm * dy[i])
-        if ivals:
-            mk = np.zeros(len(tm), dtype=bool)
-            for lo_, hi_ in ivals:
-                mk |= (tm > lo_) & (tm < hi_)
-            marked.append(mk)
-        else:
-            marked.append(np.zeros(len(tm), dtype=bool))
-    if not mid_x:
-        z = np.zeros(0, dtype=np.float64)
-        return z, z, np.zeros(0, dtype=bool), has_proper
-    return (
-        np.concatenate(mid_x),
-        np.concatenate(mid_y),
-        np.concatenate(marked),
-        has_proper,
-    )
-
-
-def _vertex_contacts(a: PreparedGeom, b: PreparedGeom, M: np.ndarray) -> None:
-    """Classify a's vertices against b and fold into M rows (their region
-    within a is interior for non-boundary line vertices, boundary for
-    polygon vertices and line endpoints)."""
-    if not len(a.verts):
-        return
-    loc_b = b.locate(a.verts[:, 0], a.verts[:, 1])
-    row = np.where(a.vert_boundary, B, I) if a.dim == 1 else np.full(
-        len(a.verts), B if a.dim == 2 else I, dtype=np.int8
-    )
-    for ra in (I, B):
-        sel = row == ra
-        if sel.any():
-            for cb in (I, B, E):
-                if (loc_b[sel] == cb).any():
-                    M[ra][cb] = True
-
-
-def relate(a: PreparedGeom, b: PreparedGeom) -> tuple[np.ndarray, int]:
-    """→ (3×3 DE-9IM boolean matrix, dim(II) ∈ {-1, 0, 1, 2})."""
-    if a.dim > b.dim:
-        M, d = relate(b, a)
-        return M.T.copy(), d
-    M = np.zeros((3, 3), dtype=bool)
-    M[E][E] = True
-    dim_ii = -1
-
-    if a.dim == 0:
-        loc = b.locate(a.pts[:, 0], a.pts[:, 1])
-        for cb, flag in ((I, (loc == I).any()), (B, (loc == B).any()), (E, (loc == E).any())):
-            M[I][cb] |= bool(flag)
-        if M[I][I]:
-            dim_ii = 0
-        # b's side vs the finite point set
-        if b.dim == 0:
-            locb = a.locate(b.pts[:, 0], b.pts[:, 1])
-            M[E][I] = bool((locb == E).any())
-        else:
-            M[E][I] = True  # a 1-/2-D interior can't be a finite point set
-            if b.dim == 2:
-                M[E][B] = True
-            else:
-                bv = b.verts[b.vert_boundary]
-                if len(bv):
-                    M[E][B] = bool((a.locate(bv[:, 0], bv[:, 1]) == E).any())
-        return M, dim_ii
-
-    # --- both a and b have segments -----------------------------------
-    amx, amy, a_on_b, has_proper = _subsegments(a, b)
-    bmx, bmy, b_on_a, _ = _subsegments(b, a)
-    a_row = I if a.dim == 1 else B  # a's edges are its interior (line)
-    b_col = I if b.dim == 1 else B  # or its boundary (polygon rings)
-
-    loc_am = b.locate(amx, amy) if len(amx) else np.zeros(0, dtype=np.int8)
-    loc_bm = a.locate(bmx, bmy) if len(bmx) else np.zeros(0, dtype=np.int8)
+    M[pa, ta.vrow[va], la[: len(pa)]] = True
+    M[pb, lb[: len(pb)], tb.vrow[vb]] = True
     # marked subsegments lie on the other geometry by construction
-    # (collinear overlap is symmetric): on b's segments = interior of a
-    # line b / boundary of a polygon b, and vice versa — one matrix cell
-    if a_on_b.any() or b_on_a.any():
-        M[a_row][b_col] = True
-        if a_row == I and b_col == I:
-            dim_ii = 1
-    for cb in (I, B, E):
-        if len(loc_am) and (loc_am[~a_on_b] == cb).any():
-            M[a_row][cb] = True
-    for ra in (I, B, E):
-        if len(loc_bm) and (loc_bm[~b_on_a] == ra).any():
-            M[ra][b_col] = True
-    _vertex_contacts(a, b, M)
-    Mt = np.zeros((3, 3), dtype=bool)
-    _vertex_contacts(b, a, Mt)
-    M |= Mt.T
+    # (collinear overlap is symmetric): one matrix cell
+    off = ~ma[3]
+    M[ma[0][off], a_row[ma[0][off]], la[len(pa):][off]] = True
+    off = ~mb[3]
+    M[mb[0][off], lb[len(pb):][off], b_col[mb[0][off]]] = True
+    overlap = np.zeros(P, dtype=bool)
+    overlap[ma[0][ma[3]]] = True
+    overlap[mb[0][mb[3]]] = True
     # a proper crossing point is interior to both edge sets
-    if has_proper:
-        M[a_row][b_col] = True
-        if a_row == I and b_col == I and dim_ii < 0:
-            dim_ii = 0
+    M[rows, a_row, b_col] |= overlap | proper
 
-    if a.dim == 1 and b.dim == 1:
-        if M[I][I] and dim_ii < 0:
-            dim_ii = 0  # vertex-contact interior-interior
-    elif a.dim == 1 and b.dim == 2:
-        # line subsegment/vertex strictly inside the polygon ⇒ 1-D II
-        if M[I][I]:
-            dim_ii = 1
-        # a valid polygon's 2-D interior always exceeds a 1-D line
-        M[E][I] = True
-    else:  # 2 × 2
-        # boundary-in-interior either way opens both interiors/exteriors
-        if M[B][I]:  # bnd(a) ∩ int(b)
-            M[I][I] = True
-            M[E][I] = True
-        if M[I][B]:  # int(a) ∩ bnd(b)
-            M[I][I] = True
-            M[I][E] = True
-        if M[B][E]:
-            M[I][E] = True
-        if M[E][B]:
-            M[E][I] = True
-        # containment fallback: one interior point per component
-        if not (M[I][I] and M[I][E] and M[E][I]):
-            aip = a.interior_points()
-            if len(aip):
-                loc = b.locate(aip[:, 0], aip[:, 1])
-                if (loc == I).any():
-                    M[I][I] = True
-                if (loc == E).any():
-                    M[I][E] = True
-            bip = b.interior_points()
-            if len(bip):
-                loc = a.locate(bip[:, 0], bip[:, 1])
-                if (loc == I).any():
-                    M[I][I] = True
-                if (loc == E).any():
-                    M[E][I] = True
-        if M[I][I]:
-            dim_ii = 2
-    return M, dim_ii
+    d0 = da == 0
+    M[d0 & (db >= 1), E, I] = True  # a 1-/2-D interior can't be a finite point set
+    M[d0 & (db == 2), E, B] = True
+    ii = M[:, I, I].copy()
+    dim[ii & (d0 | (db == 1))] = 0
+    dim[(da == 1) & (db == 1) & overlap] = 1
+    # line × polygon: a line part strictly inside ⇒ 1-D II, and a valid
+    # polygon's 2-D interior always exceeds a 1-D line
+    l2 = (da == 1) & (db == 2)
+    dim[l2 & ii] = 1
+    M[l2, E, I] = True
+    # polygon × polygon: boundary-in-interior either way opens both
+    # interiors / exteriors
+    p2 = da == 2
+    bi, ib_, be, eb = (M[:, r, c] & p2 for r, c in ((B, I), (I, B), (B, E), (E, B)))
+    M[:, I, I] |= bi | ib_
+    M[:, E, I] |= bi | eb
+    M[:, I, E] |= ib_ | be
+    # containment fallback: one interior point per component
+    fb = rows[p2 & ~(M[:, I, I] & M[:, I, E] & M[:, E, I])]
+    if len(fb):
+        for t, g, u, h, tr in ((ta, ia, tb, ib, False), (tb, ib, ta, ia, True)):
+            ig, ix, iy = t.interior_points(g[fb])
+            p, k = _expand(fb, g, _ranges(ig, t.gb.n))
+            loc = u.locate(h[p], ix[k], iy[k])
+            s = loc != B
+            if tr:
+                M[p[s], loc[s], I] = True
+            else:
+                M[p[s], I, loc[s]] = True
+    dim[p2 & M[:, I, I]] = 2
+    return M, dim
+
+
+def _relate(ta: _Table, ia, tb: _Table, ib):
+    """DE-9IM of every row pair (``ia[k]`` of ``ta``, ``ib[k]`` of
+    ``tb``): rows with dim(a) > dim(b) run as (b, a) and transpose."""
+    ia, ib = np.asarray(ia, dtype=np.int64), np.asarray(ib, dtype=np.int64)
+    M = np.zeros((len(ia), 3, 3), dtype=bool)
+    dim = np.zeros(len(ia), dtype=np.int64)
+    swap = ta.dim[ia] > tb.dim[ib]
+    k = np.nonzero(~swap)[0]
+    M[k], dim[k] = _relate_rows(ta, ia[k], tb, ib[k])
+    k = np.nonzero(swap)[0]
+    Mt, dim[k] = _relate_rows(tb, ib[k], ta, ia[k])
+    M[k] = Mt.transpose(0, 2, 1)
+    return M, dim
 
 
 # --- predicate layer -------------------------------------------------------
-# The relate_* wrappers take one pair, as PreparedGeom or a parsed (kind,
-# parts) tuple.  Many pairs go through relation_batch over RELATIONS, the
-# one table behind the st_* SQL relations and geom_pair_join(predicate=…);
-# it caches PreparedGeom per WKT.
+# RELATIONS maps each relation name to a predicate on the batch arrays
+# (M, dim(II), dim(a), dim(b)); it is the one table behind the st_* SQL
+# relations and geom_pair_join(predicate=…).  relate_* are batches of one.
 
 
-def prepare(parsed) -> PreparedGeom:
-    if isinstance(parsed, PreparedGeom):
-        return parsed
+def _intersects(M, d, da, db):
+    return M[:, I, I] | M[:, I, B] | M[:, B, I] | M[:, B, B]
+
+
+def _touches(M, d, da, db):
+    return (M[:, I, B] | M[:, B, I] | M[:, B, B]) & ~M[:, I, I]
+
+
+def _crosses(M, d, da, db):
+    ii = M[:, I, I]
+    return np.where(
+        da < db, ii & M[:, I, E], np.where(da > db, ii & M[:, E, I], (da == 1) & ii & (d == 0))
+    )
+
+
+def _overlaps(M, d, da, db):
+    return (da == db) & M[:, I, I] & M[:, I, E] & M[:, E, I] & ((da != 1) | (d == 1))
+
+
+def _covers(M, d, da, db):
+    return _intersects(M, d, da, db) & ~M[:, E, I] & ~M[:, E, B]
+
+
+def _contains(M, d, da, db):
+    return M[:, I, I] & ~M[:, E, I] & ~M[:, E, B]
+
+
+def _equals(M, d, da, db):
+    return M[:, I, I] & ~M[:, I, E] & ~M[:, B, E] & ~M[:, E, I] & ~M[:, E, B]
+
+
+def _converse(pred):
+    return lambda M, d, da, db: pred(M.transpose(0, 2, 1), d, db, da)
+
+
+RELATIONS = {
+    "contains": _contains,
+    "within": _converse(_contains),
+    "covers": _covers,
+    "covered_by": _converse(_covers),
+    "touches": _touches,
+    "crosses": _crosses,
+    "overlaps": _overlaps,
+    "equals": _equals,
+}
+
+
+def _checked(parsed):
     if parsed[0] == "GEOMETRYCOLLECTION":
         # JTS RelateOp parity: DE-9IM relate does not support
         # mixed-dimension GeometryCollection arguments (homogeneous
@@ -445,123 +443,77 @@ def prepare(parsed) -> PreparedGeom:
             "unsupported (JTS RelateOp raises the same way); use "
             "intersects/distance, which apply union-of-components semantics"
         )
-    return PreparedGeom(*parsed)
+    return parsed
 
 
-def _m(a, b) -> tuple[np.ndarray, int]:
-    return relate(prepare(a), prepare(b))
+def prepare(parsed) -> _Table:
+    """A parsed ``(kind, parts)`` geometry as a relate table of one, which
+    the ``relate_*`` functions take as they take the parsed tuple."""
+    return parsed if isinstance(parsed, _Table) else _Table([_checked(parsed)])
+
+
+def _one(a, b):
+    ta, tb = prepare(a), prepare(b)
+    z = np.zeros(1, dtype=np.int64)
+    M, d = _relate(ta, z, tb, z)
+    return M, d, ta.dim, tb.dim
+
+
+def relate(a, b) -> tuple[np.ndarray, int]:
+    """→ (3×3 DE-9IM boolean matrix, dim(II) ∈ {-1, 0, 1, 2})."""
+    M, d, _, _ = _one(a, b)
+    return M[0], int(d[0])
 
 
 def relate_intersects(a, b) -> bool:
-    M, _ = _m(a, b)
-    return bool(M[I][I] or M[I][B] or M[B][I] or M[B][B])
+    return bool(_intersects(*_one(a, b))[0])
 
 
 def relate_touches(a, b) -> bool:
-    M, _ = _m(a, b)
-    return bool((M[I][B] or M[B][I] or M[B][B]) and not M[I][I])
+    return bool(_touches(*_one(a, b))[0])
 
 
 def relate_crosses(a, b) -> bool:
-    ga, gb = prepare(a), prepare(b)
-    M, d = relate(ga, gb)
-    if ga.dim < gb.dim:
-        return bool(M[I][I] and M[I][E])
-    if ga.dim > gb.dim:
-        return bool(M[I][I] and M[E][I])
-    if ga.dim == 1:
-        return bool(M[I][I] and d == 0)
-    return False
+    return bool(_crosses(*_one(a, b))[0])
 
 
 def relate_overlaps(a, b) -> bool:
-    ga, gb = prepare(a), prepare(b)
-    if ga.dim != gb.dim:
-        return False
-    M, d = relate(ga, gb)
-    base = bool(M[I][I] and M[I][E] and M[E][I])
-    if ga.dim == 1:
-        return base and d == 1
-    return base
+    return bool(_overlaps(*_one(a, b))[0])
 
 
 def relate_covers(a, b) -> bool:
-    M, _ = _m(a, b)
-    return bool(
-        (M[I][I] or M[I][B] or M[B][I] or M[B][B]) and not M[E][I] and not M[E][B]
-    )
+    return bool(_covers(*_one(a, b))[0])
 
 
 def relate_contains(a, b) -> bool:
-    M, _ = _m(a, b)
-    return bool(M[I][I] and not M[E][I] and not M[E][B])
+    return bool(_contains(*_one(a, b))[0])
 
 
 def relate_equals(a, b) -> bool:
-    M, _ = _m(a, b)
-    return bool(
-        M[I][I]
-        and not M[I][E]
-        and not M[B][E]
-        and not M[E][I]
-        and not M[E][B]
-    )
-
-
-# name → (predicate on prepared geometries, the side that may be a POINT,
-# the locate() rule that decides the relation for such a POINT against the
-# other side).  contains(g, p) ⇔ p in g's interior, covers(g, p) ⇔ p not in
-# g's exterior, touches(g, p) ⇔ p on g's boundary, for every kind of g.
-RELATIONS = {
-    "contains": (relate_contains, "b", lambda loc: loc == I),
-    "within": (lambda a, b: relate_contains(b, a), "a", lambda loc: loc == I),
-    "covers": (relate_covers, "b", lambda loc: loc != E),
-    "covered_by": (lambda a, b: relate_covers(b, a), "a", lambda loc: loc != E),
-    "touches": (relate_touches, "b", lambda loc: loc == B),
-    "crosses": (relate_crosses, None, None),
-    "overlaps": (relate_overlaps, None, None),
-    "equals": (relate_equals, None, None),
-}
-
-_PREPARED_CACHE: dict[str, PreparedGeom] = {}
-_POINT_RE = r"^\s*POINT\s*\(\s*([-+0-9.eE]+)\s+([-+0-9.eE]+)\s*\)\s*$"
-
-
-def _prepared(w: str) -> PreparedGeom:
-    """WKT → PreparedGeom through a bounded per-process cache."""
-    g = _PREPARED_CACHE.get(w)
-    if g is None:
-        g = prepare(parse_wkt_cached(w))
-        if len(_PREPARED_CACHE) < 200_000:
-            _PREPARED_CACHE[w] = g
-    return g
+    return bool(_equals(*_one(a, b))[0])
 
 
 def relation_batch(name: str, a, b) -> np.ndarray:
     """``RELATIONS[name]`` over each WKT pair ``(a[i], b[i])``; False where
     either side is null (a null geometry is in no relation).
 
-    Rows whose point side is a POINT take one vectorized ``locate`` per
-    distinct other-side geometry (the dominant SQL shape, one constant
-    region against a point column, is a single call); the other rows run
-    the full DE-9IM relate."""
-    fn, side, rule = RELATIONS[name]
-    a = pd.Series(np.asarray(a, dtype=object))
-    b = pd.Series(np.asarray(b, dtype=object))
+    Each side's distinct WKTs are parsed once into one table, and every
+    distinct pair runs through one batched relate: a POINT is a dim-0 row
+    like any other, and the dominant SQL shape, one constant region
+    against a point column, is a single kernel call."""
+    pred = RELATIONS[name]
+    a = np.asarray(a, dtype=object)
+    b = np.asarray(b, dtype=object)
     out = np.zeros(len(a), dtype=bool)
-    todo = a.notna() & b.notna()
-    if side is not None:
-        pts, other = (b, a) if side == "b" else (a, b)
-        xy = pts.astype(str).str.extract(_POINT_RE).apply(pd.to_numeric, errors="coerce")
-        fast = todo & xy.notna().all(axis=1)
-        codes, uniq = pd.factorize(other[fast])
-        px, py = xy[0][fast].to_numpy(np.float64), xy[1][fast].to_numpy(np.float64)
-        hit = np.zeros(len(codes), dtype=bool)
-        for k, w in enumerate(uniq):
-            m = codes == k
-            hit[m] = rule(_prepared(w).locate(px[m], py[m]))
-        out[fast.to_numpy()] = hit
-        todo &= ~fast
-    for i in np.nonzero(todo.to_numpy())[0]:
-        out[i] = fn(_prepared(a[i]), _prepared(b[i]))
+    ok = np.nonzero(pd.notna(a) & pd.notna(b))[0]
+    if not len(ok):
+        return out
+    ca, ua = pd.factorize(a[ok])
+    cb, ub = pd.factorize(b[ok])
+    pair, inv = np.unique(ca.astype(np.int64) * len(ub) + cb, return_inverse=True)
+    ta = _Table([_checked(parse_wkt_cached(w)) for w in ua])
+    tb = _Table([_checked(parse_wkt_cached(w)) for w in ub])
+    ia, ib = pair // len(ub), pair % len(ub)
+    M, d = _relate(ta, ia, tb, ib)
+    out[ok] = pred(M, d, ta.dim[ia], tb.dim[ib])[inv.reshape(-1)]
     return out

@@ -99,13 +99,21 @@ def _ref_parts_dist2(px, py, pcodes, gb):
     open_m = ~gb.closed[pcodes]
     x2[open_m, -1] = x1[open_m, -1]
     y2[open_m, -1] = y1[open_m, -1]
+    # JTS Distance.pointToSegment: the nearer end outside the projection,
+    # else cross² / len²
     dx, dy = x2 - x1, y2 - y1
-    seg_len2 = dx * dx + dy * dy
-    safe = np.where(seg_len2 == 0, 1.0, seg_len2)
+    len2 = dx * dx + dy * dy
     pxv, pyv = px[:, None], py[:, None]
-    t = np.clip(((pxv - x1) * dx + (pyv - y1) * dy) / safe, 0.0, 1.0)
-    cx, cy = x1 + t * dx, y1 + t * dy
-    return ((pxv - cx) ** 2 + (pyv - cy) ** 2).min(axis=1)
+    dot = (pxv - x1) * dx + (pyv - y1) * dy
+    cross = dx * (pyv - y1) - dy * (pxv - x1)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        inner = cross * cross / len2
+    d2 = np.where(
+        dot <= 0,
+        (pxv - x1) ** 2 + (pyv - y1) ** 2,
+        np.where(dot >= len2, (pxv - x2) ** 2 + (pyv - y2) ** 2, inner),
+    )
+    return d2.min(axis=1)
 
 
 def _ref_contained(px, py, codes, gb):

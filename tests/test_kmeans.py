@@ -52,8 +52,9 @@ def test_lloyd_kmeans_matches_independent_numpy_oracle(spark):
     numpy implementation in tools/oracle_values.py — exact integer sums,
     same labels, same counts (the driver-gate invariant)."""
     import sys
+    from pathlib import Path
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     from tools import oracle_values as ov
 
     from geowave_spark.operators.kmeans import lloyd_kmeans

@@ -602,8 +602,9 @@ def test_h3_oracle_twin_matches_engine_kernel():
     an independent reimplementation of the pinned aperture-7 scheme — its
     bin populations must equal the engine kernel's on the real inputs."""
     import sys
+    from pathlib import Path
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     import duckdb
 
     from geowave_spark.sfc.h3hex import hex_cell_id
