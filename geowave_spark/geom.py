@@ -419,7 +419,11 @@ def _points_kernel(px, py, codes, gb: GeomBatch):
     py = np.asarray(py, dtype=np.float64)
     codes = np.asarray(codes, dtype=np.int64)
     n = len(codes)
-    runs = []
+    contained = np.zeros(n, dtype=bool)
+    dist2 = np.full(n, np.inf)
+    on = np.zeros(n, dtype=bool)
+    # a block never splits a point, so each folds its (point, part) runs
+    # into the per-point results before the next is built
     for r, j in _range_pairs(np.arange(n, dtype=np.int64), codes, gb.v_range):
         part = gb.vpart[j]
         first = _run_starts(r, part)
@@ -427,22 +431,12 @@ def _points_kernel(px, py, codes, gb: GeomBatch):
         x1, y1, x2, y2 = gb.x[j], gb.y[j], gb.x[gb.nxt[j]], gb.y[gb.nxt[j]]
         odd = _ray_parity(qx, qy, x1, y1, x2, y2, first)
         d2 = np.minimum.reduceat(_seg_dist2(qx, qy, x1, y1, x2, y2), first)
-        runs.append((r[first], part[first], d2, odd))
-    if runs:
-        row, part, d2, odd = (np.concatenate(c) for c in zip(*runs))
-    else:
-        row = part = np.zeros(0, dtype=np.int64)
-        d2, odd = np.zeros(0), np.zeros(0, dtype=bool)
-    ring = gb.ring[part]
-    zero = d2 == 0.0
-    contained = np.zeros(n, dtype=bool)
-    np.logical_xor.at(contained, row[ring], odd[ring])
-    contained[row[ring & zero]] = True
-    dist2 = np.full(n, np.inf)
-    np.minimum.at(dist2, row, d2)
+        row, ring, zero = r[first], gb.ring[part[first]], d2 == 0.0
+        np.logical_xor.at(contained, row[ring], odd[ring])
+        contained[row[ring & zero]] = True
+        np.minimum.at(dist2, row, d2)
+        on[row[zero]] = True
     dist2[contained] = 0.0
-    on = np.zeros(n, dtype=bool)
-    on[row[zero]] = True
     return contained, dist2, on
 
 

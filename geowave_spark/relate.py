@@ -30,19 +30,21 @@ degrading this):
       of one of the two inputs, so "this subsegment lies ON the other
       geometry" is bookkeeping, never a float re-test.
 * Each edge is split at all its contact parameters (one ``lexsort`` over
-  every (pair, edge, t) of the batch); every open subsegment is then
+  the (pair, edge, t) of each block of edges); every open subsegment is then
   HOMOGENEOUS (entirely interior / on-boundary / exterior of the other
   geometry), so classifying its midpoint classifies the whole subsegment.
-  The midpoints and vertices of one side are located in the other side in
-  one point-kernel pass: "on" is the kernel's distance 0, the same rule
-  ``st_intersects`` uses.
+  The midpoints and vertices of one side are located in the other side by
+  the point kernel, one block of (pair, vertex) or (pair, edge) rows at a
+  time, so memory follows the block, not the batch: "on" is the kernel's
+  distance 0, the same rule ``st_intersects`` uses.
 * Line boundaries follow the OGC mod-2 rule (an endpoint is boundary iff
   it terminates an odd number of part-ends), so closed LINESTRINGs have
   empty boundary, exactly like JTS.
 * Polygon interior tests are the hole-aware crossing parity of the point
   kernel; the "boundaries coincide" corner (identical rings, a polygon
   equal to another's hole, …) is resolved by per-ring scanline interior
-  points — one candidate interior point per connected component of the
+  points (a blocked pass over (ring, edge) pairs that keeps only the
+  crossings) — one candidate interior point per connected component of the
   interior, never a sampled guess.
 
 The DE-9IM matrix M[i][j] = (region_i(a) ∩ region_j(b)) ≠ ∅ with regions
@@ -59,6 +61,8 @@ interior or boundary falls in a's exterior.
 """
 
 from __future__ import annotations
+
+from itertools import chain
 
 import numpy as np
 import pandas as pd
@@ -78,13 +82,11 @@ from .geom import (
 I, B, E = 0, 1, 2  # matrix row/col indices
 
 
-def _expand(items, item_geom, ranges):
-    """All (item, index) pairs of :func:`geom._range_pairs`, unblocked."""
-    blocks = list(_range_pairs(np.asarray(items, dtype=np.int64), item_geom, ranges))
-    if not blocks:
-        z = np.zeros(0, dtype=np.int64)
-        return z, z
-    return tuple(np.concatenate(c) for c in zip(*blocks))
+def _cat(chunks, n):
+    """The ``n`` arrays of a list of chunks, each concatenated."""
+    if not chunks:
+        return (np.zeros(0, dtype=np.int64),) * n
+    return tuple(np.concatenate(c) for c in zip(*chunks))
 
 
 def _runs(g, x, y):
@@ -165,29 +167,33 @@ class _Table:
         want = np.zeros(gb.n, dtype=bool)
         want[geoms] = True
         rp = np.nonzero(gb.ring & want[gb.part_geom])[0]
-        nv = gb.part_nv
-        r, v = _expand(np.arange(len(rp)), rp, (np.cumsum(nv) - nv, nv))
-        first = np.searchsorted(r, np.arange(len(rp)))
-        vy = gb.y[v]
-        y0 = np.minimum.reduceat(vy, first) if len(rp) else np.zeros(0)
-        y1 = np.minimum.reduceat(np.where(vy > y0[r], vy, np.inf), first) if len(rp) else y0
-        ystar = (y0 + y1) / 2.0
-        ok = np.nonzero(np.isfinite(y1))[0]
-        ri, k = _expand(ok, gb.part_geom[rp], gb.e_range)
-        x1, ya, x2, yb = gb.x[gb.e_start[k]], gb.y[gb.e_start[k]], gb.x[gb.e_end[k]], gb.y[gb.e_end[k]]
-        ys = ystar[ri]
-        c = (ya > ys) != (yb > ys)
-        ri, x1, ya, x2, yb, ys = ri[c], x1[c], ya[c], x2[c], yb[c], ys[c]
-        xint = x1 + (ys - ya) / (yb - ya) * (x2 - x1)
+        if not len(rp):
+            return _cat([], 3)
+        # each part's lowest y and the next higher one (inf where flat)
+        first = np.cumsum(gb.part_nv) - gb.part_nv
+        y0 = np.minimum.reduceat(gb.y, first)
+        y1 = np.minimum.reduceat(np.where(gb.y > y0[gb.vpart], gb.y, np.inf), first)[rp]
+        ystar = (y0[rp] + y1) / 2.0
+        # (ring, edge) pairs in blocks, keeping the scanline's crossings
+        hits = []
+        for ri, k in _range_pairs(np.nonzero(np.isfinite(y1))[0], gb.part_geom[rp], gb.e_range):
+            i, f, ys = gb.e_start[k], gb.e_end[k], ystar[ri]
+            c = (gb.y[i] > ys) != (gb.y[f] > ys)
+            ri, i, f, ys = ri[c], i[c], f[c], ys[c]
+            ya, yb = gb.y[i], gb.y[f]
+            hits.append((ri, gb.x[i] + (ys - ya) / (yb - ya) * (gb.x[f] - gb.x[i])))
+        ri, xint = _cat(hits, 2)
         o = np.lexsort((xint, ri))
         ri, xs = ri[o], xint[o]
         keep = np.nonzero((ri[1:] == ri[:-1]) & (xs[:-1] < xs[1:]))[0]
         g = gb.part_geom[rp[ri[keep]]]
         x, y = (xs[keep] + xs[keep + 1]) / 2.0, ystar[ri[keep]]
+        # rings of one geometry on one scanline give the same points: one
+        # of each, sorted by (geom, x, y)
+        u = np.unique(_runs(g, x, y), return_index=True)[1]
+        g, x, y = g[u], x[u], y[u]
         ins = self.locate(g, x, y) == I
-        g, x, y = g[ins], x[ins], y[ins]
-        o = np.argsort(g, kind="stable")
-        return g[o], x[o], y[o]
+        return g[ins], x[ins], y[ins]
 
 
 def _contacts(p1x, p1y, p2x, p2y, q1x, q1y, q2x, q2y):
@@ -224,45 +230,43 @@ def _contacts(p1x, p1y, p2x, p2y, q1x, q1y, q2x, q2y):
 
 
 def _midpoints(t: _Table, rows, geom, cuts, spans):
-    """Split every edge of geometry ``geom[p]`` for each p of ``rows`` at
-    its contact parameters ``cuts`` (pair, edge, t) → the midpoints of its
-    subsegments (pair, x, y, on), where ``on`` marks the subsegments inside
-    a collinear overlap ``spans`` (pair, edge, lo, hi)."""
-    s, e, (rs, rc) = t.edges
-    pos = np.zeros(len(geom), dtype=np.int64)
-    pos[rows] = np.arange(len(rows))
-    cnt = rc[geom[rows]]
-    base = np.cumsum(cnt) - cnt  # key of a row's first edge
-
-    def key(p, k):
-        return base[pos[p]] + k - rs[geom[p]]
-
-    kp, ke = _expand(rows, geom, (rs, rc))
-    base_key = np.arange(len(kp))
-    keys = np.concatenate((base_key, base_key, key(cuts[0], cuts[1])))
-    vals = np.concatenate((np.zeros(len(kp)), np.ones(len(kp)), cuts[2]))
-    o = np.lexsort((vals, keys))
-    keys, vals = keys[o], vals[o]
-    # drop duplicates and snap parameters within 1e-12 of the one before:
-    # the same contact can arrive via two float routes (proper crossing t
-    # vs vertex-on-edge projection) differing in the last ulps, and the
-    # sliver between them would put a midpoint AT the contact
-    keep = np.ones(len(keys), dtype=bool)
-    keep[1:] = (keys[1:] != keys[:-1]) | (np.diff(vals) > 1e-12)
-    keys, vals = keys[keep], vals[keep]
-    m = np.nonzero((keys[1:] == keys[:-1]) & (vals[:-1] < vals[1:]))[0]
-    mk = keys[m]
-    tm = (vals[m] + vals[m + 1]) / 2.0
-    real = s[ke[mk]] != e[ke[mk]]
-    mk, tm = mk[real], tm[real]
-    on = np.zeros(len(mk), dtype=bool)
-    sk = key(spans[0], spans[1])
-    for i, j in _range_pairs(np.arange(len(sk)), sk, _ranges(mk, len(kp))):
-        on[j[(tm[j] > spans[2][i]) & (tm[j] < spans[3][i])]] = True
-    i, f = s[ke[mk]], e[ke[mk]]
-    x = t.gb.x[i] + tm * (t.gb.x[f] - t.gb.x[i])
-    y = t.gb.y[i] + tm * (t.gb.y[f] - t.gb.y[i])
-    return kp[mk], x, y, on
+    """Split every edge of geometry ``geom[p]`` for each p of the ascending
+    ``rows`` at its contact parameters ``cuts`` (pair, edge, t) → per block
+    of (pair, edge) pairs, the midpoints of their subsegments (pair, x, y,
+    on), where ``on`` marks the subsegments inside a collinear overlap
+    ``spans`` (pair, edge, lo, hi)."""
+    s, e, ranges = t.edges
+    # (pair, edge) as one key, which grows along the blocks
+    ck, sk = (c[0] * len(s) + c[1] for c in (cuts, spans))
+    for kp, ke in _range_pairs(rows, geom, ranges):
+        bk = kp * len(s) + ke
+        n = len(bk)
+        c = (ck >= bk[0]) & (ck <= bk[-1])
+        keys = np.concatenate((np.arange(n), np.arange(n), np.searchsorted(bk, ck[c])))
+        vals = np.concatenate((np.zeros(n), np.ones(n), cuts[2][c]))
+        o = np.lexsort((vals, keys))
+        keys, vals = keys[o], vals[o]
+        # drop duplicates and snap parameters within 1e-12 of the one
+        # before: the same contact can arrive via two float routes (proper
+        # crossing t vs vertex-on-edge projection) differing in the last
+        # ulps, and the sliver between them would put a midpoint AT it
+        keep = np.ones(len(keys), dtype=bool)
+        keep[1:] = (keys[1:] != keys[:-1]) | (np.diff(vals) > 1e-12)
+        keys, vals = keys[keep], vals[keep]
+        m = np.nonzero((keys[1:] == keys[:-1]) & (vals[:-1] < vals[1:]))[0]
+        mk = keys[m]
+        tm = (vals[m] + vals[m + 1]) / 2.0
+        real = s[ke[mk]] != e[ke[mk]]
+        mk, tm = mk[real], tm[real]
+        on = np.zeros(len(mk), dtype=bool)
+        c = (sk >= bk[0]) & (sk <= bk[-1])
+        lo, hi = spans[2][c], spans[3][c]
+        for i, j in _range_pairs(np.arange(len(lo)), np.searchsorted(bk, sk[c]), _ranges(mk, n)):
+            on[j[(tm[j] > lo[i]) & (tm[j] < hi[i])]] = True
+        i, f = s[ke[mk]], e[ke[mk]]
+        x = t.gb.x[i] + tm * (t.gb.x[f] - t.gb.x[i])
+        y = t.gb.y[i] + tm * (t.gb.y[f] - t.gb.y[i])
+        yield kp[mk], x, y, on
 
 
 def _relate_rows(ta: _Table, ia, tb: _Table, ib):
@@ -281,11 +285,15 @@ def _relate_rows(ta: _Table, ia, tb: _Table, ib):
     b_col = np.where(db == 1, I, B)  # or its boundary (polygon rings)
 
     # every vertex of a; b's vertices where they can add to the matrix:
-    # against a point set only a point set's, or a line's boundary
-    pa, va = _expand(rows, ia, ta.gb.v_range)
-    pb, vb = _expand(rows[lines | (db == 0)], ib, tb.gb.v_range)
-    bp, bk = _expand(rows[~lines & (db == 1)], ib, tb.bnd[1])
-    pb, vb = np.concatenate((pb, bp)), np.concatenate((vb, tb.bnd[0][bk]))
+    # against a point set only a point set's, or a line's boundary.  Each
+    # block of (pair, vertex) pairs is located in the other side at once
+    for p, v in _range_pairs(rows, ia, ta.gb.v_range):
+        M[p, ta.vrow[v], tb.locate(ib[p], ta.gb.x[v], ta.gb.y[v])] = True
+    for p, v in chain(
+        _range_pairs(rows[lines | (db == 0)], ib, tb.gb.v_range),
+        ((p, tb.bnd[0][k]) for p, k in _range_pairs(rows[~lines & (db == 1)], ib, tb.bnd[1])),
+    ):
+        M[p, ta.locate(ia[p], tb.gb.x[v], tb.gb.y[v]), tb.vrow[v]] = True
 
     # contacts between the edge sets of line / polygon pairs
     lp = rows[lines]
@@ -303,30 +311,17 @@ def _relate_rows(ta: _Table, ia, tb: _Table, ib):
             spans.append((p[ov], k[ov], lo[ov], hi[ov]))
             proper[p[pr]] = True  # the same crossings from either side
 
-    def cat(chunks, n):
-        if not chunks:
-            return (np.zeros(0, dtype=np.int64),) * n
-        return tuple(np.concatenate(c) for c in zip(*chunks))
-
-    ma = _midpoints(ta, lp, ia, cat(cuts_a, 3), cat(spans_a, 4))
-    mb = _midpoints(tb, lp, ib, cat(cuts_b, 3), cat(spans_b, 4))
-
-    # one locate pass per side: vertices, then midpoints
-    la, lb = (
-        u.locate(*(np.concatenate(c) for c in ((h[pv], h[m[0]]), (t.gb.x[v], m[1]), (t.gb.y[v], m[2]))))
-        for t, pv, v, m, u, h in ((ta, pa, va, ma, tb, ib), (tb, pb, vb, mb, ta, ia))
-    )
-    M[pa, ta.vrow[va], la[: len(pa)]] = True
-    M[pb, lb[: len(pb)], tb.vrow[vb]] = True
-    # marked subsegments lie on the other geometry by construction
-    # (collinear overlap is symmetric): one matrix cell
-    off = ~ma[3]
-    M[ma[0][off], a_row[ma[0][off]], la[len(pa):][off]] = True
-    off = ~mb[3]
-    M[mb[0][off], lb[len(pb):][off], b_col[mb[0][off]]] = True
+    # each subsegment's midpoint is located in the other side; a marked
+    # one lies on it by construction (collinear overlap is symmetric)
     overlap = np.zeros(P, dtype=bool)
-    overlap[ma[0][ma[3]]] = True
-    overlap[mb[0][mb[3]]] = True
+    for p, x, y, on in _midpoints(ta, lp, ia, _cat(cuts_a, 3), _cat(spans_a, 4)):
+        overlap[p[on]] = True
+        p, x, y = p[~on], x[~on], y[~on]
+        M[p, a_row[p], tb.locate(ib[p], x, y)] = True
+    for p, x, y, on in _midpoints(tb, lp, ib, _cat(cuts_b, 3), _cat(spans_b, 4)):
+        overlap[p[on]] = True
+        p, x, y = p[~on], x[~on], y[~on]
+        M[p, ta.locate(ia[p], x, y), b_col[p]] = True
     # a proper crossing point is interior to both edge sets
     M[rows, a_row, b_col] |= overlap | proper
 
@@ -353,13 +348,13 @@ def _relate_rows(ta: _Table, ia, tb: _Table, ib):
     if len(fb):
         for t, g, u, h, tr in ((ta, ia, tb, ib, False), (tb, ib, ta, ia, True)):
             ig, ix, iy = t.interior_points(g[fb])
-            p, k = _expand(fb, g, _ranges(ig, t.gb.n))
-            loc = u.locate(h[p], ix[k], iy[k])
-            s = loc != B
-            if tr:
-                M[p[s], loc[s], I] = True
-            else:
-                M[p[s], I, loc[s]] = True
+            for p, k in _range_pairs(fb, g, _ranges(ig, t.gb.n)):
+                loc = u.locate(h[p], ix[k], iy[k])
+                s = loc != B
+                if tr:
+                    M[p[s], loc[s], I] = True
+                else:
+                    M[p[s], I, loc[s]] = True
     dim[p2 & M[:, I, I]] = 2
     return M, dim
 

@@ -593,9 +593,9 @@ def test_intersects_and_relations_share_one_point_on_segment_rule(kind):
 # --- memory --------------------------------------------------------------------
 
 
-def _circle(cx, n):
+def _circle(cx, n, cy=0.0, r=1.0):
     a = np.linspace(0, 2 * np.pi, n, endpoint=False)
-    p = np.c_[cx + np.cos(a), np.sin(a)].tolist()
+    p = np.c_[cx + r * np.cos(a), cy + r * np.sin(a)].tolist()
     return "POLYGON ((" + ", ".join(f"{x!r} {y!r}" for x, y in p + p[:1]) + "))"
 
 
@@ -608,10 +608,26 @@ def _peak(fn):
         tracemalloc.stop()
 
 
-def test_relate_memory_is_bounded_by_the_pair_pass():
+def _squares(n, cols=25):
+    """A MULTIPOLYGON of ``n`` unit squares on a grid of pitch 2."""
+    sq = (
+        f"(({x} {y}, {x + 1} {y}, {x + 1} {y + 1}, {x} {y + 1}, {x} {y}))"
+        for x, y in ((2 * (i % cols), 2 * (i // cols)) for i in range(n))
+    )
+    return "MULTIPOLYGON (" + ", ".join(sq) + ")"
+
+
+def test_relate_memory_is_bounded_by_the_pair_pass(monkeypatch):
     """Two offset many-vertex circles: relate's traced peak stays within 2×
     the distance kernel's on the same pair, and does not grow with the
-    vertex count (the segment-pair pass runs in blocks)."""
+    vertex count (the segment-pair pass runs in blocks).  A 2,000-vertex
+    region containing a 500-part MULTIPOLYGON reaches the interior-point
+    fallback on both sides: its scanline pass runs in (ring, edge) blocks
+    and the point kernel folds each block into its per-point results, so
+    that peak stays within 2× the distance kernel's too (checked at a
+    smaller block, which keeps it quick)."""
+    import geowave_spark.geom as geom
+
     peaks = {}
     for n in (2000, 4000):
         a, b = _circle(0.0, n), _circle(0.5, n)
@@ -621,3 +637,35 @@ def test_relate_memory_is_bounded_by_the_pair_pass():
             d = _peak(lambda: pairs_dist2([a], [b]))
             assert peaks[n] <= 2 * d, (peaks[n], d)
     assert peaks[4000] <= 1.25 * peaks[2000], peaks
+
+    monkeypatch.setattr(geom, "_RECT_PAIR_BLOCK", 1 << 16)
+    region = _circle(25.0, 2000, cy=20.0, r=40.0)
+    parts = _squares(500)
+    parse_wkt_cached(region), parse_wkt_cached(parts)
+    got = _peak(lambda: relation_batch("contains", [region], [parts]))
+    d = _peak(lambda: pairs_dist2([region], [parts]))
+    assert got <= 2 * d, (got, d)
+    assert relation_batch("contains", [region], [parts]).all()
+    assert relation_batch("within", [parts], [region]).all()
+
+
+def test_relate_memory_does_not_grow_with_rows(monkeypatch):
+    """One 2,000-vertex region against many short lines: the (pair, vertex)
+    and (pair, edge) rows of the repeated region are located block by
+    block, so doubling the rows past one block leaves the traced peak
+    where it was (a smaller block keeps it quick)."""
+    import geowave_spark.geom as geom
+
+    monkeypatch.setattr(geom, "_RECT_PAIR_BLOCK", 1 << 16)
+    region = _circle(0.0, 2000, r=10.0)
+    xy = np.random.default_rng(7).uniform(-12, 12, (128, 2)).tolist()
+    lines = [f"LINESTRING ({x!r} {y!r}, {x + 1.5!r} {y + 0.5!r})" for x, y in xy]
+    for w in [region] + lines:
+        parse_wkt_cached(w)
+    peaks, out = {}, {}
+    for n in (64, 128):
+        peaks[n] = _peak(lambda: relation_batch("crosses", [region] * n, lines[:n]))
+        out[n] = relation_batch("crosses", [region] * n, lines[:n])
+    assert peaks[128] <= 1.25 * peaks[64], peaks
+    np.testing.assert_array_equal(out[128][:64], out[64])
+    assert out[128].any() and not out[128].all()
